@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.types.StructType
 
-import graft.ops.{Decontaminate, Dedup, Similarity, TextAnalysis}
+import graft.ops.{Decontaminate, Dedup, SessionReuse, Similarity, TextAnalysis}
 import graft.spark.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query contract — see SURVEY.md §7.
   *
   * `queries` holds one entry per implemented operator; each is a function
   * (spark, sfDir) => DataFrame over the driver's parquet tables. Every
@@ -15,63 +16,29 @@ import graft.spark.functions._
   *
   * Column names are aligned between Spark and SQL because the driver's
   * compare sorts columns by name before hashing.
+  *
+  * Session reuse: some queries pay BUILD-time work once per session and
+  * reuse it on later calls instead of re-paying it per call — a built plan
+  * (trainIvf runs its sample + Lloyd pass when the plan is constructed;
+  * the ngram persist is scoped by Dedup, so this is reuse, not leak
+  * containment), a staged streaming input, or a persisted operator
+  * generation. All of it goes through [[graft.ops.SessionReuse]], and
+  * `queries` runs every entry under its own name, so [[memoizedQueries]]
+  * is recorded by the code that reuses instead of listed by hand.
   */
 object SparkEntry {
 
   private def read(spark: SparkSession, dir: String, table: String): DataFrame =
     spark.read.parquet(s"$dir/$table.parquet")
 
-  /** Built-plan memo for queries with expensive BUILD-time work — the
-    * ngram persist (Dedup scopes it, so this is reuse, not leak
-    * containment) and IVF training (trainIvf runs its sample + Lloyd
-    * pass when the plan is constructed): re-invocations in one JVM reuse
-    * the built plan instead of re-paying that work per call.
-    *
-    * ONLY queries whose memoized plan still EXECUTES real work per
-    * action belong here — memoizing a query that materializes its result
-    * at build time (a streaming memory sink, checkpointed iteration
-    * output) would make every re-invocation a free table scan and fake
-    * its bench number.
-    *
-    * Reachability: the session key is WEAK, but a cached DataFrame
-    * strongly references its own SparkSession, so plain values would pin
-    * their keys forever (the classic WeakHashMap self-reference trap).
-    * Values are therefore held through SoftReferences — the key is then
-    * reachable only softly through the cache, stopped sessions' entries
-    * clear under memory pressure, and a cleared value simply rebuilds. */
-  private val queryMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
-      (String, String), java.lang.ref.SoftReference[DataFrame]]]())
-
-  /** Names of the queries [[memo]] caches per (session, dir): their FIRST
-    * invocation pays index/training construction (IVF/PQ training, the
-    * persisted shingle table) and later invocations measure steady-state
-    * probing. Benchmarks report the two separately (VERDICT r4 "What's
-    * wrong #1") — an amortized number alone misreads as end-to-end. */
-  val memoizedQueries: Set[String] = Set(
-    "ivf_topk", "pq_topk", "pq_topk_exact",
-    "ngram_jaccard_dups", "semantic_dedup", "semantic_dedup_exact",
-    "bpe_encode")
-
-  private def memo(name: String, s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val perSession = queryMemo.synchronized {
-      var m = queryMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String),
-          java.lang.ref.SoftReference[DataFrame]]()
-        queryMemo.put(s, m)
-      }
-      m
-    }
-    val key = (name, dir)
-    val cached = Option(perSession.get(key)).flatMap(r => Option(r.get))
-    cached.getOrElse {
-      val df = build
-      perSession.put(key, new java.lang.ref.SoftReference(df))
-      df
-    }
-  }
+  /** Names of the queries that reused per-session state: their FIRST
+    * invocation in a session pays the build (index/training construction,
+    * the persisted shingle table, streaming input staging) and later
+    * invocations measure steady state. Benchmarks report the two
+    * separately (VERDICT r4 "What's wrong #1") — an amortized number alone
+    * misreads as end-to-end. Recorded as the queries run, so it covers the
+    * queries invoked so far in this JVM: read it after they ran. */
+  def memoizedQueries: Set[String] = SessionReuse.queries
 
   /** Temp staging dirs removed RECURSIVELY on JVM exit —
     * File.deleteOnExit silently leaves non-empty directories (Spark
@@ -89,36 +56,97 @@ object SparkEntry {
   private def stagingDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(stagingRoot, prefix)
 
-  /** Per-(session, dir, tag) memo of STAGED INPUT directories for the
-    * streaming queries. The staged batch files are a DETERMINISTIC pure
-    * function of the input tables (fixed filters, fixed mtimes), so
-    * re-building them on every invocation only re-pays input
-    * preparation; they are built once per (session, input dir) and
-    * reused — the same in-session build-work amortization regime as the
-    * ngram shingle persist. ONLY input staging is reused: the streaming
-    * engine itself (source listing, micro-batch cycles, state store,
-    * sink) re-runs IN FULL on every invocation with a fresh sink table,
-    * so the bench still measures real streaming execution, never a
-    * cached result. */
-  private val stagingMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
-      (String, String), java.nio.file.Path]]())
-
-  private def stagedOnce(s: SparkSession, dir: String, tag: String)(
-      build: java.nio.file.Path => Unit): java.nio.file.Path = {
-    val perSession = stagingMemo.synchronized {
-      var m = stagingMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), java.nio.file.Path]()
-        stagingMemo.put(s, m)
+  /** A file-source stream over `batches`, staged once per (session, dir,
+    * tag). The file streaming source lists a DIRECTORY and orders its
+    * files by modification time, so each frame is written as ONE file
+    * `batch-i.parquet` stamped 60 s after its predecessor: with
+    * maxFilesPerTrigger=1 every frame is one micro-batch, in order.
+    *
+    * The staged files are a DETERMINISTIC pure function of the input
+    * tables (fixed filters, fixed mtimes), so re-building them on every
+    * invocation only re-pays input preparation; they are built once per
+    * (session, input dir) and reused — the same in-session build-work
+    * amortization regime as the ngram shingle persist. ONLY input staging
+    * is reused: the streaming engine itself (source listing, micro-batch
+    * cycles, state store, sink) re-runs IN FULL on every invocation with
+    * a fresh sink table (see [[runToSink]]), so the bench still measures
+    * real streaming execution, never a cached result. */
+  private def stagedStream(s: SparkSession, dir: String, tag: String, schema: StructType)(
+      batches: => Seq[DataFrame]): DataFrame = {
+    val staged = SessionReuse.once(s, (tag, dir)) {
+      val out = stagingDir(tag)
+      // one tmp dir reused across the staged batches (overwrite clears
+      // it; the part file moves out)
+      val tmp = stagingDir(s"${tag}_tmp")
+      batches.zipWithIndex.foreach { case (df, i) =>
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = {
+          val l = java.nio.file.Files.list(tmp)
+          try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
+            .findFirst().get()
+          finally l.close()
+        }
+        val dst = out.resolve(s"batch-$i.parquet")
+        java.nio.file.Files.move(part, dst)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(1600000000000L + 60000L * i))
       }
-      m
+      out
     }
-    perSession.computeIfAbsent((dir, tag), { _ =>
-      val p = stagingDir(tag)
-      build(p)
-      p
-    })
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(staged.toString)
+  }
+
+  /** The three watermark-ordered batches of the windowed streaming
+    * queries: the rows before and at-or-after the `ts` midpoint (windows
+    * straddling the split accumulate state across batches), then ONE
+    * punctuation row `punctGapMs` past max(ts), tagged "zz_punct" in
+    * `punctCol`, which advances the watermark past every real window. */
+  private def watermarkBatches(df: DataFrame, punctCol: String,
+      punctGapMs: Long): Seq[DataFrame] = {
+    val mm = df.agg(F.min(F.col("ts")), F.max(F.col("ts"))).head()
+    // the parquet ts column may surface as TIMESTAMP or TIMESTAMP_NTZ
+    // depending on writer metadata — handle both, and mint literals of
+    // the SAME type so the staged batches match the stream schema
+    def ms(x: Any): Long = x match {
+      case t: java.sql.Timestamp => t.getTime
+      case d: java.time.LocalDateTime =>
+        d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+    }
+    def tsLit(millis: Long): org.apache.spark.sql.Column = mm.get(0) match {
+      case _: java.time.LocalDateTime => F.lit(java.time.LocalDateTime
+        .ofInstant(java.time.Instant.ofEpochMilli(millis), java.time.ZoneOffset.UTC))
+      case _ => F.lit(new java.sql.Timestamp(millis))
+    }
+    val cutoff = tsLit((ms(mm.get(0)) + ms(mm.get(1))) / 2)
+    Seq(df.filter(F.col("ts") < cutoff), df.filter(F.col("ts") >= cutoff),
+      df.limit(1).withColumn("ts", tsLit(ms(mm.get(1)) + punctGapMs))
+        .withColumn(punctCol, F.lit("zz_punct")))
+  }
+
+  /** Runs `query` to completion through the real streaming engine — an
+    * append-mode memory sink under an AvailableNow trigger — and returns
+    * the sink table. State-store count = shuffle partitions, fixed at
+    * query start and each paying per-batch init/commit; at this probe
+    * scale that fixed cost dominates, so the plan is built and started
+    * under a narrow width (save/restore — only this streaming query sees
+    * it). */
+  private def runToSink(s: SparkSession, tag: String)(query: => DataFrame): DataFrame = {
+    val name = s"${tag}_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val saved = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    val q =
+      try {
+        query.writeStream
+          .outputMode("append")
+          .format("memory")
+          .queryName(name)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    q.awaitTermination()
+    s.table(name)
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -134,8 +162,14 @@ object SparkEntry {
       .orderBy("l_returnflag", "l_linestatus")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2, each run under
+    * its own name so the session-reuse calls inside it record it. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    contract.map { case (name, q) =>
+      name -> ((s: SparkSession, dir: String) => SessionReuse.during(name)(q(s, dir)))
+    }
+
+  private def contract: Map[String, (SparkSession, String) => DataFrame] = Map(
     // hash projections (SURVEY.md §2.1): exact per-row values — checked
     // rows-only by the driver (DuckDB has no murmur2 variant), pinned
     // bit-exactly by HashGoldenSpec + the reference differential. The
@@ -535,71 +569,19 @@ object SparkEntry {
     // same gaps-and-islands oracle applies verbatim.
     "streaming_sessionization" -> ((s, dir) => {
       val ev = read(s, dir, "events")
-      // deterministic input staging, built once per (session, dir) —
-      // stagedOnce; the streaming run below is never reused
-      val staged = stagedOnce(s, dir, "graft_ssz_in") { staged =>
-        val mm = ev.agg(F.min(F.col("ts")), F.max(F.col("ts"))).head()
-        def ms(x: Any): Long = x match {
-          case t: java.sql.Timestamp => t.getTime
-          case d: java.time.LocalDateTime =>
-            d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-        }
-        def tsLit(millis: Long): org.apache.spark.sql.Column = mm.get(0) match {
-          case _: java.time.LocalDateTime => F.lit(java.time.LocalDateTime
-            .ofInstant(java.time.Instant.ofEpochMilli(millis), java.time.ZoneOffset.UTC))
-          case _ => F.lit(new java.sql.Timestamp(millis))
-        }
-        val cutoff = tsLit((ms(mm.get(0)) + ms(mm.get(1))) / 2)
-        // one tmp dir reused across the staged batches (overwrite clears
-        // it; the part file moves out) — a per-stage dir would register a
-        // fresh shutdown hook every bench invocation
-        val tmp = stagingDir("graft_ssz_tmp")
-        def stage(df: DataFrame, name: String, mtime: Long): Unit = {
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = {
-            val l = java.nio.file.Files.list(tmp)
-            try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-              .findFirst().get()
-            finally l.close()
-          }
-          val dst = staged.resolve(name)
-          java.nio.file.Files.move(part, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(ev.filter(F.col("ts") < cutoff), "batch-0.parquet", 1600000000000L)
-        stage(ev.filter(F.col("ts") >= cutoff), "batch-1.parquet", 1600000060000L)
-        stage(ev.limit(1).select(F.col("event_id"),
-          tsLit(ms(mm.get(1)) + 30L * 86400000L).as("ts"),
-          F.col("user_id"), F.lit("zz_punct").as("event_type"),
-          F.col("value"), F.col("props")), "batch-2.parquet", 1600000120000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-      val name = s"ssz_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q =
-        try {
-          stream.withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 minute")
-            .groupBy(F.session_window(F.col("ts"), "2 hours").as("w"), F.col("user_id"))
-            .agg(F.count(F.lit(1)).as("n_events"),
-              F.round(F.sum(F.col("value")), 2).as("sum_value"))
-            .select(F.col("user_id"),
-              F.col("w.start").cast("timestamp_ntz").as("s_start"),
-              F.col("w.end").cast("timestamp_ntz").as("s_end"),
-              F.col("n_events"), F.col("sum_value"))
-            .writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-      q.awaitTermination()
-      s.table(name).orderBy("user_id", "s_start")
+      val stream = stagedStream(s, dir, "graft_ssz_in", ev.schema)(
+        watermarkBatches(ev, "event_type", 30L * 86400000L))
+      runToSink(s, "ssz") {
+        stream.withColumn("ts", F.col("ts").cast("timestamp"))
+          .withWatermark("ts", "1 minute")
+          .groupBy(F.session_window(F.col("ts"), "2 hours").as("w"), F.col("user_id"))
+          .agg(F.count(F.lit(1)).as("n_events"),
+            F.round(F.sum(F.col("value")), 2).as("sum_value"))
+          .select(F.col("user_id"),
+            F.col("w.start").cast("timestamp_ntz").as("s_start"),
+            F.col("w.end").cast("timestamp_ntz").as("s_end"),
+            F.col("n_events"), F.col("sum_value"))
+      }.orderBy("user_id", "s_start")
     }),
 
     // semi-structured JSON extraction (SURVEY §2.5 catalog breadth): the
@@ -665,74 +647,19 @@ object SparkEntry {
     // events_windowed oracle applies almost verbatim.
     "streaming_windowed_counts" -> ((s, dir) => {
       val ev = read(s, dir, "events")
-      // deterministic input staging, built once per (session, dir) —
-      // stagedOnce; the streaming run below is never reused
-      val staged = stagedOnce(s, dir, "graft_swc_in") { staged =>
-        val mm = ev.agg(F.min(F.col("ts")), F.max(F.col("ts"))).head()
-        // the parquet ts column may surface as TIMESTAMP or TIMESTAMP_NTZ
-        // depending on writer metadata — handle both, and mint literals of
-        // the SAME type so the staged batches match the stream schema
-        def ms(x: Any): Long = x match {
-          case t: java.sql.Timestamp => t.getTime
-          case d: java.time.LocalDateTime =>
-            d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-        }
-        def tsLit(millis: Long): org.apache.spark.sql.Column = mm.get(0) match {
-          case _: java.time.LocalDateTime => F.lit(java.time.LocalDateTime
-            .ofInstant(java.time.Instant.ofEpochMilli(millis), java.time.ZoneOffset.UTC))
-          case _ => F.lit(new java.sql.Timestamp(millis))
-        }
-        val cutoff = tsLit((ms(mm.get(0)) + ms(mm.get(1))) / 2)
-        // one tmp dir reused across the staged batches (overwrite clears
-        // it; the part file moves out) — a per-stage dir would register a
-        // fresh shutdown hook every bench invocation
-        val tmp = stagingDir("graft_swc_tmp")
-        def stage(df: DataFrame, name: String, mtime: Long): Unit = {
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = {
-            val l = java.nio.file.Files.list(tmp)
-            try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-              .findFirst().get()
-            finally l.close()
-          }
-          val dst = staged.resolve(name)
-          java.nio.file.Files.move(part, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        stage(ev.filter(F.col("ts") < cutoff), "batch-0.parquet", 1600000000000L)
-        stage(ev.filter(F.col("ts") >= cutoff), "batch-1.parquet", 1600000060000L)
-        stage(ev.limit(1).select(F.col("event_id"),
-          tsLit(ms(mm.get(1)) + 3L * 86400000L).as("ts"),
-          F.col("user_id"), F.lit("zz_punct").as("event_type"),
-          F.col("value"), F.col("props")), "batch-2.parquet", 1600000120000L)
-      }
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-      val name = s"swc_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q =
-        try {
-          // watermarks require TIMESTAMP; the UTC session makes the
-          // NTZ->TIMESTAMP cast (and the cast back on output) lossless
-          stream.withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 minute")
-            .groupBy(F.window(F.col("ts"), "1 day").as("w"), F.col("event_type"))
-            .agg(F.count(F.lit(1)).as("n_events"),
-              F.round(F.sum(F.col("value")), 2).as("sum_value"))
-            .select(F.col("w.start").cast("timestamp_ntz").as("w_start"),
-              F.col("event_type"), F.col("n_events"), F.col("sum_value"))
-            .writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-      q.awaitTermination()
-      s.table(name).orderBy("w_start", "event_type")
+      val stream = stagedStream(s, dir, "graft_swc_in", ev.schema)(
+        watermarkBatches(ev, "event_type", 3L * 86400000L))
+      runToSink(s, "swc") {
+        // watermarks require TIMESTAMP; the UTC session makes the
+        // NTZ->TIMESTAMP cast (and the cast back on output) lossless
+        stream.withColumn("ts", F.col("ts").cast("timestamp"))
+          .withWatermark("ts", "1 minute")
+          .groupBy(F.window(F.col("ts"), "1 day").as("w"), F.col("event_type"))
+          .agg(F.count(F.lit(1)).as("n_events"),
+            F.round(F.sum(F.col("value")), 2).as("sum_value"))
+          .select(F.col("w.start").cast("timestamp_ntz").as("w_start"),
+            F.col("event_type"), F.col("n_events"), F.col("sum_value"))
+      }.orderBy("w_start", "event_type")
     }),
 
     // same rollup with HLL distinct users per window — rows-only (bound-
@@ -917,57 +844,13 @@ object SparkEntry {
     // must contribute zero rows). Kept id = min doc_id per distinct text:
     // exact DuckDB oracle.
     "streaming_dedup" -> ((s, dir) => {
-      val path = s"$dir/documents.parquet"
-      // the file streaming source lists a DIRECTORY; stage the files into
-      // one, ordered by explicit modification times (the source's file
-      // ordering key). Staging is deterministic input prep — built once
-      // per (session, dir) via stagedOnce; the streaming run below is
-      // NEVER reused.
-      val staged = stagedOnce(s, dir, "graft_sd_in") { staged =>
-        val batch0 = staged.resolve("batch-0.parquet")
-        java.nio.file.Files.copy(java.nio.file.Paths.get(path), batch0)
-        // batch 2: same texts under shifted ids (every row a cross-batch dup)
-        val dupDir = stagingDir("graft_sd_dup")
-        s.read.parquet(path)
-          .withColumn("doc_id", F.col("doc_id") + 1000000L)
-          .coalesce(1).write.mode("overwrite").parquet(dupDir.toString)
-        val dupPart = {
-          val l = java.nio.file.Files.list(dupDir)
-          try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally l.close()
-        }
-        val batch1 = staged.resolve("batch-1.parquet")
-        java.nio.file.Files.move(dupPart, batch1)
-        java.nio.file.Files.setLastModifiedTime(batch0,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L))
-        java.nio.file.Files.setLastModifiedTime(batch1,
-          java.nio.file.attribute.FileTime.fromMillis(1600000060000L))
-      }
-      val schema = s.read.parquet(path).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-      val name = s"sd_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      // state-store count = shuffle partitions, fixed at query start and
-      // each paying per-batch init/commit; at this probe scale that fixed
-      // cost dominates, so the stateful stage gets a narrow width
-      // (save/restore — only this streaming query sees it)
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q =
-        try {
-          graft.ops.StreamingDedup.firstSeen(
-              stream.select(F.col("doc_id"), F.col("text")), "doc_id", "text")
-            .writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-      q.awaitTermination()
-      s.table(name).select(F.col("doc_id"), F.col("text")).orderBy("doc_id")
+      val docs = read(s, dir, "documents")
+      val stream = stagedStream(s, dir, "graft_sd_in", docs.schema)(
+        Seq(docs, docs.withColumn("doc_id", F.col("doc_id") + 1000000L)))
+      runToSink(s, "sd") {
+        graft.ops.StreamingDedup.firstSeen(
+          stream.select(F.col("doc_id"), F.col("text")), "doc_id", "text")
+      }.select(F.col("doc_id"), F.col("text")).orderBy("doc_id")
     }),
 
     // kll_histogram in the EXACT regime (k >= every group: no
@@ -1213,38 +1096,21 @@ object SparkEntry {
         .seenBank(epoch1, "text", nParts = 8, maxSizePerPart = 2048)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       bank.count() // materialize once; the stream-static join reuses it
-      // deterministic input staging, built once per (session, dir) —
-      // stagedOnce; the bank build + streaming run below are never reused
-      val staged = stagedOnce(s, dir, "graft_sdc_in") { staged =>
-        val docs = read(s, dir, "documents")
-        docs.select((F.col("doc_id") + 200000L).as("doc_id"), F.col("text"))
-          .unionByName(docs.select((F.col("doc_id") + 300000L).as("doc_id"),
-            F.concat(F.col("text"), F.lit(" fresh marker")).as("text")))
-          .coalesce(1).write.mode("overwrite").parquet(staged.toString)
-      }
-      val schema = s.read.parquet(staged.toString).schema
-      val stream = s.readStream.schema(schema).parquet(staged.toString)
-      val name = s"sdc_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      // only the input staging is reused; the bank build above and the
+      // streaming run below re-run on every call
+      val stream = stagedStream(s, dir, "graft_sdc_in", epoch1.schema)(Seq(
+        epoch1.select((F.col("doc_id") + 200000L).as("doc_id"), F.col("text"))
+          .unionByName(epoch1.select((F.col("doc_id") + 300000L).as("doc_id"),
+            F.concat(F.col("text"), F.lit(" fresh marker")).as("text")))))
       // unpersist in finally: a failed start/run must not strand the
       // persisted bank in executor storage for the session's lifetime
-      try {
-        val q =
-          try {
-            graft.ops.StreamingDedup.firstSeenCompacted(
-                stream.select(F.col("doc_id"), F.col("text")),
-                "doc_id", "text", bank, nParts = 8)
-              .writeStream
-              .outputMode("append")
-              .format("memory")
-              .queryName(name)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-        q.awaitTermination()
-      } finally bank.unpersist(blocking = false)
-      s.table(name).select(F.col("doc_id"), F.col("text")).orderBy("doc_id")
+      val out =
+        try runToSink(s, "sdc") {
+          graft.ops.StreamingDedup.firstSeenCompacted(
+            stream.select(F.col("doc_id"), F.col("text")),
+            "doc_id", "text", bank, nParts = 8)
+        } finally bank.unpersist(blocking = false)
+      out.select(F.col("doc_id"), F.col("text")).orderBy("doc_id")
     }),
 
     // quality scoring: deterministic arithmetic, exact DuckDB oracle
@@ -1358,7 +1224,7 @@ object SparkEntry {
     // memoized: trainIvf runs its deterministic sample + Lloyd pass at
     // plan-BUILD time, so re-invocations in one JVM (the bench's two
     // passes) must not re-train on every call
-    "ivf_topk" -> ((s, dir) => memo("ivf_topk", s, dir) {
+    "ivf_topk" -> ((s, dir) => SessionReuse.once(s, ("ivf_topk", dir)) {
       val embs = read(s, dir, "embeddings")
       val queries = embs.filter(F.col("vec_id") < 5)
         .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qvec"))
@@ -1374,7 +1240,7 @@ object SparkEntry {
     // (shortlist a few times k) is rows-only; recall vs brute force is
     // pinned in OpsSpec, and the exhaustive regime below carries the
     // exact oracle.
-    "pq_topk" -> ((s, dir) => memo("pq_topk", s, dir) {
+    "pq_topk" -> ((s, dir) => SessionReuse.once(s, ("pq_topk", dir)) {
       val embs = read(s, dir, "embeddings")
       val queries = embs.filter(F.col("vec_id") < 5)
         .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qvec"))
@@ -1388,7 +1254,7 @@ object SparkEntry {
     // corpus row reaches the exact rerank, so the output provably
     // equals brute force row for row REGARDLESS of codebook quality —
     // the similarity_topk oracle restricted to the slice.
-    "pq_topk_exact" -> ((s, dir) => memo("pq_topk_exact", s, dir) {
+    "pq_topk_exact" -> ((s, dir) => SessionReuse.once(s, ("pq_topk_exact", dir)) {
       val embs = read(s, dir, "embeddings").filter(F.col("vec_id") < 500)
       val queries = embs.filter(F.col("vec_id") < 5)
         .select(F.col("vec_id").as("query_id"), F.col("embedding").as("qvec"))
@@ -1515,7 +1381,7 @@ object SparkEntry {
     // pass's plan AND its persisted shingle table (populated by the first
     // execution), so repeated invocations measure warm execution instead
     // of re-paying the 5-branch plan + cache build every call.
-    "ngram_jaccard_dups" -> ((s, dir) => memo("ngram_jaccard_dups", s, dir) {
+    "ngram_jaccard_dups" -> ((s, dir) => SessionReuse.once(s, ("ngram_jaccard_dups", dir)) {
       val docs = read(s, dir, "documents").select(F.col("doc_id"), F.col("text"))
       Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.7)
         .orderBy("id_a", "id_b")
@@ -1611,7 +1477,7 @@ object SparkEntry {
     // memoized like ivf_topk: semanticDedup runs trainIvf (seed collect
     // + a Lloyd aggregation job) at PLAN-CONSTRUCTION time, so an
     // unmemoized re-invocation re-pays training before the query runs
-    "semantic_dedup" -> ((s, dir) => memo("semantic_dedup", s, dir) {
+    "semantic_dedup" -> ((s, dir) => SessionReuse.once(s, ("semantic_dedup", dir)) {
       val embs = read(s, dir, "embeddings")
       val jittered = embs.select((F.col("vec_id") + 100000).as("vec_id"),
         F.transform(F.col("embedding"), x => x * F.lit(1.0001f)).as("embedding"))
@@ -1627,7 +1493,7 @@ object SparkEntry {
     // DuckDB expresses directly — an exact end-to-end oracle for the
     // cluster-join + min-id pruning machinery over a fixed 500-vector
     // slice.
-    "semantic_dedup_exact" -> ((s, dir) => memo("semantic_dedup_exact", s, dir) {
+    "semantic_dedup_exact" -> ((s, dir) => SessionReuse.once(s, ("semantic_dedup_exact", dir)) {
       val embs = read(s, dir, "embeddings").filter(F.col("vec_id") < 500)
       val jittered = embs.select((F.col("vec_id") + 100000).as("vec_id"),
         F.transform(F.col("embedding"), x => x * F.lit(1.0001f)).as("embedding"))
@@ -1854,58 +1720,15 @@ object SparkEntry {
       val t = graft.data.TranscriptFixture.frame(s)
         .filter(F.col("tool").isNotNull)
         .select(F.col("conv_id"), F.col("ts"), F.col("tool"))
-      // deterministic input staging, built once per (session, dir) —
-      // stagedOnce; the streaming run below is never reused
-      val staged = stagedOnce(s, dir, "graft_stw_in") { staged =>
-        val mm = t.agg(F.min(F.col("ts")), F.max(F.col("ts"))).head()
-        val lo = mm.getTimestamp(0).getTime
-        val hi = mm.getTimestamp(1).getTime
-        // one tmp dir reused across the staged batches (overwrite clears
-        // it; the part file moves out) — a per-stage dir would register a
-        // fresh shutdown hook every bench invocation
-        val tmp = stagingDir("graft_stw_tmp")
-        def stage(df: DataFrame, name: String, mtime: Long): Unit = {
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = {
-            val l = java.nio.file.Files.list(tmp)
-            try l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-              .findFirst().get()
-            finally l.close()
-          }
-          val dst = staged.resolve(name)
-          java.nio.file.Files.move(part, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(mtime))
-        }
-        val cutoff = F.lit(new java.sql.Timestamp((lo + hi) / 2))
-        stage(t.filter(F.col("ts") < cutoff), "batch-0.parquet", 1600000000000L)
-        stage(t.filter(F.col("ts") >= cutoff), "batch-1.parquet", 1600000060000L)
-        stage(t.limit(1).select(F.col("conv_id"),
-          F.lit(new java.sql.Timestamp(hi + 3L * 86400000L)).as("ts"),
-          F.lit("zz_punct").as("tool")), "batch-2.parquet", 1600000120000L)
-      }
-      val stream = s.readStream.schema(t.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-      val name = s"stw_out_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q =
-        try {
-          stream.withWatermark("ts", "1 minute")
-            .groupBy(F.window(F.col("ts"), "1 day").as("w"), F.col("tool"))
-            .agg(F.count(F.lit(1)).as("n_turns"))
-            .select(F.col("w.start").as("w_start"),
-              F.col("tool").as("tool_name"), F.col("n_turns"))
-            .writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-      q.awaitTermination()
-      s.table(name).orderBy("w_start", "tool_name")
+      val stream = stagedStream(s, dir, "graft_stw_in", t.schema)(
+        watermarkBatches(t, "tool", 3L * 86400000L))
+      runToSink(s, "stw") {
+        stream.withWatermark("ts", "1 minute")
+          .groupBy(F.window(F.col("ts"), "1 day").as("w"), F.col("tool"))
+          .agg(F.count(F.lit(1)).as("n_turns"))
+          .select(F.col("w.start").as("w_start"),
+            F.col("tool").as("tool_name"), F.col("n_turns"))
+      }.orderBy("w_start", "tool_name")
     }),
 
     // as-of over transcripts: attach to each user turn the most recent
@@ -2077,7 +1900,7 @@ object SparkEntry {
     // in full on every action — re-invocations measure steady-state
     // encoding instead of re-paying training per call, and the bench's
     // cold/query split reports both.
-    "bpe_encode" -> ((s, dir) => memo("bpe_encode", s, dir) {
+    "bpe_encode" -> ((s, dir) => SessionReuse.once(s, ("bpe_encode", dir)) {
       val d = read(s, dir, "documents")
       val merges = graft.ops.Vocab.bpeTrain(d, "text", numMerges = 20)
         .orderBy("rank").collect()

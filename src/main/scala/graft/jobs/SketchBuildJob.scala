@@ -185,11 +185,14 @@ object SketchBuildJob {
           .collect()
         written.map { r =>
           val m = PartMetrics(r.getInt(0), r.getLong(1), r.getLong(2), wallMs / pending.size)
+          // paths are user input: escaped like config.json's, never
+          // interpolated raw into the JSON text
+          val predicate = s"${TranscriptTable.PartCol}=${m.partId}"
           val json =
             s"""{"part_id":${m.partId},"rows":${m.rows},"est_convs":${m.estConvs},
-               |"wall_ms":${m.wallMs},"input":"${c.input}",
-               |"predicate":"${TranscriptTable.PartCol}=${m.partId}",
-               |"output":"${partsDir(c.out)}/${TranscriptTable.PartCol}=${m.partId}"}"""
+               |"wall_ms":${m.wallMs},"input":${ProfileJob.jsonStr(c.input)},
+               |"predicate":${ProfileJob.jsonStr(predicate)},
+               |"output":${ProfileJob.jsonStr(s"${partsDir(c.out)}/$predicate")}}"""
               .stripMargin.replace("\n", "")
           writeUtf8(mfs, new HPath(manifestDir(c.out), s"part-${m.partId}.json"), json)
           m

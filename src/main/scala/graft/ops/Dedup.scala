@@ -273,8 +273,9 @@ object Dedup {
     // subplans: uncached, the full per-document minhash pass (the
     // dominant stage of this pipeline at corpus scale) runs five times
     // per action. Persisted here — (id, 64 longs) rows, far narrower
-    // than the documents they sign — and registry-scoped exactly like
-    // ngramPrefixCandidates' shingle table. The banding explode stays
+    // than the documents they sign — and registry-scoped by the signature
+    // plan's identity, like simhashPairsFromSig: a call on another input
+    // must not evict this input's signatures. The banding explode stays
     // OUTSIDE the cache so join planning above it is unconstrained.
     // (probeAll drops the signature column entirely — column pruning
     // removes the minhash pass there, and a persist would force it back)
@@ -284,8 +285,7 @@ object Dedup {
       if (probeAll) sigRaw
       else {
         val s = sigRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        PersistRegistry.swap(df.sparkSession,
-          ("minhash_sig", numHashes, bands, shingleSize), Seq(s))
+        SessionReuse.swap(df.sparkSession, ("minhash_sig", s.semanticHash()), Seq(s))
         s
       }
 
@@ -454,8 +454,8 @@ object Dedup {
         F.col("__sz"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // registry scopes the cache: strand cap 1 per (session, config);
-    // see PersistRegistry for the sameSemantics eviction rule
-    PersistRegistry.swap(df.sparkSession, ("ngram", n, threshold), Seq(byDoc))
+    // see SessionReuse.swap for the sameSemantics eviction rule
+    SessionReuse.swap(df.sparkSession, ("ngram", n, threshold), Seq(byDoc))
     // prefix length |X| - ceil(t·|X|) + 1; the 1e-9 slack can only shrink
     // the ceil, i.e. LENGTHEN the prefix — always safe
     val plen = (F.col("__sz") -
@@ -660,8 +660,7 @@ object Dedup {
       if (probeAll) sigRaw
       else {
         val s = sigRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        PersistRegistry.swap(sigDf.sparkSession,
-          ("simhash_sig", s.semanticHash()), Seq(s))
+        SessionReuse.swap(sigDf.sparkSession, ("simhash_sig", s.semanticHash()), Seq(s))
         s
       }
     val banded =

@@ -65,7 +65,7 @@ object FuzzyJoin {
     // byStr feeds two branches of it plus both verify rejoins: Spark
     // does not share common subplans across self-join branches; the
     // registry scopes the cache (strand cap 1 per config per session)
-    PersistRegistry.swap(df.sparkSession, ("fuzzy", maxEd, q), Seq(toks, byStr))
+    SessionReuse.swap(df.sparkSession, ("fuzzy", maxEd, q), Seq(toks, byStr))
 
     val plen = maxEd * q + 1
     // prefix rows carry ONLY (gram, id, length) — never the string: each

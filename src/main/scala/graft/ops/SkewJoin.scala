@@ -129,10 +129,18 @@ object SkewJoin {
     // distribution requirement, so it pins width without adding an
     // exchange. The count comes from the session's configured shuffle
     // width — cluster-sized in production, never a local constant.
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = gridWidth(df.sparkSession.conf.get("spark.sql.shuffle.partitions"),
+      df.sparkSession.sparkContext.defaultParallelism)
     val joinKeys = (keyCols ++ Seq("__k1", "__k2")).map(F.col)
     leftH.repartition(n, joinKeys: _*)
       .join(rightH.repartition(n, joinKeys: _*), keyCols ++ Seq("__k1", "__k2"))
       .drop("__k1", "__k2")
   }
+
+  /** The grid join's pinned width, read from a `spark.sql.shuffle.partitions`
+    * value. A non-integer setting ("auto", which some Spark platforms
+    * accept) carries no width, so the context's default parallelism
+    * stands in instead of a NumberFormatException. */
+  private[ops] def gridWidth(shufflePartitions: String, defaultParallelism: => Int): Int =
+    shufflePartitions.toIntOption.getOrElse(defaultParallelism)
 }

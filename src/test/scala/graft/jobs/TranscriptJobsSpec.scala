@@ -229,6 +229,31 @@ class TranscriptJobsSpec extends SparkTestBase {
     assert(joined.count() === df.count())
   }
 
+  test("part manifests stay valid JSON when paths contain a quote and a backslash") {
+    // manifest fields are user paths: a raw interpolation of `"` or `\`
+    // would end the string early or start an escape. Spark globs input
+    // paths and `\` is the glob escape, so the table directory in"q\b is
+    // handed over as in"q\\b, which matches it; the output path keeps to
+    // a quote because the job reads its own parts back through Spark.
+    TranscriptTable.write(TranscriptGen.generate(spark, seed = 7L, 40L),
+      workDir + "/in\"q\\b", 4)
+    val odd = workDir + "/in\"q\\\\b"
+    val out = workDir + "/out\"q"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(odd, out))
+    val manifests = new java.io.File(s"$out/_manifest").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
+    assert(manifests.length === SketchBuildJob.completedParts(out).size)
+    assert(manifests.nonEmpty)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    manifests.foreach { f =>
+      val m = mapper.readTree(f)
+      val pid = m.get("part_id").asInt()
+      assert(m.get("input").asText() === odd)
+      assert(m.get("predicate").asText() === s"${TranscriptTable.PartCol}=$pid")
+      assert(m.get("output").asText() === s"$out/parts/${TranscriptTable.PartCol}=$pid")
+    }
+  }
+
   test("resume over parts written by an older schema fails loudly, not silently") {
     import org.apache.hadoop.fs.{Path => HPath}
     val out = s"$workDir/build_stale"

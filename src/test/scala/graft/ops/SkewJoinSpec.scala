@@ -35,6 +35,16 @@ class SkewJoinSpec extends SparkTestBase {
     assert(got.size === (1 to 8).map(g => g * g).sum + 60 * 60 + 200 * 200)
   }
 
+  test("grid width: integer shuffle conf is used, \"auto\" falls back to default parallelism") {
+    // the grid width is read from spark.sql.shuffle.partitions; "auto"
+    // (accepted by some Spark platforms; open-source Spark rejects it when
+    // set, so it is fed to the width rule directly) carries no integer
+    // width and must fall back instead of throwing
+    val dp = spark.sparkContext.defaultParallelism
+    val cases = Seq("4" -> 4, "200" -> 200, "auto" -> dp)
+    cases.foreach { case (conf, want) => assert(SkewJoin.gridWidth(conf, dp) === want, conf) }
+  }
+
   test("duplicate elements keep plain-join multiplicity through the grid") {
     // the same (k, id) row twice in a hot group must pair like the plain
     // join pairs it (4 ordered combinations), not be collapsed by the
