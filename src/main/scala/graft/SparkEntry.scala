@@ -680,9 +680,9 @@ object SparkEntry {
     "bloom_probe_members" -> ((s, dir) => {
       val orders = read(s, dir, "orders")
       val built = orders.filter(F.col("o_orderstatus") === "F")
-      // sized from the build side (the mkblm sizing rule, same as
-      // BloomJoin.keySketch) — a hardcoded capacity silently degrades FPR
-      // at larger scale factors
+      // sized from the build side (the mkblm sizing rule; o_orderkey is
+      // unique, so the row count is the distinct count) — a hardcoded
+      // capacity silently degrades FPR at larger scale factors
       val maxSize = math.max(128L, built.count())
       val sketch = built.agg(
         bloom_sketch(F.col("o_orderkey"), maxSize, 16)).head().getAs[Array[Byte]](0)

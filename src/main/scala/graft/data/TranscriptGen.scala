@@ -165,18 +165,30 @@ object TranscriptTable {
   private val MetaFile = "_graft_meta.json"
 
   /** The routing modulus recorded by [[write]]; None for tables written
-    * by other tools (callers fall back to data inference, loudly). */
+    * by other tools (callers fall back to data inference, loudly).
+    *
+    * `path` is resolved the way Spark's reader resolves it — as a glob —
+    * so a glob-escaped path (`in\\b` for the directory `in\b`) finds the
+    * metadata of the table it reads. A glob over several tables yields
+    * their modulus only when every one recorded the same. */
   def readNParts(spark: SparkSession, path: String): Option[Int] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val metaPath = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = metaPath.getFileSystem(conf)
-    if (!fs.exists(metaPath)) None
-    else {
-      val in = fs.open(metaPath)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      "\"n_parts\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(body).map(_.group(1).toInt)
+    val glob = new org.apache.hadoop.fs.Path(path)
+    val fs = glob.getFileSystem(conf)
+    val recorded = Option(fs.globStatus(glob)).toSeq.flatten.map { dir =>
+      val metaPath = new org.apache.hadoop.fs.Path(dir.getPath, MetaFile)
+      if (!fs.exists(metaPath)) None
+      else {
+        val in = fs.open(metaPath)
+        val body =
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        "\"n_parts\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(body).map(_.group(1).toInt)
+      }
+    }
+    recorded.distinct match {
+      case Seq(n @ Some(_)) => n
+      case _ => None
     }
   }
 

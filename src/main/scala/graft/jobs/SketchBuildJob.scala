@@ -2,7 +2,9 @@ package graft.jobs
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.IntegerType
 
 import graft.data.TranscriptTable
 import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch}
@@ -32,6 +34,16 @@ import graft.spark.functions._
   *  - the final global merge reads only the per-part sketch rows (tiny)
   *    and unions them with the `*_merge` aggregates — associativity makes
   *    the result identical to a single-pass aggregation.
+  *
+  * Job shape: every Spark action costs driver time (planning, adaptive
+  * re-planning, schema merges) whatever its size, so the build asks Spark
+  * only for what the driver cannot already see. Part ids come from the
+  * input's file index, listed once on the driver. The rollup is ONE
+  * query: its aggregate returns the merged sketches, the manifest facts
+  * of this run's parts and the ids of stale parts together. A fresh
+  * build therefore runs at most six jobs — the input's schema read, the
+  * per-part aggregate and its write (two), the parts' schema merge, and
+  * the rollup (two) — and a resume with nothing pending at most four.
   */
 object SketchBuildJob {
 
@@ -112,6 +124,13 @@ object SketchBuildJob {
     else "\\\"n_parts\\\":(\\d+)".r.findFirstMatchIn(readUtf8(fs, f)).map(_.group(1).toInt)
   }
 
+  /** Whether `dir` holds any `part_id=N` directory (a driver-side listing). */
+  private def hasPartDirs(spark: SparkSession, dir: String): Boolean = {
+    val pattern = new HPath(dir, s"${TranscriptTable.PartCol}=*")
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(pattern)).exists(_.exists(_.isDirectory))
+  }
+
   /** The per-part sketch aggregation — one row per part_id. */
   private def partAggregates(df: DataFrame, c: Config): DataFrame = {
     val roleTool = F.concat_ws("|", F.col("role"), F.coalesce(F.col("tool"), F.lit("-")))
@@ -128,16 +147,38 @@ object SketchBuildJob {
         bloom_sketch(F.col("conv_id"), c.bloomPerPartCapacity, c.bloomBpi).as("bloom_conv"))
   }
 
+  /** Part ids that hold data, read from the file index that
+    * [[TranscriptTable.read]] already listed on the driver: no Spark job.
+    * A part counts when its directory holds a non-empty file. A table
+    * whose `part_id` is a data column rather than a directory partition
+    * (a foreign writer) falls back to a distinct scan. */
+  private def partIds(df: DataFrame): Seq[Int] = {
+    val fromIndex = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.flatMap { index =>
+      val schema = index.partitionSchema
+      Some(schema.fieldNames.indexOf(TranscriptTable.PartCol))
+        .filter(i => i >= 0 && schema(i).dataType == IntegerType)
+        .map { i =>
+          index.listFiles(Nil, Nil)
+            .filter(d => !d.values.isNullAt(i) && d.files.exists(_.getLen > 0))
+            .map(_.values.getInt(i))
+        }
+    }
+    fromIndex
+      .getOrElse(df.select(TranscriptTable.PartCol).distinct().collect().map(_.getInt(0)).toSeq)
+      .distinct.sorted
+  }
+
   def run(spark: SparkSession, c: Config): BuildResult = {
     val conf = spark.sparkContext.hadoopConfiguration
     val mfs = manifestDir(c.out).getFileSystem(conf)
     mfs.mkdirs(manifestDir(c.out))
     val df = TranscriptTable.read(spark, c.input)
 
-    val allParts = df.select(TranscriptTable.PartCol).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    require(allParts.nonEmpty,
-      s"SketchBuildJob: input table at ${c.input} has no rows — nothing to build")
+    val noRows = s"SketchBuildJob: input table at ${c.input} has no rows — nothing to build"
+    val allParts = partIds(df)
+    require(allParts.nonEmpty, noRows)
     // record the routing modulus once — the WRITER's modulus from the
     // table's own metadata. Inferring max(part_id)+1 from observed data
     // is WRONG whenever the highest hash range is empty (probeBank would
@@ -164,49 +205,32 @@ object SketchBuildJob {
     val pendingAll = allParts.filterNot(done)
     val pending = c.maxPartsPerRun.fold(pendingAll)(pendingAll.take)
 
-    val processed: Seq[PartMetrics] =
-      if (pending.isEmpty) Seq.empty
+    val wallMs =
+      if (pending.isEmpty) 0L
       else {
         val t0 = System.nanoTime()
         val slice = df.filter(F.col(TranscriptTable.PartCol).isin(pending: _*))
-        val partRows = partAggregates(slice, c)
         // distributed write of per-part sketch rows; dynamic overwrite so
         // a rerun of a crashed part replaces rather than duplicates
-        partRows.write.mode("overwrite")
+        partAggregates(slice, c).write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(TranscriptTable.PartCol)
           .parquet(partsDir(c.out))
-        val wallMs = (System.nanoTime() - t0) / 1000000
-        // lineage + metrics from the written (small) per-part rows
-        val written = spark.read.option("mergeSchema", "true").parquet(partsDir(c.out))
-          .filter(F.col(TranscriptTable.PartCol).isin(pending: _*))
-          .select(F.col(TranscriptTable.PartCol), F.col("rows"),
-            hll_estimate(F.col("hll_conv")).as("est_convs"))
-          .collect()
-        written.map { r =>
-          val m = PartMetrics(r.getInt(0), r.getLong(1), r.getLong(2), wallMs / pending.size)
-          // paths are user input: escaped like config.json's, never
-          // interpolated raw into the JSON text
-          val predicate = s"${TranscriptTable.PartCol}=${m.partId}"
-          val json =
-            s"""{"part_id":${m.partId},"rows":${m.rows},"est_convs":${m.estConvs},
-               |"wall_ms":${m.wallMs},"input":${ProfileJob.jsonStr(c.input)},
-               |"predicate":${ProfileJob.jsonStr(predicate)},
-               |"output":${ProfileJob.jsonStr(s"${partsDir(c.out)}/$predicate")}}"""
-              .stripMargin.replace("\n", "")
-          writeUtf8(mfs, new HPath(manifestDir(c.out), s"part-${m.partId}.json"), json)
-          m
-        }.toSeq
+        (System.nanoTime() - t0) / 1000000
       }
+    // part directories that list only zero-row files pass the index
+    // check above but write no sketch rows
+    require(done.nonEmpty || hasPartDirs(spark, partsDir(c.out)), noRows)
 
-    // global rollup over ALL completed parts (previous + this run):
-    // reads only the per-part sketch rows — O(parts), not O(rows).
+    // ONE rollup query over the completed parts plus this run's: reads
+    // only the per-part sketch rows — O(parts), not O(rows) — and returns
+    // the merged sketches, the pending parts' manifest facts and the ids
+    // of stale parts together.
     // mergeSchema=true because a resumed build may mix part files written
     // by different library versions: parquet otherwise samples ONE footer
     // and silently drops (or nulls) columns the sampled file lacks.
-    val nowDone = completedParts(c.out, conf)
     val partsAll = spark.read.option("mergeSchema", "true").parquet(partsDir(c.out))
-      .filter(F.col(TranscriptTable.PartCol).isin(nowDone.toSeq: _*))
+      .filter(F.col(TranscriptTable.PartCol).isin((done.toSeq ++ pending): _*))
     // fail loudly on parts from an older schema rather than silently
     // rolling up stats that cover only the newer parts (SketchMerge
     // aggregates skip nulls, which would mask the gap)
@@ -217,14 +241,7 @@ object SketchBuildJob {
       s"parts at ${partsDir(c.out)} were built by an older version " +
         s"(missing columns: ${missingCols.mkString(", ")}); rebuild the " +
         "bank (delete _manifest + parts) or roll up with the old library")
-    val staleParts = partsAll
-      .filter(required.map(F.col(_).isNull).reduce(_ || _))
-      .select(F.col(TranscriptTable.PartCol)).collect().map(_.getInt(0)).sorted
-    require(staleParts.isEmpty,
-      s"parts ${staleParts.mkString(", ")} at ${partsDir(c.out)} have null " +
-        "sketch columns (built by an older version); delete their " +
-        "_manifest/part-*.json entries to rebuild them, or roll up with " +
-        "the old library")
+    val part = F.col(TranscriptTable.PartCol)
     val finalRow = partsAll
       .agg(
         F.sum(F.col("rows")).as("rows"),
@@ -232,8 +249,38 @@ object SketchBuildJob {
         hll_merge(F.col("hll_tool")).as("hll_tool"),
         cms_merge(F.col("cms_roletool")).as("cms_roletool"),
         kll_merge(F.col("kll_textlen")).as("kll_textlen"),
-        hh_merge(F.col("hh_tool")).as("hh_tool"))
+        hh_merge(F.col("hh_tool")).as("hh_tool"),
+        // collect_list skips the nulls an unmatched `when` yields
+        F.collect_list(F.when(part.isin(pending: _*),
+          F.struct(part, F.col("rows"), hll_estimate(F.col("hll_conv"))))).as("pending"),
+        F.collect_list(F.when(required.map(F.col(_).isNull).reduce(_ || _), part))
+          .as("stale"))
       .head()
+
+    // lineage + metrics for this run's parts, recorded before the stale
+    // check so a failed rollup never recomputes finished parts
+    val processed: Seq[PartMetrics] =
+      finalRow.getAs[collection.Seq[Row]]("pending").toSeq.sortBy(_.getInt(0)).map { r =>
+        val m = PartMetrics(r.getInt(0), r.getLong(1), r.getLong(2), wallMs / pending.size)
+        // paths are user input: escaped like config.json's, never
+        // interpolated raw into the JSON text
+        val predicate = s"${TranscriptTable.PartCol}=${m.partId}"
+        val json =
+          s"""{"part_id":${m.partId},"rows":${m.rows},"est_convs":${m.estConvs},
+             |"wall_ms":${m.wallMs},"input":${ProfileJob.jsonStr(c.input)},
+             |"predicate":${ProfileJob.jsonStr(predicate)},
+             |"output":${ProfileJob.jsonStr(s"${partsDir(c.out)}/$predicate")}}"""
+            .stripMargin.replace("\n", "")
+        writeUtf8(mfs, new HPath(manifestDir(c.out), s"part-${m.partId}.json"), json)
+        m
+      }
+    val staleParts = finalRow.getAs[collection.Seq[Int]]("stale").sorted
+    require(staleParts.isEmpty,
+      s"parts ${staleParts.mkString(", ")} at ${partsDir(c.out)} have null " +
+        "sketch columns (built by an older version); delete their " +
+        "_manifest/part-*.json entries to rebuild them, or roll up with " +
+        "the old library")
+    require(!finalRow.isNullAt(0), noRows)
 
     val totalRows = finalRow.getLong(0)
     val hllConv = HllSketch.deserialize(finalRow.getAs[Array[Byte]]("hll_conv"))
@@ -274,7 +321,7 @@ object SketchBuildJob {
          |"est_distinct_tools":${result.estDistinctTools},
          |"textlen_p50":${result.textLenP50},"textlen_p99":${result.textLenP99},
          |"top_tools":$topToolsJson,
-         |"parts_done":${nowDone.size},"parts_this_run":${processed.size}}"""
+         |"parts_done":${done.size + processed.size},"parts_this_run":${processed.size}}"""
         .stripMargin.replace("\n", "")
     writeUtf8(ffs, new HPath(finalDir(c.out), "summary.json"), summary)
     result

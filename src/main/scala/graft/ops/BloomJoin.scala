@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 
-import graft.spark.functions.{bloom_might_contain, bloom_sketch}
+import graft.sketch.HllSketch
+import graft.spark.functions.{bloom_might_contain, bloom_sketch, hll_distinct}
 
 /** Bloom-accelerated exact semi/anti joins — the reference's `ckblm`
   * membership filter (`cmd/ckblm.java:63-66`) promoted to a JOIN
@@ -20,8 +21,9 @@ import graft.spark.functions.{bloom_might_contain, bloom_sketch}
   *    exact anti join. With FPR ~0.62^bitsPerItem, the exact-join input
   *    shrinks to |matches| + ~FPR·|large|.
   *
-  * Sizing: the sketch is built at `maxSize = distinct build keys` via one
-  * count over the (small) build side — the mkblm sizing rule.
+  * Sizing: the sketch is built at `maxSize = distinct build keys` — the
+  * mkblm sizing rule — bounded from one pass over the (small) build side
+  * that counts rows and estimates distinct keys (see `keySketch`).
   *
   * Kernel choice: integral keys canonicalize to 8-byte binary and are
   * safe with the default murmur2. For SHORT DECIMAL-STRING keys pass
@@ -32,22 +34,28 @@ import graft.spark.functions.{bloom_might_contain, bloom_sketch}
   */
 object BloomJoin {
 
-  private def keySketch(small: DataFrame, smallKey: String, bitsPerItem: Int,
+  /** The build side's key sketch. One pass computes the row count and
+    * the engine's HLL distinct estimate; the sketch is sized for
+    * `min(count, ⌈estimate·(1 + 3·SE)⌉)` keys, floor 128 (tiny builds
+    * stay valid 128-bit-set filters). The HLL bound keeps a
+    * duplicate-heavy build side from paying for its repeats — raw row
+    * count sized a 10x-repeated side 10x over — while three standard
+    * errors of headroom keep the filter at or above the mkblm
+    * bits-per-distinct-item target with high probability. Re-putting a
+    * duplicate key sets the identical bits, so the sketch CONTENT needs
+    * no distinct. Join results are exact regardless of FPR (semi/anti
+    * re-verify), so sizing affects cost, never output. */
+  private[ops] def keySketch(small: DataFrame, smallKey: String, bitsPerItem: Int,
       kernel: String): Array[Byte] = {
     val keys = small.select(F.col(smallKey)).na.drop()
-    // Size by the NON-distinct row count: one metadata-cheap count
-    // instead of a distinct exchange + count + re-scan (three passes over
-    // the build side, measured on incremental_dedup). Row count >=
-    // distinct count, so the sketch is at or above the mkblm
-    // bits-per-distinct-item target — FPR only ever IMPROVES — and
-    // re-putting a duplicate key sets the identical bits, so the sketch
-    // CONTENT doesn't need the distinct either. Join results are exact
-    // regardless of FPR (semi/anti re-verify), so sizing affects cost,
-    // never output.
-    val n = math.max(128L, keys.count()) // floor keeps tiny builds valid (128 bitsets)
+    val stats = keys.agg(F.count(F.lit(1)), hll_distinct(F.col(smallKey), HllP)).head()
+    val distinctBound = math.ceil(stats.getLong(1) * (1 + 3 * HllSketch.standardError(HllP))).toLong
+    val n = math.max(128L, math.min(stats.getLong(0), distinctBound))
     keys.agg(bloom_sketch(F.col(smallKey), n, bitsPerItem, kernel))
       .head().getAs[Array[Byte]](0)
   }
+
+  private final val HllP = 14
 
   /** Exact `large SEMI JOIN small ON large(largeKey) = small(smallKey)`,
     * Bloom-prefiltered. */

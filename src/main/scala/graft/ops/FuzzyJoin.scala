@@ -32,24 +32,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   */
 object FuzzyJoin {
 
-  def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-      maxEd: Int = 1, q: Int = 2): DataFrame = {
-    require(maxEd >= 1, "maxEd must be >= 1")
-    require(q >= 1, "q must be >= 1")
-    // distinct q-gram set per string; strings shorter than q contribute
-    // themselves as their single gram so they still carry a prefix
+  /** (id, string, gram) rows: the distinct q-gram set per string; strings
+    * shorter than q contribute themselves as their single gram so they
+    * still carry a prefix. */
+  private[ops] def gramRows(df: DataFrame, idCol: String, strCol: String, q: Int): DataFrame = {
     val grams = F.when(F.length(F.col("__s")) < q, F.array(F.col("__s")))
       .otherwise(F.array_distinct(F.transform(
         F.sequence(F.lit(1), F.length(F.col("__s")) - (q - 1)),
         i => F.col("__s").substr(i, F.lit(q)))))
+    df.select(F.col(idCol).as("__id"), F.col(strCol).as("__s"))
+      .filter(F.col("__s").isNotNull)
+      .select(F.col("__id"), F.col("__s"), F.explode(grams).as("__g"))
+  }
+
+  def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
+      maxEd: Int = 1, q: Int = 2): DataFrame = {
+    require(maxEd >= 1, "maxEd must be >= 1")
+    require(q >= 1, "q must be >= 1")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // persisted: read once by the df-frequency aggregation and once by
     // the per-string rollup join, instead of re-running the corpus scan
     // + gram explode for each
-    val toks = df.select(F.col(idCol).as("__id"), F.col(strCol).as("__s"))
-      .filter(F.col("__s").isNotNull)
-      .select(F.col("__id"), F.col("__s"), F.explode(grams).as("__g"))
-      .persist(lvl)
+    val toks = gramRows(df, idCol, strCol, q).persist(lvl)
 
     val freq = toks.groupBy("__g").agg(F.count(F.lit(1)).as("__df"))
     // persisted: feeds the gram-prefix explode AND the short-string
@@ -64,8 +68,11 @@ object FuzzyJoin {
     // persisting matters because the prefix table is SELF-joined and
     // byStr feeds two branches of it plus both verify rejoins: Spark
     // does not share common subplans across self-join branches; the
-    // registry scopes the cache (strand cap 1 per config per session)
-    SessionReuse.swap(df.sparkSession, ("fuzzy", maxEd, q), Seq(toks, byStr))
+    // registry scopes the cache (strand cap 1 per input and config per
+    // session) — keyed by the input plan, like the minhash signatures, so
+    // a call on another input never evicts this one's frames
+    SessionReuse.swap(df.sparkSession, ("fuzzy", df.semanticHash(), maxEd, q),
+      Seq(toks, byStr))
 
     val plen = maxEd * q + 1
     // prefix rows carry ONLY (gram, id, length) — never the string: each

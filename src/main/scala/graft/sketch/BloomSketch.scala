@@ -217,18 +217,25 @@ object BloomSketch {
   }
 
   def deserialize(bytes: Array[Byte]): BloomSketch = {
-    val buf = ByteBuffer.wrap(bytes)
-    require(buf.getInt() == Magic, "not a BloomSketch buffer")
-    require(buf.get() == Version, "unsupported BloomSketch version")
-    val nameBytes = new Array[Byte](buf.getInt())
-    buf.get(nameBytes)
-    val kernel = HashKernels(new String(nameBytes, "UTF-8"))
-    val maxSize = buf.getLong()
-    val bitsPerItem = buf.getInt()
-    val longHash = buf.get() == 1
-    val words = new Array[Long](buf.getInt())
-    var i = 0
-    while (i < words.length) { words(i) = buf.getLong(); i += 1 }
-    new BloomSketch(kernel, maxSize, bitsPerItem, longHash, words)
+    val r = new WireReader(bytes, "BloomSketch")
+    r.header(Magic, Version)
+    val kernel = r.kernel()
+    val maxSize = r.long("max size")
+    val bitsPerItem = r.int("bits per item")
+    val longHash = r.byte("long-hash flag")
+    r.check(longHash == 0 || longHash == 1, s"long-hash flag $longHash")
+    val nWords = r.int("word count")
+    // the word count is fixed by (maxSize, bitsPerItem) as in `apply`: a
+    // flip in any of the three shows up as a mismatch
+    val bitSetLength =
+      if (maxSize <= 0 || bitsPerItem <= 0) -1L
+      else try Math.multiplyExact(maxSize, bitsPerItem.toLong) / NumBitSets
+      catch { case _: ArithmeticException => -1L }
+    r.check(bitSetLength > 0 && bitSetLength <= Int.MaxValue &&
+        nWords == NumBitSets * ((bitSetLength + 63) >>> 6),
+      s"$nWords words do not fit maxSize=$maxSize x bpi=$bitsPerItem")
+    val words = r.longs(nWords, "words")
+    r.end()
+    new BloomSketch(kernel, maxSize, bitsPerItem, longHash == 1, words)
   }
 }

@@ -246,22 +246,41 @@ object CmsSketch {
   }
 
   def deserialize(bytes: Array[Byte]): CmsSketch = {
-    val buf = ByteBuffer.wrap(bytes)
-    require(buf.getInt() == Magic, "not a CmsSketch buffer")
-    val version = buf.get()
-    require(version == Version || version == VersionDenseOnly,
-      s"unsupported CmsSketch version $version")
-    val nameBytes = new Array[Byte](buf.getInt())
-    buf.get(nameBytes)
-    val kernel = HashKernels(new String(nameBytes, "UTF-8"))
-    val depth = buf.getInt()
-    val width = buf.getInt()
-    val totalN = buf.getLong()
-    val mode = if (version == VersionDenseOnly) ModeDense else buf.get()
+    val r = new WireReader(bytes, "CmsSketch")
+    val version = r.header(Magic, Version, VersionDenseOnly)
+    val kernel = r.kernel()
+    val depth = r.int("depth")
+    val width = r.int("width")
+    r.check(depth >= 1 && width >= 1 && depth.toLong * width <= Int.MaxValue,
+      s"dims ($depth x $width)")
+    val totalN = r.long("total count")
+    val mode = if (version == VersionDenseOnly) ModeDense else r.byte("mode")
+    // every update adds its count to one cell of EACH row, so each row
+    // sums to the total count: a flipped counter or total cannot pass
+    val rowSums = new Array[Long](depth)
+    def checkRows(): Unit = {
+      var d = 0
+      while (d < depth) {
+        r.check(rowSums(d) == totalN, s"row $d sums to ${rowSums(d)}, total count is $totalN")
+        d += 1
+      }
+    }
     if (mode == ModeDense) {
-      val counters = new Array[Long](depth * width)
+      val counters = r.longs(depth * width, "counters")
+      r.end()
       var i = 0
-      while (i < counters.length) { counters(i) = buf.getLong(); i += 1 }
+      var d = 0
+      while (d < depth) {
+        var w = 0
+        while (w < width) {
+          if (counters(i) < 0) r.fail(s"counter $i is negative")
+          rowSums(d) += counters(i)
+          i += 1
+          w += 1
+        }
+        d += 1
+      }
+      checkRows()
       // re-canonicalize: a round-1 (v1) buffer may be dense below the
       // sparse threshold; rebuild the canonical representation so equal
       // counter states serialize identically across versions
@@ -281,15 +300,24 @@ object CmsSketch {
         sk
       }
     } else {
+      r.check(mode == ModeSparse, s"unknown mode $mode")
       val sk = apply(depth, width, kernel)
-      val nEntries = buf.getInt()
+      val nEntries = r.count("sparse entry count", 12)
+      var prev = -1
       var i = 0
       while (i < nEntries) {
-        val idx = buf.getInt()
-        val count = buf.getLong()
+        // canonical layout: non-zero cells by strictly ascending index
+        val idx = r.int("sparse index")
+        val count = r.long("sparse count")
+        r.check(idx > prev && idx < depth * width && count > 0,
+          s"sparse entry $i (cell $idx, count $count) out of order or range")
+        rowSums(idx / width) += count
         sk.addTo(idx, count)
+        prev = idx
         i += 1
       }
+      r.end()
+      checkRows()
       sk.totalN = totalN
       sk
     }

@@ -172,21 +172,30 @@ object HeavyHittersSketch {
   }
 
   def deserialize(bytes: Array[Byte]): HeavyHittersSketch = {
-    val buf = ByteBuffer.wrap(bytes)
-    require(buf.getInt() == Magic, "not a HeavyHittersSketch buffer")
-    require(buf.get() == Version, "unsupported HeavyHittersSketch version")
-    val capacity = buf.getInt()
-    val totalN = buf.getLong()
-    val n = buf.getInt()
+    val r = new WireReader(bytes, "HeavyHittersSketch")
+    r.header(Magic, Version)
+    val capacity = r.int("capacity")
+    r.check(capacity >= 1, s"capacity $capacity < 1")
+    val totalN = r.long("total count")
+    val n = r.count("counter count", 4 + 16)
+    r.check(n <= capacity, s"$n counters exceed capacity $capacity")
     val m = mutable.HashMap.empty[String, Counter]
+    var prev: Counter = null
     var i = 0
     while (i < n) {
-      val kb = new Array[Byte](buf.getInt())
-      buf.get(kb)
-      val key = new String(kb, "UTF-8")
-      m(key) = new Counter(key, buf.getLong(), buf.getLong(), 0)
+      val key = new String(r.bytes(r.int("key length"), "key"), "UTF-8")
+      val c = new Counter(key, r.long("count"), r.long("error"), 0)
+      // canonical layout: distinct keys by (-count, key); every counter
+      // brackets its item's true frequency, which is at most the total
+      r.check(c.error >= 0 && c.error <= c.count && c.count - c.error <= totalN,
+        s"counter '$key' (count ${c.count}, error ${c.error}) out of range for total $totalN")
+      r.check(prev == null || prev.count > c.count || (prev.count == c.count && prev.key < key),
+        s"counter '$key' out of order")
+      m(key) = c
+      prev = c
       i += 1
     }
+    r.end()
     new HeavyHittersSketch(capacity, totalN, m)
   }
 }

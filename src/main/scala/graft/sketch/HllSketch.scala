@@ -265,25 +265,27 @@ object HllSketch {
   def standardError(p: Int): Double = 1.04 / math.sqrt((1 << p).toDouble)
 
   def deserialize(bytes: Array[Byte]): HllSketch = {
-    val buf = ByteBuffer.wrap(bytes)
-    require(buf.getInt() == Magic, "not an HllSketch buffer")
-    val version = buf.get()
-    require(version == Version || version == VersionDenseOnly,
-      s"unsupported HllSketch version $version")
-    val nameBytes = new Array[Byte](buf.getInt())
-    buf.get(nameBytes)
-    val kernel = HashKernels(new String(nameBytes, "UTF-8"))
-    val p = buf.getInt()
-    val mode = if (version == VersionDenseOnly) ModeDense else buf.get()
+    val r = new WireReader(bytes, "HllSketch")
+    val version = r.header(Magic, Version, VersionDenseOnly)
+    val kernel = r.kernel()
+    val p = r.int("p")
+    r.check(p >= 4 && p <= 18, s"p=$p outside [4,18]")
+    val maxRank = 64 - p + 1
+    val mode = if (version == VersionDenseOnly) ModeDense else r.byte("mode")
     if (mode == ModeDense) {
-      val registers = new Array[Byte](1 << p)
-      buf.get(registers)
+      val registers = r.bytes(1 << p, "registers")
+      r.end()
       // re-canonicalize: a round-1 (v1) buffer may be dense below the
       // sparse threshold; rebuilding the canonical representation keeps
       // "equal register state => equal bytes" true across versions
       var occ = 0
       var i = 0
-      while (i < registers.length) { if (registers(i) != 0) occ += 1; i += 1 }
+      while (i < registers.length) {
+        if (registers(i) < 0 || registers(i) > maxRank)
+          r.fail(s"register $i holds rank ${registers(i)} > $maxRank")
+        if (registers(i) != 0) occ += 1
+        i += 1
+      }
       if (occ >= math.max(4, (1 << p) >>> 4)) {
         new HllSketch(kernel, p, registers, null, null, 0)
       } else {
@@ -296,14 +298,22 @@ object HllSketch {
         sk
       }
     } else {
+      r.check(mode == ModeSparse, s"unknown mode $mode")
       val sk = apply(p, kernel)
-      val n = buf.getInt()
+      val n = r.count("sparse entry count", 4)
+      var prev = -1
       var i = 0
       while (i < n) {
-        val packed = buf.getInt()
-        sk.setMax(packed >>> 6, (packed & 0x3f).toByte)
+        // canonical layout: (index << 6 | rank) strictly ascending
+        val packed = r.int("sparse entry")
+        val rank = packed & 0x3f
+        r.check(packed > prev && (packed >>> 6) < (1 << p) && rank >= 1 && rank <= maxRank,
+          s"sparse entry $i (index ${packed >>> 6}, rank $rank) out of order or range")
+        sk.setMax(packed >>> 6, rank.toByte)
+        prev = packed
         i += 1
       }
+      r.end()
       sk
     }
   }

@@ -235,23 +235,30 @@ object KllSketch {
   def epsilon(k: Int): Double = 1.65 / k
 
   def deserialize(bytes: Array[Byte]): KllSketch = {
-    val buf = ByteBuffer.wrap(bytes)
-    require(buf.getInt() == Magic, "not a KllSketch buffer")
-    require(buf.get() == Version, "unsupported KllSketch version")
-    val k = buf.getInt()
-    val nTotal = buf.getLong()
-    val rngState = buf.getLong()
-    val nLevels = buf.getInt()
+    val r = new WireReader(bytes, "KllSketch")
+    r.header(Magic, Version)
+    val k = r.int("k")
+    r.check(k >= 8, s"k=$k < 8")
+    val nTotal = r.long("item count")
+    val rngState = r.long("rng state")
+    val nLevels = r.count("level count", 4)
+    r.check(nLevels >= 1 && nLevels <= 63, s"level count $nLevels outside [1,63]")
     val levels = new ArrayBuffer[DoubleBuf](nLevels)
+    // level h items weigh 2^h and compaction conserves weight exactly, so
+    // the levels' total weight IS the item count
+    var weight = 0L
     var h = 0
     while (h < nLevels) {
-      val len = buf.getInt()
+      val len = r.count(s"level $h length", 8)
       val l = new DoubleBuf(math.max(2, len))
       var i = 0
-      while (i < len) { l.add(buf.getDouble()); i += 1 }
+      while (i < len) { l.add(r.double("item")); i += 1 }
       levels += l
+      weight += len.toLong << h
       h += 1
     }
+    r.end()
+    r.check(weight == nTotal, s"levels weigh $weight, item count is $nTotal")
     new KllSketch(k, nTotal, levels, rngState)
   }
 }

@@ -178,18 +178,31 @@ object TDigestSketch {
   }
 
   def deserialize(bytes: Array[Byte]): TDigestSketch = {
-    val buf = ByteBuffer.wrap(bytes)
-    require(buf.getInt() == Magic, "not a TDigestSketch buffer")
-    require(buf.get() == Version, "unsupported TDigestSketch version")
-    val compression = buf.getDouble()
-    val totalWeight = buf.getDouble()
-    val minV = buf.getDouble()
-    val maxV = buf.getDouble()
-    val nc = buf.getInt()
+    val r = new WireReader(bytes, "TDigestSketch")
+    r.header(Magic, Version)
+    val compression = r.double("compression")
+    r.check(compression >= 20, s"compression $compression < 20")
+    val totalWeight = r.double("total weight")
+    val minV = r.double("min")
+    val maxV = r.double("max")
+    val nc = r.count("centroid count", 16)
     val means = new DoubleBuf(math.max(2, nc))
     val weights = new DoubleBuf(math.max(2, nc))
+    var sum = 0.0
     var i = 0
-    while (i < nc) { means.add(buf.getDouble()); weights.add(buf.getDouble()); i += 1 }
+    while (i < nc) {
+      val mean = r.double("mean")
+      val w = r.double("weight")
+      r.check(w >= 0, s"centroid $i has weight $w")
+      means.add(mean)
+      weights.add(w)
+      sum += w
+      i += 1
+    }
+    r.end()
+    // every update adds its weight to the total and to one centroid
+    r.check(math.abs(sum - totalWeight) <= 1e-9 * math.max(1.0, totalWeight),
+      s"centroids weigh $sum, total weight is $totalWeight")
     new TDigestSketch(compression, totalWeight, means, weights,
       new DoubleBuf(), new DoubleBuf(), minV, maxV)
   }

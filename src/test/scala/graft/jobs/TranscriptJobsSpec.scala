@@ -229,15 +229,20 @@ class TranscriptJobsSpec extends SparkTestBase {
     assert(joined.count() === df.count())
   }
 
-  test("part manifests stay valid JSON when paths contain a quote and a backslash") {
-    // manifest fields are user paths: a raw interpolation of `"` or `\`
-    // would end the string early or start an escape. Spark globs input
-    // paths and `\` is the glob escape, so the table directory in"q\b is
-    // handed over as in"q\\b, which matches it; the output path keeps to
-    // a quote because the job reads its own parts back through Spark.
+  // Spark globs input paths and `\` is the glob escape, so the table
+  // directory in"q\b is handed over as in"q\\b, which matches it
+  private lazy val escapedInput: String = {
     TranscriptTable.write(TranscriptGen.generate(spark, seed = 7L, 40L),
       workDir + "/in\"q\\b", 4)
-    val odd = workDir + "/in\"q\\\\b"
+    workDir + "/in\"q\\\\b"
+  }
+
+  test("part manifests stay valid JSON when paths contain a quote and a backslash") {
+    // manifest fields are user paths: a raw interpolation of `"` or `\`
+    // would end the string early or start an escape. The output path
+    // keeps to a quote because the job reads its own parts back through
+    // Spark.
+    val odd = escapedInput
     val out = workDir + "/out\"q"
     SketchBuildJob.run(spark, SketchBuildJob.Config(odd, out))
     val manifests = new java.io.File(s"$out/_manifest").listFiles()
@@ -252,6 +257,93 @@ class TranscriptJobsSpec extends SparkTestBase {
       assert(m.get("predicate").asText() === s"${TranscriptTable.PartCol}=$pid")
       assert(m.get("output").asText() === s"$out/parts/${TranscriptTable.PartCol}=$pid")
     }
+  }
+
+  test("a glob-escaped input path finds its table's recorded modulus") {
+    // the metadata is looked up where Spark's reader resolves the path,
+    // not under its literal text, so no n_parts is inferred from data
+    assert(TranscriptTable.readNParts(spark, escapedInput) === Some(4))
+    val out = s"$workDir/build_escaped"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(escapedInput, out))
+    assert(SketchBuildJob.recordedNParts(out) === Some(4))
+  }
+
+  /** Spark jobs started by `body` on this thread. The listener bus
+    * delivers events in order, so once a marker job's start has arrived,
+    * every job `body` started has been counted. */
+  private def sparkJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(group + "-marker"), "listener bus did not drain")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a fresh build runs at most 6 Spark jobs, a resume with nothing pending at most 4") {
+    val out = s"$workDir/build_jobs"
+    val table = tablePath // written outside the counted run
+    val fresh = sparkJobs(SketchBuildJob.run(spark, SketchBuildJob.Config(table, out)))
+    assert(fresh <= 6, s"fresh build ran $fresh Spark jobs")
+    val resumed = sparkJobs {
+      val r = SketchBuildJob.run(spark, SketchBuildJob.Config(table, out))
+      assert(r.processedParts.isEmpty)
+    }
+    assert(resumed <= 4, s"resume with nothing pending ran $resumed Spark jobs")
+    info(s"Spark jobs: fresh build $fresh, resume with nothing pending $resumed")
+  }
+
+  test("part_id as a data column, not a directory: the scan path builds the same bank") {
+    // a foreign writer's layout: no part directories and no metadata, so
+    // part ids come from a scan and n_parts is inferred
+    val flat = s"$workDir/flat_transcripts"
+    TranscriptTable.read(spark, tablePath).write.mode("overwrite").parquet(flat)
+    val outFlat = s"$workDir/build_flat"
+    val outDirs = s"$workDir/build_dirs"
+    val a = SketchBuildJob.run(spark, SketchBuildJob.Config(flat, outFlat))
+    val b = SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, outDirs))
+    assert(a.processedParts.map(p => (p.partId, p.rows, p.estConvs)) ===
+      b.processedParts.map(p => (p.partId, p.rows, p.estConvs)))
+    assert(SketchBuildJob.recordedNParts(outFlat) === Some(nParts))
+    assert((a.totalRows, a.estDistinctConvs, a.estDistinctTools, a.topTools) ===
+      (b.totalRows, b.estDistinctConvs, b.estDistinctTools, b.topTools))
+    // order-independent sketches are byte-identical; KLL compaction
+    // depends on row order, which the layouts do not share
+    for (f <- Seq("hll_conv.bin", "hll_tool.bin", "cms_roletool.bin", "hh_tool.bin")) {
+      val x = Files.readAllBytes(java.nio.file.Paths.get(outFlat, "final", f))
+      val y = Files.readAllBytes(java.nio.file.Paths.get(outDirs, "final", f))
+      assert(java.util.Arrays.equals(x, y), s"final $f differs between layouts")
+    }
+    val kll = KllSketch.deserialize(Files.readAllBytes(
+      java.nio.file.Paths.get(outFlat, "final", "kll_textlen.bin")))
+    assert(kll.n === b.totalRows)
+  }
+
+  test("part directories holding only zero-row files fail with the no-rows message") {
+    val empty = s"$workDir/empty_parts"
+    val schema = TranscriptTable.read(spark, tablePath).drop(TranscriptTable.PartCol).schema
+    (0 until 3).foreach { p =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        .write.mode("overwrite").parquet(s"$empty/${TranscriptTable.PartCol}=$p")
+    }
+    assert(TranscriptTable.read(spark, empty).inputFiles.nonEmpty, "fixture wrote no files")
+    val ex = intercept[IllegalArgumentException] {
+      SketchBuildJob.run(spark, SketchBuildJob.Config(empty, s"$workDir/build_empty"))
+    }
+    assert(ex.getMessage.contains("has no rows"), ex.getMessage)
   }
 
   test("resume over parts written by an older schema fails loudly, not silently") {

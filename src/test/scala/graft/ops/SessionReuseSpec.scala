@@ -74,6 +74,21 @@ class SessionReuseSpec extends SparkTestBase {
     sig(b).unpersist()
   }
 
+  test("fuzzy-join frames are keyed by input: a second input keeps the first cached") {
+    val a = Seq((1L, "kitten"), (2L, "sitten"), (3L, "mitten")).toDF("id", "s")
+    val b = Seq((1L, "flaw"), (2L, "claw"), (3L, "flow")).toDF("id", "s")
+    // the gram frame editDistancePairs persists, at its default q
+    def grams(df: org.apache.spark.sql.DataFrame) = FuzzyJoin.gramRows(df, "id", "s", 2)
+    FuzzyJoin.editDistancePairs(a, "id", "s").count()
+    assert(grams(a).storageLevel !== StorageLevel.NONE)
+    FuzzyJoin.editDistancePairs(b, "id", "s").count()
+    assert(grams(b).storageLevel !== StorageLevel.NONE)
+    assert(grams(a).storageLevel !== StorageLevel.NONE,
+      "B's frames evicted A's: the cache key lacks input identity")
+    grams(a).unpersist()
+    grams(b).unpersist()
+  }
+
   test("memoizedQueries is recorded by the reusing code as the queries run") {
     // the sf0.001 tables, located through the flagship `entry` query
     val sf = new java.io.File(new java.net.URI(SparkEntry.entry(spark).inputFiles.head)).getParent
