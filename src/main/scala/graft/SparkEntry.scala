@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.{Decontaminate, Dedup, SessionReuse, Similarity, TextAnalysis}
+import graft.ops.{Dedup, SessionReuse, Similarity, TextAnalysis, Tokenizer}
 import graft.spark.functions._
 
 /** The query contract — see SURVEY.md §7.
@@ -901,8 +901,7 @@ object SparkEntry {
     // all-pairs join over the identical deterministic population.
     "fuzzy_term_pairs" -> ((s, dir) => {
       val terms = read(s, dir, "documents")
-        .select(F.explode(F.split(F.col("text"), " ")).as("term"))
-        .filter(F.col("term") =!= "").distinct()
+        .select(F.explode(Tokenizer.space(F.col("text"))).as("term")).distinct()
       val typos = terms.filter(F.length(F.col("term")) >= 4)
         .select(F.concat(F.lit("z"), F.expr("substring(term, 2)")).as("term"))
       val pop = terms.unionByName(typos).distinct()
@@ -922,7 +921,7 @@ object SparkEntry {
       val docs = read(s, dir, "documents")
       val bench = docs.filter(F.col("doc_id") % 97 === 0)
         .select(F.array_join(
-          F.slice(graft.ops.Decontaminate.tokens(F.col("text")), 5, 20), " ")
+          F.slice(Tokenizer.space(F.col("text")), 5, 20), " ")
           .as("bench_text"))
       graft.ops.Decontaminate.overlapHits(docs, "doc_id", "text",
           bench, "bench_text", n = 8)
@@ -941,7 +940,7 @@ object SparkEntry {
       // free tokens expression inside the chunk lambda re-tokenizes the
       // document per chunk (the duplicateSpans CollapseProject lesson)
       val chunks = F.flatten(F.transform(
-        F.array(graft.ops.Decontaminate.tokens(F.col("text"))), w =>
+        F.array(Tokenizer.space(F.col("text"))), w =>
           F.when(F.size(w) > 0,
             F.transform(
               F.sequence(F.lit(1), F.ceil(F.size(w) / F.lit(10.0)).cast("int")),
@@ -1028,7 +1027,7 @@ object SparkEntry {
     "sequence_pack" -> ((s, dir) => {
       val docs = read(s, dir, "documents")
         .select(F.col("doc_id"),
-          F.size(graft.ops.Decontaminate.tokens(F.col("text"))).as("n_tokens"))
+          F.size(Tokenizer.space(F.col("text"))).as("n_tokens"))
       graft.ops.Sequencing.packSequences(docs, "doc_id", "n_tokens",
         capacity = 2048, bucketWidth = 100)
         .orderBy("doc_id")
@@ -1364,7 +1363,7 @@ object SparkEntry {
       // which falls into shingles' token-set fallback the oracle does
       // not model
       val docs = read(s, dir, "documents").filter(F.col("doc_id") < 100)
-        .filter(F.size(Decontaminate.tokens(F.col("text"))) >= 3)
+        .filter(F.size(Tokenizer.space(F.col("text"))) >= 3)
         .select(F.col("doc_id"), F.col("text"))
       val mutated = docs.select((F.col("doc_id") + 100000).as("doc_id"),
         F.concat(F.col("text"), F.lit(" tailmarker")).as("text"))
@@ -1405,7 +1404,7 @@ object SparkEntry {
     // out of both sides.
     "simhash_dups_exact" -> ((s, dir) => {
       val base = read(s, dir, "documents").filter(F.col("doc_id") < 120)
-        .filter(F.size(Decontaminate.tokens(F.col("text"))) >= 1)
+        .filter(F.size(Tokenizer.space(F.col("text"))) >= 1)
         .select(F.col("doc_id"), F.col("text"))
       val mutated = base.select((F.col("doc_id") + 100000).as("doc_id"),
         F.concat(F.col("text"), F.lit(" tailmarker")).as("text"))
@@ -1824,7 +1823,7 @@ object SparkEntry {
       val d = read(s, dir, "documents")
       graft.ops.Sequencing.lengthBucketedBatches(
           d.select(F.col("doc_id"),
-            F.size(F.split(F.col("text"), " ")).as("nt")),
+            Tokenizer.spaceSegmentCount(F.col("text")).as("nt")),
           "doc_id", "nt", bucketWidth = 16, batchSize = 8,
           idSubBucketWidth = 1000L)
         .orderBy("bucket", "batch_idx")
@@ -1999,7 +1998,7 @@ object SparkEntry {
     // re-derives the identical cut point.
     "transcript_truncate_budget" -> ((s, dir) => {
       val t = graft.data.TranscriptFixture.frame(s)
-      val nTok = F.size(F.split(F.col("text"), " "))
+      val nTok = Tokenizer.spaceSegmentCount(F.col("text"))
       graft.ops.Conversations.truncateToBudget(
           t, "conv_id", "turn_idx", nTok, 400L)
         .select(F.col("conv_id"), F.col("turn_idx"),

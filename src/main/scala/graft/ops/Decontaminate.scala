@@ -19,12 +19,6 @@ import org.apache.spark.sql.{Column, DataFrame, functions => F}
   */
 object Decontaminate {
 
-  /** Whitespace tokens with empty strings removed (consecutive spaces
-    * contribute nothing) — the library's standard tokenizer, kept
-    * trivially mirrorable in SQL (`list_filter(string_split(...))`). */
-  def tokens(text: Column): Column =
-    F.filter(F.split(text, " "), t => t =!= F.lit(""))
-
   /** Distinct word n-grams of `text` as space-joined strings; empty
     * array when the document has fewer than n tokens. (The `when`
     * guard matters: Spark's `sequence(1, stop)` DESCENDS for stop < 1
@@ -34,7 +28,7 @@ object Decontaminate {
     // tokens bound to a lambda variable via the one-element outer
     // transform: a free tokens expression inside the n-gram lambda is
     // re-inlined and re-tokenizes the document once per position
-    F.flatten(F.transform(F.array(tokens(text)), w =>
+    F.flatten(F.transform(F.array(Tokenizer.space(text)), w =>
       F.when(F.size(w) >= n,
         F.array_distinct(F.transform(
           F.sequence(F.lit(1), F.size(w) - (n - 1)),

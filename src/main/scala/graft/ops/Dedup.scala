@@ -111,7 +111,7 @@ object Dedup {
     lazy val hashedOnly = df.select(F.col(idCol).as("__id"),
         F.posexplode(graft.ops.TextAnalysis.gram_hashes(F.col(textCol), l))
           .as(Seq("__p", "__h")))
-    val toks = Decontaminate.tokens(F.col(textCol))
+    val toks = Tokenizer.space(F.col(textCol))
     // (verify mode) Build every (position, gram) struct inside ONE
     // generator, with the token array bound to a lambda variable via the
     // single-element outer transform — a plain `toks.as("__t")` alias
@@ -180,7 +180,7 @@ object Dedup {
         F.explode(F.sequence(F.col("span_start").cast("long"),
           F.col("span_end").cast("long"))).as("__p"))
     val toks = df.select(F.col(idCol).as("__id"),
-        F.posexplode(Decontaminate.tokens(F.col(textCol)))
+        F.posexplode(Tokenizer.space(F.col(textCol)))
           .as(Seq("__p", "__tok")))
       .withColumn("__p", F.col("__p").cast("long"))
     val kept = toks.join(cut, Seq("__id", "__p"), "left_anti")
@@ -189,7 +189,7 @@ object Dedup {
           F.struct(F.col("__p"), F.col("__tok")))).getField("__tok"), " ")
         .as("__scrubbed"),
         F.count(F.lit(1)).as("__n_kept"))
-    val nTok = F.size(Decontaminate.tokens(df(textCol))).cast("long")
+    val nTok = F.size(Tokenizer.space(df(textCol))).cast("long")
     df.join(kept, df(idCol) === kept("__id"), "left")
       .select(df.columns.map(c =>
         if (c == textCol) F.coalesce(F.col("__scrubbed"), F.lit("")).as(textCol)
@@ -320,11 +320,13 @@ object Dedup {
     // two string sets per candidate); hashed arrays are computed once
     // per document, the candidate joins carry long arrays instead of
     // document bodies (the guide's move-small-rows lesson), and the
-    // intersection is long arithmetic. tokenFallback mirrors
-    // jaccardShingles' short-document token-set rule, and the both-empty
-    // case keeps its jaccard = 1.0, so the verified value is IDENTICAL
-    // to the text formulation absent a 2^-64 hash collision (the
-    // library's standard identity tradeoff).
+    // intersection is long arithmetic. tokenFallback = true selects the
+    // shingle set jaccardShingles defines: the same Tokenizer.whitespace
+    // tokens the minhash signature above was built from, and its
+    // short-document token-set rule. The both-empty case keeps its
+    // jaccard = 1.0, so the verified value equals jaccardShingles of the
+    // two texts on any input, tabs and newlines included, absent a 2^-64
+    // hash collision (the library's standard identity tradeoff).
     val shArrs = df.select(F.col(idCol),
       TextAnalysis.shingle_hashes(F.col(textCol), shingleSize, tokenFallback = true)
         .as("__sh"))
@@ -418,7 +420,7 @@ object Dedup {
     require(n >= 1, "shingle width must be >= 1")
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     // Shingle IDENTITY = 64-bit order-sensitive chain hash
-    // (TextOps.shingleHashes; Decontaminate-tokenization semantics, one
+    // (TextOps.shingleHashes; Tokenizer.space semantics, one
     // codegen'd pass, distinct within the document) — never the shingle
     // STRING. Everything downstream (frequency count, rarity sort,
     // prefix join keys, the verify intersection) then moves 8-byte longs

@@ -49,7 +49,7 @@ object NgramLm {
     * re-inlined by CollapseProject and re-tokenize the document once
     * per position (the audit pattern in BENCH.md). */
   private def bigramStructs(textCol: Column): Column =
-    F.flatten(F.transform(F.array(Decontaminate.tokens(textCol)), t =>
+    F.flatten(F.transform(F.array(Tokenizer.space(textCol)), t =>
       F.when(F.size(t) >= 2,
           F.transform(F.sequence(F.lit(1), F.size(t) - 1), p =>
             F.struct(F.element_at(t, p).as("ctx"),
@@ -61,7 +61,7 @@ object NgramLm {
     * relation, not a driver collect, so training+scoring stays one
     * job). The exchange carries (hash, partial count) only. */
   def unigramModel(ref: DataFrame, textCol: String): (DataFrame, DataFrame) = {
-    val toks = ref.select(F.explode(Decontaminate.tokens(F.col(textCol))).as("__t"))
+    val toks = ref.select(F.explode(Tokenizer.space(F.col(textCol))).as("__t"))
       .select(murmur64(F.col("__t")).as("__h"))
     val uni = toks.groupBy("__h").agg(F.count(F.lit(1)).as("__c_uni"))
     val total = toks.agg(F.count(F.lit(1)).as("__n"))

@@ -48,7 +48,7 @@ object Sequencing {
     // re-tokenizing the whole document once per chunk — O(n·chunks)
     // per document (the duplicateSpans lesson, measured ~10x there).
     val chunkStructs = F.flatten(F.transform(
-      F.array(Decontaminate.tokens(F.col(textCol))), w => {
+      F.array(Tokenizer.space(F.col(textCol))), w => {
         val n = F.size(w)
         // last start = smallest multiple of stride covering token n-1:
         // ceil((n-window)/stride)*stride, clamped at 0 — integer ceil

@@ -31,7 +31,7 @@ object TextAnalysis {
     * stay [[simhash64]] (murmur-based, golden-pinned). Zero-token input
     * yields signature 0. */
   def simhash60Md5(c: Column): Column = {
-    val toks = F.array_distinct(F.filter(F.split(c, " "), t => t =!= F.lit("")))
+    val toks = F.array_distinct(Tokenizer.space(c))
     val hashes = F.transform(toks, t =>
       F.conv(F.substring(F.md5(t.cast("binary")), 1, 15), 16, 10).cast("long"))
     val masks = F.array((0 until 60).map(b => F.lit(1L << b)): _*)
@@ -47,18 +47,13 @@ object TextAnalysis {
 
   /** Whitespace token count — composed from built-ins so it pushes into
     * codegen and has an exact DuckDB oracle. */
-  def token_count(c: Column): Column =
-    F.when(F.length(F.trim(c)) === 0, F.lit(0))
-      .otherwise(F.size(F.split(F.trim(c), "\\s+")))
+  def token_count(c: Column): Column = F.size(Tokenizer.trimmedWords(c))
 
   /** BPE-ish subword count: words contribute ceil(len/4) units,
     * punctuation one each — a cheap deterministic token-budget proxy. */
-  def subword_count(c: Column): Column = {
-    val words = F.split(F.trim(c), "\\s+")
-    F.when(F.length(F.trim(c)) === 0, F.lit(0)).otherwise(
-      F.aggregate(words, F.lit(0),
-        (acc, w) => acc + F.ceil(F.length(w) / F.lit(4.0)).cast("int")))
-  }
+  def subword_count(c: Column): Column =
+    F.aggregate(Tokenizer.trimmedWords(c), F.lit(0),
+      (acc, w) => acc + F.ceil(F.length(w) / F.lit(4.0)).cast("int"))
 
   /** Per-document top-k terms by RARITY-WEIGHTED term frequency
     * (score = tf/df — the linear tf-idf variant; pure IEEE division of
@@ -75,8 +70,7 @@ object TextAnalysis {
     import graft.spark.functions.top_k_by
     require(k >= 1, "k must be >= 1")
     val toks = df
-      .select(F.col(idCol), F.explode(F.split(F.col(textCol), " ")).as("__term"))
-      .filter(F.col("__term") =!= "")
+      .select(F.col(idCol), F.explode(Tokenizer.space(F.col(textCol))).as("__term"))
     val tf = toks.groupBy(F.col(idCol), F.col("__term"))
       .agg(F.count(F.lit(1)).as("__tf"))
     // (doc, term) rows are distinct in tf, so df(term) = count(*)
@@ -107,7 +101,7 @@ object TextAnalysis {
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String,
       chunkTokens: Int = 10): DataFrame = {
     require(chunkTokens >= 1, "chunkTokens must be >= 1")
-    val w = Decontaminate.tokens(F.col(textCol))
+    val w = Tokenizer.space(F.col(textCol))
     val base = df.select(F.col(idCol), w.as("__w"))
 
     val chunks = F.when(F.size(F.col("__w")) > 0,

@@ -9,6 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.ByteOps
 import graft.core.hash.Murmur2Kernel
+import graft.sketch.HllSketch
 
 /** Text-analysis primitives for training-data pipelines, built on the
   * engine's hash kernels. All are deterministic pure functions of the
@@ -17,36 +18,63 @@ import graft.core.hash.Murmur2Kernel
   */
 object TextOps {
 
-  @inline def tokens(s: String): Array[String] = {
-    val t = s.trim
-    if (t.isEmpty) Array.empty else t.split("\\s+")
+  /** Murmur64 of each token's UTF-8 bytes: the one per-token hash every
+    * hashed text kernel starts from. */
+  private def tokenHashes(toks: Array[String]): Array[Long] = {
+    val th = new Array[Long](toks.length)
+    var t = 0
+    while (t < th.length) {
+      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
+      t += 1
+    }
+    th
+  }
+
+  /** Identity hash of the `w`-token shingle starting at token `start`:
+    * the order-sensitive fmix64 chain of its token hashes (a width-1
+    * shingle is its token hash). No shingle string is ever built; a
+    * 2^-64 identity collision merges two shingles, the library's
+    * standard hash-identity tradeoff ([[graft.ops.Dedup.exactDedup]]). */
+  @inline private def chain(th: Array[Long], start: Int, w: Int): Long = {
+    var h = th(start)
+    var j = 1
+    while (j < w) {
+      h = HllSketch.fmix64(h ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
+      j += 1
+    }
+    h
+  }
+
+  /** Distinct `w`-token shingle identities of a document, in
+    * first-occurrence order, deduplicated through a primitive
+    * open-addressed long table (0 = empty slot, so a zero identity is
+    * remapped) — jstack sampling of the earlier string-shingle Set
+    * showed it dominating the murmur work it fed. */
+  private def distinctShingles(th: Array[Long], w: Int): Array[Long] = {
+    val nShingles = th.length - w + 1
+    if (nShingles <= 0) return Array.emptyLongArray
+    var cap = 4
+    while (cap < nShingles * 2) cap <<= 1
+    val table = new Array[Long](cap)
+    val mask = cap - 1
+    val out = new Array[Long](nShingles)
+    var m = 0
+    var start = 0
+    while (start < nShingles) {
+      var h = chain(th, start, w)
+      if (h == 0L) h = 0x1b873593L
+      var slot = ((h ^ (h >>> 32)).toInt) & mask
+      while (table(slot) != 0L && table(slot) != h) slot = (slot + 1) & mask
+      if (table(slot) == 0L) { table(slot) = h; out(m) = h; m += 1 }
+      start += 1
+    }
+    if (m == out.length) out else java.util.Arrays.copyOf(out, m)
   }
 
   /** 64-bit SimHash over murmur-hashed tokens: per-bit majority vote of
     * token hashes (Charikar 2002). Near-duplicate texts land within a
-    * small Hamming distance. */
-  def simhash64(s: String): Long = {
-    val toks = tokens(s)
-    if (toks.isEmpty) return 0L
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < toks.length) {
-      val h = Murmur2Kernel.hash64(toks(i))
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
+    * small Hamming distance. The width-1 case of [[simhashNgram64]]. */
+  def simhash64(s: String): Long = simhashNgram64(s, 1)
 
   /** 64-bit SimHash over order-sensitive token n-grams — the production
     * near-dup signature. Unigram SimHash ([[simhash64]]) collapses on
@@ -58,33 +86,21 @@ object TextOps {
     * quadratic output at scale). N-gram features are order-sensitive,
     * so documents sharing vocabulary but not phrasing decorrelate, while
     * lightly mutated near-copies still share most n-grams (Manku et al.
-    * 2007 hash weighted features for the same reason). The n-gram hash
-    * is minhashSignature's fmix chain over per-token murmur hashes —
-    * string-free past tokenization. */
+    * 2007 hash weighted features for the same reason). Every n-gram
+    * position votes (repeats included), with the [[chain]] identity;
+    * documents shorter than `width` vote with their tokens. */
   def simhashNgram64(s: String, width: Int): Long = {
-    val toks = tokens(s)
-    val n = toks.length
+    val th = tokenHashes(Tokenizer.whitespace(s))
+    val n = th.length
     if (n == 0) return 0L
     val w = if (n < width) 1 else width
-    val th = new Array[Long](n)
-    var t = 0
-    while (t < n) {
-      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
-      t += 1
-    }
     val votes = new Array[Int](64)
     var start = 0
-    val nShingles = n - w + 1
-    while (start < nShingles) {
-      var base = th(start)
-      var j = 1
-      while (j < w) {
-        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
-        j += 1
-      }
+    while (start <= n - w) {
+      val h = chain(th, start, w)
       var b = 0
       while (b < 64) {
-        if (((base >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
         b += 1
       }
       start += 1
@@ -112,140 +128,47 @@ object TextOps {
     * full murmur runs per shingle; recall/precision tests are unchanged
     * — any well-mixed family passes them.)
     *
-    * Hot path of the minhash-LSH dedup pipeline (one call per document).
-    * The whole loop is string-free past tokenization: each token is
-    * murmur-hashed ONCE, a shingle's identity is the order-sensitive
-    * fmix64-chain of its token hashes (a 2^-64 identity collision merely
-    * merges two shingles), and shingle dedup runs through a primitive
-    * open-addressed long table — jstack sampling of the earlier
-    * string-shingle version showed shingle-string/Set building
-    * dominating the murmur work it fed. */
+    * The shingle set is [[shingleHashes]]`(s, shingleSize, tokenFallback
+    * = true)`: [[Tokenizer.whitespace]] tokens, and a document shorter
+    * than `shingleSize` is signed by its distinct tokens. */
   def minhashSignature(s: String, numHashes: Int, shingleSize: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(Long.MaxValue)
-    val toks = tokens(s)
-    val n = toks.length
-    if (n == 0) return sig
-    val th = new Array[Long](n)
-    var t = 0
-    while (t < n) {
-      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
-      t += 1
-    }
-    val width = if (n < shingleSize) 1 else shingleSize
-    val nShingles = n - width + 1
-    // open-addressed dedup table (0 = empty; a zero hash is remapped)
-    var cap = 4
-    while (cap < nShingles * 2) cap <<= 1
-    val table = new Array[Long](cap)
-    val mask = cap - 1
-    var start = 0
-    while (start < nShingles) {
-      var base = th(start)
-      var j = 1
-      while (j < width) {
-        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
-        j += 1
+    val shingles = shingleHashes(s, shingleSize, tokenFallback = true)
+    var k = 0
+    while (k < shingles.length) {
+      val base = shingles(k)
+      var i = 0
+      while (i < numHashes) {
+        val h = HllSketch.fmix64(base ^ ((i + 1) * 0x9e3779b97f4a7c15L))
+        if (h < sig(i)) sig(i) = h
+        i += 1
       }
-      if (base == 0L) base = 0x1b873593L
-      // probe: insert if absent
-      var slot = ((base ^ (base >>> 32)).toInt) & mask
-      var state = 0 // 0 = probing, 1 = fresh, 2 = duplicate
-      while (state == 0) {
-        val cur = table(slot)
-        if (cur == 0L) { table(slot) = base; state = 1 }
-        else if (cur == base) state = 2
-        else slot = (slot + 1) & mask
-      }
-      if (state == 1) {
-        var i = 0
-        while (i < numHashes) {
-          val h = graft.sketch.HllSketch.fmix64(base ^ ((i + 1) * 0x9e3779b97f4a7c15L))
-          if (h < sig(i)) sig(i) = h
-          i += 1
-        }
-      }
-      start += 1
+      k += 1
     }
     sig
   }
 
-  /** Distinct `width`-token shingle IDENTITY HASHES of `s` (Decontaminate
-    * tokenization: split on single space, drop empties), empty when the
-    * document has fewer than `width` tokens. A shingle's identity is the
-    * order-sensitive fmix64 chain of its per-token murmur hashes — the
-    * SAME construction [[minhashSignature]] and [[simhashNgram64]] use —
-    * so no shingle string is ever materialized: the prefix-filter dedup
-    * pipeline (Dedup.ngramPrefixCandidates) does all its frequency
-    * counting, rarity ordering and intersection arithmetic on 8-byte
-    * longs instead of ~30-byte strings. A 2^-64 identity collision would
-    * merge two shingles — the same documented tradeoff as
-    * [[graft.ops.Dedup.exactDedup]] / duplicateSpans' hash-only grams.
-    * Insertion-ordered distinct via an open-addressed long table (0 =
-    * empty; a zero hash is remapped, as in [[minhashSignature]]).
+  /** Distinct `width`-token shingle IDENTITY HASHES of `s` ([[chain]]
+    * identities in first-occurrence order), empty when the document has
+    * fewer than `width` tokens. The prefix-filter dedup pipeline
+    * (Dedup.ngramPrefixCandidates) and decontamination do all their
+    * frequency counting, rarity ordering and intersection arithmetic on
+    * these 8-byte longs instead of ~30-byte strings. Tokens are
+    * [[Tokenizer.space]], the rule their SQL oracles state.
     *
-    * `tokenFallback = true` mirrors [[shingles]]' short-document rule:
-    * a document with fewer than `width` tokens contributes its DISTINCT
-    * TOKEN hashes (width-1 chains) instead of nothing — the regime
-    * [[jaccardShingles]] (and therefore minhashLshPairs' verify)
-    * defines. Token hashes and n-gram chain hashes live in the same
-    * 64-bit space, so a cross-regime collision is possible at 2^-64 —
-    * in string space the two vocabularies are disjoint (tokens cannot
-    * contain the space an n-gram string always has); same accepted
-    * tradeoff as every hash identity here. */
+    * `tokenFallback = true` selects the shingle set [[jaccardShingles]]
+    * defines (and so minhashLshPairs' verify and [[minhashSignature]]):
+    * [[Tokenizer.whitespace]] tokens, and a document with fewer than
+    * `width` tokens contributes its DISTINCT TOKEN hashes (width-1
+    * chains) instead of nothing. Token hashes and n-gram chain hashes
+    * live in the same 64-bit space, so a cross-regime collision is
+    * possible at 2^-64 — in string space the two vocabularies are
+    * disjoint (tokens cannot contain the space an n-gram string always
+    * has); same accepted tradeoff as every hash identity here. */
   def shingleHashes(s: String, width: Int, tokenFallback: Boolean = false): Array[Long] = {
-    // Decontaminate.tokens semantics: split on the single space char,
-    // drop empty segments (tabs/newlines stay inside tokens)
-    val toks = {
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = 0
-      val len = s.length
-      while (i < len) {
-        var j = i
-        while (j < len && s.charAt(j) != ' ') j += 1
-        if (j > i) out += s.substring(i, j)
-        i = j + 1
-      }
-      out
-    }
-    val n = toks.length
-    if (n < width && !tokenFallback) return Array.emptyLongArray
-    val th = new Array[Long](n)
-    var t = 0
-    while (t < n) {
-      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
-      t += 1
-    }
-    // short-doc fallback: width-1 "shingles" = the tokens themselves
-    val w = if (n < width) 1 else width
-    val nShingles = n - w + 1
-    if (nShingles <= 0) return Array.emptyLongArray
-    var cap = 4
-    while (cap < nShingles * 2) cap <<= 1
-    val table = new Array[Long](cap)
-    val mask = cap - 1
-    val out = new Array[Long](nShingles)
-    var m = 0
-    var start = 0
-    while (start < nShingles) {
-      var base = th(start)
-      var j = 1
-      while (j < w) {
-        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
-        j += 1
-      }
-      if (base == 0L) base = 0x1b873593L
-      var slot = ((base ^ (base >>> 32)).toInt) & mask
-      var state = 0
-      while (state == 0) {
-        val cur = table(slot)
-        if (cur == 0L) { table(slot) = base; state = 1 }
-        else if (cur == base) state = 2
-        else slot = (slot + 1) & mask
-      }
-      if (state == 1) { out(m) = base; m += 1 }
-      start += 1
-    }
-    if (m == out.length) out else java.util.Arrays.copyOf(out, m)
+    val toks = if (tokenFallback) Tokenizer.whitespace(s) else Tokenizer.space(s)
+    if (toks.length < width && !tokenFallback) return Array.emptyLongArray
+    distinctShingles(tokenHashes(toks), if (toks.length < width) 1 else width)
   }
 
   /** POSITIONAL `width`-token gram identity hashes: element p is the
@@ -255,43 +178,14 @@ object TextOps {
     * tokenization and chain construction as [[shingleHashes]]; empty
     * array when the document has fewer than `width` tokens. */
   def gramHashes(s: String, width: Int): Array[Long] = {
-    val toks = {
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = 0
-      val len = s.length
-      while (i < len) {
-        var j = i
-        while (j < len && s.charAt(j) != ' ') j += 1
-        if (j > i) out += s.substring(i, j)
-        i = j + 1
-      }
-      out
-    }
-    val n = toks.length
-    if (n < width) return Array.emptyLongArray
-    val th = new Array[Long](n)
-    var t = 0
-    while (t < n) {
-      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
-      t += 1
-    }
-    val out = new Array[Long](n - width + 1)
-    var start = 0
-    while (start < out.length) {
-      var base = th(start)
-      var j = 1
-      while (j < width) {
-        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
-        j += 1
-      }
-      out(start) = base
-      start += 1
-    }
-    out
+    val toks = Tokenizer.space(s)
+    if (toks.length < width) return Array.emptyLongArray
+    val th = tokenHashes(toks)
+    Array.tabulate(th.length - width + 1)(chain(th, _, width))
   }
 
   def shingles(s: String, size: Int): Set[String] = {
-    val toks = tokens(s)
+    val toks = Tokenizer.whitespace(s)
     if (toks.length < size) toks.toSet
     else toks.sliding(size).map(_.mkString(" ")).toSet
   }
@@ -308,7 +202,7 @@ object TextOps {
     * order-sensitive (unlike minhash), so it distinguishes permutations;
     * stable under whitespace/case noise. */
   def fingerprint(s: String): Long = {
-    val toks = tokens(s)
+    val toks = Tokenizer.whitespace(s)
     var h = 0xcbf29ce484222325L
     var i = 0
     while (i < toks.length) {
@@ -356,7 +250,7 @@ object TextOps {
     if (total > 0 && cjk.toDouble / total > 0.25) return "zh"
     // Locale.ROOT: the default-locale overload turns "IS" into "ıs"
     // under a Turkish JVM locale — results must not depend on the host
-    val toks = tokens(s.toLowerCase(java.util.Locale.ROOT))
+    val toks = Tokenizer.whitespace(s.toLowerCase(java.util.Locale.ROOT))
     if (toks.isEmpty) return "und"
     var best = "und"
     var bestScore = 0.0

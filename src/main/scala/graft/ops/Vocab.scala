@@ -14,12 +14,12 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 object Vocab {
 
   /** Adjacent token-pair frequencies over `textCol` (tokenization =
-    * [[Decontaminate.tokens]]: split on single space, drop empties).
+    * [[Tokenizer.space]]: split on single space, drop empties).
     * Output: (w1, w2, cnt) — one row per distinct ordered pair;
     * documents with fewer than two tokens contribute nothing.
     */
   def pairCounts(df: DataFrame, textCol: String): DataFrame = {
-    val t = Decontaminate.tokens(F.col(textCol))
+    val t = Tokenizer.space(F.col(textCol))
     val n = F.size(t)
     df.select(
         F.slice(t, F.lit(1), F.greatest(n - 1, F.lit(0))).as("__l"),
@@ -47,7 +47,7 @@ object Vocab {
     * never a global sort. */
   def wordVocab(df: DataFrame, textCol: String, v: Int): DataFrame = {
     require(v >= 1, "v must be >= 1")
-    df.select(F.explode(Decontaminate.tokens(F.col(textCol))).as("token"))
+    df.select(F.explode(Tokenizer.space(F.col(textCol))).as("token"))
       .groupBy("token").agg(F.count(F.lit(1)).as("freq"))
       .orderBy(F.col("freq").desc, F.col("token").asc)
       .limit(v)
@@ -67,7 +67,7 @@ object Vocab {
   def oovReport(df: DataFrame, idCol: String, textCol: String,
       vocab: DataFrame): DataFrame = {
     val toks = df.select(F.col(idCol).as("__id"),
-      F.explode(Decontaminate.tokens(F.col(textCol))).as("__t"))
+      F.explode(Tokenizer.space(F.col(textCol))).as("__t"))
     val inVocab = F.broadcast(vocab.select(F.col("token").as("__t")).distinct()
       .withColumn("__in", F.lit(true)))
     toks.join(inVocab, Seq("__t"), "left")
@@ -100,7 +100,7 @@ object Vocab {
     require(numMerges >= 1, "numMerges must be >= 1")
     val spark = df.sparkSession
     val wordFreq = df
-      .select(F.explode(Decontaminate.tokens(F.col(textCol))).as("w"))
+      .select(F.explode(Tokenizer.space(F.col(textCol))).as("w"))
       .groupBy("w").agg(F.count(F.lit(1)).as("c"))
       .orderBy(F.col("c").desc, F.col("w"))
       .limit(maxDistinctWords)
@@ -232,7 +232,7 @@ object Vocab {
         // deterministic per word
         val memo = scala.collection.mutable.Map[String, Array[String]]()
         it.map { case (id, text) =>
-          val subs = text.split(" ").iterator.filter(_.nonEmpty).flatMap { w =>
+          val subs = Tokenizer.space(text).iterator.flatMap { w =>
             memo.getOrElseUpdate(w, encodeWord(w, ranks))
           }.toArray
           (id, subs, subs.length.toLong)

@@ -169,10 +169,10 @@ class OpsSpec extends SparkTestBase {
     val spans = Dedup.duplicateSpans(d, "doc_id", "text", l)
     val scrubbed = Dedup.cutSpans(d, spans, "doc_id", "text")
     // token conservation: removed + surviving == original
-    val orig = d.select(F.sum(F.size(Decontaminate.tokens($"text"))))
+    val orig = d.select(F.sum(F.size(Tokenizer.space($"text"))))
       .head().getLong(0)
     val after = scrubbed.select(
-        F.sum(F.size(Decontaminate.tokens($"text")) + $"n_removed"))
+        F.sum(F.size(Tokenizer.space($"text")) + $"n_removed"))
       .head().getLong(0)
     assert(after === orig)
     // every occurrence of a duplicated gram sat inside a span, so no
@@ -182,11 +182,11 @@ class OpsSpec extends SparkTestBase {
     // coincide here)
     val toGrams = (frame: org.apache.spark.sql.DataFrame) =>
       frame.select(F.explode(F.when(
-          F.size(Decontaminate.tokens($"text")) >= l,
+          F.size(Tokenizer.space($"text")) >= l,
           F.transform(F.sequence(F.lit(0),
-            F.size(Decontaminate.tokens($"text")) - l),
+            F.size(Tokenizer.space($"text")) - l),
             p => F.array_join(
-              F.slice(Decontaminate.tokens($"text"), p + 1, F.lit(l)), " ")))
+              F.slice(Tokenizer.space($"text"), p + 1, F.lit(l)), " ")))
         .otherwise(F.array().cast("array<string>"))).as("g"))
     val dupGrams = toGrams(d).groupBy("g").count().filter($"count" >= 2)
     val surviving = toGrams(scrubbed.select($"doc_id", $"text"))

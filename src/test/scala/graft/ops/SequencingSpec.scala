@@ -24,8 +24,8 @@ class SequencingSpec extends SparkTestBase {
         .getField("chunk_text")).as("rebuilt"),
         F.sum("n_tokens").as("total"))
     val expected = docs.select(F.col("doc_id"),
-      F.concat_ws(" ", Decontaminate.tokens(F.col("text"))).as("orig"),
-      F.size(Decontaminate.tokens(F.col("text"))).cast("long").as("n"))
+      F.concat_ws(" ", Tokenizer.space(F.col("text"))).as("orig"),
+      F.size(Tokenizer.space(F.col("text"))).cast("long").as("n"))
     val joined = reassembled.join(expected, "doc_id")
     assert(joined.filter(F.col("rebuilt") =!= F.col("orig")).count() === 0)
     assert(joined.filter(F.col("total") =!= F.col("n")).count() === 0)
@@ -68,7 +68,7 @@ class SequencingSpec extends SparkTestBase {
 
   test("prefixSum equals the single-partition window under any bucketing") {
     val vals = docs.select(F.col("doc_id"),
-      F.size(Decontaminate.tokens(F.col("text"))).cast("long").as("v"))
+      F.size(Tokenizer.space(F.col("text"))).cast("long").as("v"))
     val expected = vals.withColumn("cum",
       F.sum("v").over(Window.orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -85,7 +85,7 @@ class SequencingSpec extends SparkTestBase {
 
   test("packSequences: offsets are the exclusive running total, bins contiguous") {
     val vals = docs.select(F.col("doc_id"),
-      F.size(Decontaminate.tokens(F.col("text"))).as("n_tokens"))
+      F.size(Tokenizer.space(F.col("text"))).as("n_tokens"))
     val out = Sequencing.packSequences(vals, "doc_id", "n_tokens",
       capacity = 512, bucketWidth = 37).cache()
     val rows = out.orderBy("doc_id").collect()
@@ -150,7 +150,7 @@ class SequencingSpec extends SparkTestBase {
   test("bucketing bounds padding: per-batch padding never crosses bucketWidth") {
     val out = Sequencing.lengthBucketedBatches(
       docs.select(F.col("doc_id"),
-        F.size(Decontaminate.tokens(F.col("text"))).as("nt")),
+        F.size(Tokenizer.space(F.col("text"))).as("nt")),
       "doc_id", "nt", bucketWidth = 16, batchSize = 8,
       idSubBucketWidth = 100L)
     // within a batch, max - min < bucketWidth by construction, so the

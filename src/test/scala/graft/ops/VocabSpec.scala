@@ -25,7 +25,7 @@ class VocabSpec extends SparkTestBase {
   }
 
   test("pairCounts equals the sliding-window brute force on the corpus") {
-    val brute = docs.select(Decontaminate.tokens(F.col("text")).as("t"))
+    val brute = docs.select(Tokenizer.space(F.col("text")).as("t"))
       .as[Seq[String]].collect()
       .flatMap(t => t.zip(t.drop(1)))
       .groupBy(identity).map { case (p, xs) => (p, xs.length.toLong) }
@@ -34,7 +34,7 @@ class VocabSpec extends SparkTestBase {
     assert(got === brute)
     // total pair mass = sum over docs of max(n_tokens - 1, 0)
     val mass = docs.select(F.sum(F.greatest(
-      F.size(Decontaminate.tokens(F.col("text"))) - 1, F.lit(0))))
+      F.size(Tokenizer.space(F.col("text"))) - 1, F.lit(0))))
       .collect()(0).getLong(0)
     assert(got.values.sum === mass)
   }
