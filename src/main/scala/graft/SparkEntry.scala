@@ -692,9 +692,11 @@ object SparkEntry {
         .select(F.col("o_orderkey")).orderBy("o_orderkey")
     }),
 
-    // Bloom-accelerated exact semi join (ckblm as a join pushdown): the
-    // probe side is prefiltered by the build side's key sketch before
-    // any exchange, then exact-verified — result equals a plain semi
+    // Bloom-accelerated exact semi join (ckblm as a join pushdown): when
+    // the join shuffles the probe side, the probe side is prefiltered by
+    // the build side's key sketch before the exchange, then
+    // exact-verified; when the planner broadcasts the build side, the
+    // exact join runs alone. Either way the result equals a plain semi
     // join, so the DuckDB oracle is exact.
     "bloom_semi_join" -> ((s, dir) => {
       val li = read(s, dir, "lineitem")
@@ -704,10 +706,11 @@ object SparkEntry {
         .orderBy("l_orderkey", "l_linenumber")
     }),
 
-    // Bloom-accelerated exact ANTI join (ckblm -reverse as a join):
-    // Bloom-rejected rows are provably absent and ship join-free; only
-    // the "maybe" subset pays the exact anti join. Result equals a plain
-    // anti join — exact DuckDB oracle.
+    // Bloom-accelerated exact ANTI join (ckblm -reverse as a join): when
+    // the join shuffles the probe side, Bloom-rejected rows are provably
+    // absent and ship join-free, and only the "maybe" subset pays the
+    // exact anti join; under a broadcast build side the exact join runs
+    // alone. Result equals a plain anti join — exact DuckDB oracle.
     "bloom_anti_join" -> ((s, dir) => {
       val li = read(s, dir, "lineitem")
       val smallParts = read(s, dir, "part").filter(F.col("p_size") <= 5)
@@ -816,12 +819,12 @@ object SparkEntry {
 
     // incremental dedup: a NEW snapshot (odd doc_ids + planted copies of
     // old docs + an in-batch duplicate) deduped against the EXISTING
-    // corpus (even doc_ids) through the Bloom-prefiltered exact anti
-    // join — the "dedup the fresh crawl against history without
-    // rescanning history per batch" stage. Exact at full scale (the
-    // Bloom is an accelerator, not an approximation: might-contain rows
-    // pay the exact join), so the oracle is a plain text-level
-    // first-occurrence anti join.
+    // corpus (even doc_ids) through BloomJoin's exact anti join — the
+    // "dedup the fresh crawl against history without rescanning history
+    // per batch" stage. Exact at full scale (the Bloom prefilter, used
+    // when the join shuffles the batch, is an accelerator, not an
+    // approximation: might-contain rows pay the exact join), so the
+    // oracle is a plain text-level first-occurrence anti join.
     "incremental_dedup" -> ((s, dir) => {
       val docs = read(s, dir, "documents").select(F.col("doc_id"), F.col("text"))
       val old = docs.filter(F.col("doc_id") % 2 === 0)
@@ -914,9 +917,10 @@ object SparkEntry {
     // DECONTAMINATION: per-document benchmark n-gram overlap counts.
     // The "benchmark" is synthesized deterministically from the corpus
     // itself (token window 5..24 of every 97th document), so real
-    // contamination exists by construction; the Bloom-prefiltered
-    // overlap count is exact (the prefilter only prunes), and DuckDB
-    // reproduces the identical n-gram sets from the identical slices.
+    // contamination exists by construction; the overlap count is exact
+    // (BloomJoin's prefilter, used when the join shuffles the corpus
+    // grams, only prunes), and DuckDB reproduces the identical n-gram
+    // sets from the identical slices.
     "decontaminate_corpus" -> ((s, dir) => {
       val docs = read(s, dir, "documents")
       val bench = docs.filter(F.col("doc_id") % 97 === 0)

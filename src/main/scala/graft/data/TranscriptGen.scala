@@ -2,7 +2,8 @@ package graft.data
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession, functions => F}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.core.ByteOps
 import graft.core.hash.Murmur2Kernel
@@ -192,6 +193,16 @@ object TranscriptTable {
     }
   }
 
+  /** The table at `path`. A table [[write]] produced (it recorded its
+    * modulus) is read with the schema [[write]] fixed, so no Spark job
+    * reads a parquet footer to infer it; tables from other writers keep
+    * schema inference. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    if (readNParts(spark, path).isDefined) spark.read.schema(WrittenSchema).parquet(path)
+    else spark.read.parquet(path)
+
+  /** What [[write]] stores, as Spark reads it back: `Turn`'s fields, then
+    * the part directory column. */
+  private lazy val WrittenSchema: StructType =
+    Encoders.product[Turn].schema.add(PartCol, IntegerType)
 }

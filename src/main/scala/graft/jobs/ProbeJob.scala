@@ -46,13 +46,25 @@ object ProbeJob {
     * A part with no built filter yet (resumable build in progress) joins
     * null => "might contain" = true: Bloom can never prove absence, so an
     * incomplete bank produces no false negatives and the reverse filter
-    * stays exact. */
+    * stays exact. A part that HAS a bank row but no filter was written
+    * without `bloom_conv` (an older library) and fails the probe: read as
+    * "might contain", it would silently shrink a reverse probe.
+    *
+    * The bank is read with [[SketchBuildJob.PartSchema]], so no Spark job
+    * reads a footer to infer its schema. */
   def probeBank(spark: SparkSession, df: DataFrame, buildOut: String,
       keyCol: String, reverse: Boolean = false): DataFrame = {
     import graft.data.TranscriptTable.PartCol
     import graft.spark.functions.{bloom_bank_contains, murmur64}
-    val bank = spark.read.parquet(s"$buildOut/parts")
-      .select(F.col(PartCol).as("__bank_part"), F.col("bloom_conv").as("__bloom"))
+    val bankDir = s"$buildOut/parts"
+    val bloom = F.col("bloom_conv")
+    val bank = spark.read.schema(SketchBuildJob.PartSchema).parquet(bankDir)
+      .select(F.col(PartCol).as("__bank_part"),
+        F.when(bloom.isNull, F.raise_error(F.concat(F.lit("bank part "),
+            F.col(PartCol).cast("string"),
+            F.lit(s" at $bankDir has no bloom_conv filter (built by an older " +
+              "version); rebuild the bank"))))
+          .otherwise(bloom).as("__bloom"))
     // route with the modulus the TABLE was built with (recorded in the
     // build manifest) — an incomplete bank must not change routing
     val nParts = SketchBuildJob.recordedNParts(buildOut,

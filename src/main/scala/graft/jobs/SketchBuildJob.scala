@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 
 import graft.data.TranscriptTable
 import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch}
@@ -40,10 +40,12 @@ import graft.spark.functions._
   * only for what the driver cannot already see. Part ids come from the
   * input's file index, listed once on the driver. The rollup is ONE
   * query: its aggregate returns the merged sketches, the manifest facts
-  * of this run's parts and the ids of stale parts together. A fresh
-  * build therefore runs at most six jobs — the input's schema read, the
-  * per-part aggregate and its write (two), the parts' schema merge, and
-  * the rollup (two) — and a resume with nothing pending at most four.
+  * of this run's parts and the ids of stale parts together. Both tables
+  * it reads were written by this library, so their schemas are known
+  * (`TranscriptTable.read`, [[PartSchema]]) and no job infers one. A
+  * fresh build of a table `TranscriptTable.write` produced therefore
+  * runs at most four jobs — the per-part aggregate and its write (two)
+  * and the rollup (two) — and a resume with nothing pending at most two.
   */
 object SketchBuildJob {
 
@@ -82,6 +84,17 @@ object SketchBuildJob {
     * resume can tell which library wrote existing parts. Bump whenever a
     * sketch column is added/removed/re-encoded. */
   final val PartSchemaVersion = 2
+
+  /** The per-part parquet schema at [[PartSchemaVersion]], as Spark reads
+    * `parts/` back: the aggregate's columns, then the part directory
+    * column. Readers pass it to `spark.read.schema`, so no Spark job
+    * reads a footer to infer it; a part file that lacks a column reads
+    * it as null. Change it together with the version. */
+  val PartSchema: StructType = StructType(
+    StructField("rows", LongType) +:
+      Seq("hll_conv", "hll_tool", "cms_roletool", "kll_textlen", "hh_tool", "bloom_conv")
+        .map(StructField(_, BinaryType)) :+
+      StructField(TranscriptTable.PartCol, IntegerType))
 
   private def manifestDir(out: String): HPath = new HPath(out, "_manifest")
   private def partsDir(out: String): String = s"$out/parts"
@@ -226,21 +239,13 @@ object SketchBuildJob {
     // only the per-part sketch rows — O(parts), not O(rows) — and returns
     // the merged sketches, the pending parts' manifest facts and the ids
     // of stale parts together.
-    // mergeSchema=true because a resumed build may mix part files written
-    // by different library versions: parquet otherwise samples ONE footer
-    // and silently drops (or nulls) columns the sampled file lacks.
-    val partsAll = spark.read.option("mergeSchema", "true").parquet(partsDir(c.out))
+    val partsAll = spark.read.schema(PartSchema).parquet(partsDir(c.out))
       .filter(F.col(TranscriptTable.PartCol).isin((done.toSeq ++ pending): _*))
     // fail loudly on parts from an older schema rather than silently
     // rolling up stats that cover only the newer parts (SketchMerge
-    // aggregates skip nulls, which would mask the gap)
-    val required = Seq("rows", "hll_conv", "hll_tool", "cms_roletool",
-      "kll_textlen", "hh_tool", "bloom_conv")
-    val missingCols = required.filterNot(partsAll.columns.contains)
-    require(missingCols.isEmpty,
-      s"parts at ${partsDir(c.out)} were built by an older version " +
-        s"(missing columns: ${missingCols.mkString(", ")}); rebuild the " +
-        "bank (delete _manifest + parts) or roll up with the old library")
+    // aggregates skip nulls, which would mask the gap): a column a part
+    // file lacks reads as null, so such a part is stale
+    val required = PartSchema.fieldNames.filterNot(_ == TranscriptTable.PartCol)
     val part = F.col(TranscriptTable.PartCol)
     val finalRow = partsAll
       .agg(

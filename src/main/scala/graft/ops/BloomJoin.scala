@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 
 import graft.sketch.HllSketch
 import graft.spark.functions.{bloom_might_contain, bloom_sketch, hll_distinct}
@@ -20,6 +22,16 @@ import graft.spark.functions.{bloom_might_contain, bloom_sketch, hll_distinct}
   *    side and are emitted directly; only the "maybe" subset pays an
   *    exact anti join. With FPR ~0.62^bitsPerItem, the exact-join input
   *    shrinks to |matches| + ~FPR·|large|.
+  *
+  * The prefilter runs only when the join shuffles the probe side. Both
+  * operators first plan the exact join (`large` against the distinct
+  * build keys) and read the planner's physical plan, which costs no
+  * job. When the planner broadcasts the build side (Spark's
+  * `autoBroadcastJoinThreshold` or a join hint), the probe side never
+  * crosses an exchange, so there is no shuffle to save: the exact join
+  * is returned as it is, and the key sketch is never built.
+  * Spark's own runtime Bloom filters (`InjectRuntimeFilter`) follow the
+  * same rule and go only on probable shuffle joins.
   *
   * Sizing: the sketch is built at `maxSize = distinct build keys` — the
   * mkblm sizing rule — bounded from one pass over the (small) build side
@@ -57,30 +69,52 @@ object BloomJoin {
 
   private final val HllP = 14
 
+  /** `large` joined to the distinct build keys: the exact tail of both
+    * operators. A using-column join puts the key column first. */
+  private def exactJoin(large: DataFrame, largeKey: String, small: DataFrame,
+      smallKey: String, how: String): DataFrame =
+    large.join(small.select(F.col(smallKey).as(largeKey)).distinct(), Seq(largeKey), how)
+
+  /** Whether the planner broadcasts the build side of `join`, the
+    * top-most join in its plan. Reads the physical plan: no job. */
+  private[ops] def broadcastsBuildSide(join: DataFrame): Boolean =
+    join.queryExecution.sparkPlan.collectFirst { case j: BaseJoinExec => j }.exists {
+      case b: BroadcastHashJoinExec => b.buildSide == BuildRight
+      case _ => false
+    }
+
   /** Exact `large SEMI JOIN small ON large(largeKey) = small(smallKey)`,
-    * Bloom-prefiltered. */
+    * Bloom-prefiltered when the join shuffles `large`. */
   def semi(large: DataFrame, largeKey: String, small: DataFrame, smallKey: String,
       bitsPerItem: Int = 16, kernel: String = "murmur2"): DataFrame = {
-    val sketch = keySketch(small, smallKey, bitsPerItem, kernel)
-    large.filter(bloom_might_contain(F.lit(sketch), F.col(largeKey)))
-      .join(small.select(F.col(smallKey).as(largeKey)).distinct(),
-        Seq(largeKey), "left_semi")
+    val exact = exactJoin(large, largeKey, small, smallKey, "left_semi")
+    if (broadcastsBuildSide(exact)) exact
+    else {
+      val sketch = keySketch(small, smallKey, bitsPerItem, kernel)
+      exactJoin(large.filter(bloom_might_contain(F.lit(sketch), F.col(largeKey))),
+        largeKey, small, smallKey, "left_semi")
+    }
   }
 
-  /** Exact `large ANTI JOIN small`: Bloom-rejected rows ship straight to
-    * the output (no false negatives => provably absent); only the
-    * "might contain" subset pays the exact anti join. */
+  /** Exact `large ANTI JOIN small`, in `large`'s column order and keeping
+    * `large`'s null-key rows. When the join shuffles `large`,
+    * Bloom-rejected rows ship straight to the output (no false
+    * negatives => provably absent) and only the "might contain" subset
+    * pays the exact anti join. */
   def anti(large: DataFrame, largeKey: String, small: DataFrame, smallKey: String,
       bitsPerItem: Int = 16, kernel: String = "murmur2"): DataFrame = {
-    val sketch = keySketch(small, smallKey, bitsPerItem, kernel)
-    val pred = bloom_might_contain(F.lit(sketch), F.col(largeKey))
-    val definitelyAbsent = large.filter(F.col(largeKey).isNotNull && !pred)
-    val maybe = large.filter(F.col(largeKey).isNull || pred)
-      .join(small.select(F.col(smallKey).as(largeKey)).distinct(),
-        Seq(largeKey), "left_anti")
-    // unionByName, NOT positional unionAll: a using-column join moves the
-    // key column first in its output, so the two branches' column orders
-    // differ whenever largeKey is not large's first column
-    definitelyAbsent.unionByName(maybe)
+    val exact = exactJoin(large, largeKey, small, smallKey, "left_anti")
+    if (broadcastsBuildSide(exact)) exact.select(large.columns.toSeq.map(F.col): _*)
+    else {
+      val sketch = keySketch(small, smallKey, bitsPerItem, kernel)
+      val pred = bloom_might_contain(F.lit(sketch), F.col(largeKey))
+      val definitelyAbsent = large.filter(F.col(largeKey).isNotNull && !pred)
+      val maybe = exactJoin(large.filter(F.col(largeKey).isNull || pred),
+        largeKey, small, smallKey, "left_anti")
+      // unionByName, NOT positional unionAll: the using-column join moves
+      // the key column first, so the two branches' column orders differ
+      // whenever largeKey is not large's first column
+      definitelyAbsent.unionByName(maybe)
+    }
   }
 }

@@ -9,13 +9,14 @@ import org.apache.spark.sql.{Column, DataFrame, functions => F}
   *
   * Shape at scale: the benchmark side is tiny (thousands of prompts)
   * and the corpus side is the 100 TB table, so the overlap check is a
-  * textbook Bloom-runtime-filter join — a compact sketch of the
-  * benchmark's n-gram set prefilters corpus n-grams BEFORE any
-  * exchange ([[BloomJoin.semi]], the reference's `ckblm` membership
-  * semantics as a join pushdown), and only surviving (doc_id, gram)
-  * pairs — true hits plus ~FPR of the corpus — pay the exact verify
-  * join and the per-document rollup. Exchanges carry short gram
-  * strings and ids, never document bodies.
+  * textbook Bloom-runtime-filter join ([[BloomJoin.semi]], the
+  * reference's `ckblm` membership semantics as a join pushdown). When
+  * the benchmark's n-gram set is small enough to broadcast, corpus
+  * n-grams never cross an exchange and the exact semi join runs alone.
+  * Otherwise a compact sketch of that set prefilters corpus n-grams
+  * BEFORE the exchange, and only surviving (doc_id, gram) pairs — true
+  * hits plus ~FPR of the corpus — pay the exact verify join. Exchanges
+  * carry 8-byte gram hashes and ids, never document bodies.
   */
 object Decontaminate {
 
@@ -39,7 +40,8 @@ object Decontaminate {
   /** Per-document contamination evidence: (idCol, n_hits) for every
     * corpus document sharing at least one distinct word n-gram with
     * the benchmark text column, n_hits = how many distinct n-grams
-    * collide. Exact — the Bloom pass only prunes. */
+    * collide. Exact — the Bloom pass, run only when the join shuffles
+    * the corpus grams, only prunes. */
   def overlapHits(corpus: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, n: Int = 13,
       bitsPerItem: Int = 16): DataFrame = {

@@ -213,13 +213,15 @@ object Dedup {
     * without rescanning history per batch" pipeline stage.
     *
     * Shape at scale: the new batch self-dedups on (hash, id) — 16
-    * bytes per row — then probes a Bloom sketch of the old corpus's
-    * content hashes (the reference's `ckblm` membership semantics as a
-    * join pushdown, [[BloomJoin.anti]]): Bloom-rejected rows are
+    * bytes per row — then anti-joins the old corpus's content hashes
+    * through [[BloomJoin.anti]] (the reference's `ckblm` membership
+    * semantics as a join pushdown). When the planner broadcasts the
+    * history hashes the exact anti join runs alone. Otherwise the batch
+    * probes a Bloom sketch of them first: Bloom-rejected rows are
     * PROVABLY absent from history and ship join-free; only the
     * might-contain subset (true dups + ~FPR of the batch) pays the
-    * exact anti join against the old hash column, so the result is
-    * exact, not probabilistic. Here the sketch is built inline (one
+    * exact anti join against the old hash column. Either way the result
+    * is exact, not probabilistic. Here the sketch is built inline (one
     * scan of `oldDf`); a production deployment amortizes that scan by
     * persisting the bank once per corpus version (`SketchBuildJob`)
     * and only re-sketching on compaction. Content identity is 64-bit
@@ -229,11 +231,12 @@ object Dedup {
       textCol: String, bitsPerItem: Int = 16): DataFrame = {
     val hNew = newDf.select(F.col(idCol), murmur64(F.col(textCol)).as("__h"))
     val winners = hNew.groupBy("__h").agg(F.min(F.col(idCol)).as(idCol))
-    // (the history hash column is scanned three times — Bloom sizing
-    // count, sketch build, exact anti join — but caching it was MEASURED
-    // SLOWER here: the InMemoryRelation's accurate stats freeze the anti
-    // join's planning, and three parallel parquet re-scans of a single
-    // long column are cheaper than one cache write + frozen plan)
+    // (with the prefilter, the history hash column is scanned three
+    // times — Bloom sizing count, sketch build, exact anti join — but
+    // caching it was MEASURED SLOWER here: the InMemoryRelation's
+    // accurate stats freeze the anti join's planning, and three parallel
+    // parquet re-scans of a single long column are cheaper than one
+    // cache write + frozen plan)
     val oldH = oldDf.select(murmur64(F.col(textCol)).as("__h"))
     val fresh = BloomJoin.anti(winners, "__h", oldH, "__h", bitsPerItem)
       .select(F.col(idCol))

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{functions => F}
 
 import graft.data.{TranscriptGen, TranscriptTable}
+import graft.ops.BloomJoin
 import graft.sketch.{HllSketch, KllSketch}
 import graft.spark.SparkTestBase
 import graft.spark.functions._
@@ -293,17 +294,83 @@ class TranscriptJobsSpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("a fresh build runs at most 6 Spark jobs, a resume with nothing pending at most 4") {
+  test("a fresh build runs at most 4 Spark jobs, a resume with nothing pending at most 2") {
     val out = s"$workDir/build_jobs"
     val table = tablePath // written outside the counted run
     val fresh = sparkJobs(SketchBuildJob.run(spark, SketchBuildJob.Config(table, out)))
-    assert(fresh <= 6, s"fresh build ran $fresh Spark jobs")
+    assert(fresh <= 4, s"fresh build ran $fresh Spark jobs")
     val resumed = sparkJobs {
       val r = SketchBuildJob.run(spark, SketchBuildJob.Config(table, out))
       assert(r.processedParts.isEmpty)
     }
-    assert(resumed <= 4, s"resume with nothing pending ran $resumed Spark jobs")
+    assert(resumed <= 2, s"resume with nothing pending ran $resumed Spark jobs")
     info(s"Spark jobs: fresh build $fresh, resume with nothing pending $resumed")
+  }
+
+  private lazy val probeKeys =
+    (0 until 300).map(i => s"conv-${"%05d".format(i)}").toDF("conv_id")
+
+  test("a bank probe over the fixture runs at most 4 Spark jobs") {
+    val out = s"$workDir/build_probe_jobs"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
+    val jobs = sparkJobs {
+      assert(ProbeJob.probeBank(spark, probeKeys, out, "conv_id").count() >= nConvs)
+    }
+    assert(jobs <= 4, s"probeBank count ran $jobs Spark jobs")
+  }
+
+  test("a Bloom semi join over the fixture runs at most 4 Spark jobs") {
+    val jobs = sparkJobs {
+      assert(BloomJoin.semi(probeKeys, "conv_id", TranscriptTable.read(spark, tablePath),
+        "conv_id").count() === nConvs)
+    }
+    assert(jobs <= 4, s"BloomJoin.semi count ran $jobs Spark jobs")
+  }
+
+  test("a table the library wrote reads with the schema Spark infers, and without a job") {
+    val inferred = spark.read.parquet(tablePath)
+    val jobs = sparkJobs(TranscriptTable.read(spark, tablePath).schema)
+    assert(jobs === 0, s"reading the schema ran $jobs Spark jobs")
+    val ours = TranscriptTable.read(spark, tablePath)
+    // names, types, nullability and order
+    assert(ours.schema === inferred.schema)
+    assert(ours.exceptAll(inferred).isEmpty && inferred.exceptAll(ours).isEmpty)
+  }
+
+  test("the part schema is the one Spark infers from freshly written parts") {
+    val out = s"$workDir/build_schema"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
+    assert(spark.read.parquet(s"$out/parts").schema === SketchBuildJob.PartSchema)
+  }
+
+  /** Rewrites part `part` of the bank at `out` without `column`, the way
+    * an older library version would have written it. */
+  private def rewritePartWithout(out: String, part: Int, column: String): Unit = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val pdir = s"$out/parts/part_id=$part"
+    val tmp = s"$out-rewrite"
+    spark.read.parquet(pdir).drop(column).write.mode("overwrite").parquet(tmp)
+    val hfs = new HPath(pdir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(hfs.delete(new HPath(pdir), true))
+    assert(hfs.rename(new HPath(tmp), new HPath(pdir)))
+  }
+
+  test("a bank part rewritten without its Bloom filter fails the probe loudly") {
+    val out = s"$workDir/build_no_bloom"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
+    // a part other than part 0, the footer schema inference samples
+    val victim = SketchBuildJob.completedParts(out).filter(_ != 0).max
+    rewritePartWithout(out, victim, "bloom_conv")
+    val foreign = (0 until 500).map(i => s"other-$i").toDF("conv_id")
+    for (reverse <- Seq(false, true)) {
+      val ex = intercept[Exception] {
+        ProbeJob.probeBank(spark, foreign, out, "conv_id", reverse).count()
+      }
+      val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString("\n")
+      assert(messages.contains(s"bank part $victim ") && messages.contains("no bloom_conv filter"),
+        s"reverse=$reverse: $messages")
+    }
   }
 
   test("part_id as a data column, not a directory: the scan path builds the same bank") {
@@ -347,19 +414,12 @@ class TranscriptJobsSpec extends SparkTestBase {
   }
 
   test("resume over parts written by an older schema fails loudly, not silently") {
-    import org.apache.hadoop.fs.{Path => HPath}
     val out = s"$workDir/build_stale"
     SketchBuildJob.run(spark,
       SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(3)))
     // simulate a part written by an older library version: rewrite one
     // COMPLETED part's file without the hh_tool column
-    val victim = SketchBuildJob.completedParts(out).min
-    val pdir = s"$out/parts/part_id=$victim"
-    val tmp = s"$workDir/stale_tmp"
-    spark.read.parquet(pdir).drop("hh_tool").write.mode("overwrite").parquet(tmp)
-    val hfs = new HPath(pdir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(hfs.delete(new HPath(pdir), true))
-    assert(hfs.rename(new HPath(tmp), new HPath(pdir)))
+    rewritePartWithout(out, SketchBuildJob.completedParts(out).min, "hh_tool")
     // the resumed rollup must refuse to aggregate a silently-partial bank
     val ex = intercept[IllegalArgumentException] {
       SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))

@@ -765,26 +765,37 @@ class OpsSpec extends SparkTestBase {
   test("bloom semi/anti joins are exact vs plain joins; prefilter is in the plan") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val parts = spark.read.parquet(s"$sf/part.parquet").filter($"p_size" <= 5)
-    val semi = BloomJoin.semi(li, "l_partkey", parts, "p_partkey")
-    val anti = BloomJoin.anti(li, "l_partkey", parts, "p_partkey")
     val exactSemi = li.join(parts.select($"p_partkey".as("l_partkey")).distinct(),
       Seq("l_partkey"), "left_semi")
     val exactAnti = li.join(parts.select($"p_partkey".as("l_partkey")).distinct(),
       Seq("l_partkey"), "left_anti")
-    assert(semi.count() === exactSemi.count())
-    assert(anti.count() === exactAnti.count())
-    assert(semi.count() + anti.count() === li.count())
-    assert(semi.exceptAll(exactSemi).isEmpty && exactSemi.exceptAll(semi).isEmpty)
-    // row-level equality under an EXPLICIT column order (a using-column
-    // join puts the key first, so positional compares are meaningless
-    // without this — the count-only version of this check missed a
-    // column-order bug in anti's union)
-    val cols = li.columns.toSeq.map(F.col)
-    assert(anti.select(cols: _*).exceptAll(exactAnti.select(cols: _*)).isEmpty &&
-      exactAnti.select(cols: _*).exceptAll(anti.select(cols: _*)).isEmpty)
-    // the bloom prefilter sits in the probe-side scan stage, before the join
-    val plan = semi.queryExecution.executedPlan.toString
-    assert(plan.contains("bloom_might_contain"), s"prefilter missing:\n$plan")
+    def checkExact(semi: org.apache.spark.sql.DataFrame,
+        anti: org.apache.spark.sql.DataFrame): Unit = {
+      assert(semi.count() === exactSemi.count())
+      assert(anti.count() === exactAnti.count())
+      assert(semi.count() + anti.count() === li.count())
+      assert(semi.exceptAll(exactSemi).isEmpty && exactSemi.exceptAll(semi).isEmpty)
+      // row-level equality under an EXPLICIT column order (a using-column
+      // join puts the key first, so positional compares are meaningless
+      // without this — the count-only version of this check missed a
+      // column-order bug in anti's union)
+      val cols = li.columns.toSeq.map(F.col)
+      assert(anti.select(cols: _*).exceptAll(exactAnti.select(cols: _*)).isEmpty &&
+        exactAnti.select(cols: _*).exceptAll(anti.select(cols: _*)).isEmpty)
+    }
+    // the planner broadcasts the small build side: nothing to prefilter
+    val semi = BloomJoin.semi(li, "l_partkey", parts, "p_partkey")
+    checkExact(semi, BloomJoin.anti(li, "l_partkey", parts, "p_partkey"))
+    val broadcastPlan = semi.queryExecution.executedPlan.toString
+    assert(!broadcastPlan.contains("bloom_might_contain"),
+      s"prefilter under a broadcast join:\n$broadcastPlan")
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val semi = BloomJoin.semi(li, "l_partkey", parts, "p_partkey")
+      checkExact(semi, BloomJoin.anti(li, "l_partkey", parts, "p_partkey"))
+      // the bloom prefilter sits in the probe-side scan stage, before the join
+      val plan = semi.queryExecution.executedPlan.toString
+      assert(plan.contains("bloom_might_contain"), s"prefilter missing:\n$plan")
+    }
   }
 
   test("quality features and token counts are exact arithmetic") {
@@ -1212,10 +1223,7 @@ class OpsSpec extends SparkTestBase {
     // and lets stats decide. Emulate "probe set too large to broadcast"
     // by zeroing the auto-broadcast threshold: the plan must degrade to
     // a shuffle join, never a driver-side collect+broadcast
-    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(thresholdKey)
-    try {
-      spark.conf.set(thresholdKey, "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
       val big = KvLookup.getFirst(li, "l_orderkey", probes, "o_orderkey", order,
         broadcastProbes = false)
       val bigPlan = big.queryExecution.executedPlan.toString
@@ -1228,7 +1236,7 @@ class OpsSpec extends SparkTestBase {
       val cols = Seq("l_orderkey", "l_partkey", "l_quantity")
       assert(fast.select(cols.map(F.col): _*).collect().toSet ===
         big.select(cols.map(F.col): _*).collect().toSet)
-    } finally spark.conf.set(thresholdKey, saved)
+    }
   }
 
   test("pqTopK: exhaustive shortlist equals brute force; production shortlist has high recall") {
@@ -1290,9 +1298,12 @@ class OpsSpec extends SparkTestBase {
 
     // exactness under heavy false positives: bitsPerItem = 1 forces the
     // Bloom into its worst regime; the might-contain subset pays the
-    // exact join, so the output must not change
-    val noisy = Dedup.incrementalDedup(batch, old, "doc_id", "text", bitsPerItem = 1)
-      .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
+    // exact join, so the output must not change. The prefilter runs only
+    // when the anti join shuffles the batch, so broadcasting is off here.
+    val noisy = withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      Dedup.incrementalDedup(batch, old, "doc_id", "text", bitsPerItem = 1)
+        .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
+    }
     assert(noisy === Seq(11L, 14L))
 
     // empty history: everything fresh self-dedups

@@ -10,6 +10,14 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkTestBase.session
 
+  /** `body` with the session conf `key` set to `value`; the previous
+    * setting is restored afterwards. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   override def afterAll(): Unit = {
     // session is shared across suites; do not stop it here
     super.afterAll()
