@@ -2,7 +2,8 @@ package graft.data
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession, functions => F}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession, functions => F}
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.core.ByteOps
@@ -140,8 +141,13 @@ object TranscriptGen {
 object TranscriptTable {
   val PartCol = "part_id"
 
-  def partIdCol(nParts: Int): org.apache.spark.sql.Column =
-    F.pmod(graft.spark.functions.murmur64(F.col("conv_id")), F.lit(nParts.toLong)).cast("int")
+  /** The part a `key` routes to among `nParts` hash ranges:
+    * `pmod(murmur64(key), nParts)`. Writing a table and probing a bank
+    * built from it must route by this one expression. */
+  def route(key: Column, nParts: Int): Column =
+    F.pmod(graft.spark.functions.murmur64(key), F.lit(nParts.toLong)).cast("int")
+
+  def partIdCol(nParts: Int): Column = route(F.col("conv_id"), nParts)
 
   def write(turns: Dataset[Turn], path: String, nParts: Int): Unit = {
     turns.withColumn(PartCol, partIdCol(nParts))
@@ -151,7 +157,7 @@ object TranscriptTable {
       .partitionBy(PartCol)
       .parquet(path)
     // record the WRITER's routing modulus alongside the data: consumers
-    // (SketchBuildJob's bank config, probeBank's part routing) must use
+    // (SketchBuildJob's bank log, probeBank's part routing) must use
     // exactly this nParts — inferring max(part_id)+1 from observed data
     // undercounts whenever the highest hash range happens to be empty,
     // which silently misroutes every probe of the resulting bank
@@ -181,10 +187,8 @@ object TranscriptTable {
       if (!fs.exists(metaPath)) None
       else {
         val in = fs.open(metaPath)
-        val body =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        "\"n_parts\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(body).map(_.group(1).toInt)
+        val n = try new ObjectMapper().readTree(in).get("n_parts") finally in.close()
+        Option(n).filter(_.isInt).map(_.intValue)
       }
     }
     recorded.distinct match {
@@ -198,7 +202,11 @@ object TranscriptTable {
     * reads a parquet footer to infer it; tables from other writers keep
     * schema inference. */
   def read(spark: SparkSession, path: String): DataFrame =
-    if (readNParts(spark, path).isDefined) spark.read.schema(WrittenSchema).parquet(path)
+    read(spark, path, readNParts(spark, path))
+
+  /** [[read]] for a caller that already holds `readNParts(spark, path)`. */
+  def read(spark: SparkSession, path: String, nParts: Option[Int]): DataFrame =
+    if (nParts.isDefined) spark.read.schema(WrittenSchema).parquet(path)
     else spark.read.parquet(path)
 
   /** What [[write]] stores, as Spark reads it back: `Turn`'s fields, then

@@ -28,9 +28,9 @@ object ProbeJob {
     df.filter(if (reverse) !pred else pred)
   }
 
-  /** Probe a SketchBuildJob Bloom BANK: per-part filters from
-    * `<buildOut>/parts`, routed by the same content hash that
-    * partitioned the build (`part_id = murmur64(key) mod nParts`).
+  /** Probe a SketchBuildJob Bloom BANK: per-part filters from the run
+    * directories its `_log/` commits, routed by `TranscriptTable.route`
+    * with the `n_parts` the log records, as the build's input was.
     *
     * Scale shape: a PART-ROUTED SHUFFLE-HASH JOIN — probe rows are
     * tagged with their part id and co-partitioned with the bank's part
@@ -43,36 +43,33 @@ object ProbeJob {
     *
     * `bloom_bank_contains` deserializes each part's filter once per task
     * and skips reading the joined binary column entirely on cache hits.
-    * A part with no built filter yet (resumable build in progress) joins
-    * null => "might contain" = true: Bloom can never prove absence, so an
-    * incomplete bank produces no false negatives and the reverse filter
-    * stays exact. A part that HAS a bank row but no filter was written
-    * without `bloom_conv` (an older library) and fails the probe: read as
-    * "might contain", it would silently shrink a reverse probe.
+    * A part with no committed filter yet (resumable build in progress)
+    * joins null => "might contain" = true: Bloom can never prove absence,
+    * so an incomplete bank produces no false negatives and the reverse
+    * filter stays exact. A part that HAS a bank row but no filter was
+    * written without `bloom_conv` (an older library) and fails the probe:
+    * read as "might contain", it would silently shrink a reverse probe.
+    * So does a bank with no committed run, or in the older layout.
     *
     * The bank is read with [[SketchBuildJob.PartSchema]], so no Spark job
     * reads a footer to infer its schema. */
   def probeBank(spark: SparkSession, df: DataFrame, buildOut: String,
       keyCol: String, reverse: Boolean = false): DataFrame = {
-    import graft.data.TranscriptTable.PartCol
-    import graft.spark.functions.{bloom_bank_contains, murmur64}
-    val bankDir = s"$buildOut/parts"
+    import graft.data.TranscriptTable.{route, PartCol}
+    val log = SketchBuildJob.replay(buildOut, spark.sparkContext.hadoopConfiguration)
+    // route with the modulus the TABLE was built with — an incomplete
+    // bank must not change routing
+    val nParts = log.nParts.getOrElse(throw new IllegalStateException(
+      s"$buildOut/_log holds no committed build; cannot derive bank routing"))
     val bloom = F.col("bloom_conv")
-    val bank = spark.read.schema(SketchBuildJob.PartSchema).parquet(bankDir)
+    val bank = spark.read.schema(SketchBuildJob.PartSchema).parquet(log.runDirs: _*)
       .select(F.col(PartCol).as("__bank_part"),
         F.when(bloom.isNull, F.raise_error(F.concat(F.lit("bank part "),
             F.col(PartCol).cast("string"),
-            F.lit(s" at $bankDir has no bloom_conv filter (built by an older " +
+            F.lit(s" at $buildOut/parts has no bloom_conv filter (built by an older " +
               "version); rebuild the bank"))))
           .otherwise(bloom).as("__bloom"))
-    // route with the modulus the TABLE was built with (recorded in the
-    // build manifest) — an incomplete bank must not change routing
-    val nParts = SketchBuildJob.recordedNParts(buildOut,
-      spark.sparkContext.hadoopConfiguration).getOrElse(
-      throw new IllegalStateException(
-        s"$buildOut/_manifest/config.json missing; cannot derive bank routing"))
-    val routed = df.withColumn("__part",
-      F.pmod(murmur64(F.col(keyCol)), F.lit(nParts.toLong)).cast("int"))
+    val routed = df.withColumn("__part", route(F.col(keyCol), nParts))
     // left join: unbuilt parts keep their probe rows with a null filter;
     // SHUFFLE_HASH pins the co-partitioned plan (auto-broadcast of the
     // bank would recreate the whole-bank-everywhere footprint)

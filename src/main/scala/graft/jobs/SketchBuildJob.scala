@@ -1,7 +1,10 @@
 package graft.jobs
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
@@ -21,13 +24,14 @@ import graft.spark.functions._
   *    nParts` — content-derived, so the partition -> input mapping is
   *    stable across cluster sizes and file orders (required for resume
   *    correctness);
-  *  - a completed part is recorded as a manifest JSON with row counts and
-  *    wall time; on restart, completed parts are pruned from the scan
-  *    (partition pruning on the parquet partition column — pending-part
-  *    file listing never touches finished data);
-  *  - per-part sketches are written distributed (dynamic partition
-  *    overwrite — a crashed run's half-written partition is safely
-  *    rewritten, never duplicated);
+  *  - each run writes its pending parts' sketch rows (the input scan
+  *    pruned to those parts) into a fresh `parts/<version>-<uuid>/` with a
+  *    plain write, then commits them as ONE log entry `_log/<version>.json`,
+  *    created only if absent: the routing modulus, and per part its run
+  *    directory, counts and Bloom health. Resume, rollup and
+  *    `ProbeJob.probeBank` replay the log and scan only the directories it
+  *    names, so a crashed run's files are never read and no reader lists
+  *    `parts/`. Log IO uses the Hadoop FileSystem API: `out` may be any DFS;
   *  - sketch aggregation is map-side partial: each input split collapses
   *    to one sketch buffer before the shuffle, so the exchange moves
   *    O(parts * sketchBytes), independent of row count;
@@ -39,7 +43,7 @@ import graft.spark.functions._
   * re-planning, schema merges) whatever its size, so the build asks Spark
   * only for what the driver cannot already see. Part ids come from the
   * input's file index, listed once on the driver. The rollup is ONE
-  * query: its aggregate returns the merged sketches, the manifest facts
+  * query: its aggregate returns the merged sketches, the log facts
   * of this run's parts and the ids of stale parts together. Both tables
   * it reads were written by this library, so their schemas are known
   * (`TranscriptTable.read`, [[PartSchema]]) and no job infers one. A
@@ -68,7 +72,7 @@ object SketchBuildJob {
         * kill-resume testing); None = all pending */
       maxPartsPerRun: Option[Int] = None)
 
-  case class PartMetrics(partId: Int, rows: Long, estConvs: Long, wallMs: Long)
+  case class PartMetrics(partId: Int, rows: Long, estConvs: Long)
 
   case class BuildResult(
       processedParts: Seq[PartMetrics],
@@ -80,71 +84,85 @@ object SketchBuildJob {
       textLenP99: Double,
       topTools: Seq[(String, Long)])
 
-  /** Version of the per-part parquet schema; recorded in config.json so a
-    * resume can tell which library wrote existing parts. Bump whenever a
-    * sketch column is added/removed/re-encoded. */
-  final val PartSchemaVersion = 2
+  /** Version of the per-part parquet schema and layout; recorded in every
+    * log entry so a reader can tell which library wrote a bank. Bump
+    * whenever a sketch column is added/removed/re-encoded. Version 3:
+    * run directories committed through `_log/`, `part_id` a data column. */
+  final val PartSchemaVersion = 3
 
-  /** The per-part parquet schema at [[PartSchemaVersion]], as Spark reads
-    * `parts/` back: the aggregate's columns, then the part directory
-    * column. Readers pass it to `spark.read.schema`, so no Spark job
-    * reads a footer to infer it; a part file that lacks a column reads
-    * it as null. Change it together with the version. */
+  /** The per-part parquet schema at [[PartSchemaVersion]]: the
+    * aggregate's columns, then `part_id`. Parts are written in this
+    * column order, and readers pass it to `spark.read.schema`, so no
+    * Spark job reads a footer to infer it; a part file that lacks a
+    * column reads it as null. Change it together with the version. */
   val PartSchema: StructType = StructType(
     StructField("rows", LongType) +:
       Seq("hll_conv", "hll_tool", "cms_roletool", "kll_textlen", "hh_tool", "bloom_conv")
         .map(StructField(_, BinaryType)) :+
       StructField(TranscriptTable.PartCol, IntegerType))
 
-  private def manifestDir(out: String): HPath = new HPath(out, "_manifest")
+  private def logDir(out: String): HPath = new HPath(out, "_log")
   private def partsDir(out: String): String = s"$out/parts"
   private def finalDir(out: String): HPath = new HPath(out, "final")
 
-  /** Manifest/config IO goes through the Hadoop FileSystem API, so `out`
-    * may be any DFS the cluster mounts (hdfs://, s3a://, file:) — lineage
-    * and resume state live next to the data, not on one driver's disk. */
-  private def writeUtf8(fs: FileSystem, p: HPath, s: String): Unit = {
-    val o = fs.create(p, true)
-    try o.write(s.getBytes("UTF-8")) finally o.close()
+  /** A bank's `_log/` replayed: the routing modulus (None until a run commits),
+    * each committed part's run directory, and the next commit's version.
+    * Readers scan exactly [[runDirs]], the committed runs' directories. */
+  case class BankLog(nParts: Option[Int], partDirs: Map[Int, String], nextVersion: Long) {
+    def runDirs: Seq[String] = partDirs.values.toSeq.distinct.sorted
   }
 
-  private def readUtf8(fs: FileSystem, p: HPath): String = {
-    val len = fs.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, "UTF-8")
-  }
+  private val Json = new ObjectMapper()
+  private val EntryName = """(\d{10})\.json""".r
+  private def entryPath(out: String, version: Long): HPath =
+    new HPath(logDir(out), f"$version%010d.json")
 
-  def completedParts(out: String, conf: Configuration = new Configuration()): Set[Int] = {
-    val dir = manifestDir(out)
+  /** Replays the log of the bank at `out` in version order. A part
+    * committed twice, and a bank in the older `_manifest/` layout, fail
+    * loudly. */
+  def replay(out: String, conf: Configuration = new Configuration()): BankLog = {
+    val dir = logDir(out)
     val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).iterator
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("part-") && s.endsWith(".json") =>
-        s.stripPrefix("part-").stripSuffix(".json").toInt }
-      .toSet
+    val names =
+      if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      else if (fs.exists(new HPath(out, "_manifest/config.json")))
+        throw new IllegalStateException(s"$out holds a sketch bank in the older " +
+          "_manifest/ layout, which this version does not read; delete it and rebuild the bank")
+      else Nil
+    names.collect { case EntryName(v) => v.toLong }.sorted
+      .foldLeft(BankLog(None, Map.empty, 0L)) { (log, v) =>
+        val in = fs.open(entryPath(out, v))
+        val entry = try Json.readTree(in) finally in.close()
+        val partDirs = entry.required("parts").elements().asScala.foldLeft(log.partDirs) {
+          (m, p) =>
+            val id = p.required("part_id").asInt()
+            if (m.contains(id)) throw new IllegalStateException(
+              s"part $id is committed twice at $dir (again in entry $v)")
+            m.updated(id, p.required("dir").asText())
+        }
+        BankLog(Some(entry.required("n_parts").asInt()), partDirs, v + 1)
+      }
   }
+
+  def completedParts(out: String, conf: Configuration = new Configuration()): Set[Int] =
+    replay(out, conf).partDirs.keySet
 
   /** The routing modulus recorded at build time — probeBank must route
     * with the TABLE part count, never with however many parts happen to
     * be completed so far. */
-  def recordedNParts(out: String, conf: Configuration = new Configuration()): Option[Int] = {
-    val f = new HPath(manifestDir(out), "config.json")
-    val fs = f.getFileSystem(conf)
-    if (!fs.exists(f)) None
-    else "\\\"n_parts\\\":(\\d+)".r.findFirstMatchIn(readUtf8(fs, f)).map(_.group(1).toInt)
+  def recordedNParts(out: String, conf: Configuration = new Configuration()): Option[Int] =
+    replay(out, conf).nParts
+
+  /** Writes log entry `version` of the bank at `out`; fails if it exists (`create`
+    * without overwrite, atomic on HDFS: one writer per `out`). */
+  private[jobs] def commit(out: String, version: Long, entry: JsonNode,
+      conf: Configuration): Unit = {
+    val p = entryPath(out, version)
+    val o = p.getFileSystem(conf).create(p, false)
+    try o.write(Json.writeValueAsBytes(entry)) finally o.close()
   }
 
-  /** Whether `dir` holds any `part_id=N` directory (a driver-side listing). */
-  private def hasPartDirs(spark: SparkSession, dir: String): Boolean = {
-    val pattern = new HPath(dir, s"${TranscriptTable.PartCol}=*")
-    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(pattern)).exists(_.exists(_.isDirectory))
-  }
-
-  /** The per-part sketch aggregation — one row per part_id. */
+  /** The per-part sketch aggregation — one row per part_id, in [[PartSchema]] order. */
   private def partAggregates(df: DataFrame, c: Config): DataFrame = {
     val roleTool = F.concat_ws("|", F.col("role"), F.coalesce(F.col("tool"), F.lit("-")))
     df.groupBy(F.col(TranscriptTable.PartCol))
@@ -158,6 +176,7 @@ object SketchBuildJob {
         // vocabulary (the common case), bounded-error otherwise
         hh_sketch(F.col("tool"), c.hhCapacity).as("hh_tool"),
         bloom_sketch(F.col("conv_id"), c.bloomPerPartCapacity, c.bloomBpi).as("bloom_conv"))
+      .select(PartSchema.fieldNames.map(F.col): _*)
   }
 
   /** Part ids that hold data, read from the file index that
@@ -185,20 +204,19 @@ object SketchBuildJob {
 
   def run(spark: SparkSession, c: Config): BuildResult = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val mfs = manifestDir(c.out).getFileSystem(conf)
-    mfs.mkdirs(manifestDir(c.out))
-    val df = TranscriptTable.read(spark, c.input)
+    val recorded = TranscriptTable.readNParts(spark, c.input)
+    val df = TranscriptTable.read(spark, c.input, recorded)
 
     val noRows = s"SketchBuildJob: input table at ${c.input} has no rows — nothing to build"
     val allParts = partIds(df)
     require(allParts.nonEmpty, noRows)
-    // record the routing modulus once — the WRITER's modulus from the
-    // table's own metadata. Inferring max(part_id)+1 from observed data
-    // is WRONG whenever the highest hash range is empty (probeBank would
-    // route with modulus N-1 against a bank built at N: false negatives
-    // from a structure that promises none); the data-derived fallback
-    // exists only for foreign tables and warns.
-    val nParts = TranscriptTable.readNParts(spark, c.input).getOrElse {
+    // route by the WRITER's modulus from the table's own metadata.
+    // Inferring max(part_id)+1 from observed data is WRONG whenever the
+    // highest hash range is empty (probeBank would route with modulus
+    // N-1 against a bank built at N: false negatives from a structure
+    // that promises none); the data-derived fallback exists only for
+    // foreign tables and warns.
+    val nParts = recorded.getOrElse {
       val inferred = allParts.max + 1
       // scalastyle:off println
       System.err.println(
@@ -207,40 +225,27 @@ object SketchBuildJob {
       // scalastyle:on println
       inferred
     }
-    val cfgFile = new HPath(manifestDir(c.out), "config.json")
-    if (!mfs.exists(cfgFile)) {
-      val cfgJson = "{" + "\"n_parts\":" + nParts +
-        ",\"schema_version\":" + PartSchemaVersion +
-        ",\"input\":" + ProfileJob.jsonStr(c.input) + "}"
-      writeUtf8(mfs, cfgFile, cfgJson)
-    }
-    val done = completedParts(c.out, conf)
+    val bank = replay(c.out, conf)
+    require(bank.nParts.forall(_ == nParts), s"the bank at ${c.out} routes by " +
+      s"n_parts=${bank.nParts.get}, not ${c.input}'s $nParts; build into a new directory")
+    val done = bank.partDirs.keySet
     val pendingAll = allParts.filterNot(done)
     val pending = c.maxPartsPerRun.fold(pendingAll)(pendingAll.take)
 
-    val wallMs =
-      if (pending.isEmpty) 0L
-      else {
-        val t0 = System.nanoTime()
-        val slice = df.filter(F.col(TranscriptTable.PartCol).isin(pending: _*))
-        // distributed write of per-part sketch rows; dynamic overwrite so
-        // a rerun of a crashed part replaces rather than duplicates
-        partAggregates(slice, c).write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(TranscriptTable.PartCol)
-          .parquet(partsDir(c.out))
-        (System.nanoTime() - t0) / 1000000
-      }
-    // part directories that list only zero-row files pass the index
-    // check above but write no sketch rows
-    require(done.nonEmpty || hasPartDirs(spark, partsDir(c.out)), noRows)
+    // one file per part: a scan orders files by size, so the rollup
+    // merges parts in one order however runs split them (KLL's merge is
+    // order-sensitive; a resumed build must give a fresh build's bytes)
+    val runDir = f"${partsDir(c.out)}/${bank.nextVersion}%010d-${java.util.UUID.randomUUID()}"
+    if (pending.nonEmpty)
+      partAggregates(df.filter(F.col(TranscriptTable.PartCol).isin(pending: _*)), c)
+        .write.option("maxRecordsPerFile", 1L).parquet(runDir)
 
-    // ONE rollup query over the completed parts plus this run's: reads
-    // only the per-part sketch rows — O(parts), not O(rows) — and returns
-    // the merged sketches, the pending parts' manifest facts and the ids
-    // of stale parts together.
-    val partsAll = spark.read.schema(PartSchema).parquet(partsDir(c.out))
-      .filter(F.col(TranscriptTable.PartCol).isin((done.toSeq ++ pending): _*))
+    // ONE rollup query over the committed runs plus this one: reads only
+    // the per-part sketch rows — O(parts), not O(rows) — and returns the
+    // merged sketches, the pending parts' log facts and the ids of stale
+    // parts together.
+    val partsAll = spark.read.schema(PartSchema)
+      .parquet((if (pending.isEmpty) bank.runDirs else bank.runDirs :+ runDir): _*)
     // fail loudly on parts from an older schema rather than silently
     // rolling up stats that cover only the newer parts (SketchMerge
     // aggregates skip nulls, which would mask the gap): a column a part
@@ -262,29 +267,41 @@ object SketchBuildJob {
           .as("stale"))
       .head()
 
-    // lineage + metrics for this run's parts, recorded before the stale
-    // check so a failed rollup never recomputes finished parts
+    // commit this run's parts before the stale check, so a failed
+    // rollup never recomputes finished parts
     val processed: Seq[PartMetrics] =
-      finalRow.getAs[collection.Seq[Row]]("pending").toSeq.sortBy(_.getInt(0)).map { r =>
-        val m = PartMetrics(r.getInt(0), r.getLong(1), r.getLong(2), wallMs / pending.size)
-        // paths are user input: escaped like config.json's, never
-        // interpolated raw into the JSON text
-        val predicate = s"${TranscriptTable.PartCol}=${m.partId}"
-        val json =
-          s"""{"part_id":${m.partId},"rows":${m.rows},"est_convs":${m.estConvs},
-             |"wall_ms":${m.wallMs},"input":${ProfileJob.jsonStr(c.input)},
-             |"predicate":${ProfileJob.jsonStr(predicate)},
-             |"output":${ProfileJob.jsonStr(s"${partsDir(c.out)}/$predicate")}}"""
-            .stripMargin.replace("\n", "")
-        writeUtf8(mfs, new HPath(manifestDir(c.out), s"part-${m.partId}.json"), json)
-        m
+      finalRow.getAs[collection.Seq[Row]]("pending").toSeq.sortBy(_.getInt(0))
+        .map(r => PartMetrics(r.getInt(0), r.getLong(1), r.getLong(2)))
+    if (processed.nonEmpty) {
+      // Bloom health: load n / capacity and the standard false-positive
+      // estimate (1 - e^(-k n / m))^k, n the part's estimated convs
+      val geometry = BloomSketch(c.bloomPerPartCapacity, c.bloomBpi)
+      val bits = geometry.bitSetLength.toDouble * BloomSketch.NumBitSets
+      val entry = Json.createObjectNode().put("n_parts", nParts)
+        .put("schema_version", PartSchemaVersion).put("input", c.input)
+      val parts = entry.putArray("parts")
+      processed.foreach { m =>
+        parts.addObject().put("part_id", m.partId).put("dir", runDir)
+          .put("rows", m.rows).put("est_convs", m.estConvs)
+          .put("bloom_capacity", c.bloomPerPartCapacity).put("bloom_bpi", c.bloomBpi)
+          .put("bloom_load", m.estConvs.toDouble / c.bloomPerPartCapacity)
+          .put("bloom_est_fpr",
+            math.pow(1 - math.exp(-geometry.k * m.estConvs / bits), geometry.k))
       }
+      commit(c.out, bank.nextVersion, entry, conf)
+      val overloaded = processed.filter(_.estConvs > c.bloomPerPartCapacity).map(_.partId)
+      // scalastyle:off println
+      if (overloaded.nonEmpty) System.err.println(
+        s"WARN SketchBuildJob: the Bloom filters of parts ${overloaded.mkString(", ")} at " +
+          s"${c.out} hold more conversations than their capacity ${c.bloomPerPartCapacity} " +
+          "(bloom_load above 1 in the log): their probes pass more non-members than designed")
+      // scalastyle:on println
+    }
     val staleParts = finalRow.getAs[collection.Seq[Int]]("stale").sorted
     require(staleParts.isEmpty,
       s"parts ${staleParts.mkString(", ")} at ${partsDir(c.out)} have null " +
-        "sketch columns (built by an older version); delete their " +
-        "_manifest/part-*.json entries to rebuild them, or roll up with " +
-        "the old library")
+        "sketch columns (built by an older version); rebuild the bank into a " +
+        "new directory, or roll up with the old library")
     require(!finalRow.isNullAt(0), noRows)
 
     val totalRows = finalRow.getLong(0)
@@ -328,7 +345,7 @@ object SketchBuildJob {
          |"top_tools":$topToolsJson,
          |"parts_done":${done.size + processed.size},"parts_this_run":${processed.size}}"""
         .stripMargin.replace("\n", "")
-    writeUtf8(ffs, new HPath(finalDir(c.out), "summary.json"), summary)
+    dump("summary.json", summary.getBytes("UTF-8"))
     result
   }
 

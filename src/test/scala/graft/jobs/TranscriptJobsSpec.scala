@@ -2,6 +2,8 @@ package graft.jobs
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{functions => F}
 
 import graft.data.{TranscriptGen, TranscriptTable}
@@ -230,6 +232,22 @@ class TranscriptJobsSpec extends SparkTestBase {
     assert(joined.count() === df.count())
   }
 
+  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The log entries of the bank at `out`, in version order. */
+  private def logEntries(out: String): Seq[com.fasterxml.jackson.databind.JsonNode] =
+    new java.io.File(s"$out/_log").listFiles().filter(_.getName.matches("\\d{10}\\.json"))
+      .sortBy(_.getName).map(mapper.readTree).toSeq
+
+  /** What `body` prints on `System.err`. */
+  private def stderrOf(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try body finally System.setErr(saved)
+    buf.toString("UTF-8")
+  }
+
   // Spark globs input paths and `\` is the glob escape, so the table
   // directory in"q\b is handed over as in"q\\b, which matches it
   private lazy val escapedInput: String = {
@@ -238,26 +256,22 @@ class TranscriptJobsSpec extends SparkTestBase {
     workDir + "/in\"q\\\\b"
   }
 
-  test("part manifests stay valid JSON when paths contain a quote and a backslash") {
-    // manifest fields are user paths: a raw interpolation of `"` or `\`
+  test("the log entry stays valid JSON when paths contain a quote and a backslash") {
+    // entry fields are user paths: a raw interpolation of `"` or `\`
     // would end the string early or start an escape. The output path
     // keeps to a quote because the job reads its own parts back through
     // Spark.
     val odd = escapedInput
     val out = workDir + "/out\"q"
     SketchBuildJob.run(spark, SketchBuildJob.Config(odd, out))
-    val manifests = new java.io.File(s"$out/_manifest").listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".json"))
-    assert(manifests.length === SketchBuildJob.completedParts(out).size)
-    assert(manifests.nonEmpty)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    manifests.foreach { f =>
-      val m = mapper.readTree(f)
-      val pid = m.get("part_id").asInt()
-      assert(m.get("input").asText() === odd)
-      assert(m.get("predicate").asText() === s"${TranscriptTable.PartCol}=$pid")
-      assert(m.get("output").asText() === s"$out/parts/${TranscriptTable.PartCol}=$pid")
-    }
+    val Seq(entry) = logEntries(out)
+    assert(entry.get("input").asText() === odd)
+    val parts = entry.get("parts").elements().asScala.toSeq
+    assert(parts.nonEmpty)
+    assert(parts.map(_.get("part_id").asInt()).toSet === SketchBuildJob.completedParts(out))
+    val written = new java.io.File(s"$out/parts").listFiles().filter(_.isDirectory)
+      .map(_.getPath).toSet
+    assert(parts.map(_.get("dir").asText()).toSet === written)
   }
 
   test("a glob-escaped input path finds its table's recorded modulus") {
@@ -340,19 +354,25 @@ class TranscriptJobsSpec extends SparkTestBase {
   test("the part schema is the one Spark infers from freshly written parts") {
     val out = s"$workDir/build_schema"
     SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
-    assert(spark.read.parquet(s"$out/parts").schema === SketchBuildJob.PartSchema)
+    assert(spark.read.parquet(SketchBuildJob.replay(out).runDirs: _*).schema ===
+      SketchBuildJob.PartSchema)
   }
 
   /** Rewrites part `part` of the bank at `out` without `column`, the way
-    * an older library version would have written it. */
+    * an older library version would have written it: the part's row
+    * moves to a file of its own that lacks the column, and the other
+    * parts of its run directory keep theirs. */
   private def rewritePartWithout(out: String, part: Int, column: String): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
-    val pdir = s"$out/parts/part_id=$part"
+    val dir = SketchBuildJob.replay(out).partDirs(part)
     val tmp = s"$out-rewrite"
-    spark.read.parquet(pdir).drop(column).write.mode("overwrite").parquet(tmp)
-    val hfs = new HPath(pdir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(hfs.delete(new HPath(pdir), true))
-    assert(hfs.rename(new HPath(tmp), new HPath(pdir)))
+    val rows = spark.read.schema(SketchBuildJob.PartSchema).parquet(dir)
+    val victim = F.col(TranscriptTable.PartCol) === part
+    rows.filter(!victim).write.mode("overwrite").parquet(tmp)
+    rows.filter(victim).drop(column).write.mode("append").parquet(tmp)
+    val hfs = new HPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(hfs.delete(new HPath(dir), true))
+    assert(hfs.rename(new HPath(tmp), new HPath(dir)))
   }
 
   test("a bank part rewritten without its Bloom filter fails the probe loudly") {
@@ -425,5 +445,113 @@ class TranscriptJobsSpec extends SparkTestBase {
       SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
     }
     assert(ex.getMessage.contains("older version"), ex.getMessage)
+  }
+
+  test("a run stopped between its part write and its commit is recomputed, never read") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val outFull = s"$workDir/build_crash_ref"
+    val out = s"$workDir/build_crash"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, outFull))
+    val r1 = SketchBuildJob.run(spark,
+      SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(3)))
+    val crashed = SketchBuildJob.run(spark,
+      SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(3)))
+    // the stop: the second run's entry never reached the log, while its
+    // run directory stays behind
+    val entry1 = new HPath(s"$out/_log/0000000001.json")
+    assert(entry1.getFileSystem(conf).delete(entry1, false))
+    assert(SketchBuildJob.completedParts(out) === r1.processedParts.map(_.partId).toSet)
+    val r3 = SketchBuildJob.run(spark,
+      SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(3)))
+    assert(r3.processedParts.map(_.partId) === crashed.processedParts.map(_.partId))
+    assert(r3.skippedParts.toSet === r1.processedParts.map(_.partId).toSet)
+    val r4 = SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
+    assert(r4.processedParts.size === nParts - 6)
+    // four run directories, the orphan among them; three of them committed
+    assert(new java.io.File(s"$out/parts").listFiles().count(_.isDirectory) === 4)
+    assert(SketchBuildJob.replay(out).runDirs.size === 3)
+    for (f <- Seq("hll_conv.bin", "hll_tool.bin", "cms_roletool.bin",
+        "kll_textlen.bin", "hh_tool.bin")) {
+      val a = Files.readAllBytes(java.nio.file.Paths.get(outFull, "final", f))
+      val b = Files.readAllBytes(java.nio.file.Paths.get(out, "final", f))
+      assert(java.util.Arrays.equals(a, b), s"final $f differs after the stopped run")
+    }
+    // a row read from the orphan would duplicate its part's probe rows
+    val df = TranscriptTable.read(spark, tablePath)
+    assert(ProbeJob.probeBank(spark, df.select("conv_id").distinct(), out, "conv_id")
+      .count() === nConvs)
+    // a second commit of an existing version fails and leaves it as it was
+    val entry0 = java.nio.file.Paths.get(out, "_log", "0000000000.json")
+    val first = Files.readAllBytes(entry0)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      SketchBuildJob.commit(out, 0L, mapper.createObjectNode(), conf)
+    }
+    assert(java.util.Arrays.equals(first, Files.readAllBytes(entry0)))
+  }
+
+  /** A bank directory as older versions left it: `_manifest/` holding
+    * `config.json` and one part manifest, and no `_log/`. */
+  private def oldLayoutBank(name: String): String = {
+    val manifest = java.nio.file.Paths.get(workDir, name, "_manifest")
+    Files.createDirectories(manifest)
+    Files.write(manifest.resolve("config.json"),
+      s"""{"n_parts":$nParts,"schema_version":2,"input":"t"}""".getBytes("UTF-8"))
+    Files.write(manifest.resolve("part-0.json"),
+      """{"part_id":0,"rows":1,"est_convs":1,"wall_ms":1}""".getBytes("UTF-8"))
+    s"$workDir/$name"
+  }
+
+  test("a resume into a bank in the older _manifest/ layout fails loudly, naming it") {
+    val out = oldLayoutBank("old_layout_build")
+    val ex = intercept[IllegalStateException] {
+      SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
+    }
+    assert(ex.getMessage.contains(out) && ex.getMessage.contains("rebuild"), ex.getMessage)
+    assert(!new java.io.File(s"$out/_log").exists() && !new java.io.File(s"$out/parts").exists())
+  }
+
+  test("a probe of a bank in the older _manifest/ layout fails loudly, naming it") {
+    val out = oldLayoutBank("old_layout_probe")
+    val ex = intercept[IllegalStateException] {
+      ProbeJob.probeBank(spark, probeKeys, out, "conv_id").count()
+    }
+    assert(ex.getMessage.contains(out) && ex.getMessage.contains("rebuild"), ex.getMessage)
+  }
+
+  test("the log records each part's Bloom health and warns on overloaded parts") {
+    def health(out: String) =
+      logEntries(out).flatMap(_.get("parts").elements().asScala).map { p =>
+        (p.get("part_id").asInt(), p.get("est_convs").asLong(), p.get("bloom_capacity").asLong(),
+          p.get("bloom_bpi").asInt(), p.get("bloom_load").asDouble(),
+          p.get("bloom_est_fpr").asDouble())
+      }
+    def checkModel(rows: Seq[(Int, Long, Long, Int, Double, Double)]): Unit =
+      rows.foreach { case (id, n, cap, bpi, load, fpr) =>
+        val geometry = graft.sketch.BloomSketch(cap, bpi)
+        val m = geometry.bitSetLength.toDouble * graft.sketch.BloomSketch.NumBitSets
+        assert(load === n.toDouble / cap, s"part $id")
+        assert(math.abs(fpr - math.pow(1 - math.exp(-geometry.k * n / m), geometry.k))
+          <= 1e-12, s"part $id")
+      }
+    // the default capacity, 65,536 per part, holds the fixture's ~25
+    val roomy = s"$workDir/build_health_roomy"
+    val quiet = stderrOf(SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, roomy)))
+    val ok = health(roomy)
+    assert(ok.size === nParts)
+    assert(ok.forall { case (_, _, cap, bpi, load, _) =>
+      cap == (1 << 16) && bpi == 16 && load <= 1 })
+    checkModel(ok)
+    assert(!quiet.contains("Bloom filters of parts"), quiet)
+    // 8 per part: every part holds more conversations than its filter
+    val tight = s"$workDir/build_health_tight"
+    val warned = stderrOf(SketchBuildJob.run(spark,
+      SketchBuildJob.Config(tablePath, tight, bloomPerPartCapacity = 8)))
+    val over = health(tight)
+    checkModel(over)
+    val overloaded = over.collect { case (id, _, _, _, load, _) if load > 1 => id }.sorted
+    assert(overloaded.nonEmpty)
+    assert(warned.contains(s"Bloom filters of parts ${overloaded.mkString(", ")} at $tight"),
+      warned)
   }
 }
