@@ -50,6 +50,8 @@ object ProbeJob {
     * written without `bloom_conv` (an older library) and fails the probe:
     * read as "might contain", it would silently shrink a reverse probe.
     * So does a bank with no committed run, or in the older layout.
+    * Parts whose filter the log records past its design load
+    * (`bloom_load` above 1) are named in one warning on stderr.
     *
     * The bank is read with [[SketchBuildJob.PartSchema]], so no Spark job
     * reads a footer to infer its schema. */
@@ -61,6 +63,7 @@ object ProbeJob {
     // bank must not change routing
     val nParts = log.nParts.getOrElse(throw new IllegalStateException(
       s"$buildOut/_log holds no committed build; cannot derive bank routing"))
+    SketchBuildJob.warnOverloaded("ProbeJob", buildOut, log.bloomLoads)
     val bloom = F.col("bloom_conv")
     val bank = spark.read.schema(SketchBuildJob.PartSchema).parquet(log.runDirs: _*)
       .select(F.col(PartCol).as("__bank_part"),

@@ -26,7 +26,8 @@ import graft.spark.functions._
   *    correctness);
   *  - each run writes its pending parts' sketch rows (the input scan
   *    pruned to those parts) into a fresh `parts/<version>-<uuid>/` with a
-  *    plain write, then commits them as ONE log entry `_log/<version>.json`,
+  *    plain write (one file per write task, holding all of its parts),
+  *    then commits them as ONE log entry `_log/<version>.json`,
   *    created only if absent: the routing modulus, and per part its run
   *    directory, counts and Bloom health. Resume, rollup and
   *    `ProbeJob.probeBank` replay the log and scan only the directories it
@@ -36,15 +37,21 @@ import graft.spark.functions._
   *    to one sketch buffer before the shuffle, so the exchange moves
   *    O(parts * sketchBytes), independent of row count;
   *  - the final global merge reads only the per-part sketch rows (tiny)
-  *    and unions them with the `*_merge` aggregates — associativity makes
-  *    the result identical to a single-pass aggregation.
+  *    and unions HLL, CMS and heavy hitters with the `*_merge` aggregates,
+  *    whose merges are order-independent. KLL's merge is not (its
+  *    compactions and level layout follow the merge order), so the rollup
+  *    collects the per-part KLL buffers and the driver folds them in
+  *    ascending `part_id`: nParts buffers on the driver (about 3 KB each
+  *    at k=200, 20 MB at 4,096 parts), independent of row count, and the
+  *    same bytes whichever run or file a part was written in.
   *
   * Job shape: every Spark action costs driver time (planning, adaptive
   * re-planning, schema merges) whatever its size, so the build asks Spark
   * only for what the driver cannot already see. Part ids come from the
   * input's file index, listed once on the driver. The rollup is ONE
-  * query: its aggregate returns the merged sketches, the log facts
-  * of this run's parts and the ids of stale parts together. Both tables
+  * query: its aggregate returns the merged sketches, the per-part KLL
+  * buffers, the log facts of this run's parts and the ids of stale parts
+  * together. Both tables
   * it reads were written by this library, so their schemas are known
   * (`TranscriptTable.read`, [[PartSchema]]) and no job infers one. A
   * fresh build of a table `TranscriptTable.write` produced therefore
@@ -70,7 +77,10 @@ object SketchBuildJob {
       hhCapacity: Int = 64,
       /** cap on parts processed in one run (incremental operation /
         * kill-resume testing); None = all pending */
-      maxPartsPerRun: Option[Int] = None)
+      maxPartsPerRun: Option[Int] = None) {
+    require(maxPartsPerRun.forall(_ >= 1),
+      s"maxPartsPerRun must be at least 1, got ${maxPartsPerRun.get}")
+  }
 
   case class PartMetrics(partId: Int, rows: Long, estConvs: Long)
 
@@ -106,10 +116,25 @@ object SketchBuildJob {
   private def finalDir(out: String): HPath = new HPath(out, "final")
 
   /** A bank's `_log/` replayed: the routing modulus (None until a run commits),
-    * each committed part's run directory, and the next commit's version.
-    * Readers scan exactly [[runDirs]], the committed runs' directories. */
-  case class BankLog(nParts: Option[Int], partDirs: Map[Int, String], nextVersion: Long) {
+    * each committed part's run directory and logged `bloom_load`, and the
+    * next commit's version. Readers scan exactly [[runDirs]], the committed
+    * runs' directories. */
+  case class BankLog(nParts: Option[Int], partDirs: Map[Int, String],
+      bloomLoads: Map[Int, Double], nextVersion: Long) {
     def runDirs: Seq[String] = partDirs.values.toSeq.distinct.sorted
+  }
+
+  /** The one stderr warning, for the build and `ProbeJob.probeBank` alike,
+    * naming the parts whose Bloom filter holds more conversations than its
+    * capacity (`bloom_load` above 1). */
+  private[jobs] def warnOverloaded(who: String, out: String, bloomLoads: Map[Int, Double]): Unit = {
+    val overloaded = bloomLoads.collect { case (id, load) if load > 1 => id }.toSeq.sorted
+    // scalastyle:off println
+    if (overloaded.nonEmpty) System.err.println(
+      s"WARN $who: the Bloom filters of parts ${overloaded.mkString(", ")} at $out hold " +
+        "more conversations than their capacity (bloom_load above 1 in the log): their " +
+        "probes pass more non-members than designed")
+    // scalastyle:on println
   }
 
   private val Json = new ObjectMapper()
@@ -130,17 +155,18 @@ object SketchBuildJob {
           "_manifest/ layout, which this version does not read; delete it and rebuild the bank")
       else Nil
     names.collect { case EntryName(v) => v.toLong }.sorted
-      .foldLeft(BankLog(None, Map.empty, 0L)) { (log, v) =>
+      .foldLeft(BankLog(None, Map.empty, Map.empty, 0L)) { (log, v) =>
         val in = fs.open(entryPath(out, v))
         val entry = try Json.readTree(in) finally in.close()
-        val partDirs = entry.required("parts").elements().asScala.foldLeft(log.partDirs) {
-          (m, p) =>
+        val (partDirs, bloomLoads) = entry.required("parts").elements().asScala
+          .foldLeft((log.partDirs, log.bloomLoads)) { case ((dirs, loads), p) =>
             val id = p.required("part_id").asInt()
-            if (m.contains(id)) throw new IllegalStateException(
+            if (dirs.contains(id)) throw new IllegalStateException(
               s"part $id is committed twice at $dir (again in entry $v)")
-            m.updated(id, p.required("dir").asText())
-        }
-        BankLog(Some(entry.required("n_parts").asInt()), partDirs, v + 1)
+            (dirs.updated(id, p.required("dir").asText()),
+              loads.updated(id, p.required("bloom_load").asDouble()))
+          }
+        BankLog(Some(entry.required("n_parts").asInt()), partDirs, bloomLoads, v + 1)
       }
   }
 
@@ -232,18 +258,17 @@ object SketchBuildJob {
     val pendingAll = allParts.filterNot(done)
     val pending = c.maxPartsPerRun.fold(pendingAll)(pendingAll.take)
 
-    // one file per part: a scan orders files by size, so the rollup
-    // merges parts in one order however runs split them (KLL's merge is
-    // order-sensitive; a resumed build must give a fresh build's bytes)
+    // one file per write task, however many parts it holds: the rollup
+    // does not depend on which file a part landed in
     val runDir = f"${partsDir(c.out)}/${bank.nextVersion}%010d-${java.util.UUID.randomUUID()}"
     if (pending.nonEmpty)
       partAggregates(df.filter(F.col(TranscriptTable.PartCol).isin(pending: _*)), c)
-        .write.option("maxRecordsPerFile", 1L).parquet(runDir)
+        .write.parquet(runDir)
 
     // ONE rollup query over the committed runs plus this one: reads only
     // the per-part sketch rows — O(parts), not O(rows) — and returns the
-    // merged sketches, the pending parts' log facts and the ids of stale
-    // parts together.
+    // merged sketches, the per-part KLL buffers, the pending parts' log
+    // facts and the ids of stale parts together.
     val partsAll = spark.read.schema(PartSchema)
       .parquet((if (pending.isEmpty) bank.runDirs else bank.runDirs :+ runDir): _*)
     // fail loudly on parts from an older schema rather than silently
@@ -258,7 +283,9 @@ object SketchBuildJob {
         hll_merge(F.col("hll_conv")).as("hll_conv"),
         hll_merge(F.col("hll_tool")).as("hll_tool"),
         cms_merge(F.col("cms_roletool")).as("cms_roletool"),
-        kll_merge(F.col("kll_textlen")).as("kll_textlen"),
+        // KLL's merge is order-sensitive, so the driver folds the parts'
+        // buffers in part_id order below
+        F.collect_list(F.struct(part, F.col("kll_textlen"))).as("kll_parts"),
         hh_merge(F.col("hh_tool")).as("hh_tool"),
         // collect_list skips the nulls an unmatched `when` yields
         F.collect_list(F.when(part.isin(pending: _*),
@@ -279,23 +306,18 @@ object SketchBuildJob {
       val bits = geometry.bitSetLength.toDouble * BloomSketch.NumBitSets
       val entry = Json.createObjectNode().put("n_parts", nParts)
         .put("schema_version", PartSchemaVersion).put("input", c.input)
+      val loads = processed.map(m => m.partId -> m.estConvs.toDouble / c.bloomPerPartCapacity).toMap
       val parts = entry.putArray("parts")
       processed.foreach { m =>
         parts.addObject().put("part_id", m.partId).put("dir", runDir)
           .put("rows", m.rows).put("est_convs", m.estConvs)
           .put("bloom_capacity", c.bloomPerPartCapacity).put("bloom_bpi", c.bloomBpi)
-          .put("bloom_load", m.estConvs.toDouble / c.bloomPerPartCapacity)
+          .put("bloom_load", loads(m.partId))
           .put("bloom_est_fpr",
             math.pow(1 - math.exp(-geometry.k * m.estConvs / bits), geometry.k))
       }
       commit(c.out, bank.nextVersion, entry, conf)
-      val overloaded = processed.filter(_.estConvs > c.bloomPerPartCapacity).map(_.partId)
-      // scalastyle:off println
-      if (overloaded.nonEmpty) System.err.println(
-        s"WARN SketchBuildJob: the Bloom filters of parts ${overloaded.mkString(", ")} at " +
-          s"${c.out} hold more conversations than their capacity ${c.bloomPerPartCapacity} " +
-          "(bloom_load above 1 in the log): their probes pass more non-members than designed")
-      // scalastyle:on println
+      warnOverloaded("SketchBuildJob", c.out, loads)
     }
     val staleParts = finalRow.getAs[collection.Seq[Int]]("stale").sorted
     require(staleParts.isEmpty,
@@ -304,10 +326,14 @@ object SketchBuildJob {
         "new directory, or roll up with the old library")
     require(!finalRow.isNullAt(0), noRows)
 
+    // kll_merge's fold (adopt the first buffer, merge the rest) in
+    // ascending part_id: fresh, resumed and crash-recovered builds give
+    // the same bytes whatever files their parts sit in
+    val kll = finalRow.getAs[collection.Seq[Row]]("kll_parts").sortBy(_.getInt(0))
+      .map(r => KllSketch.deserialize(r.getAs[Array[Byte]](1))).reduceLeft(_.merge(_))
     val totalRows = finalRow.getLong(0)
     val hllConv = HllSketch.deserialize(finalRow.getAs[Array[Byte]]("hll_conv"))
     val hllTool = HllSketch.deserialize(finalRow.getAs[Array[Byte]]("hll_tool"))
-    val kll = KllSketch.deserialize(finalRow.getAs[Array[Byte]]("kll_textlen"))
     val hhTool = graft.sketch.HeavyHittersSketch.deserialize(
       finalRow.getAs[Array[Byte]]("hh_tool"))
 
@@ -320,7 +346,7 @@ object SketchBuildJob {
     dump("hll_conv.bin", finalRow.getAs[Array[Byte]]("hll_conv"))
     dump("hll_tool.bin", finalRow.getAs[Array[Byte]]("hll_tool"))
     dump("cms_roletool.bin", finalRow.getAs[Array[Byte]]("cms_roletool"))
-    dump("kll_textlen.bin", finalRow.getAs[Array[Byte]]("kll_textlen"))
+    dump("kll_textlen.bin", kll.serialize())
     dump("hh_tool.bin", finalRow.getAs[Array[Byte]]("hh_tool"))
     // the Bloom bank stays in parts/ (one filter per part, routed probes
     // via ProbeJob.probeBank) — deliberately NOT OR-merged

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{functions => F}
 
 import graft.data.{TranscriptGen, TranscriptTable}
@@ -283,29 +284,58 @@ class TranscriptJobsSpec extends SparkTestBase {
     assert(SketchBuildJob.recordedNParts(out) === Some(4))
   }
 
-  /** Spark jobs started by `body` on this thread. The listener bus
-    * delivers events in order, so once a marker job's start has arrived,
-    * every job `body` started has been counted. */
-  private def sparkJobs(body: => Unit): Int = {
+  private def jobGroup(e: SparkListenerJobStart): String =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+
+  /** Runs `body` in a fresh job group with `listener` registered, and
+    * returns the group once `listener` has seen every event `body`
+    * caused: the listener bus delivers events in order, so once a marker
+    * job's start has arrived, so has everything before it. */
+  private def observed(listener: SparkListener)(body: => Unit): String = {
     val sc = spark.sparkContext
     val group = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val marker = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (jobGroup(e) == group + "-marker") drained.countDown()
     }
     sc.addSparkListener(listener)
+    sc.addSparkListener(marker)
     try {
-      sc.setJobGroup(group, "counted")
+      sc.setJobGroup(group, "observed")
       try body finally sc.clearJobGroup()
       sc.setJobGroup(group + "-marker", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(group + "-marker"), "listener bus did not drain")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+      group
+    } finally {
+      sc.removeSparkListener(marker)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Spark jobs started by `body` on this thread. */
+  private def sparkJobs(body: => Unit): Int = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val group = observed(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(jobGroup(e))
+    })(body)
+    seen.toArray.count(_ == group)
+  }
+
+  /** Tasks of the stages in which `body` wrote output records: the write
+    * stages of its file writes. */
+  private def writeTasks(body: => Unit): Int = {
+    val tasksOf = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val writing = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    observed(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        tasksOf.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (Option(e.taskMetrics).exists(_.outputMetrics.recordsWritten > 0)) writing.add(e.stageId)
+    })(body)
+    writing.asScala.toSeq.map(tasksOf.get).sum
   }
 
   test("a fresh build runs at most 4 Spark jobs, a resume with nothing pending at most 2") {
@@ -363,16 +393,70 @@ class TranscriptJobsSpec extends SparkTestBase {
     * moves to a file of its own that lacks the column, and the other
     * parts of its run directory keep theirs. */
   private def rewritePartWithout(out: String, part: Int, column: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val dir = SketchBuildJob.replay(out).partDirs(part)
     val tmp = s"$out-rewrite"
     val rows = spark.read.schema(SketchBuildJob.PartSchema).parquet(dir)
     val victim = F.col(TranscriptTable.PartCol) === part
     rows.filter(!victim).write.mode("overwrite").parquet(tmp)
     rows.filter(victim).drop(column).write.mode("append").parquet(tmp)
+    replaceDir(dir, tmp)
+  }
+
+  /** Moves directory `from` into the place of directory `dir`. */
+  private def replaceDir(dir: String, from: String): Unit = {
+    import org.apache.hadoop.fs.{Path => HPath}
     val hfs = new HPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(hfs.delete(new HPath(dir), true))
-    assert(hfs.rename(new HPath(tmp), new HPath(dir)))
+    assert(hfs.rename(new HPath(from), new HPath(dir)))
+  }
+
+  /** The parquet files in directory `dir`. */
+  private def parquetFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+
+  test("a fresh build writes one file per write task, not one per part") {
+    val out = s"$workDir/build_files"
+    val table = tablePath // written outside the observed run
+    val tasks = writeTasks(SketchBuildJob.run(spark, SketchBuildJob.Config(table, out)))
+    val Seq(runDir) = SketchBuildJob.replay(out).runDirs
+    val files = parquetFiles(runDir).size
+    assert(files >= 1 && files < nParts, s"$files part files for $nParts parts")
+    assert(files <= tasks, s"$files part files from $tasks write tasks")
+    info(s"$files part files, $tasks write tasks, $nParts parts")
+  }
+
+  test("the rollup gives the same bytes whichever files the parts sit in") {
+    val outA = s"$workDir/build_layout_a"
+    val outB = s"$workDir/build_layout_b"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, outA))
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, outB))
+    // B's run directory rewritten with each part in a file of its own
+    val Seq(runDir) = SketchBuildJob.replay(outB).runDirs
+    val tmp = s"$outB-rewrite"
+    spark.read.schema(SketchBuildJob.PartSchema).parquet(runDir)
+      .write.option("maxRecordsPerFile", 1L).parquet(tmp)
+    replaceDir(runDir, tmp)
+    assert(parquetFiles(runDir).size === nParts)
+    // nothing pending: this run is the rollup alone, over the new layout
+    val again = SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, outB))
+    assert(again.processedParts.isEmpty)
+    for (f <- Seq("hll_conv.bin", "hll_tool.bin", "cms_roletool.bin",
+        "kll_textlen.bin", "hh_tool.bin")) {
+      val a = Files.readAllBytes(java.nio.file.Paths.get(outA, "final", f))
+      val b = Files.readAllBytes(java.nio.file.Paths.get(outB, "final", f))
+      assert(java.util.Arrays.equals(a, b), s"final $f differs with one file per part")
+    }
+  }
+
+  test("maxPartsPerRun below 1 fails loudly, naming the value") {
+    for (bad <- Seq(0, -1)) {
+      val out = s"$workDir/build_max_parts_$bad"
+      val ex = intercept[IllegalArgumentException] {
+        SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(bad)))
+      }
+      assert(ex.getMessage.contains(s"maxPartsPerRun must be at least 1, got $bad"), ex.getMessage)
+      assert(!new java.io.File(out).exists())
+    }
   }
 
   test("a bank part rewritten without its Bloom filter fails the probe loudly") {
@@ -553,5 +637,27 @@ class TranscriptJobsSpec extends SparkTestBase {
     assert(overloaded.nonEmpty)
     assert(warned.contains(s"Bloom filters of parts ${overloaded.mkString(", ")} at $tight"),
       warned)
+  }
+
+  test("a probe warns on the parts whose Bloom filters are past their design load") {
+    def probeWarning(out: String): String =
+      stderrOf(ProbeJob.probeBank(spark, probeKeys, out, "conv_id"))
+        .linesIterator.filter(_.startsWith("WARN ProbeJob:")).mkString("\n")
+    val roomy = s"$workDir/probe_health_roomy"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, roomy))
+    assert(probeWarning(roomy) === "")
+    // at capacity 8 the log's bloom_load is above 1 wherever a part holds
+    // more than 8 conversations
+    val tight = s"$workDir/probe_health_tight"
+    stderrOf(SketchBuildJob.run(spark,
+      SketchBuildJob.Config(tablePath, tight, bloomPerPartCapacity = 8)))
+    val overloaded = logEntries(tight).flatMap(_.get("parts").elements().asScala)
+      .filter(_.get("bloom_load").asDouble() > 1).map(_.get("part_id").asInt()).sorted
+    assert(overloaded.nonEmpty)
+    val warning = probeWarning(tight)
+    val named = """Bloom filters of parts ([0-9, ]+) at""".r.findFirstMatchIn(warning)
+      .map(_.group(1).split(", ").map(_.toInt).toSeq)
+    assert(named === Some(overloaded), warning)
+    assert(warning.contains(s" at $tight hold more conversations than their capacity"), warning)
   }
 }
