@@ -312,7 +312,7 @@ object Dedup {
     // the same grid, unchanged output)
     val candidateIds = SkewJoin.selfPairsWithinGroups(
         banded.select(F.col("__band"), F.col("__bucket"), F.col(idCol)),
-        Seq("__band", "__bucket"), forceGrid = probeAll)
+        Seq("__band", "__bucket"))
       .select(F.col(s"__l.$idCol").as("id_a"), F.col(s"__r.$idCol").as("id_b"))
       .filter(F.col("id_a") < F.col("id_b"))
       .dropDuplicates("id_a", "id_b")
@@ -679,7 +679,7 @@ object Dedup {
             .as(Seq("__band", "__bucket")))
     SkewJoin.selfPairsWithinGroups(
         banded.select(F.col("__band"), F.col("__bucket"), F.col(idCol), F.col("__sim")),
-        Seq("__band", "__bucket"), forceGrid = probeAll)
+        Seq("__band", "__bucket"))
       .select(F.col(s"__l.$idCol").as("id_a"), F.col("__l.__sim").as("sim_a"),
         F.col(s"__r.$idCol").as("id_b"), F.col("__r.__sim").as("sim_b"))
       .filter(F.col("id_a") < F.col("id_b"))

@@ -52,9 +52,7 @@ object SkewJoin {
     * WITHOUT a special path: the grid's bucket columns are computed from
     * the row (pmod of a hash), so even a constant-key group presents
     * real, non-foldable equi-join keys and Catalyst cannot collapse the
-    * join into the cartesian the plan audit bans. `forceGrid` is
-    * therefore obsolete — kept for source compatibility, ignored (every
-    * group already goes through the grid).
+    * join into the cartesian the plan audit bans.
     *
     * `broadcastCensus` (default true) hints the hot-group census into a
     * broadcast join for the tag-attach. The census is keys + an int per
@@ -66,15 +64,12 @@ object SkewJoin {
     * partitioning churn (canChangeCachedPlanOutputPartitioning=true —
     * measured 61 s cold / 67 s warm). A corpus whose census itself
     * approaches the 8 GB broadcast wall (~10^8+ hot groups) should pass
-    * false and take the shuffled tag-attach join instead. (This also
-    * closes the r5 advice note: the census is now ALWAYS hot-only —
-    * the old forceGrid path broadcast every distinct key.) */
+    * false and take the shuffled tag-attach join instead. */
   def selfPairsWithinGroups(
       df: DataFrame,
       keyCols: Seq[String],
       hotThreshold: Int = 256,
       maxBuckets: Int = 64,
-      forceGrid: Boolean = false,
       broadcastCensus: Boolean = true): DataFrame = {
     require(keyCols.nonEmpty, "at least one group key column")
     require(hotThreshold > 1, "hotThreshold must be > 1")

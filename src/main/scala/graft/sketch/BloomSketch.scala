@@ -39,7 +39,7 @@ final class BloomSketch private (
     val maxSize: Long,
     val bitsPerItem: Int,
     val longHash: Boolean,
-    private val words: Array[Long]) extends Serializable {
+    private val words: Array[Long]) extends Mergeable[BloomSketch] with Serializable {
 
   import BloomSketch._
 
@@ -168,7 +168,8 @@ final class BloomSketch private (
   def approxBitCount: Long = words.map(java.lang.Long.bitCount(_).toLong).sum
 }
 
-object BloomSketch {
+object BloomSketch extends SketchFormat[BloomSketch] {
+  val name = "bloom"
   final val NumBitSets = 128
   final val RadixMask = 0x7f000000L
   final val KFactor = 0.7

@@ -32,7 +32,7 @@ final class CmsSketch private (
     private var dense: Array[Long], // null while sparse
     private var keys: Array[Int], // sparse: cell index + 1 (0 = empty slot)
     private var vals: Array[Long], // sparse: counter value
-    private var sparseCount: Int) extends Serializable {
+    private var sparseCount: Int) extends Mergeable[CmsSketch] with Serializable {
 
   import CmsSketch._
 
@@ -51,7 +51,7 @@ final class CmsSketch private (
   @transient private lazy val scratch = new Array[Long](depth)
 
   def update(data: Array[Byte], count: Long = 1L): Unit = {
-    // cash-register model only (matches CmsWeightedAgg's contract): a
+    // cash-register model only (matches cms_sketch_weighted's contract): a
     // zero count would insert a zero-valued sparse entry that dense state
     // never records, breaking canonical equal-state-equal-bytes; negative
     // counts break the one-sided error bound
@@ -229,7 +229,8 @@ final class CmsSketch private (
   def delta: Double = math.exp(-depth.toDouble)
 }
 
-object CmsSketch {
+object CmsSketch extends SketchFormat[CmsSketch] {
+  val name = "cms"
   final val Magic = 0x434d5331 // "CMS1"
   final val Version: Byte = 2
   final val VersionDenseOnly: Byte = 1 // round-1 wire format, still readable

@@ -29,7 +29,7 @@ final class HeavyHittersSketch private (
     val capacity: Int,
     private var totalN: Long,
     private val counters: mutable.HashMap[String, HeavyHittersSketch.Counter])
-    extends Serializable {
+    extends Mergeable[HeavyHittersSketch] with Serializable {
 
   import HeavyHittersSketch._
 
@@ -159,7 +159,8 @@ final class HeavyHittersSketch private (
   }
 }
 
-object HeavyHittersSketch {
+object HeavyHittersSketch extends SketchFormat[HeavyHittersSketch] {
+  val name = "hh"
   final val Magic = 0x48483131 // "HH11"
   final val Version: Byte = 1
 

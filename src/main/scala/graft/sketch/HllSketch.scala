@@ -34,7 +34,7 @@ final class HllSketch private (
     private var dense: Array[Byte], // null while sparse
     private var keys: Array[Int], // sparse: register index + 1 (0 = empty slot)
     private var vals: Array[Byte], // sparse: rank
-    private var sparseCount: Int) extends Serializable {
+    private var sparseCount: Int) extends Mergeable[HllSketch] with Serializable {
 
   import HllSketch._
 
@@ -228,7 +228,8 @@ final class HllSketch private (
     else new HllSketch(kernel, p, null, keys.clone(), vals.clone(), sparseCount)
 }
 
-object HllSketch {
+object HllSketch extends SketchFormat[HllSketch] {
+  val name = "hll"
   final val Magic = 0x484c4c31 // "HLL1"
   final val Version: Byte = 2
   final val VersionDenseOnly: Byte = 1 // round-1 wire format, still readable

@@ -26,7 +26,7 @@ final class KllSketch private (
     val k: Int,
     private var nTotal: Long,
     private var levels: ArrayBuffer[DoubleBuf],
-    private var rngState: Long) extends Serializable {
+    private var rngState: Long) extends Mergeable[KllSketch] with Serializable {
 
   import KllSketch._
 
@@ -219,7 +219,8 @@ final class KllSketch private (
     new KllSketch(k, nTotal, levels.map(_.copy()), rngState)
 }
 
-object KllSketch {
+object KllSketch extends SketchFormat[KllSketch] {
+  val name = "kll"
   final val C = 2.0 / 3.0
   final val Magic = 0x4b4c4c31 // "KLL1"
   final val Version: Byte = 1

@@ -23,7 +23,7 @@ final class TDigestSketch private (
     private var bufMeans: DoubleBuf,
     private var bufWeights: DoubleBuf,
     private var minV: Double,
-    private var maxV: Double) extends Serializable {
+    private var maxV: Double) extends Mergeable[TDigestSketch] with Serializable {
 
   import TDigestSketch._
 
@@ -165,7 +165,8 @@ final class TDigestSketch private (
   }
 }
 
-object TDigestSketch {
+object TDigestSketch extends SketchFormat[TDigestSketch] {
+  val name = "tdigest"
   final val Magic = 0x54444731 // "TDG1"
   final val Version: Byte = 1
   final val BufferSize = 512

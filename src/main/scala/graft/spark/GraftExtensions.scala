@@ -5,7 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.spark.agg.{BloomAgg, BloomMergeAgg, CmsAgg, CmsMergeAgg, CmsWeightedAgg, HeavyHittersAgg, HeavyHittersMergeAgg, HllAgg, HllMergeAgg, KllAgg, KllMergeAgg, TDigestAgg, TDigestMergeAgg, TopKByAgg, VecMeanAgg}
+import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch, Mergeable, SketchFormat, TDigestSketch}
+import graft.spark.SketchDefaults._
+import graft.spark.agg.{BloomAgg, CmsAgg, HeavyHittersAgg, HllAgg, KllAgg, SketchMergeAgg, TDigestAgg, TopKByAgg, VecMeanAgg}
 import graft.spark.expr._
 
 /** SQL registration for the engine: `spark.sql("SELECT graft_hash64(x)...")`.
@@ -72,20 +74,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           longHash = lit(longHash).toBoolean).toAggregateExpression()
     })
     register("hh_sketch", {
-      case Seq(c) => HeavyHittersAgg(c, 256).toAggregateExpression()
+      case Seq(c) => HeavyHittersAgg(c, HhCapacity).toAggregateExpression()
       case Seq(c, cap) => HeavyHittersAgg(c, litInt(cap)).toAggregateExpression()
     })
     register("hh_sketch_weighted", {
-      case Seq(c, w) => HeavyHittersAgg(c, 256, Some(w)).toAggregateExpression()
+      case Seq(c, w) => HeavyHittersAgg(c, HhCapacity, Some(w)).toAggregateExpression()
       case Seq(c, w, cap) =>
         HeavyHittersAgg(c, litInt(cap), Some(w)).toAggregateExpression()
     })
     register("cms_sketch_weighted", {
-      case Seq(k, w) => CmsWeightedAgg(k, w, 5, 1 << 14).toAggregateExpression()
+      case Seq(k, w) => CmsAgg(k, CmsDepth, CmsWidth, weightExpr = Some(w)).toAggregateExpression()
       case Seq(k, w, d, width) =>
-        CmsWeightedAgg(k, w, litInt(d), litInt(width)).toAggregateExpression()
+        CmsAgg(k, litInt(d), litInt(width), weightExpr = Some(w)).toAggregateExpression()
     })
-    register("hh_merge", { case Seq(c) => HeavyHittersMergeAgg(c).toAggregateExpression() })
     register("hh_topk", { case Seq(s, k) => HhTopK(s, k) })
     register("hh_estimate", { case Seq(s, i) => HhEstimate(s, i) })
     // SQL-caller contract: within a task, all rows with a given part id
@@ -113,30 +114,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.ops.SrpMultiprobeExpr(v, litInt(bits), litLong(seed), litInt(nflip))
     })
     register("hll_sketch", {
-      case Seq(c) => HllAgg(c, 14).toAggregateExpression()
+      case Seq(c) => HllAgg(c, HllP).toAggregateExpression()
       case Seq(c, p) => HllAgg(c, litInt(p)).toAggregateExpression()
       case Seq(c, p, kern) => HllAgg(c, litInt(p), lit(kern)).toAggregateExpression()
     })
     register("cms_sketch", {
-      case Seq(c) => CmsAgg(c, 5, 1 << 14).toAggregateExpression()
+      case Seq(c) => CmsAgg(c, CmsDepth, CmsWidth).toAggregateExpression()
       case Seq(c, d, w) => CmsAgg(c, litInt(d), litInt(w)).toAggregateExpression()
       case Seq(c, d, w, kern) =>
         CmsAgg(c, litInt(d), litInt(w), lit(kern)).toAggregateExpression()
     })
     register("kll_sketch", {
-      case Seq(c) => KllAgg(c, 200).toAggregateExpression()
+      case Seq(c) => KllAgg(c, KllK).toAggregateExpression()
       case Seq(c, k) => KllAgg(c, litInt(k)).toAggregateExpression()
     })
     register("tdigest_sketch", {
-      case Seq(c) => TDigestAgg(c, 100.0).toAggregateExpression()
+      case Seq(c) => TDigestAgg(c, TDigestCompression).toAggregateExpression()
       case Seq(c, d) => TDigestAgg(c, lit(d).toDouble).toAggregateExpression()
     })
-    register("tdigest_merge", { case Seq(c) => TDigestMergeAgg(c).toAggregateExpression() })
     register("tdigest_quantile", { case Seq(s0, q) => TDigestQuantile(s0, q) })
-    register("bloom_merge", { case Seq(c) => BloomMergeAgg(c).toAggregateExpression() })
-    register("hll_merge", { case Seq(c) => HllMergeAgg(c).toAggregateExpression() })
-    register("cms_merge", { case Seq(c) => CmsMergeAgg(c).toAggregateExpression() })
-    register("kll_merge", { case Seq(c) => KllMergeAgg(c).toAggregateExpression() })
+    // `<name>_merge` for every sketch family, named by its format
+    def registerMerge[S <: Mergeable[S]](format: SketchFormat[S]): Unit =
+      register(s"${format.name}_merge",
+        { case Seq(c) => SketchMergeAgg(c, format).toAggregateExpression() })
+    registerMerge(BloomSketch)
+    registerMerge(HllSketch)
+    registerMerge(CmsSketch)
+    registerMerge(KllSketch)
+    registerMerge(TDigestSketch)
+    registerMerge(HeavyHittersSketch)
     register("bloom_might_contain", { case Seq(s, c) => BloomMightContain(s, c) })
     register("hll_estimate", { case Seq(s) => HllEstimate(s) })
     // "graft_" prefix: Spark 4.1 ships a BUILTIN hll_union (Datasketches

@@ -8,23 +8,29 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.hash.HashKernels
-import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch, TDigestSketch}
+import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch, Mergeable, SketchFormat, TDigestSketch}
 
-/** Sketch-building aggregate functions.
+/** Sketch-building aggregate functions, one per sketch family.
   *
-  * Each is a `TypedImperativeAggregate` whose buffer IS the sketch object;
-  * Catalyst's partial/final split calls `update` per row on the map side,
-  * `serialize`/`deserialize` across the exchange, and `merge` on the
-  * reduce side — exactly the reference's mergeable-state contract
-  * (`BloomFilter.putAll`, `BloomFilter.java:198-207`) generalized. Because
-  * every sketch's merge is associative and commutative (and idempotent
-  * for Bloom/HLL), partial aggregation is partition-order independent.
+  * Each is a [[SketchAgg]]: a `TypedImperativeAggregate` whose buffer IS
+  * the sketch. Catalyst's partial/final split calls `update` per row on
+  * the map side, `serialize`/`deserialize` across the exchange, and
+  * `merge` on the reduce side — the sketch's own [[Mergeable]] contract
+  * (the reference's `BloomFilter.putAll`, `BloomFilter.java:198-207`,
+  * generalized), so a build aggregate only says how to create its sketch
+  * and how one row updates it. Because every sketch's merge is
+  * associative and commutative (and idempotent for Bloom/HLL), partial
+  * aggregation is partition-order independent. [[SketchMergeAgg]] is the
+  * one aggregate that unions already-serialized buffers of any family.
   *
   * Output is the serialized sketch (BinaryType); pair with the scalar
   * expressions (`hll_estimate`, `bloom_might_contain`, ...) to query it.
   *
   * Value canonicalization: strings hash as UTF-8 bytes (reference String
   * overload semantics); binary as-is; integral types as 8-byte big-endian.
+  * The two weighted sketches (`cms_sketch_weighted`, `hh_sketch_weighted`)
+  * share one integral-weight rule: `ValueBytes.checkWeight` and
+  * `ValueBytes.weight`.
   */
 private[spark] object ValueBytes {
   def checkSketchable(prettyName: String, dt: DataType): TypeCheckResult = dt match {
@@ -58,6 +64,20 @@ private[spark] object ValueBytes {
     out
   }
 
+  /** Integral weights only: byte, short, int or long. */
+  def checkWeight(prettyName: String, weight: Option[Expression]): TypeCheckResult =
+    weight.map(_.dataType) match {
+      case None | Some(LongType | IntegerType | ShortType | ByteType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case Some(other) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires an integral weight, got ${other.catalogString}")
+    }
+
+  /** A row's weight; null reads as 0, so it is skipped with the
+    * non-positive ones (the cash-register model: a negative update would
+    * break the sketches' one-sided error bounds). */
+  def weight(w: Any): Long = if (w == null) 0L else w.asInstanceOf[Number].longValue()
+
   def toDouble(v: Any, dt: DataType): Double = dt match {
     case DoubleType => v.asInstanceOf[Double]
     case FloatType => v.asInstanceOf[Float].toDouble
@@ -69,6 +89,22 @@ private[spark] object ValueBytes {
   }
 }
 
+/** The members every sketch-building aggregate shares. `format` is an
+  * abstract member, not a constructor parameter: Java serialization needs
+  * a no-arg constructor on the first non-serializable superclass. */
+abstract class SketchAgg[S <: Mergeable[S]] extends TypedImperativeAggregate[S] {
+  protected def format: SketchFormat[S]
+  def child: Expression
+
+  override def children: Seq[Expression] = Seq(child)
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def merge(buffer: S, other: S): S = buffer.merge(other)
+  override def eval(buffer: S): Any = buffer.serialize()
+  override def serialize(buffer: S): Array[Byte] = buffer.serialize()
+  override def deserialize(bytes: Array[Byte]): S = format.deserialize(bytes)
+}
+
 /** `bloom_sketch(value, maxSize, bitsPerItem)` — reference-semantics Bloom. */
 case class BloomAgg(
     child: Expression,
@@ -78,13 +114,11 @@ case class BloomAgg(
     longHash: Boolean = true,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[BloomSketch] {
+    extends SketchAgg[BloomSketch] {
 
-  override def children: Seq[Expression] = Seq(child)
+  override protected def format: SketchFormat[BloomSketch] = BloomSketch
   override def checkInputDataTypes(): TypeCheckResult =
     ValueBytes.checkSketchable(prettyName, child.dataType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "bloom_sketch"
 
   override def createAggregationBuffer(): BloomSketch =
@@ -95,13 +129,6 @@ case class BloomAgg(
     if (v != null) buffer.put(ValueBytes.toBytes(v, child.dataType))
     buffer
   }
-
-  override def merge(buffer: BloomSketch, other: BloomSketch): BloomSketch =
-    buffer.merge(other)
-
-  override def eval(buffer: BloomSketch): Any = buffer.serialize()
-  override def serialize(buffer: BloomSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): BloomSketch = BloomSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(offset: Int): BloomAgg =
     copy(mutableAggBufferOffset = offset)
@@ -118,13 +145,11 @@ case class HllAgg(
     kernelName: String = "murmur2",
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllSketch] {
+    extends SketchAgg[HllSketch] {
 
-  override def children: Seq[Expression] = Seq(child)
+  override protected def format: SketchFormat[HllSketch] = HllSketch
   override def checkInputDataTypes(): TypeCheckResult =
     ValueBytes.checkSketchable(prettyName, child.dataType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "hll_sketch"
 
   override def createAggregationBuffer(): HllSketch =
@@ -136,11 +161,6 @@ case class HllAgg(
     buffer
   }
 
-  override def merge(buffer: HllSketch, other: HllSketch): HllSketch = buffer.merge(other)
-  override def eval(buffer: HllSketch): Any = buffer.serialize()
-  override def serialize(buffer: HllSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): HllSketch = HllSketch.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(offset: Int): HllAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): HllAgg =
@@ -149,104 +169,53 @@ case class HllAgg(
     copy(child = c.head)
 }
 
-/** `cms_sketch(value, depth, width)` — count-min counters. */
+/** `cms_sketch(value, depth, width)` — count-min counters. With
+  * `weightExpr` set (`cms_sketch_weighted(key, weight, depth, width)`),
+  * each row adds its integral weight instead of 1 (e.g. token counts per
+  * document), so estimates bound sum(weight) per key; non-positive and
+  * null weights are skipped (`ValueBytes.weight`). */
 case class CmsAgg(
     child: Expression,
     depth: Int,
     width: Int,
     kernelName: String = "murmur2",
+    weightExpr: Option[Expression] = None,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[CmsSketch] {
+    extends SketchAgg[CmsSketch] {
 
-  override def children: Seq[Expression] = Seq(child)
-  override def checkInputDataTypes(): TypeCheckResult =
-    ValueBytes.checkSketchable(prettyName, child.dataType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "cms_sketch"
+  override protected def format: SketchFormat[CmsSketch] = CmsSketch
+  override def children: Seq[Expression] = child +: weightExpr.toSeq
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val k = ValueBytes.checkSketchable(prettyName, child.dataType)
+    if (k.isFailure) k else ValueBytes.checkWeight(prettyName, weightExpr)
+  }
+  override def prettyName: String =
+    if (weightExpr.isDefined) "cms_sketch_weighted" else "cms_sketch"
+  // plans print the weight after the key, as `cms_sketch_weighted(k, w, ...)` reads
+  override protected def stringArgs: Iterator[Any] = children.iterator ++
+    Iterator(depth, width, kernelName, mutableAggBufferOffset, inputAggBufferOffset)
 
   override def createAggregationBuffer(): CmsSketch =
     CmsSketch(depth, width, HashKernels(kernelName))
 
   override def update(buffer: CmsSketch, input: InternalRow): CmsSketch = {
     val v = child.eval(input)
-    if (v != null) buffer.update(ValueBytes.toBytes(v, child.dataType))
+    if (v != null) weightExpr match {
+      case None => buffer.update(ValueBytes.toBytes(v, child.dataType))
+      case Some(we) =>
+        val weight = ValueBytes.weight(we.eval(input))
+        if (weight > 0) buffer.update(ValueBytes.toBytes(v, child.dataType), weight)
+    }
     buffer
   }
-
-  override def merge(buffer: CmsSketch, other: CmsSketch): CmsSketch = buffer.merge(other)
-  override def eval(buffer: CmsSketch): Any = buffer.serialize()
-  override def serialize(buffer: CmsSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): CmsSketch = CmsSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(offset: Int): CmsAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): CmsAgg =
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CmsAgg =
-    copy(child = c.head)
-}
-
-/** `cms_sketch_weighted(key, weight, depth, width)` — count-min with
-  * per-row additive weights (e.g. token counts per document): estimates
-  * bound sum(weight) per key instead of row counts. Negative or null
-  * weights are skipped (CMS requires the cash-register model — deletions
-  * would break the one-sided error guarantee). */
-case class CmsWeightedAgg(
-    keyExpr: Expression,
-    weightExpr: Expression,
-    depth: Int,
-    width: Int,
-    kernelName: String = "murmur2",
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[CmsSketch] {
-
-  override def children: Seq[Expression] = Seq(keyExpr, weightExpr)
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val k = ValueBytes.checkSketchable(prettyName, keyExpr.dataType)
-    if (k.isFailure) k
-    else weightExpr.dataType match {
-      case LongType | IntegerType | ShortType | ByteType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an integral weight, got ${other.catalogString}")
-    }
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "cms_sketch_weighted"
-
-  override def createAggregationBuffer(): CmsSketch =
-    CmsSketch(depth, width, HashKernels(kernelName))
-
-  override def update(buffer: CmsSketch, input: InternalRow): CmsSketch = {
-    val k = keyExpr.eval(input)
-    val w = weightExpr.eval(input)
-    if (k != null && w != null) {
-      val weight = w match {
-        case l: java.lang.Long => l.longValue()
-        case i: java.lang.Integer => i.longValue()
-        case s: java.lang.Short => s.longValue()
-        case b: java.lang.Byte => b.longValue()
-        case other => throw new IllegalStateException(s"unsupported weight $other")
-      }
-      if (weight > 0) buffer.update(ValueBytes.toBytes(k, keyExpr.dataType), weight)
-    }
-    buffer
-  }
-
-  override def merge(buffer: CmsSketch, other: CmsSketch): CmsSketch = buffer.merge(other)
-  override def eval(buffer: CmsSketch): Any = buffer.serialize()
-  override def serialize(buffer: CmsSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): CmsSketch = CmsSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): CmsWeightedAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): CmsWeightedAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CmsWeightedAgg =
-    copy(keyExpr = c(0), weightExpr = c(1))
+    copy(child = c.head, weightExpr = c.lift(1))
 }
 
 /** `kll_sketch(value, k)` — KLL quantile compactors over numeric input. */
@@ -255,13 +224,11 @@ case class KllAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KllSketch] {
+    extends SketchAgg[KllSketch] {
 
-  override def children: Seq[Expression] = Seq(child)
+  override protected def format: SketchFormat[KllSketch] = KllSketch
   override def checkInputDataTypes(): TypeCheckResult =
     ValueBytes.checkNumeric(prettyName, child.dataType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "kll_sketch"
 
   override def createAggregationBuffer(): KllSketch = KllSketch(k)
@@ -276,11 +243,6 @@ case class KllAgg(
     }
     buffer
   }
-
-  override def merge(buffer: KllSketch, other: KllSketch): KllSketch = buffer.merge(other)
-  override def eval(buffer: KllSketch): Any = buffer.serialize()
-  override def serialize(buffer: KllSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(offset: Int): KllAgg =
     copy(mutableAggBufferOffset = offset)
@@ -297,13 +259,11 @@ case class TDigestAgg(
     compression: Double,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TDigestSketch] {
+    extends SketchAgg[TDigestSketch] {
 
-  override def children: Seq[Expression] = Seq(child)
+  override protected def format: SketchFormat[TDigestSketch] = TDigestSketch
   override def checkInputDataTypes(): TypeCheckResult =
     ValueBytes.checkNumeric(prettyName, child.dataType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "tdigest_sketch"
 
   override def createAggregationBuffer(): TDigestSketch = TDigestSketch(compression)
@@ -317,12 +277,6 @@ case class TDigestAgg(
     buffer
   }
 
-  override def merge(buffer: TDigestSketch, other: TDigestSketch): TDigestSketch =
-    buffer.merge(other)
-  override def eval(buffer: TDigestSketch): Any = buffer.serialize()
-  override def serialize(buffer: TDigestSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): TDigestSketch = TDigestSketch.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(offset: Int): TDigestAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): TDigestAgg =
@@ -334,28 +288,22 @@ case class TDigestAgg(
 /** `hh_sketch(value, capacity)` — SpaceSaving heavy hitters over strings.
   * With `weightExpr` set (hh_sketch_weighted), each row adds its integral
   * weight instead of 1 — e.g. heavy hitters by TOKEN volume, not document
-  * count; non-positive and null weights are skipped. */
+  * count; non-positive and null weights are skipped (`ValueBytes.weight`). */
 case class HeavyHittersAgg(
     child: Expression,
     capacity: Int,
     weightExpr: Option[Expression] = None,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HeavyHittersSketch] {
+    extends SketchAgg[HeavyHittersSketch] {
 
+  override protected def format: SketchFormat[HeavyHittersSketch] = HeavyHittersSketch
   override def children: Seq[Expression] = child +: weightExpr.toSeq
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => weightExpr.map(_.dataType) match {
-      case None | Some(LongType) | Some(IntegerType) | Some(ShortType) | Some(ByteType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case Some(other) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an integral weight, got ${other.catalogString}")
-    }
+    case StringType => ValueBytes.checkWeight(prettyName, weightExpr)
     case other => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires string input, got ${other.catalogString}")
   }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String =
     if (weightExpr.isDefined) "hh_sketch_weighted" else "hh_sketch"
 
@@ -367,30 +315,16 @@ case class HeavyHittersAgg(
     if (v != null) weightExpr match {
       case None => buffer.update(v.asInstanceOf[UTF8String].toString)
       case Some(we) =>
-        val w = we.eval(input)
-        if (w != null) {
-          val weight = w match {
-            case l: java.lang.Long => l.longValue()
-            case n: java.lang.Number => n.longValue()
-          }
-          if (weight > 0) buffer.update(v.asInstanceOf[UTF8String].toString, weight)
-        }
+        val weight = ValueBytes.weight(we.eval(input))
+        if (weight > 0) buffer.update(v.asInstanceOf[UTF8String].toString, weight)
     }
     buffer
   }
-
-  override def merge(buffer: HeavyHittersSketch, other: HeavyHittersSketch): HeavyHittersSketch =
-    buffer.merge(other)
-  override def eval(buffer: HeavyHittersSketch): Any = buffer.serialize()
-  override def serialize(buffer: HeavyHittersSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): HeavyHittersSketch =
-    HeavyHittersSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(offset: Int): HeavyHittersAgg =
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): HeavyHittersAgg =
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HeavyHittersAgg =
-    if (c.length == 2) copy(child = c(0), weightExpr = Some(c(1)))
-    else copy(child = c(0), weightExpr = None)
+    copy(child = c.head, weightExpr = c.lift(1))
 }

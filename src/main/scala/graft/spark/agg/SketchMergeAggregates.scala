@@ -6,7 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
-/** Union aggregates over already-serialized sketch buffers — the second
+import graft.sketch.{Mergeable, SketchFormat}
+
+/** `<name>_merge(buffers)` — the union aggregate over already-serialized
+  * sketch buffers of one family, named by its `format`. It is the second
   * level of two-level (salted) aggregation: level 1 builds partial
   * sketches per (key, salt), level 2 merges the binaries per key. Because
   * every sketch merge is associative+commutative, the two-level result is
@@ -16,26 +19,25 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   *
   * The buffer starts empty (None) and adopts the config of the first
   * sketch it sees; mismatched configs fail loudly via the sketch's own
-  * compatibility check.
+  * compatibility check. Null inputs are skipped; no non-null input
+  * yields null.
   */
-private[agg] abstract class SketchMergeAgg[S <: AnyRef]
+case class SketchMergeAgg[S <: Mergeable[S]](
+    child: Expression,
+    format: SketchFormat[S],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[Option[S]] {
-  // no-arg constructor: Java serialization walks the non-serializable
-  // superclass prefix (TreeNode is not Serializable) and requires
-  // accessible no-arg constructors all the way up
 
-  def child: Expression
-  protected def sketchName: String
-
-  protected def deserializeSketch(bytes: Array[Byte]): S
-  protected def mergeSketch(a: S, b: S): S
-  protected def serializeSketch(s: S): Array[Byte]
-
+  override def prettyName: String = s"${format.name}_merge"
+  // plans print `hll_merge(p#1, 0, 0)`: the name already says the format
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, mutableAggBufferOffset, inputAggBufferOffset)
   override def children: Seq[Expression] = Seq(child)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName merges serialized $sketchName buffers (binary), got ${other.catalogString}")
+      s"$prettyName merges serialized ${format.name} buffers (binary), got ${other.catalogString}")
   }
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
@@ -45,118 +47,28 @@ private[agg] abstract class SketchMergeAgg[S <: AnyRef]
   override def update(buffer: Option[S], input: InternalRow): Option[S] = {
     val v = child.eval(input)
     if (v == null) buffer
-    else {
-      val incoming = deserializeSketch(v.asInstanceOf[Array[Byte]])
-      buffer match {
-        case None => Some(incoming)
-        case Some(acc) => Some(mergeSketch(acc, incoming))
-      }
-    }
+    else merge(buffer, Some(format.deserialize(v.asInstanceOf[Array[Byte]])))
   }
 
   override def merge(buffer: Option[S], other: Option[S]): Option[S] =
     (buffer, other) match {
-      case (Some(a), Some(b)) => Some(mergeSketch(a, b))
+      case (Some(a), Some(b)) => Some(a.merge(b))
       case (a, None) => a
       case (None, b) => b
     }
 
-  override def eval(buffer: Option[S]): Any =
-    buffer.map(serializeSketch).orNull
+  override def eval(buffer: Option[S]): Any = buffer.map(_.serialize()).orNull
 
   override def serialize(buffer: Option[S]): Array[Byte] =
-    buffer.map(serializeSketch).getOrElse(Array.emptyByteArray)
+    buffer.map(_.serialize()).getOrElse(Array.emptyByteArray)
 
   override def deserialize(bytes: Array[Byte]): Option[S] =
-    if (bytes.isEmpty) None else Some(deserializeSketch(bytes))
-}
+    if (bytes.isEmpty) None else Some(format.deserialize(bytes))
 
-case class BloomMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[graft.sketch.BloomSketch] {
-  override protected def sketchName: String = "bloom"
-  override def prettyName: String = "bloom_merge"
-  override protected def deserializeSketch(b: Array[Byte]) = graft.sketch.BloomSketch.deserialize(b)
-  override protected def mergeSketch(a: graft.sketch.BloomSketch, b: graft.sketch.BloomSketch) = a.merge(b)
-  override protected def serializeSketch(s: graft.sketch.BloomSketch) = s.serialize()
-  override def withNewMutableAggBufferOffset(o: Int): BloomMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BloomMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomMergeAgg = copy(child = c.head)
-}
-
-case class HllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[graft.sketch.HllSketch] {
-  override protected def sketchName: String = "hll"
-  override def prettyName: String = "hll_merge"
-  override protected def deserializeSketch(b: Array[Byte]) = graft.sketch.HllSketch.deserialize(b)
-  override protected def mergeSketch(a: graft.sketch.HllSketch, b: graft.sketch.HllSketch) = a.merge(b)
-  override protected def serializeSketch(s: graft.sketch.HllSketch) = s.serialize()
-  override def withNewMutableAggBufferOffset(o: Int): HllMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HllMergeAgg = copy(child = c.head)
-}
-
-case class CmsMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[graft.sketch.CmsSketch] {
-  override protected def sketchName: String = "cms"
-  override def prettyName: String = "cms_merge"
-  override protected def deserializeSketch(b: Array[Byte]) = graft.sketch.CmsSketch.deserialize(b)
-  override protected def mergeSketch(a: graft.sketch.CmsSketch, b: graft.sketch.CmsSketch) = a.merge(b)
-  override protected def serializeSketch(s: graft.sketch.CmsSketch) = s.serialize()
-  override def withNewMutableAggBufferOffset(o: Int): CmsMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CmsMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CmsMergeAgg = copy(child = c.head)
-}
-
-case class KllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[graft.sketch.KllSketch] {
-  override protected def sketchName: String = "kll"
-  override def prettyName: String = "kll_merge"
-  override protected def deserializeSketch(b: Array[Byte]) = graft.sketch.KllSketch.deserialize(b)
-  override protected def mergeSketch(a: graft.sketch.KllSketch, b: graft.sketch.KllSketch) = a.merge(b)
-  override protected def serializeSketch(s: graft.sketch.KllSketch) = s.serialize()
-  override def withNewMutableAggBufferOffset(o: Int): KllMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KllMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KllMergeAgg = copy(child = c.head)
-}
-
-case class TDigestMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[graft.sketch.TDigestSketch] {
-  override protected def sketchName: String = "tdigest"
-  override def prettyName: String = "tdigest_merge"
-  override protected def deserializeSketch(b: Array[Byte]) = graft.sketch.TDigestSketch.deserialize(b)
-  override protected def mergeSketch(a: graft.sketch.TDigestSketch, b: graft.sketch.TDigestSketch) = a.merge(b)
-  override protected def serializeSketch(s: graft.sketch.TDigestSketch) = s.serialize()
-  override def withNewMutableAggBufferOffset(o: Int): TDigestMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TDigestMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TDigestMergeAgg = copy(child = c.head)
-}
-
-case class HeavyHittersMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends SketchMergeAgg[graft.sketch.HeavyHittersSketch] {
-  override protected def sketchName: String = "heavy-hitters"
-  override def prettyName: String = "hh_merge"
-  override protected def deserializeSketch(b: Array[Byte]) = graft.sketch.HeavyHittersSketch.deserialize(b)
-  override protected def mergeSketch(a: graft.sketch.HeavyHittersSketch, b: graft.sketch.HeavyHittersSketch) = a.merge(b)
-  override protected def serializeSketch(s: graft.sketch.HeavyHittersSketch) = s.serialize()
-  override def withNewMutableAggBufferOffset(o: Int): HeavyHittersMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HeavyHittersMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HeavyHittersMergeAgg = copy(child = c.head)
+  override def withNewMutableAggBufferOffset(o: Int): SketchMergeAgg[S] =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): SketchMergeAgg[S] =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SketchMergeAgg[S] =
+    copy(child = c.head)
 }

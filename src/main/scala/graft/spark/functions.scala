@@ -3,8 +3,20 @@ package graft.spark
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
-import graft.spark.agg.{BloomAgg, BloomMergeAgg, CmsAgg, CmsMergeAgg, CmsWeightedAgg, HeavyHittersAgg, HeavyHittersMergeAgg, HllAgg, HllMergeAgg, KllAgg, KllMergeAgg, TDigestAgg, TDigestMergeAgg}
+import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch, Mergeable, SketchFormat, TDigestSketch}
+import graft.spark.SketchDefaults._
+import graft.spark.agg.{BloomAgg, CmsAgg, HeavyHittersAgg, HllAgg, KllAgg, SketchMergeAgg, TDigestAgg}
 import graft.spark.expr._
+
+/** Default sketch sizes of the Column functions and their SQL forms. */
+object SketchDefaults {
+  val HllP = 14
+  val CmsDepth = 5
+  val CmsWidth: Int = 1 << 14
+  val KllK = 200
+  val TDigestCompression = 100.0
+  val HhCapacity = 256
+}
 
 /** User-facing Column functions — the engine's public API surface,
   * mirroring `org.apache.spark.sql.functions` style. Hash projections and
@@ -53,55 +65,47 @@ object functions {
     column(BloomAgg(expression(c), maxSize, bitsPerItem, kernel, longHash)
       .toAggregateExpression())
 
-  def hll_sketch(c: Column, p: Int = 14, kernel: String = "murmur2"): Column =
+  def hll_sketch(c: Column, p: Int = HllP, kernel: String = "murmur2"): Column =
     column(HllAgg(expression(c), p, kernel).toAggregateExpression())
 
-  def cms_sketch(c: Column, depth: Int = 5, width: Int = 1 << 14,
+  def cms_sketch(c: Column, depth: Int = CmsDepth, width: Int = CmsWidth,
       kernel: String = "murmur2"): Column =
     column(CmsAgg(expression(c), depth, width, kernel).toAggregateExpression())
 
-  def kll_sketch(c: Column, k: Int = 200): Column =
+  def kll_sketch(c: Column, k: Int = KllK): Column =
     column(KllAgg(expression(c), k).toAggregateExpression())
 
-  def tdigest_sketch(c: Column, compression: Double = 100.0): Column =
+  def tdigest_sketch(c: Column, compression: Double = TDigestCompression): Column =
     column(TDigestAgg(expression(c), compression).toAggregateExpression())
 
   /** Count-min with per-row additive weights (e.g. token counts):
     * estimates bound sum(weight) per key. */
-  def cms_sketch_weighted(key: Column, weight: Column, depth: Int = 5,
-      width: Int = 1 << 14, kernel: String = "murmur2"): Column =
-    column(CmsWeightedAgg(expression(key), expression(weight), depth, width, kernel)
+  def cms_sketch_weighted(key: Column, weight: Column, depth: Int = CmsDepth,
+      width: Int = CmsWidth, kernel: String = "murmur2"): Column =
+    column(CmsAgg(expression(key), depth, width, kernel, Some(expression(weight)))
       .toAggregateExpression())
 
   /** SpaceSaving heavy hitters over a string column. */
-  def hh_sketch(c: Column, capacity: Int = 256): Column =
+  def hh_sketch(c: Column, capacity: Int = HhCapacity): Column =
     column(HeavyHittersAgg(expression(c), capacity).toAggregateExpression())
 
   /** SpaceSaving heavy hitters by WEIGHT volume (e.g. tokens per source)
     * instead of row count. */
-  def hh_sketch_weighted(c: Column, weight: Column, capacity: Int = 256): Column =
+  def hh_sketch_weighted(c: Column, weight: Column, capacity: Int = HhCapacity): Column =
     column(HeavyHittersAgg(expression(c), capacity, Some(expression(weight)))
       .toAggregateExpression())
 
   // ---- sketch unions (second level of two-level / salted aggregation) ----
 
-  def bloom_merge(c: Column): Column =
-    column(BloomMergeAgg(expression(c)).toAggregateExpression())
+  private def sketch_merge[S <: Mergeable[S]](c: Column, format: SketchFormat[S]): Column =
+    column(SketchMergeAgg(expression(c), format).toAggregateExpression())
 
-  def hll_merge(c: Column): Column =
-    column(HllMergeAgg(expression(c)).toAggregateExpression())
-
-  def cms_merge(c: Column): Column =
-    column(CmsMergeAgg(expression(c)).toAggregateExpression())
-
-  def kll_merge(c: Column): Column =
-    column(KllMergeAgg(expression(c)).toAggregateExpression())
-
-  def tdigest_merge(c: Column): Column =
-    column(TDigestMergeAgg(expression(c)).toAggregateExpression())
-
-  def hh_merge(c: Column): Column =
-    column(HeavyHittersMergeAgg(expression(c)).toAggregateExpression())
+  def bloom_merge(c: Column): Column = sketch_merge(c, BloomSketch)
+  def hll_merge(c: Column): Column = sketch_merge(c, HllSketch)
+  def cms_merge(c: Column): Column = sketch_merge(c, CmsSketch)
+  def kll_merge(c: Column): Column = sketch_merge(c, KllSketch)
+  def tdigest_merge(c: Column): Column = sketch_merge(c, TDigestSketch)
+  def hh_merge(c: Column): Column = sketch_merge(c, HeavyHittersSketch)
 
   // ---- sketch probes (scalar) ----
 
@@ -186,6 +190,6 @@ object functions {
   // ---- one-shot conveniences ----
 
   /** Distinct-count estimate in one aggregation (hll_estimate ∘ hll_sketch). */
-  def hll_distinct(c: Column, p: Int = 14): Column =
+  def hll_distinct(c: Column, p: Int = HllP): Column =
     hll_estimate(hll_sketch(c, p))
 }
