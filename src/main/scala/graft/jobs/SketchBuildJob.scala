@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession, functions => F}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 
@@ -36,7 +36,7 @@ import graft.spark.functions._
   *  - sketch aggregation is map-side partial: each input split collapses
   *    to one sketch buffer before the shuffle, so the exchange moves
   *    O(parts * sketchBytes), independent of row count;
-  *  - the final global merge reads only the per-part sketch rows (tiny)
+  *  - the final global merge sees only the per-part sketch rows (tiny)
   *    and unions HLL, CMS and heavy hitters with the `*_merge` aggregates,
   *    whose merges are order-independent. KLL's merge is not (its
   *    compactions and level layout follow the merge order), so the rollup
@@ -48,15 +48,21 @@ import graft.spark.functions._
   * Job shape: every Spark action costs driver time (planning, adaptive
   * re-planning, schema merges) whatever its size, so the build asks Spark
   * only for what the driver cannot already see. Part ids come from the
-  * input's file index, listed once on the driver. The rollup is ONE
-  * query: its aggregate returns the merged sketches, the per-part KLL
-  * buffers, the log facts of this run's parts and the ids of stale parts
-  * together. Both tables
+  * input's file index, listed once on the driver. The rollup is not a
+  * query of its own: it is an observation (`Dataset.observe`) on the
+  * run's one action, the part write, over this run's part rows unioned
+  * with the committed runs'. Its aggregates return the merged sketches,
+  * the per-part KLL buffers, the log facts of this run's parts and the
+  * ids of stale parts together, and the driver receives them as one
+  * merged buffer set per write task (about 0.66 MB each with a dense
+  * 5 x 2^14 CMS; in total what a keyless aggregate's single final task
+  * would receive). The build never reads its own parts back. Both tables
   * it reads were written by this library, so their schemas are known
   * (`TranscriptTable.read`, [[PartSchema]]) and no job infers one. A
   * fresh build of a table `TranscriptTable.write` produced therefore
-  * runs at most four jobs — the per-part aggregate and its write (two)
-  * and the rollup (two) — and a resume with nothing pending at most two.
+  * runs at most two jobs — the per-part aggregate and its observed
+  * write — as does a resume with parts pending; a resume with nothing
+  * pending runs one, a `noop` write over the committed runs.
   */
 object SketchBuildJob {
 
@@ -261,43 +267,55 @@ object SketchBuildJob {
     // one file per write task, however many parts it holds: the rollup
     // does not depend on which file a part landed in
     val runDir = f"${partsDir(c.out)}/${bank.nextVersion}%010d-${java.util.UUID.randomUUID()}"
-    if (pending.nonEmpty)
-      partAggregates(df.filter(F.col(TranscriptTable.PartCol).isin(pending: _*)), c)
-        .write.parquet(runDir)
-
-    // ONE rollup query over the committed runs plus this one: reads only
-    // the per-part sketch rows — O(parts), not O(rows) — and returns the
-    // merged sketches, the per-part KLL buffers, the pending parts' log
-    // facts and the ids of stale parts together.
-    val partsAll = spark.read.schema(PartSchema)
-      .parquet((if (pending.isEmpty) bank.runDirs else bank.runDirs :+ runDir): _*)
-    // fail loudly on parts from an older schema rather than silently
-    // rolling up stats that cover only the newer parts (SketchMerge
-    // aggregates skip nulls, which would mask the gap): a column a part
-    // file lacks reads as null, so such a part is stale
-    val required = PartSchema.fieldNames.filterNot(_ == TranscriptTable.PartCol)
     val part = F.col(TranscriptTable.PartCol)
-    val finalRow = partsAll
-      .agg(
-        F.sum(F.col("rows")).as("rows"),
-        hll_merge(F.col("hll_conv")).as("hll_conv"),
-        hll_merge(F.col("hll_tool")).as("hll_tool"),
-        cms_merge(F.col("cms_roletool")).as("cms_roletool"),
-        // KLL's merge is order-sensitive, so the driver folds the parts'
-        // buffers in part_id order below
-        F.collect_list(F.struct(part, F.col("kll_textlen"))).as("kll_parts"),
-        hh_merge(F.col("hh_tool")).as("hh_tool"),
-        // collect_list skips the nulls an unmatched `when` yields
-        F.collect_list(F.when(part.isin(pending: _*),
-          F.struct(part, F.col("rows"), hll_estimate(F.col("hll_conv"))))).as("pending"),
-        F.collect_list(F.when(required.map(F.col(_).isNull).reduce(_ || _), part))
-          .as("stale"))
-      .head()
+
+    // The rollup rides this run's one action as an observation: over
+    // this run's part rows and the committed runs' (read with the known
+    // schema, O(parts) rows, not O(rows)) it returns the merged
+    // sketches, the per-part KLL buffers, the pending parts' log facts
+    // and the ids of stale parts, with no second query over the parts.
+    // Stale: a column a part file lacks reads as null, and the
+    // SketchMerge aggregates skip nulls, which would roll up stats that
+    // cover only the newer parts; such parts fail loudly below.
+    val required = PartSchema.fieldNames.filterNot(_ == TranscriptTable.PartCol)
+    val rollup = Observation(s"rollup-${java.util.UUID.randomUUID()}")
+    val inRun = part.isin(pending: _*)
+    val thisRun = Option.when(pending.nonEmpty)(partAggregates(df.filter(inRun), c))
+    val committed = Option.when(bank.runDirs.nonEmpty)(
+      spark.read.schema(PartSchema).parquet(bank.runDirs: _*))
+    // never both empty: with nothing pending, every part is committed
+    val observed = (thisRun ++ committed).reduce(_ union _).observe(rollup,
+      F.sum(F.col("rows")).as("rows"),
+      hll_merge(F.col("hll_conv")).as("hll_conv"),
+      hll_merge(F.col("hll_tool")).as("hll_tool"),
+      cms_merge(F.col("cms_roletool")).as("cms_roletool"),
+      // KLL's merge is order-sensitive, so the driver folds the parts'
+      // buffers in part_id order below
+      F.collect_list(F.struct(part, F.col("kll_textlen"))).as("kll_parts"),
+      hh_merge(F.col("hh_tool")).as("hh_tool"),
+      // collect_list skips the nulls an unmatched `when` yields
+      F.collect_list(F.when(inRun,
+        F.struct(part, F.col("rows"), hll_estimate(F.col("hll_conv"))))).as("pending"),
+      F.collect_list(F.when(required.map(F.col(_).isNull).reduce(_ || _), part)).as("stale"))
+    // Never put a foldable filter above the observation: PruneFilters
+    // would swap a Filter(false) and its subtree for an empty relation,
+    // nothing would be observed, and `rollup.get` would wait forever.
+    // So with nothing pending the action is the noop sink, unfiltered;
+    // otherwise the filter keeps this run's rows and drops the committed
+    // runs', so their write tasks open no file. A failed write throws
+    // here, before the driver waits on the observation.
+    if (pending.nonEmpty) observed.filter(inRun).write.parquet(runDir)
+    else observed.write.format("noop").mode("overwrite").save()
+    // one merged buffer set per write task reaches the driver (about
+    // 0.66 MB each with a dense 5 x 2^14 CMS): in total what the single
+    // final task of a keyless aggregate over the same rows would receive
+    val finalRow = rollup.get
+    def field[T](name: String): T = finalRow(name).asInstanceOf[T]
 
     // commit this run's parts before the stale check, so a failed
     // rollup never recomputes finished parts
     val processed: Seq[PartMetrics] =
-      finalRow.getAs[collection.Seq[Row]]("pending").toSeq.sortBy(_.getInt(0))
+      field[collection.Seq[Row]]("pending").toSeq.sortBy(_.getInt(0))
         .map(r => PartMetrics(r.getInt(0), r.getLong(1), r.getLong(2)))
     if (processed.nonEmpty) {
       // Bloom health: load n / capacity and the standard false-positive
@@ -319,23 +337,23 @@ object SketchBuildJob {
       commit(c.out, bank.nextVersion, entry, conf)
       warnOverloaded("SketchBuildJob", c.out, loads)
     }
-    val staleParts = finalRow.getAs[collection.Seq[Int]]("stale").sorted
+    val staleParts = field[collection.Seq[Int]]("stale").sorted
     require(staleParts.isEmpty,
       s"parts ${staleParts.mkString(", ")} at ${partsDir(c.out)} have null " +
         "sketch columns (built by an older version); rebuild the bank into a " +
         "new directory, or roll up with the old library")
-    require(!finalRow.isNullAt(0), noRows)
+    require(finalRow("rows") != null, noRows)
 
     // kll_merge's fold (adopt the first buffer, merge the rest) in
     // ascending part_id: fresh, resumed and crash-recovered builds give
     // the same bytes whatever files their parts sit in
-    val kll = finalRow.getAs[collection.Seq[Row]]("kll_parts").sortBy(_.getInt(0))
+    val kll = field[collection.Seq[Row]]("kll_parts").sortBy(_.getInt(0))
       .map(r => KllSketch.deserialize(r.getAs[Array[Byte]](1))).reduceLeft(_.merge(_))
-    val totalRows = finalRow.getLong(0)
-    val hllConv = HllSketch.deserialize(finalRow.getAs[Array[Byte]]("hll_conv"))
-    val hllTool = HllSketch.deserialize(finalRow.getAs[Array[Byte]]("hll_tool"))
+    val totalRows = field[Long]("rows")
+    val hllConv = HllSketch.deserialize(field[Array[Byte]]("hll_conv"))
+    val hllTool = HllSketch.deserialize(field[Array[Byte]]("hll_tool"))
     val hhTool = graft.sketch.HeavyHittersSketch.deserialize(
-      finalRow.getAs[Array[Byte]]("hh_tool"))
+      field[Array[Byte]]("hh_tool"))
 
     val ffs = finalDir(c.out).getFileSystem(conf)
     ffs.mkdirs(finalDir(c.out))
@@ -343,11 +361,11 @@ object SketchBuildJob {
       val o = ffs.create(new HPath(finalDir(c.out), name), true)
       try o.write(bytes) finally o.close()
     }
-    dump("hll_conv.bin", finalRow.getAs[Array[Byte]]("hll_conv"))
-    dump("hll_tool.bin", finalRow.getAs[Array[Byte]]("hll_tool"))
-    dump("cms_roletool.bin", finalRow.getAs[Array[Byte]]("cms_roletool"))
+    dump("hll_conv.bin", field[Array[Byte]]("hll_conv"))
+    dump("hll_tool.bin", field[Array[Byte]]("hll_tool"))
+    dump("cms_roletool.bin", field[Array[Byte]]("cms_roletool"))
     dump("kll_textlen.bin", kll.serialize())
-    dump("hh_tool.bin", finalRow.getAs[Array[Byte]]("hh_tool"))
+    dump("hh_tool.bin", field[Array[Byte]]("hh_tool"))
     // the Bloom bank stays in parts/ (one filter per part, routed probes
     // via ProbeJob.probeBank) — deliberately NOT OR-merged
 

@@ -85,7 +85,8 @@ private[spark] object ValueBytes {
     case IntegerType | DateType => v.asInstanceOf[Int].toDouble
     case ShortType => v.asInstanceOf[Short].toDouble
     case ByteType => v.asInstanceOf[Byte].toDouble
-    case other => throw new IllegalStateException(s"unsupported KLL input type $other")
+    case _: DecimalType => v.asInstanceOf[Decimal].toDouble
+    case other => throw new IllegalStateException(s"unsupported numeric input type $other")
   }
 }
 

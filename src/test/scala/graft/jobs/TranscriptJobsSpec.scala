@@ -260,8 +260,8 @@ class TranscriptJobsSpec extends SparkTestBase {
   test("the log entry stays valid JSON when paths contain a quote and a backslash") {
     // entry fields are user paths: a raw interpolation of `"` or `\`
     // would end the string early or start an escape. The output path
-    // keeps to a quote because the job reads its own parts back through
-    // Spark.
+    // keeps to a quote because a resume reads the committed parts through
+    // Spark, which globs paths.
     val odd = escapedInput
     val out = workDir + "/out\"q"
     SketchBuildJob.run(spark, SketchBuildJob.Config(odd, out))
@@ -338,17 +338,81 @@ class TranscriptJobsSpec extends SparkTestBase {
     writing.asScala.toSeq.map(tasksOf.get).sum
   }
 
-  test("a fresh build runs at most 4 Spark jobs, a resume with nothing pending at most 2") {
+  test("a fresh build runs at most 2 Spark jobs, a resume with parts pending at most 2, " +
+      "a resume with nothing pending at most 1") {
     val out = s"$workDir/build_jobs"
     val table = tablePath // written outside the counted run
-    val fresh = sparkJobs(SketchBuildJob.run(spark, SketchBuildJob.Config(table, out)))
-    assert(fresh <= 4, s"fresh build ran $fresh Spark jobs")
+    val fresh = sparkJobs {
+      val r = SketchBuildJob.run(spark, SketchBuildJob.Config(table, out, maxPartsPerRun = Some(3)))
+      assert(r.processedParts.size === 3 && r.skippedParts.isEmpty)
+    }
+    assert(fresh <= 2, s"fresh build ran $fresh Spark jobs")
+    val pending = sparkJobs {
+      val r = SketchBuildJob.run(spark, SketchBuildJob.Config(table, out))
+      assert(r.processedParts.size === nParts - 3 && r.skippedParts.size === 3)
+    }
+    assert(pending <= 2, s"resume with parts pending ran $pending Spark jobs")
     val resumed = sparkJobs {
       val r = SketchBuildJob.run(spark, SketchBuildJob.Config(table, out))
       assert(r.processedParts.isEmpty)
     }
-    assert(resumed <= 2, s"resume with nothing pending ran $resumed Spark jobs")
-    info(s"Spark jobs: fresh build $fresh, resume with nothing pending $resumed")
+    assert(resumed <= 1, s"resume with nothing pending ran $resumed Spark jobs")
+    info(s"Spark jobs: fresh build $fresh, resume with parts pending $pending, " +
+      s"resume with nothing pending $resumed")
+  }
+
+  test("the log's part facts are the part files' own, and a resume writes only files with rows") {
+    val out = s"$workDir/build_facts"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(3)))
+    val resumed = SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
+    val exact = TranscriptTable.read(spark, tablePath).groupBy(TranscriptTable.PartCol).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val logged = logEntries(out).flatMap(_.get("parts").elements().asScala).map { p =>
+      p.get("part_id").asInt() -> (p.get("dir").asText(), p.get("rows").asLong(),
+        p.get("est_convs").asLong())
+    }
+    assert(logged.map(_._1).sorted === (0 until nParts))
+    logged.foreach { case (id, (dir, rows, estConvs)) =>
+      val Array(file) = spark.read.schema(SketchBuildJob.PartSchema).parquet(dir)
+        .filter(F.col(TranscriptTable.PartCol) === id)
+        .select(F.col("rows"), hll_estimate(F.col("hll_conv"))).collect()
+      assert((rows, estConvs) === ((file.getLong(0), file.getLong(1))), s"part $id")
+      assert(rows === exact(id), s"part $id")
+    }
+    // the resumed run's write also carried the committed run's rows past
+    // the observation; none of them may reach a file, not even an empty one
+    val resumedDir = logEntries(out).last.get("parts").get(0).get("dir").asText()
+    val files = parquetFiles(resumedDir)
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val ids = spark.read.schema(SketchBuildJob.PartSchema).parquet(f.getPath)
+        .select(TranscriptTable.PartCol).collect().map(_.getInt(0))
+      assert(ids.nonEmpty, s"${f.getName} holds no rows")
+      assert(ids.toSet.subsetOf(resumed.processedParts.map(_.partId).toSet), f.getName)
+    }
+  }
+
+  test("a failed part write fails the build promptly and commits nothing") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.{Seconds, Span}
+    implicit val signaler: Signaler = ThreadSignaler
+    val out = s"$workDir/build_failed_write"
+    val table = tablePath // written outside the time limit
+    // a regular file where the run directories go: the write cannot
+    // create its run directory
+    Files.createDirectories(java.nio.file.Paths.get(out))
+    Files.write(java.nio.file.Paths.get(out, "parts"), Array[Byte](1))
+    val ex = intercept[Exception] {
+      TimeLimits.failAfter(Span(120, Seconds)) {
+        SketchBuildJob.run(spark, SketchBuildJob.Config(table, out))
+      }
+    }
+    assert(!ex.isInstanceOf[org.scalatest.exceptions.TestFailedDueToTimeoutException], ex)
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(messages.contains(s"$out/parts"), messages)
+    assert(!new java.io.File(s"$out/_log").exists())
+    assert(SketchBuildJob.completedParts(out).isEmpty)
   }
 
   private lazy val probeKeys =

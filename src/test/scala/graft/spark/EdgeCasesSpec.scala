@@ -101,6 +101,24 @@ class EdgeCasesSpec extends SparkTestBase {
     assert(row.getDouble(1) === 3.0)
   }
 
+  test("decimal inputs: kll_sketch, tdigest_sketch and top_k_by equal their double twins") {
+    // a decimal column passes the numeric type check, so it must also
+    // convert at run time, to the value its cast to double holds
+    val df = spark.range(2000).select(F.col("id"),
+      (F.col("id") * 7919 % 1000 / 100).cast("decimal(10,2)").as("dec"))
+      .withColumn("dbl", F.col("dec").cast("double"))
+    assert(df.schema("dec").dataType === org.apache.spark.sql.types.DecimalType(10, 2))
+    val row = df.agg(
+      kll_sketch($"dec", 200), kll_sketch($"dbl", 200),
+      tdigest_sketch($"dec", 100.0), tdigest_sketch($"dbl", 100.0),
+      top_k_by($"id", $"dec", 5), top_k_by($"id", $"dbl", 5)).head()
+    assert(java.util.Arrays.equals(row.getAs[Array[Byte]](0), row.getAs[Array[Byte]](1)))
+    assert(java.util.Arrays.equals(row.getAs[Array[Byte]](2), row.getAs[Array[Byte]](3)))
+    val top = row.getSeq[org.apache.spark.sql.Row](4)
+    assert(top.nonEmpty && top === row.getSeq[org.apache.spark.sql.Row](5))
+    assert(KllSketch.deserialize(row.getAs[Array[Byte]](0)).n === 2000L)
+  }
+
   test("top_k_by edges: empty group via filter, k > group size, null values/scores skipped") {
     // empty relation: empty heap, empty array
     val empty = spark.range(0).select(F.col("id").as("v"), F.col("id").cast("double").as("s"))
