@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 import graft.spark.functions._
@@ -20,26 +20,41 @@ object ProbeJob {
     // sketch may live on any DFS (hdfs://, s3a://, file:)
     val p = new HPath(sketchFile)
     val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val len = fs.getFileStatus(p).getLen.toInt
-    val bytes = new Array[Byte](len)
+    val bytes = new Array[Byte](sketchLength(fs.getFileStatus(p)))
     val in = fs.open(p)
     try in.readFully(0, bytes) finally in.close()
     val pred = bloom_might_contain(F.lit(bytes), F.col(keyCol))
     df.filter(if (reverse) !pred else pred)
   }
 
+  /** The length of the sketch file `status` describes, as an array size:
+    * a file longer than a byte array can hold fails, naming the file. */
+  private[jobs] def sketchLength(status: FileStatus): Int = {
+    val len = status.getLen
+    require(len <= Int.MaxValue, s"sketch file ${status.getPath} holds $len bytes, " +
+      s"more than one byte array can hold (${Int.MaxValue})")
+    len.toInt
+  }
+
   /** Probe a SketchBuildJob Bloom BANK: per-part filters from the run
     * directories its `_log/` commits, routed by `TranscriptTable.route`
     * with the `n_parts` the log records, as the build's input was.
     *
-    * Scale shape: a PART-ROUTED SHUFFLE-HASH JOIN — probe rows are
-    * tagged with their part id and co-partitioned with the bank's part
-    * rows, so each task holds only ITS partition's filters
+    * Scale shape: the bank's filter bytes are known before any job runs:
+    * the log records each part's `bloom_capacity` and `bloom_bpi`, and
+    * those fix its filter's serialized length
+    * ([[SketchBuildJob.BankLog.bloomBytes]]). When their sum is within
+    * Spark's `spark.sql.autoBroadcastJoinThreshold` (not negative), the
+    * bank is BROADCAST: the probe rows join it where they are read, with
+    * no shuffle. Spark's own estimate is not used, because it sizes the
+    * bank scan from file bytes, and those hold every part's CMS too.
+    * Otherwise the shape is a PART-ROUTED SHUFFLE-HASH JOIN: probe rows
+    * are tagged with their part id and co-partitioned with the bank's
+    * part rows, so each task holds only ITS partition's filters
     * (O(nParts x filterBytes / numPartitions) per task), never the whole
-    * bank. The previous collect+broadcast shape put the entire bank on
-    * the driver and on every executor — at 10^12 rows / 4096 parts x
-    * 128 KB that is ~0.5 GB everywhere; the routed join's footprint
-    * shrinks with parallelism instead.
+    * bank. At 10^12 rows / 4096 parts x 128 KB the bank is ~0.5 GB, far
+    * above the threshold, so it takes this path and no executor holds it
+    * whole.
     *
     * `bloom_bank_contains` deserializes each part's filter once per task
     * and skips reading the joined binary column entirely on cache hits.
@@ -73,10 +88,13 @@ object ProbeJob {
               "version); rebuild the bank"))))
           .otherwise(bloom).as("__bloom"))
     val routed = df.withColumn("__part", route(F.col(keyCol), nParts))
-    // left join: unbuilt parts keep their probe rows with a null filter;
-    // SHUFFLE_HASH pins the co-partitioned plan (auto-broadcast of the
-    // bank would recreate the whole-bank-everywhere footprint)
-    val joined = routed.join(bank.hint("SHUFFLE_HASH"),
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    // left join: unbuilt parts keep their probe rows with a null filter.
+    // Above the threshold, SHUFFLE_HASH pins the co-partitioned plan,
+    // whatever Spark estimates from the bank's file bytes
+    val joined = routed.join(
+      if (threshold >= 0 && log.bloomBytes <= threshold) F.broadcast(bank)
+      else bank.hint("SHUFFLE_HASH"),
       F.col("__part") === F.col("__bank_part"), "left")
     val pred = bloom_bank_contains(F.col("__part"), F.col("__bloom"), F.col(keyCol))
     joined.filter(if (reverse) !pred else pred)

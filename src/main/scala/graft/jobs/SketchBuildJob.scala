@@ -121,13 +121,23 @@ object SketchBuildJob {
   private def partsDir(out: String): String = s"$out/parts"
   private def finalDir(out: String): HPath = new HPath(out, "final")
 
+  /** One committed part as its log entry records it: its run directory,
+    * `bloom_load`, and the `bloom_capacity` and `bloom_bpi` its filter was
+    * built with. */
+  case class LoggedPart(dir: String, bloomLoad: Double, bloomCapacity: Long, bloomBpi: Int)
+
   /** A bank's `_log/` replayed: the routing modulus (None until a run commits),
-    * each committed part's run directory and logged `bloom_load`, and the
-    * next commit's version. Readers scan exactly [[runDirs]], the committed
-    * runs' directories. */
-  case class BankLog(nParts: Option[Int], partDirs: Map[Int, String],
-      bloomLoads: Map[Int, Double], nextVersion: Long) {
-    def runDirs: Seq[String] = partDirs.values.toSeq.distinct.sorted
+    * each committed part as logged, and the next commit's version. Readers
+    * scan exactly [[runDirs]], the committed runs' directories. */
+  case class BankLog(nParts: Option[Int], parts: Map[Int, LoggedPart], nextVersion: Long) {
+    def bloomLoads: Map[Int, Double] = parts.map { case (id, p) => id -> p.bloomLoad }
+    def runDirs: Seq[String] = parts.values.map(_.dir).toSeq.distinct.sorted
+
+    /** Bytes of the committed parts' `bloom_conv` filters, from the
+      * geometry the log records: the logged capacity and bits per item
+      * fix each filter's serialized length. */
+    def bloomBytes: Long =
+      parts.values.map(p => BloomSketch.serializedSize(p.bloomCapacity, p.bloomBpi)).sum
   }
 
   /** The one stderr warning, for the build and `ProbeJob.probeBank` alike,
@@ -161,23 +171,23 @@ object SketchBuildJob {
           "_manifest/ layout, which this version does not read; delete it and rebuild the bank")
       else Nil
     names.collect { case EntryName(v) => v.toLong }.sorted
-      .foldLeft(BankLog(None, Map.empty, Map.empty, 0L)) { (log, v) =>
+      .foldLeft(BankLog(None, Map.empty, 0L)) { (log, v) =>
         val in = fs.open(entryPath(out, v))
         val entry = try Json.readTree(in) finally in.close()
-        val (partDirs, bloomLoads) = entry.required("parts").elements().asScala
-          .foldLeft((log.partDirs, log.bloomLoads)) { case ((dirs, loads), p) =>
-            val id = p.required("part_id").asInt()
-            if (dirs.contains(id)) throw new IllegalStateException(
-              s"part $id is committed twice at $dir (again in entry $v)")
-            (dirs.updated(id, p.required("dir").asText()),
-              loads.updated(id, p.required("bloom_load").asDouble()))
-          }
-        BankLog(Some(entry.required("n_parts").asInt()), partDirs, bloomLoads, v + 1)
+        val parts = entry.required("parts").elements().asScala.foldLeft(log.parts) { (parts, p) =>
+          val id = p.required("part_id").asInt()
+          if (parts.contains(id)) throw new IllegalStateException(
+            s"part $id is committed twice at $dir (again in entry $v)")
+          parts.updated(id, LoggedPart(p.required("dir").asText(),
+            p.required("bloom_load").asDouble(), p.required("bloom_capacity").asLong(),
+            p.required("bloom_bpi").asInt()))
+        }
+        BankLog(Some(entry.required("n_parts").asInt()), parts, v + 1)
       }
   }
 
   def completedParts(out: String, conf: Configuration = new Configuration()): Set[Int] =
-    replay(out, conf).partDirs.keySet
+    replay(out, conf).parts.keySet
 
   /** The routing modulus recorded at build time — probeBank must route
     * with the TABLE part count, never with however many parts happen to
@@ -260,7 +270,7 @@ object SketchBuildJob {
     val bank = replay(c.out, conf)
     require(bank.nParts.forall(_ == nParts), s"the bank at ${c.out} routes by " +
       s"n_parts=${bank.nParts.get}, not ${c.input}'s $nParts; build into a new directory")
-    val done = bank.partDirs.keySet
+    val done = bank.parts.keySet
     val pendingAll = allParts.filterNot(done)
     val pending = c.maxPartsPerRun.fold(pendingAll)(pendingAll.take)
 

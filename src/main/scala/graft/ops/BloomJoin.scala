@@ -24,14 +24,20 @@ import graft.spark.functions.{bloom_might_contain, bloom_sketch, hll_distinct}
   *    shrinks to |matches| + ~FPR·|large|.
   *
   * The prefilter runs only when the join shuffles the probe side. Both
-  * operators first plan the exact join (`large` against the distinct
-  * build keys) and read the planner's physical plan, which costs no
-  * job. When the planner broadcasts the build side (Spark's
+  * operators first plan the exact join (`large` against the build keys)
+  * and read the planner's physical plan, which costs no job. When the
+  * planner broadcasts the build side (Spark's
   * `autoBroadcastJoinThreshold` or a join hint), the probe side never
   * crosses an exchange, so there is no shuffle to save: the exact join
   * is returned as it is, and the key sketch is never built.
   * Spark's own runtime Bloom filters (`InjectRuntimeFilter`) follow the
   * same rule and go only on probable shuffle joins.
+  *
+  * The build keys are de-duplicated only where they cross an exchange,
+  * in the prefiltered join. A left-semi or left-anti join gives the same
+  * rows with or without repeated build keys, and the planner sizes a
+  * distinct aggregate as it sizes its input, so the broadcast join
+  * skips the aggregate and its shuffle.
   *
   * Sizing: the sketch is built at `maxSize = distinct build keys` — the
   * mkblm sizing rule — bounded from one pass over the (small) build side
@@ -69,11 +75,14 @@ object BloomJoin {
 
   private final val HllP = 14
 
-  /** `large` joined to the distinct build keys: the exact tail of both
-    * operators. A using-column join puts the key column first. */
+  /** `large` joined to the build keys, `distinct` or as they are: the
+    * exact tail of both operators. A using-column join puts the key
+    * column first. */
   private def exactJoin(large: DataFrame, largeKey: String, small: DataFrame,
-      smallKey: String, how: String): DataFrame =
-    large.join(small.select(F.col(smallKey).as(largeKey)).distinct(), Seq(largeKey), how)
+      smallKey: String, how: String, distinct: Boolean): DataFrame = {
+    val keys = small.select(F.col(smallKey).as(largeKey))
+    large.join(if (distinct) keys.distinct() else keys, Seq(largeKey), how)
+  }
 
   /** Whether the planner broadcasts the build side of `join`, the
     * top-most join in its plan. Reads the physical plan: no job. */
@@ -87,12 +96,12 @@ object BloomJoin {
     * Bloom-prefiltered when the join shuffles `large`. */
   def semi(large: DataFrame, largeKey: String, small: DataFrame, smallKey: String,
       bitsPerItem: Int = 16, kernel: String = "murmur2"): DataFrame = {
-    val exact = exactJoin(large, largeKey, small, smallKey, "left_semi")
+    val exact = exactJoin(large, largeKey, small, smallKey, "left_semi", distinct = false)
     if (broadcastsBuildSide(exact)) exact
     else {
       val sketch = keySketch(small, smallKey, bitsPerItem, kernel)
       exactJoin(large.filter(bloom_might_contain(F.lit(sketch), F.col(largeKey))),
-        largeKey, small, smallKey, "left_semi")
+        largeKey, small, smallKey, "left_semi", distinct = true)
     }
   }
 
@@ -103,14 +112,14 @@ object BloomJoin {
     * pays the exact anti join. */
   def anti(large: DataFrame, largeKey: String, small: DataFrame, smallKey: String,
       bitsPerItem: Int = 16, kernel: String = "murmur2"): DataFrame = {
-    val exact = exactJoin(large, largeKey, small, smallKey, "left_anti")
+    val exact = exactJoin(large, largeKey, small, smallKey, "left_anti", distinct = false)
     if (broadcastsBuildSide(exact)) exact.select(large.columns.toSeq.map(F.col): _*)
     else {
       val sketch = keySketch(small, smallKey, bitsPerItem, kernel)
       val pred = bloom_might_contain(F.lit(sketch), F.col(largeKey))
       val definitelyAbsent = large.filter(F.col(largeKey).isNotNull && !pred)
       val maybe = exactJoin(large.filter(F.col(largeKey).isNull || pred),
-        largeKey, small, smallKey, "left_anti")
+        largeKey, small, smallKey, "left_anti", distinct = true)
       // unionByName, NOT positional unionAll: the using-column join moves
       // the key column first, so the two branches' column orders differ
       // whenever largeKey is not large's first column

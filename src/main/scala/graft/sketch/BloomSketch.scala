@@ -142,7 +142,7 @@ final class BloomSketch private (
 
   def serialize(): Array[Byte] = {
     val nameBytes = ByteOps.utf8(kernel.name)
-    val buf = ByteBuffer.allocate(4 + 1 + 4 + nameBytes.length + 8 + 4 + 1 + 4 + words.length * 8)
+    val buf = ByteBuffer.allocate(headerSize(nameBytes.length) + words.length * 8)
     buf.putInt(Magic)
     buf.put(Version)
     buf.putInt(nameBytes.length)
@@ -215,6 +215,18 @@ object BloomSketch extends SketchFormat[BloomSketch] {
       r += 1
     }
     sk
+  }
+
+  /** Bytes ahead of the words in [[BloomSketch#serialize]]'s layout. */
+  private def headerSize(kernelNameLength: Int): Int = 4 + 1 + 4 + kernelNameLength + 8 + 4 + 1 + 4
+
+  /** The length of [[BloomSketch#serialize]]'s bytes for a sketch of this
+    * geometry and kernel, worked out without allocating the sketch: the
+    * word count follows from `maxSize x bitsPerItem` as in `apply`. */
+  def serializedSize(maxSize: Long, bitsPerItem: Int,
+      kernel: HashKernel64 = HashKernels.murmur): Long = {
+    val bitSetLength = Math.multiplyExact(maxSize, bitsPerItem.toLong) / NumBitSets
+    headerSize(ByteOps.utf8(kernel.name).length) + NumBitSets * ((bitSetLength + 63) >>> 6) * 8
   }
 
   def deserialize(bytes: Array[Byte]): BloomSketch = {

@@ -324,10 +324,11 @@ case class HhEstimate(left: Expression, right: Expression)
 
 /** `bloom_bank_contains(partId, sketchBytes, value)` — membership probe
   * against a PARTITIONED Bloom bank after a part-routed join, the
-  * scale-safe `ckblm` shape: instead of collecting the whole bank to the
-  * driver and broadcasting it everywhere (O(nParts x filterBytes) on
-  * every executor), probe rows are routed to their part's filter row and
-  * this expression tests against it.
+  * `ckblm` shape: probe rows are joined to their part's filter row and
+  * this expression tests against it. `ProbeJob.probeBank` broadcasts the
+  * bank when the filter sizes its log records fit Spark's broadcast
+  * threshold; a larger bank is co-partitioned with the probe rows, so no
+  * executor holds all of it.
   *
   * Two things make the joined shape cheap:
   *  - the deserialized filter is cached per part id, so each part's
@@ -374,8 +375,8 @@ case class BloomBankContains(first: Expression, second: Expression, third: Expre
   override def prettyName: String = "bloom_bank_contains"
 
   /** fast: part id -> BloomSketch | Missing, rebuilt per deserialized
-    * instance (per task) — exactly the join's co-partitioned
-    * granularity. strict: (part, murmur64(bytes)) -> BloomSketch. */
+    * instance (per task): the parts whose rows the task sees.
+    * strict: (part, murmur64(bytes)) -> BloomSketch. */
   @transient private lazy val cache =
     new java.util.concurrent.ConcurrentHashMap[Any, AnyRef]()
 

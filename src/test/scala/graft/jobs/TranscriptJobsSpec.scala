@@ -6,10 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
 
 import graft.data.{TranscriptGen, TranscriptTable}
 import graft.ops.BloomJoin
-import graft.sketch.{HllSketch, KllSketch}
+import graft.sketch.{BloomSketch, HllSketch, KllSketch}
 import graft.spark.SparkTestBase
 import graft.spark.functions._
 
@@ -418,21 +422,96 @@ class TranscriptJobsSpec extends SparkTestBase {
   private lazy val probeKeys =
     (0 until 300).map(i => s"conv-${"%05d".format(i)}").toDF("conv_id")
 
-  test("a bank probe over the fixture runs at most 4 Spark jobs") {
+  test("a bank probe over the fixture runs at most 3 Spark jobs") {
     val out = s"$workDir/build_probe_jobs"
     SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
     val jobs = sparkJobs {
       assert(ProbeJob.probeBank(spark, probeKeys, out, "conv_id").count() >= nConvs)
     }
-    assert(jobs <= 4, s"probeBank count ran $jobs Spark jobs")
+    assert(jobs <= 3, s"probeBank count ran $jobs Spark jobs")
   }
 
-  test("a Bloom semi join over the fixture runs at most 4 Spark jobs") {
+  test("a Bloom semi join over the fixture runs at most 3 Spark jobs") {
     val jobs = sparkJobs {
       assert(BloomJoin.semi(probeKeys, "conv_id", TranscriptTable.read(spark, tablePath),
         "conv_id").count() === nConvs)
     }
-    assert(jobs <= 4, s"BloomJoin.semi count ran $jobs Spark jobs")
+    assert(jobs <= 3, s"BloomJoin.semi count ran $jobs Spark jobs")
+  }
+
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** Walks the final plan of an adaptive query, query stages included. */
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  test("a bank probe broadcasts a bank whose logged filter sizes fit the threshold, " +
+      "and shuffle-joins it otherwise, with the same answers") {
+    val full = s"$workDir/build_join_choice"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, full))
+    val partial = s"$workDir/build_join_choice_partial"
+    SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, partial, maxPartsPerRun = Some(3)))
+    val members = TranscriptTable.read(spark, tablePath).select("conv_id").distinct()
+      .collect().map(_.getString(0)).toSet
+    val keys = probeKeys.union((0 until 300).map(i => s"other-$i").toDF("conv_id"))
+    val allKeys = keys.collect().map(_.getString(0)).toSet
+    for (out <- Seq(full, partial)) {
+      // the forward and reverse answers, and the executed plan of each
+      def probes(): Seq[(Set[String], SparkPlan)] = Seq(false, true).map { reverse =>
+        val df = ProbeJob.probeBank(spark, keys, out, "conv_id", reverse)
+        (df.collect().map(_.getString(0)).toSet, df.queryExecution.executedPlan)
+      }
+      def joins(plan: SparkPlan): Seq[SparkPlan] = Plans.collect(plan) { case j: BaseJoinExec => j }
+      val bytes = SketchBuildJob.replay(out).bloomBytes
+      // the default threshold, and the logged size exactly
+      val broadcast = Seq(probes(), withConf(Threshold, bytes.toString)(probes()))
+      val shuffled = Seq(withConf(Threshold, "-1")(probes()),
+        withConf(Threshold, (bytes - 1).toString)(probes()))
+      for (run <- broadcast; (_, plan) <- run) {
+        val Seq(j: BroadcastHashJoinExec) = joins(plan)
+        assert(Plans.collect(j.left) { case e: Exchange => e }.isEmpty,
+          s"$out: an exchange above the probe-side scan:\n$plan")
+      }
+      for (run <- shuffled; (_, plan) <- run)
+        assert(joins(plan).map(_.getClass) === Seq(classOf[ShuffledHashJoinExec]), s"$out:\n$plan")
+      val Seq((forward, _), (reverse, _)) = broadcast.head
+      assert(members.subsetOf(forward), s"$out: a member failed the probe")
+      assert(forward ++ reverse === allKeys && (forward & reverse).isEmpty, out)
+      for (run <- broadcast.tail ++ shuffled) assert(run.map(_._1) === Seq(forward, reverse), out)
+    }
+  }
+
+  test("the log's Bloom geometry gives each stored filter's length") {
+    for ((capacity, bpi) <- Seq((1L << 16, 16), (1000L, 8), (300L, 10), (50L, 3))) {
+      val out = s"$workDir/build_bloom_size_${capacity}_$bpi"
+      SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out,
+        bloomPerPartCapacity = capacity, bloomBpi = bpi))
+      val log = SketchBuildJob.replay(out)
+      val stored = spark.read.schema(SketchBuildJob.PartSchema).parquet(log.runDirs: _*)
+        .select(F.col(TranscriptTable.PartCol), F.length(F.col("bloom_conv")))
+        .collect().map(r => r.getInt(0) -> r.getInt(1).toLong).toMap
+      val built = BloomSketch(capacity, bpi).serialize().length.toLong
+      assert(stored.keySet === log.parts.keySet)
+      for ((id, part) <- log.parts) {
+        assert((part.bloomCapacity, part.bloomBpi) === ((capacity, bpi)))
+        val size = BloomSketch.serializedSize(part.bloomCapacity, part.bloomBpi)
+        assert(size === stored(id), s"part $id at ($capacity, $bpi)")
+        assert(size === built, s"($capacity, $bpi)")
+      }
+      assert(log.bloomBytes === stored.values.sum)
+    }
+  }
+
+  test("a sketch file longer than a byte array can hold fails the probe, naming it") {
+    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    val path = new HPath(s"$workDir/huge.bloom")
+    def status(len: Long) = new FileStatus(len, false, 1, 0L, 0L, path)
+    assert(ProbeJob.sketchLength(status(100L)) === 100)
+    assert(ProbeJob.sketchLength(status(Int.MaxValue.toLong)) === Int.MaxValue)
+    for (len <- Seq(Int.MaxValue + 1L, (1L << 32) + 100)) {
+      val ex = intercept[IllegalArgumentException](ProbeJob.sketchLength(status(len)))
+      assert(ex.getMessage.contains(path.toString) && ex.getMessage.contains(s"$len bytes"),
+        ex.getMessage)
+    }
   }
 
   test("a table the library wrote reads with the schema Spark infers, and without a job") {
@@ -457,7 +536,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     * moves to a file of its own that lacks the column, and the other
     * parts of its run directory keep theirs. */
   private def rewritePartWithout(out: String, part: Int, column: String): Unit = {
-    val dir = SketchBuildJob.replay(out).partDirs(part)
+    val dir = SketchBuildJob.replay(out).parts(part).dir
     val tmp = s"$out-rewrite"
     val rows = spark.read.schema(SketchBuildJob.PartSchema).parquet(dir)
     val victim = F.col(TranscriptTable.PartCol) === part

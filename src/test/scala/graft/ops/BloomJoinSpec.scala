@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row, functions => F}
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import graft.sketch.BloomSketch
@@ -109,6 +110,25 @@ class BloomJoinSpec extends SparkTestBase {
         assert(prefilteredProbeScan(df),
           s"$name: no prefilter on the probe-side scan:\n${df.queryExecution.sparkPlan}")
       }
+    }
+  }
+
+  /** Aggregates on the build (right) side of the top-most join in `df`'s plan. */
+  private def buildSideAggregates(df: DataFrame): Seq[SparkPlan] =
+    df.queryExecution.sparkPlan.collectFirst { case j: BaseJoinExec => j }.toSeq
+      .flatMap(_.right.collect { case a: BaseAggregateExec => a })
+
+  test("a broadcast build side is joined as it is; a shuffled one is de-duplicated") {
+    def ops() = Seq("semi" -> BloomJoin.semi(large, "k", small, "sk"),
+      "anti" -> BloomJoin.anti(large, "k", small, "sk"))
+    for ((name, df) <- ops()) {
+      assert(BloomJoin.broadcastsBuildSide(df), name)
+      assert(buildSideAggregates(df).isEmpty,
+        s"$name: an aggregate on the broadcast side:\n${df.queryExecution.sparkPlan}")
+    }
+    withConf(Threshold, "-1") {
+      for ((name, df) <- ops()) assert(buildSideAggregates(df).nonEmpty,
+        s"$name: no distinct on the shuffled build side:\n${df.queryExecution.sparkPlan}")
     }
   }
 }

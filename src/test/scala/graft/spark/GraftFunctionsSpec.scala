@@ -325,8 +325,8 @@ class GraftFunctionsSpec extends SparkTestBase {
       .toDF("part", "key")
     val joined = probes.join(bank.hint("SHUFFLE_HASH"), Seq("part"), "left")
     val filtered = joined.filter(bloom_bank_contains(F.col("part"), F.col("sk"), F.col("key")))
-    // plan shape: the hint pins a co-partitioned shuffle-hash join — the
-    // bank must never be broadcast whole to every executor
+    // plan shape: the hint pins a co-partitioned shuffle-hash join, the
+    // shape ProbeJob.probeBank takes for a bank above the broadcast threshold
     val plan = filtered.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin") && !plan.contains("BroadcastHashJoin"),
       s"bank join lost its routed shape:\n$plan")
