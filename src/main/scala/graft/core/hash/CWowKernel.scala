@@ -12,7 +12,7 @@ import graft.core.ByteOps._
   *
   * Multi-hash scheme: seed-by-index (`CWowHash.java:89-131`).
   */
-object CWowKernel extends HashKernel64 {
+object CWowKernel extends SeedByIndexKernel {
   final val M32 = 0x57559429
   final val N32 = 0x5052acdb
   final val M64 = 0x95b47aa3355ba1a1L
@@ -24,7 +24,7 @@ object CWowKernel extends HashKernel64 {
 
   override def name: String = "cwow"
 
-  def hash64Seeded(data: Array[Byte], seed: Long): Long = {
+  override def hash64Seeded(data: Array[Byte], seed: Long): Long = {
     val length = data.length
     var h = seed
     var k = length + seed + N64
@@ -84,7 +84,7 @@ object CWowKernel extends HashKernel64 {
     h ^ k
   }
 
-  def hash32Seeded(data: Array[Byte], seed: Int): Int = {
+  override def hash32Seeded(data: Array[Byte], seed: Int): Int = {
     val length = data.length
     var h = seed
     var k = length + seed + N32
@@ -122,28 +122,5 @@ object CWowKernel extends HashKernel64 {
     k = (k ^ (p & LongLoMask)).toInt
     h = (h ^ (p >> 32)).toInt
     h ^ k
-  }
-
-  override def hash64(data: Array[Byte]): Long = hash64Seeded(data, 0L)
-  override def hash32(data: Array[Byte]): Int = hash32Seeded(data, 0)
-
-  override def hash64K(data: Array[Byte], k: Int): Array[Long] = {
-    requireK(k)
-    Array.tabulate(k)(i => hash64Seeded(data, i.toLong))
-  }
-
-  override def hash32K(data: Array[Byte], k: Int): Array[Int] = {
-    requireK(k)
-    Array.tabulate(k)(i => hash32Seeded(data, i))
-  }
-
-  override def hash64Into(data: Array[Byte], k: Int, out: Array[Long]): Unit = {
-    var i = 0
-    while (i < k) { out(i) = hash64Seeded(data, i.toLong); i += 1 }
-  }
-
-  override def hash32Into(data: Array[Byte], k: Int, out: Array[Int]): Unit = {
-    var i = 0
-    while (i < k) { out(i) = hash32Seeded(data, i); i += 1 }
   }
 }

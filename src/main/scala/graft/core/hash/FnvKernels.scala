@@ -11,55 +11,14 @@ package graft.core.hash
   * scheme. The per-algorithm scheme must be preserved because sketch bit
   * positions depend on it.
   */
-abstract class FnvKernelBase extends HashKernel64 {
+abstract class FnvKernelBase extends ChainedKernel {
   final val Prime32 = 0x01000193
   final val Init32 = 0x811c9dc5
   final val Prime64 = 0x100000001b3L
   final val Init64 = 0xcbf29ce484222325L
 
-  def hash64Seeded(data: Array[Byte], seed: Long): Long
-  def hash32Seeded(data: Array[Byte], seed: Int): Int
-
-  override def hash64(data: Array[Byte]): Long = hash64Seeded(data, Init64)
-  override def hash32(data: Array[Byte]): Int = hash32Seeded(data, Init32)
-
-  override def hash64K(data: Array[Byte], k: Int): Array[Long] = {
-    requireK(k)
-    val out = new Array[Long](k)
-    var last = Init64
-    var i = 0
-    while (i < k) {
-      last = hash64Seeded(data, last)
-      out(i) = last
-      i += 1
-    }
-    out
-  }
-
-  override def hash32K(data: Array[Byte], k: Int): Array[Int] = {
-    requireK(k)
-    val out = new Array[Int](k)
-    var last = Init32
-    var i = 0
-    while (i < k) {
-      last = hash32Seeded(data, last)
-      out(i) = last
-      i += 1
-    }
-    out
-  }
-
-  override def hash64Into(data: Array[Byte], k: Int, out: Array[Long]): Unit = {
-    var last = Init64
-    var i = 0
-    while (i < k) { last = hash64Seeded(data, last); out(i) = last; i += 1 }
-  }
-
-  override def hash32Into(data: Array[Byte], k: Int, out: Array[Int]): Unit = {
-    var last = Init32
-    var i = 0
-    while (i < k) { last = hash32Seeded(data, last); out(i) = last; i += 1 }
-  }
+  override protected def seed64(data: Array[Byte]): Long = Init64
+  override protected def seed32(data: Array[Byte]): Int = Init32
 }
 
 object Fnv1Kernel extends FnvKernelBase {

@@ -17,13 +17,16 @@ import graft.core.ByteOps._
   * Default seed is the input length; multi-hash is chained with
   * seed_0 = length (`HsiehSuperFastHash.java:91-113`).
   */
-object HsiehKernel extends HashKernel64 {
+object HsiehKernel extends ChainedKernel {
   private val LeftShift = Array(0, 10, 11, 16, 43, 42, 43, 48)
   private val RightShift = Array(0, 1, 17, 11, 49, 33, 49, 43)
 
   override def name: String = "hsieh"
 
-  def hash64Seeded(data: Array[Byte], seed: Long): Long = {
+  override protected def seed64(data: Array[Byte]): Long = data.length.toLong
+  override protected def seed32(data: Array[Byte]): Int = data.length
+
+  override def hash64Seeded(data: Array[Byte], seed: Long): Long = {
     val len = data.length
     var h = seed
     var i = 0
@@ -61,7 +64,7 @@ object HsiehKernel extends HashKernel64 {
     h
   }
 
-  def hash32Seeded(data: Array[Byte], seed: Int): Int = {
+  override def hash32Seeded(data: Array[Byte], seed: Int): Int = {
     val len = data.length
     var h = seed
     val rem = len & 3
@@ -89,46 +92,5 @@ object HsiehKernel extends HashKernel64 {
     h ^= h << 25
     h += h >> 6
     h
-  }
-
-  override def hash64(data: Array[Byte]): Long = hash64Seeded(data, data.length.toLong)
-  override def hash32(data: Array[Byte]): Int = hash32Seeded(data, data.length)
-
-  override def hash64K(data: Array[Byte], k: Int): Array[Long] = {
-    requireK(k)
-    val out = new Array[Long](k)
-    var last = data.length.toLong
-    var i = 0
-    while (i < k) {
-      last = hash64Seeded(data, last)
-      out(i) = last
-      i += 1
-    }
-    out
-  }
-
-  override def hash32K(data: Array[Byte], k: Int): Array[Int] = {
-    requireK(k)
-    val out = new Array[Int](k)
-    var last = data.length
-    var i = 0
-    while (i < k) {
-      last = hash32Seeded(data, last)
-      out(i) = last
-      i += 1
-    }
-    out
-  }
-
-  override def hash64Into(data: Array[Byte], k: Int, out: Array[Long]): Unit = {
-    var last = data.length.toLong
-    var i = 0
-    while (i < k) { last = hash64Seeded(data, last); out(i) = last; i += 1 }
-  }
-
-  override def hash32Into(data: Array[Byte], k: Int, out: Array[Int]): Unit = {
-    var last = data.length
-    var i = 0
-    while (i < k) { last = hash32Seeded(data, last); out(i) = last; i += 1 }
   }
 }

@@ -16,13 +16,13 @@ import graft.core.ByteOps._
   *
   * Multi-hash scheme: seed-by-index (`JenkinsHash.java:55-77,97-114`).
   */
-object JenkinsKernel extends HashKernel64 {
+object JenkinsKernel extends SeedByIndexKernel {
   final val GoldenRatio = 0x9e3779b97f4a7c13L
   final val Init32 = 0xdeadbeef
 
   override def name: String = "jenkins"
 
-  def hash64Seeded(data: Array[Byte], level: Long): Long = {
+  override def hash64Seeded(data: Array[Byte], level: Long): Long = {
     var a = level
     var b = level
     var c = GoldenRatio
@@ -77,7 +77,7 @@ object JenkinsKernel extends HashKernel64 {
     c
   }
 
-  def hash32Seeded(data: Array[Byte], level: Int): Int = {
+  override def hash32Seeded(data: Array[Byte], level: Int): Int = {
     var a = Init32 + (data.length << 2) + level
     var b = a
     var c = a
@@ -120,28 +120,5 @@ object JenkinsKernel extends HashKernel64 {
     b ^= a; b -= rotateInt(a, 14)
     c ^= b; c -= rotateInt(b, 24)
     c
-  }
-
-  override def hash64(data: Array[Byte]): Long = hash64Seeded(data, 0L)
-  override def hash32(data: Array[Byte]): Int = hash32Seeded(data, 0)
-
-  override def hash64K(data: Array[Byte], k: Int): Array[Long] = {
-    requireK(k)
-    Array.tabulate(k)(i => hash64Seeded(data, i.toLong))
-  }
-
-  override def hash32K(data: Array[Byte], k: Int): Array[Int] = {
-    requireK(k)
-    Array.tabulate(k)(i => hash32Seeded(data, i))
-  }
-
-  override def hash64Into(data: Array[Byte], k: Int, out: Array[Long]): Unit = {
-    var i = 0
-    while (i < k) { out(i) = hash64Seeded(data, i.toLong); i += 1 }
-  }
-
-  override def hash32Into(data: Array[Byte], k: Int, out: Array[Int]): Unit = {
-    var i = 0
-    while (i < k) { out(i) = hash32Seeded(data, i); i += 1 }
   }
 }

@@ -16,7 +16,7 @@ import graft.core.ByteOps._
   * Murmur64 as its file-format hash (`file/impl/Calculations.java:42-47`)
   * and its default Bloom hash (`cmd/mkblm.java:42`).
   */
-object Murmur2Kernel extends HashKernel64 {
+object Murmur2Kernel extends SeedByIndexKernel {
   final val M64 = 0xc6a4a7935bd1e995L
   final val R64 = 47
   final val M32 = 0x5bd1e995
@@ -26,7 +26,7 @@ object Murmur2Kernel extends HashKernel64 {
 
   override def name: String = "murmur2"
 
-  def hash64Seeded(data: Array[Byte], seed: Long): Long = {
+  override def hash64Seeded(data: Array[Byte], seed: Long): Long = {
     val len = data.length
     var h = seed ^ len
     var i = 0
@@ -50,7 +50,7 @@ object Murmur2Kernel extends HashKernel64 {
     h
   }
 
-  def hash32Seeded(data: Array[Byte], seed: Int): Int = {
+  override def hash32Seeded(data: Array[Byte], seed: Int): Int = {
     val len = data.length
     var h = seed ^ len
     var i = 0
@@ -72,28 +72,5 @@ object Murmur2Kernel extends HashKernel64 {
     h *= M32
     h ^= h >> R32F2
     h
-  }
-
-  override def hash64(data: Array[Byte]): Long = hash64Seeded(data, 0L)
-  override def hash32(data: Array[Byte]): Int = hash32Seeded(data, 0)
-
-  override def hash64K(data: Array[Byte], k: Int): Array[Long] = {
-    requireK(k)
-    Array.tabulate(k)(i => hash64Seeded(data, i.toLong))
-  }
-
-  override def hash32K(data: Array[Byte], k: Int): Array[Int] = {
-    requireK(k)
-    Array.tabulate(k)(i => hash32Seeded(data, i))
-  }
-
-  override def hash64Into(data: Array[Byte], k: Int, out: Array[Long]): Unit = {
-    var i = 0
-    while (i < k) { out(i) = hash64Seeded(data, i.toLong); i += 1 }
-  }
-
-  override def hash32Into(data: Array[Byte], k: Int, out: Array[Int]): Unit = {
-    var i = 0
-    while (i < k) { out(i) = hash32Seeded(data, i); i += 1 }
   }
 }

@@ -33,31 +33,21 @@ object Sha1PrngKernel extends HashKernel64 {
   override def hash32(data: Array[Byte]): Int =
     ByteOps.condenseBytesIntoInt(digest(data))
 
-  override def hash64K(data: Array[Byte], k: Int): Array[Long] = {
-    requireK(k)
-    val seed = hash64(data)
-    val r = prng(seed)
-    val out = new Array[Long](k)
-    out(0) = seed
-    var i = 1
-    while (i < k) {
-      out(i) = r.nextLong()
-      i += 1
+  override def hash64Into(data: Array[Byte], k: Int, out: Array[Long]): Unit =
+    if (k > 0) {
+      val seed = hash64(data)
+      val r = prng(seed)
+      out(0) = seed
+      var i = 1
+      while (i < k) { out(i) = r.nextLong(); i += 1 }
     }
-    out
-  }
 
-  override def hash32K(data: Array[Byte], k: Int): Array[Int] = {
-    requireK(k)
-    val seed = hash64(data)
-    val r = prng(seed)
-    val out = new Array[Int](k)
-    out(0) = ((seed >> 32).toInt) | seed.toInt
-    var i = 1
-    while (i < k) {
-      out(i) = r.nextInt()
-      i += 1
+  override def hash32Into(data: Array[Byte], k: Int, out: Array[Int]): Unit =
+    if (k > 0) {
+      val seed = hash64(data)
+      val r = prng(seed)
+      out(0) = ((seed >> 32).toInt) | seed.toInt
+      var i = 1
+      while (i < k) { out(i) = r.nextInt(); i += 1 }
     }
-    out
-  }
 }

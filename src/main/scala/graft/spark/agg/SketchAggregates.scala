@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.hash.HashKernels
+import graft.core.hash.{HashKernel64, HashKernels, SeededHashKernel}
 import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch, Mergeable, SketchFormat, TDigestSketch}
 
 /** Sketch-building aggregate functions, one per sketch family.
@@ -40,6 +40,20 @@ private[spark] object ValueBytes {
       s"$prettyName cannot sketch values of type ${other.catalogString}")
   }
 
+  /** The kernel name resolves to a kernel, one with an explicit-seed form
+    * when `seeded`; otherwise the failure names it and lists the known ones. */
+  def checkKernel(prettyName: String, kernelName: String, seeded: Boolean = false): TypeCheckResult = {
+    val fits = (k: HashKernel64) => !seeded || k.isInstanceOf[SeededHashKernel]
+    HashKernels.get(kernelName) match {
+      case Some(k) if fits(k) => TypeCheckResult.TypeCheckSuccess
+      case found =>
+        val why = if (found.isEmpty) "unknown hash kernel" else "no seeded form for hash kernel"
+        val kind = if (seeded) "seeded hash kernels" else "hash kernels"
+        TypeCheckResult.TypeCheckFailure(s"$prettyName: $why '$kernelName'; known $kind: " +
+          HashKernels.all.filter(fits).map(_.name).mkString(", "))
+    }
+  }
+
   def checkNumeric(prettyName: String, dt: DataType): TypeCheckResult = dt match {
     case _: NumericType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
@@ -57,7 +71,9 @@ private[spark] object ValueBytes {
     case other => throw new IllegalStateException(s"unsupported sketch input type $other")
   }
 
-  private def longBytes(v: Long): Array[Byte] = {
+  /** A value's canonical 8-byte big-endian bytes; generated code calls it
+    * too (`GraftHashExpression.bytesCode`). */
+  def longBytes(v: Long): Array[Byte] = {
     val out = new Array[Byte](8)
     var i = 0
     while (i < 8) { out(i) = (v >>> (56 - 8 * i)).toByte; i += 1 }
@@ -106,6 +122,17 @@ abstract class SketchAgg[S <: Mergeable[S]] extends TypedImperativeAggregate[S] 
   override def deserialize(bytes: Array[Byte]): S = format.deserialize(bytes)
 }
 
+/** A sketch aggregate that hashes its values with a named kernel; the name
+  * resolves at analysis, so a bad one fails the query before any job. */
+abstract class HashedSketchAgg[S <: Mergeable[S]] extends SketchAgg[S] {
+  def kernelName: String
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val k = ValueBytes.checkKernel(prettyName, kernelName)
+    if (k.isFailure) k else ValueBytes.checkSketchable(prettyName, child.dataType)
+  }
+}
+
 /** `bloom_sketch(value, maxSize, bitsPerItem)` — reference-semantics Bloom. */
 case class BloomAgg(
     child: Expression,
@@ -115,11 +142,9 @@ case class BloomAgg(
     longHash: Boolean = true,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends SketchAgg[BloomSketch] {
+    extends HashedSketchAgg[BloomSketch] {
 
   override protected def format: SketchFormat[BloomSketch] = BloomSketch
-  override def checkInputDataTypes(): TypeCheckResult =
-    ValueBytes.checkSketchable(prettyName, child.dataType)
   override def prettyName: String = "bloom_sketch"
 
   override def createAggregationBuffer(): BloomSketch =
@@ -146,11 +171,9 @@ case class HllAgg(
     kernelName: String = "murmur2",
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends SketchAgg[HllSketch] {
+    extends HashedSketchAgg[HllSketch] {
 
   override protected def format: SketchFormat[HllSketch] = HllSketch
-  override def checkInputDataTypes(): TypeCheckResult =
-    ValueBytes.checkSketchable(prettyName, child.dataType)
   override def prettyName: String = "hll_sketch"
 
   override def createAggregationBuffer(): HllSketch =
@@ -183,12 +206,12 @@ case class CmsAgg(
     weightExpr: Option[Expression] = None,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends SketchAgg[CmsSketch] {
+    extends HashedSketchAgg[CmsSketch] {
 
   override protected def format: SketchFormat[CmsSketch] = CmsSketch
   override def children: Seq[Expression] = child +: weightExpr.toSeq
   override def checkInputDataTypes(): TypeCheckResult = {
-    val k = ValueBytes.checkSketchable(prettyName, child.dataType)
+    val k = super.checkInputDataTypes()
     if (k.isFailure) k else ValueBytes.checkWeight(prettyName, weightExpr)
   }
   override def prettyName: String =

@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.hash.{HashKernel64, HashKernels}
+import graft.core.hash.{HashKernel64, HashKernels, SeededHashKernel}
+import graft.spark.agg.ValueBytes
 
 /** Per-row hash projections over the engine's kernels — the Spark face of
   * the reference's `LongHash` SPI (`LongHash.java:24-48`). These are
@@ -22,12 +22,23 @@ import graft.core.hash.{HashKernel64, HashKernels}
   * bigint column and `bloom_might_contain` over the same column agree on
   * the hashed bytes.
   */
-trait GraftHashExpression { self: Expression =>
+trait GraftHashExpression extends Expression {
   def kernelName: String
+
+  /** The operand type checks, run once the kernel name has resolved. */
+  protected def checkOperands(): TypeCheckResult
+
+  /** Whether the expression calls the kernel's explicit-seed form. */
+  protected def seeded: Boolean = false
+
+  final override def checkInputDataTypes(): TypeCheckResult = {
+    val k = ValueBytes.checkKernel(prettyName, kernelName, seeded)
+    if (k.isFailure) k else checkOperands()
+  }
 
   /** sketchable types accepted for hashed operands (see ValueBytes). */
   protected final def checkHashable(dt: DataType, pos: String): TypeCheckResult =
-    graft.spark.agg.ValueBytes.checkSketchable(prettyName, dt) match {
+    ValueBytes.checkSketchable(prettyName, dt) match {
       case TypeCheckResult.TypeCheckSuccess => TypeCheckResult.TypeCheckSuccess
       case _ => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires a string, binary, integral, date or boolean " +
@@ -41,41 +52,33 @@ trait GraftHashExpression { self: Expression =>
 
   @transient protected final lazy val kernel: HashKernel64 = HashKernels(kernelName)
 
+  /** The explicit-seed form; checkInputDataTypes has made sure it exists. */
+  @transient protected final lazy val seededKernel: SeededHashKernel =
+    kernel.asInstanceOf[SeededHashKernel]
+
   protected final def childBytes(value: Any, dt: DataType): Array[Byte] =
-    graft.spark.agg.ValueBytes.toBytes(value, dt)
+    ValueBytes.toBytes(value, dt)
 
   /** Codegen snippet turning the child's generated value into byte[]
     * (mirror of ValueBytes.toBytes over codegen's physical types). */
   protected final def bytesCode(childValue: String, dt: DataType): String = dt match {
     case StringType => s"$childValue.getBytes()"
     case BinaryType => childValue
-    case LongType | TimestampType =>
-      s"graft.spark.expr.ValueCanon.longBE($childValue)"
-    case IntegerType | DateType | ShortType | ByteType =>
-      s"graft.spark.expr.ValueCanon.longBE((long) $childValue)"
-    case BooleanType =>
-      s"graft.spark.expr.ValueCanon.longBE($childValue ? 1L : 0L)"
+    case LongType | TimestampType => s"$LongBytes($childValue)"
+    case IntegerType | DateType | ShortType | ByteType => s"$LongBytes((long) $childValue)"
+    case BooleanType => s"$LongBytes($childValue ? 1L : 0L)"
     case other => throw new IllegalStateException(s"unsupported input type $other")
   }
-}
 
-/** Static canonicalizer callable from generated code: integral values
-  * hash as 8-byte big-endian (the ValueBytes rule). Top-level object =>
-  * Scala emits a static forwarder `ValueCanon.longBE` for codegen. */
-object ValueCanon {
-  def longBE(v: Long): Array[Byte] = {
-    val out = new Array[Byte](8)
-    var i = 0
-    while (i < 8) { out(i) = (v >>> (56 - 8 * i)).toByte; i += 1 }
-    out
-  }
+  // the static forwarder Scala emits for the top-level object's method
+  private final val LongBytes = "graft.spark.agg.ValueBytes.longBytes"
 }
 
 /** `graft_hash64(input)` — the kernel's default-seed 64-bit code. */
 case class GraftHash64(child: Expression, kernelName: String)
     extends UnaryExpression with GraftHashExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = checkHashable(child.dataType, "first")
+  override protected def checkOperands(): TypeCheckResult = checkHashable(child.dataType, "first")
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = s"graft_hash64_$kernelName"
@@ -96,7 +99,7 @@ case class GraftHash64(child: Expression, kernelName: String)
 case class GraftHash32(child: Expression, kernelName: String)
     extends UnaryExpression with GraftHashExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = checkHashable(child.dataType, "first")
+  override protected def checkOperands(): TypeCheckResult = checkHashable(child.dataType, "first")
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = s"graft_hash32_$kernelName"
@@ -114,12 +117,13 @@ case class GraftHash32(child: Expression, kernelName: String)
 }
 
 /** `graft_hash64_seeded(input, seed)` — explicit-seed Murmur-style hash;
-  * only kernels with a seeded form support this (murmur2, jenkins, cwow
-  * use seed-by-index; fnv/hsieh chain, where `seed` is the chain state). */
+  * only a [[SeededHashKernel]] supports this (murmur2, jenkins, cwow
+  * use seed-by-index; fnv/hsieh chain, where `seed` is the chain state),
+  * and any other kernel name fails analysis. */
 case class GraftHash64Seeded(left: Expression, right: Expression, kernelName: String)
     extends BinaryExpression with GraftHashExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
+  override protected def checkOperands(): TypeCheckResult = {
     val first = checkHashable(left.dataType, "first")
     if (first.isFailure) first else checkExact(right.dataType, LongType, "second")
   }
@@ -127,26 +131,16 @@ case class GraftHash64Seeded(left: Expression, right: Expression, kernelName: St
   override def nullIntolerant: Boolean = true
   override def prettyName: String = s"graft_hash64_seeded_$kernelName"
 
-  def compute(data: Array[Byte], seed: Long): Long = seeded(data, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("seededExpr", this, classOf[GraftHash64Seeded].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.compute(${bytesCode(a, left.dataType)}, $b)")
-  }
-
-  @transient private lazy val seeded: (Array[Byte], Long) => Long = kernel match {
-    case graft.core.hash.Murmur2Kernel => graft.core.hash.Murmur2Kernel.hash64Seeded
-    case graft.core.hash.JenkinsKernel => graft.core.hash.JenkinsKernel.hash64Seeded
-    case graft.core.hash.CWowKernel => graft.core.hash.CWowKernel.hash64Seeded
-    case graft.core.hash.Fnv1Kernel => graft.core.hash.Fnv1Kernel.hash64Seeded
-    case graft.core.hash.Fnv1aKernel => graft.core.hash.Fnv1aKernel.hash64Seeded
-    case graft.core.hash.HsiehKernel => graft.core.hash.HsiehKernel.hash64Seeded
-    case other =>
-      throw new IllegalArgumentException(s"kernel ${other.name} has no seeded form")
-  }
+  override protected def seeded: Boolean = true
 
   override protected def nullSafeEval(input: Any, seed: Any): Any =
-    seeded(childBytes(input, left.dataType), seed.asInstanceOf[Long])
+    seededKernel.hash64Seeded(childBytes(input, left.dataType), seed.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernelRef = ctx.addReferenceObj("kernel", seededKernel, classOf[SeededHashKernel].getName)
+    defineCodeGen(ctx, ev,
+      (a, b) => s"$kernelRef.hash64Seeded(${bytesCode(a, left.dataType)}, $b)")
+  }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftHash64Seeded =
     copy(left = l, right = r)
@@ -158,7 +152,7 @@ case class GraftHash64Seeded(left: Expression, right: Expression, kernelName: St
 case class GraftHash32Seeded(left: Expression, right: Expression, kernelName: String)
     extends BinaryExpression with GraftHashExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
+  override protected def checkOperands(): TypeCheckResult = {
     val first = checkHashable(left.dataType, "first")
     if (first.isFailure) first else checkExact(right.dataType, IntegerType, "second")
   }
@@ -166,26 +160,16 @@ case class GraftHash32Seeded(left: Expression, right: Expression, kernelName: St
   override def nullIntolerant: Boolean = true
   override def prettyName: String = s"graft_hash32_seeded_$kernelName"
 
-  def compute(data: Array[Byte], seed: Int): Int = seeded(data, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("seeded32Expr", this, classOf[GraftHash32Seeded].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.compute(${bytesCode(a, left.dataType)}, $b)")
-  }
-
-  @transient private lazy val seeded: (Array[Byte], Int) => Int = kernel match {
-    case graft.core.hash.Murmur2Kernel => graft.core.hash.Murmur2Kernel.hash32Seeded
-    case graft.core.hash.JenkinsKernel => graft.core.hash.JenkinsKernel.hash32Seeded
-    case graft.core.hash.CWowKernel => graft.core.hash.CWowKernel.hash32Seeded
-    case graft.core.hash.Fnv1Kernel => graft.core.hash.Fnv1Kernel.hash32Seeded
-    case graft.core.hash.Fnv1aKernel => graft.core.hash.Fnv1aKernel.hash32Seeded
-    case graft.core.hash.HsiehKernel => graft.core.hash.HsiehKernel.hash32Seeded
-    case other =>
-      throw new IllegalArgumentException(s"kernel ${other.name} has no seeded form")
-  }
+  override protected def seeded: Boolean = true
 
   override protected def nullSafeEval(input: Any, seed: Any): Any =
-    seeded(childBytes(input, left.dataType), seed.asInstanceOf[Int])
+    seededKernel.hash32Seeded(childBytes(input, left.dataType), seed.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernelRef = ctx.addReferenceObj("kernel", seededKernel, classOf[SeededHashKernel].getName)
+    defineCodeGen(ctx, ev,
+      (a, b) => s"$kernelRef.hash32Seeded(${bytesCode(a, left.dataType)}, $b)")
+  }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftHash32Seeded =
     copy(left = l, right = r)
@@ -197,7 +181,7 @@ case class GraftHash32Seeded(left: Expression, right: Expression, kernelName: St
 case class GraftHash32K(left: Expression, right: Expression, kernelName: String)
     extends BinaryExpression with GraftHashExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
+  override protected def checkOperands(): TypeCheckResult = {
     val first = checkHashable(left.dataType, "first")
     if (first.isFailure) first else checkExact(right.dataType, IntegerType, "second")
   }
@@ -227,7 +211,7 @@ case class GraftHash32K(left: Expression, right: Expression, kernelName: String)
 case class GraftHash64K(left: Expression, right: Expression, kernelName: String)
     extends BinaryExpression with GraftHashExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
+  override protected def checkOperands(): TypeCheckResult = {
     val first = checkHashable(left.dataType, "first")
     if (first.isFailure) first else checkExact(right.dataType, IntegerType, "second")
   }

@@ -2,7 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.hash.{HashKernels, Murmur2Kernel}
+import graft.core.hash.{HashKernels, Murmur2Kernel, SeededHashKernel}
 import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch}
 import graft.spark.functions._
 
@@ -33,6 +33,82 @@ class GraftFunctionsSpec extends SparkTestBase {
     // specific golden via SQL registration
     val viaSql = spark.sql("SELECT graft_hash64('hello')").head().getLong(0)
     assert(viaSql === 0x40965054df2bc5ddL)
+
+    // the seeded and k-vector expressions over every seeded kernel, through
+    // whole-stage codegen and then the interpreted path, against the kernel
+    // called directly (range-derived columns, so nothing folds at planning)
+    val seededKernels = HashKernels.all.collect { case k: SeededHashKernel => k }
+    assert(seededKernels.map(_.name) ===
+      Seq("murmur2", "jenkins", "fnv1", "fnv1a", "hsieh", "cwow"))
+    val s = F.element_at(F.array(inputs.map(F.lit): _*), (F.col("id") + 1).cast("int"))
+    val seed = F.col("id") * 1000003L - 7L
+    def seededDf = spark.range(inputs.length).select(F.col("id") +: seededKernels.flatMap(k => Seq(
+      graft_hash64_seeded(s, seed, k.name), graft_hash32_seeded(s, seed.cast("int"), k.name),
+      graft_hash64_k(s, F.lit(5), k.name), graft_hash32_k(s, F.lit(5), k.name))): _*)
+    def matchesKernels(df: org.apache.spark.sql.DataFrame, codegen: Boolean): Unit = {
+      val fused = df.queryExecution.executedPlan
+        .exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+      assert(fused === codegen, df.queryExecution.executedPlan.toString)
+      df.collect().foreach { r =>
+        val id = r.getLong(0)
+        val bytes = graft.core.ByteOps.utf8(inputs(id.toInt))
+        val sd = id * 1000003L - 7L
+        seededKernels.zipWithIndex.foreach { case (k, j) =>
+          val c = 1 + 4 * j
+          val at = s"${k.name}(${inputs(id.toInt)}) codegen=$codegen"
+          assert(r.getLong(c) === k.hash64Seeded(bytes, sd), s"seeded64 $at")
+          assert(r.getInt(c + 1) === k.hash32Seeded(bytes, sd.toInt), s"seeded32 $at")
+          assert(r.getSeq[Long](c + 2) === k.hash64K(bytes, 5).toSeq, s"k64 $at")
+          assert(r.getSeq[Int](c + 3) === k.hash32K(bytes, 5).toSeq, s"k32 $at")
+        }
+      }
+    }
+    matchesKernels(seededDf, codegen = true)
+    withConf("spark.sql.codegen.wholeStage", "false") {
+      withConf("spark.sql.codegen.factoryMode", "NO_CODEGEN") {
+        matchesKernels(seededDf, codegen = false)
+      }
+    }
+  }
+
+  test("an unknown kernel, or a seeded call on a kernel with no seeded form, fails analysis") {
+    val df = Seq("a", "b").toDF("s")
+    df.createOrReplaceTempView("kernel_names")
+    val known = HashKernels.all.map(_.name).mkString(", ")
+    val seeded = HashKernels.all.collect { case k: SeededHashKernel => k.name }.mkString(", ")
+    val group = "kernel-name-analysis"
+    def failsAnalysis(kernel: String, names: String)(q: => Any): Unit = {
+      spark.sparkContext.setJobGroup(group, group)
+      val e = try intercept[org.apache.spark.sql.AnalysisException](q)
+        finally spark.sparkContext.clearJobGroup()
+      assert(e.getMessage.contains(s"'$kernel'") && e.getMessage.contains(names), e.getMessage)
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+        s"a job started before the bad kernel name '$kernel' failed")
+    }
+    // Column form
+    failsAnalysis("nope", known)(df.select(graft_hash64(F.col("s"), "nope")).collect())
+    failsAnalysis("nope", known)(df.select(graft_hash32_k(F.col("s"), F.lit(2), "nope")).collect())
+    failsAnalysis("sha1prng", seeded)(
+      df.select(graft_hash64_seeded(F.col("s"), F.lit(1L), "sha1prng")).collect())
+    failsAnalysis("sha1prng", seeded)(
+      df.select(graft_hash32_seeded(F.col("s"), F.lit(1), "sha1prng")).collect())
+    failsAnalysis("nope", known)(df.agg(bloom_sketch(F.col("s"), 100, 8, "nope")).collect())
+    failsAnalysis("nope", known)(df.agg(hll_sketch(F.col("s"), 12, "nope")).collect())
+    failsAnalysis("nope", known)(df.agg(cms_sketch(F.col("s"), 3, 64, "nope")).collect())
+    failsAnalysis("nope", known)(
+      df.agg(cms_sketch_weighted(F.col("s"), F.lit(2), 3, 64, "nope")).collect())
+    // SQL form
+    def sql(select: String): Unit = spark.sql(s"SELECT $select FROM kernel_names").collect()
+    failsAnalysis("nope", known)(sql("graft_hash64(s, 'nope')"))
+    failsAnalysis("sha1prng", seeded)(sql("graft_hash64_seeded(s, 1L, 'sha1prng')"))
+    failsAnalysis("sha1prng", seeded)(sql("graft_hash32_seeded(s, 1, 'sha1prng')"))
+    failsAnalysis("nope", known)(sql("bloom_sketch(s, 100, 8, 'nope')"))
+    failsAnalysis("nope", known)(sql("hll_sketch(s, 12, 'nope')"))
+    failsAnalysis("nope", known)(sql("cms_sketch(s, 3, 64, 'nope')"))
+    // sha1prng keeps its unseeded forms
+    assert(df.select(graft_hash64_k(F.col("s"), F.lit(3), "sha1prng")).collect().length === 2)
+    assert(spark.sql("SELECT bloom_sketch(s, 100, 8, 'sha1prng') FROM kernel_names")
+      .head().getAs[Array[Byte]](0).nonEmpty)
   }
 
   test("hash expressions stay inside whole-stage codegen") {
@@ -48,7 +124,7 @@ class GraftFunctionsSpec extends SparkTestBase {
   test("integral/date/boolean inputs hash their canonical 8-byte-BE bytes (eval + codegen)") {
     def be(v: Long): Array[Byte] =
       (0 until 8).map(i => (v >>> (56 - 8 * i)).toByte).toArray
-    // codegen path: a non-literal column goes through bytesCode/ValueCanon
+    // codegen path: a non-literal column goes through bytesCode/ValueBytes.longBytes
     val df = spark.range(5).select(
       F.col("id"),
       graft_hash64(F.col("id")).as("hL"),
