@@ -1,8 +1,7 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.jobs.JobSession
 
 /** Physical-plan audit of every driver query: prints
   * `.explain("formatted")` so pushdown (`PushedFilters`), column pruning
@@ -17,13 +16,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = JobSession.local("graft-plan-audit", 4, logLevel = "ERROR")
     // scalastyle:off println
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }

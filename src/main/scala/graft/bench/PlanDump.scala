@@ -3,8 +3,9 @@ package graft.bench
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+
+import graft.jobs.JobSession
 
 /** Dump `.explain("formatted")` output for named SparkEntry queries to
   * files — the optimization-round evidence artifact under plans/r06.
@@ -23,15 +24,9 @@ object PlanDump {
     val suffix = args(1)
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = JobSession.local("graft-plan-dump", cpus,
+      extras = Seq("spark.sql.adaptive.enabled" -> "true"))
     val wanted =
       if (args(2) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(',').toSeq

@@ -1,8 +1,7 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.jobs.JobSession
 
 /** Time ONE driver query repeatedly — the profiling companion to Bench
   * (which times the whole suite once): steady-state numbers for a single
@@ -15,15 +14,9 @@ object QueryTime {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = JobSession.local(s"graft-query-time-$name", cpus,
+      extras = Seq("spark.sql.adaptive.enabled" -> "true"))
     val fn = SparkEntry.queries(name)
     // scalastyle:off println
     (1 to iters).foreach { i =>

@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import graft.data.DocCorpusGen
+import graft.jobs.JobSession
 
 /** Scale-evidence harness (VERDICT r4 "Next round #1"): the heavy
   * dedup/CC/ANN queries executed unmodified over DocCorpusGen corpora at
@@ -113,19 +114,10 @@ object ScaleEvidence {
     }
   }
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scale-evidence-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("GRAFT_SPLIT_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(cores: Int): SparkSession =
+    JobSession.local(s"graft-scale-evidence-$cores", cores, extras = Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.files.maxPartitionBytes" -> sys.env.getOrElse("GRAFT_SPLIT_BYTES", "16m")))
 
   def main(args: Array[String]): Unit = {
     val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap

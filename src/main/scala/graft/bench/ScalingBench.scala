@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{SparkSession, functions => F}
 
 import graft.data.{TranscriptGen, TranscriptTable}
+import graft.jobs.JobSession
 import graft.spark.functions._
 
 /** The north rule's scaling-efficiency evidence: the same sketch-build
@@ -31,22 +32,13 @@ object ScalingBench {
   private def jfmt(v: Double, p: String): String =
     String.format(java.util.Locale.ROOT, p, Double.box(v))
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+  private def session(cores: Int): SparkSession =
+    JobSession.local(s"graft-scaling-$cores", cores, extras = Seq(
+      "spark.sql.adaptive.enabled" -> "true",
       // finer input splits: part-aligned files alone give only
       // cores/128 waves and the Zipf-skewed tail leaves ~35% of threads
       // idle at the end of the scan stage (measured by stack sampling)
-      .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("GRAFT_SPLIT_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.sql.files.maxPartitionBytes" -> sys.env.getOrElse("GRAFT_SPLIT_BYTES", "16m")))
 
   /** The timed workload: the SketchBuildJob aggregation shape — per-part
     * partial sketches then a global merge. Bloom is per-part (bank

@@ -121,12 +121,20 @@ object ProbeJob {
   * insertion-order contract (`RigorousHashFileTestBase.java:74-90`) maps
   * to transcripts. */
 object DumpJob {
+  /** Writes `df` in (conv_id, turn_idx) order as tab-separated text:
+    * a field holding a tab, newline or quote is quoted, an empty string is
+    * `""` and a null is an empty field. Leading and trailing whitespace
+    * is kept (Spark's CSV writer trims it by default). */
+  def dump(df: DataFrame, out: String): Unit =
+    df.orderBy("conv_id", "turn_idx")
+      .write.mode("overwrite").option("sep", "\t")
+      .option("ignoreLeadingWhiteSpace", "false").option("ignoreTrailingWhiteSpace", "false")
+      .csv(out)
+
   def main(args: Array[String]): Unit = {
     val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val spark = JobSession.get("graft-dump")
-    spark.read.parquet(argMap("--input"))
-      .orderBy("conv_id", "turn_idx")
-      .write.mode("overwrite").option("sep", "\t").csv(argMap("--out"))
+    dump(spark.read.parquet(argMap("--input")), argMap("--out"))
     spark.stop()
   }
 }

@@ -38,12 +38,14 @@ object ProfileJob {
 
   private val Quantiles = Seq("p01" -> 0.01, "p25" -> 0.25, "p50" -> 0.5,
     "p75" -> 0.75, "p99" -> 0.99)
+  /** SpaceSaving capacity for a string column's top 10 values */
+  private val HhCapacity = 64
+  private val HistBins = 10
 
   /** The SINGLE aggregation frame the profiler collects — exposed so
     * the plan-shape test audits the REAL plan (a test-local lookalike
     * cannot fail when this builder regresses to multiple passes). */
-  private[jobs] def profileFrame(df: DataFrame, hllP: Int = 14, kllK: Int = 200,
-      hhCapacity: Int = 64): DataFrame = {
+  private[jobs] def profileFrame(df: DataFrame): DataFrame = {
     val fields = df.schema.fields
     val aggs = Seq.newBuilder[Column]
     aggs += F.count(F.lit(1)).as("__rows")
@@ -52,15 +54,15 @@ object ProfileJob {
       aggs += F.count(F.when(c.isNull, 1)).as(s"${f.name}__nulls")
       f.dataType match {
         case StringType =>
-          aggs += hll_sketch(c, hllP).as(s"${f.name}__hll")
-          aggs += hh_sketch(c, hhCapacity).as(s"${f.name}__hh")
+          aggs += hll_sketch(c).as(s"${f.name}__hll")
+          aggs += hh_sketch(c, HhCapacity).as(s"${f.name}__hh")
         case LongType | IntegerType | ShortType | ByteType =>
-          aggs += hll_sketch(c, hllP).as(s"${f.name}__hll")
-          aggs += kll_sketch(c, kllK).as(s"${f.name}__kll")
+          aggs += hll_sketch(c).as(s"${f.name}__hll")
+          aggs += kll_sketch(c).as(s"${f.name}__kll")
         case DoubleType | FloatType =>
-          aggs += kll_sketch(c, kllK).as(s"${f.name}__kll")
+          aggs += kll_sketch(c).as(s"${f.name}__kll")
         case TimestampType | DateType =>
-          aggs += hll_sketch(c, hllP).as(s"${f.name}__hll")
+          aggs += hll_sketch(c).as(s"${f.name}__hll")
         case _ => // nested/binary/etc: nulls + row count only
       }
     }
@@ -68,10 +70,9 @@ object ProfileJob {
     df.agg(built.head, built.tail: _*)
   }
 
-  def profile(df: DataFrame, hllP: Int = 14, kllK: Int = 200,
-      hhCapacity: Int = 64, histBins: Int = 10): TableProfile = {
+  def profile(df: DataFrame): TableProfile = {
     val fields = df.schema.fields
-    val row: Row = profileFrame(df, hllP, kllK, hhCapacity).head()
+    val row: Row = profileFrame(df).head()
 
     def bytesOf(name: String): Option[Array[Byte]] =
       if (row.schema.fieldNames.contains(name)) Some(row.getAs[Array[Byte]](name)) else None
@@ -91,7 +92,7 @@ object ProfileJob {
         // yields NaN quantiles, which are not valid JSON
         quantiles = kll.filter(_.n > 0).map(sk =>
           Quantiles.map { case (n, q) => n -> sk.quantile(q) }.toMap),
-        histogram = kll.filter(_.n > 0).map(_.histogram(histBins)),
+        histogram = kll.filter(_.n > 0).map(_.histogram(HistBins)),
         topValues = hh.map(_.topK(10).map { case (v, cnt, _) => (v, cnt) }))
     }
     TableProfile(rows, cols.toSeq)

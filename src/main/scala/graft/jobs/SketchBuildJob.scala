@@ -11,6 +11,7 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructFiel
 
 import graft.data.TranscriptTable
 import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch}
+import graft.spark.SketchDefaults
 import graft.spark.functions._
 
 /** The engine's flagship batch job (the `mkblm`/`mkhf` analog at cluster
@@ -69,10 +70,6 @@ object SketchBuildJob {
   case class Config(
       input: String,
       out: String,
-      hllP: Int = 14,
-      cmsDepth: Int = 5,
-      cmsWidth: Int = 1 << 14,
-      kllK: Int = 200,
       /** PER-PART Bloom capacity — the bank design: each part's filter is
         * sized for its own conv population and probed by routing on
         * part_id, never OR-merged into one global-capacity filter (at
@@ -80,13 +77,21 @@ object SketchBuildJob {
         * parts) per unit and the router is a hash). */
       bloomPerPartCapacity: Long = 1 << 16,
       bloomBpi: Int = 16,
-      hhCapacity: Int = 64,
       /** cap on parts processed in one run (incremental operation /
         * kill-resume testing); None = all pending */
       maxPartsPerRun: Option[Int] = None) {
     require(maxPartsPerRun.forall(_ >= 1),
       s"maxPartsPerRun must be at least 1, got ${maxPartsPerRun.get}")
+
+    /** The HLL precision and KLL size every build uses, for error bounds. */
+    def hllP: Int = SketchDefaults.HllP
+    def kllK: Int = SketchDefaults.KllK
   }
+
+  /** SpaceSaving capacity of the per-part top tools: the tool vocabulary
+    * is small, so 64 slots keep the counts exact at a quarter of the
+    * library default's buffer. */
+  private val HhToolCapacity = 64
 
   case class PartMetrics(partId: Int, rows: Long, estConvs: Long)
 
@@ -212,11 +217,11 @@ object SketchBuildJob {
         F.count(F.lit(1)).as("rows"),
         hll_sketch(F.col("conv_id"), c.hllP).as("hll_conv"),
         hll_sketch(F.col("tool"), c.hllP).as("hll_tool"),
-        cms_sketch(roleTool, c.cmsDepth, c.cmsWidth).as("cms_roletool"),
+        cms_sketch(roleTool).as("cms_roletool"),
         kll_sketch(F.length(F.col("text")), c.kllK).as("kll_textlen"),
         // SpaceSaving top tools: exact whenever capacity covers the tool
         // vocabulary (the common case), bounded-error otherwise
-        hh_sketch(F.col("tool"), c.hhCapacity).as("hh_tool"),
+        hh_sketch(F.col("tool"), HhToolCapacity).as("hh_tool"),
         bloom_sketch(F.col("conv_id"), c.bloomPerPartCapacity, c.bloomBpi).as("bloom_conv"))
       .select(PartSchema.fieldNames.map(F.col): _*)
   }

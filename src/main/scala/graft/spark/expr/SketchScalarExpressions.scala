@@ -8,8 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch, TDigestSketch}
+import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch, Mergeable,
+  SketchFormat, TDigestSketch}
 import graft.spark.agg.ValueBytes
+import graft.spark.expr.SketchTypeChecks.{asDouble, binaryFirst, exact, hashable, numeric}
 
 /** Scalar query expressions over serialized sketch buffers (BinaryType).
   *
@@ -63,34 +65,144 @@ private[expr] final class SketchCache[S <: AnyRef](deser: Array[Byte] => S) exte
   }
 }
 
+/** The two-argument queries over a serialized sketch (`left`, BINARY):
+  * the base checks the sketch type, caches the deserialized sketch on the
+  * bytes' identity and generates a call to the subclass's `query`, typed
+  * to its answer so a `Boolean`, `Long` or `Double` comes back unboxed;
+  * `boxed` forwards the interpreted path (an override of an `Any` result
+  * would add a boxing bridge that Janino rejects as ambiguous). `format`
+  * is an abstract member, as in `SketchAgg`, for Java serialization. */
+abstract class SketchQuery[S <: Mergeable[S]] extends BinaryExpression {
+  protected def format: SketchFormat[S]
+  def checkArgument(dt: DataType): TypeCheckResult
+  protected def boxed(bytes: Array[Byte], arg: Any): Any
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val f = binaryFirst(prettyName, left.dataType)
+    if (f.isFailure) f else checkArgument(right.dataType)
+  }
+  override def nullIntolerant: Boolean = true
+
+  @transient private lazy val cache = new SketchCache(format.deserialize)
+  protected def sketch(bytes: Array[Byte]): S = cache.get(bytes)
+
+  override protected def nullSafeEval(bytes: Any, arg: Any): Any =
+    boxed(bytes.asInstanceOf[Array[Byte]], arg)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sketchQuery", this, getClass.getName)
+    nullSafeCodeGen(ctx, ev, (s, a) => s"${ev.value} = $ref.query($s, $a);")
+  }
+}
+
 /** `bloom_might_contain(sketchBytes, value)` — true iff all k bits set;
   * mirrors the reference `BloomFilter.contains` (`BloomFilter.java:167-191`). */
 case class BloomMightContain(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
-    if (f.isFailure) f else SketchTypeChecks.hashable(prettyName, right.dataType)
-  }
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
+    extends SketchQuery[BloomSketch] {
+  override protected def format: SketchFormat[BloomSketch] = BloomSketch
   override def prettyName: String = "bloom_might_contain"
+  override def dataType: DataType = BooleanType
+  override def checkArgument(dt: DataType): TypeCheckResult = hashable(prettyName, dt)
+  def query(bytes: Array[Byte], value: Any): Boolean =
+    sketch(bytes).contains(ValueBytes.toBytes(value, right.dataType))
+  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+}
 
-  @transient private lazy val cache = new SketchCache(BloomSketch.deserialize)
+/** `cms_estimate(sketchBytes, key)` — upper-bounded frequency estimate. */
+case class CmsEstimate(left: Expression, right: Expression) extends SketchQuery[CmsSketch] {
+  override protected def format: SketchFormat[CmsSketch] = CmsSketch
+  override def prettyName: String = "cms_estimate"
+  override def dataType: DataType = LongType
+  override def checkArgument(dt: DataType): TypeCheckResult = hashable(prettyName, dt)
+  def query(bytes: Array[Byte], key: Any): Long =
+    sketch(bytes).estimate(ValueBytes.toBytes(key, right.dataType))
+  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+}
 
-  def contains(sketchBytes: Array[Byte], value: Any): Boolean =
-    cache.get(sketchBytes).contains(ValueBytes.toBytes(value, right.dataType))
+/** `kll_quantile(sketchBytes, q)` — value at quantile q in [0,1]. */
+case class KllQuantile(left: Expression, right: Expression) extends SketchQuery[KllSketch] {
+  override protected def format: SketchFormat[KllSketch] = KllSketch
+  override def prettyName: String = "kll_quantile"
+  override def dataType: DataType = DoubleType
+  override def checkArgument(dt: DataType): TypeCheckResult = numeric(prettyName, dt)
+  def query(bytes: Array[Byte], q: Any): Double = sketch(bytes).quantile(asDouble(q))
+  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+}
 
-  override protected def nullSafeEval(sketch: Any, value: Any): Any =
-    contains(sketch.asInstanceOf[Array[Byte]], value)
+/** `kll_rank(sketchBytes, v)` — approximate count of items <= v. */
+case class KllRank(left: Expression, right: Expression) extends SketchQuery[KllSketch] {
+  override protected def format: SketchFormat[KllSketch] = KllSketch
+  override def prettyName: String = "kll_rank"
+  override def dataType: DataType = LongType
+  override def checkArgument(dt: DataType): TypeCheckResult = numeric(prettyName, dt)
+  def query(bytes: Array[Byte], v: Any): Long = sketch(bytes).rank(asDouble(v))
+  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomExpr", this, classOf[BloomMightContain].getName)
-    nullSafeCodeGen(ctx, ev, (s, v) => s"${ev.value} = $ref.contains($s, $v);")
-  }
+/** `kll_histogram(sketchBytes, nBins)` — equal-width histogram over the
+  * sketch's [min, max] as array<struct<lo, hi, cnt>>; each bin count
+  * carries the eps*n rank error (binning: `KllSketch.histogram`). */
+case class KllHistogram(left: Expression, right: Expression) extends SketchQuery[KllSketch] {
+  override protected def format: SketchFormat[KllSketch] = KllSketch
+  override def prettyName: String = "kll_histogram"
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("lo", DoubleType, nullable = false),
+    StructField("hi", DoubleType, nullable = false),
+    StructField("cnt", LongType, nullable = false))), containsNull = false)
+  override def checkArgument(dt: DataType): TypeCheckResult = exact(prettyName, dt, IntegerType)
+  def query(bytes: Array[Byte], nBins: Any): GenericArrayData =
+    new GenericArrayData(sketch(bytes).histogram(nBins.asInstanceOf[Int])
+      .map { case (lo, hi, cnt) => InternalRow(lo, hi, cnt) }.toArray[Any])
+  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+}
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomMightContain =
-    copy(left = l, right = r)
+/** `tdigest_quantile(sketchBytes, q)` — value at quantile q in [0,1]. */
+case class TDigestQuantile(left: Expression, right: Expression)
+    extends SketchQuery[TDigestSketch] {
+  override protected def format: SketchFormat[TDigestSketch] = TDigestSketch
+  override def prettyName: String = "tdigest_quantile"
+  override def dataType: DataType = DoubleType
+  override def checkArgument(dt: DataType): TypeCheckResult = numeric(prettyName, dt)
+  def query(bytes: Array[Byte], q: Any): Double = sketch(bytes).quantile(asDouble(q))
+  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+}
+
+/** `hh_topk(sketchBytes, k)` — tracked items best-first as array<struct<
+  * item, cnt, lower_bound>>: SpaceSaving guarantees trueCount in
+  * [lower_bound, cnt], EXACT when the capacity covered every key. */
+case class HhTopK(left: Expression, right: Expression) extends SketchQuery[HeavyHittersSketch] {
+  override protected def format: SketchFormat[HeavyHittersSketch] = HeavyHittersSketch
+  override def prettyName: String = "hh_topk"
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("item", StringType, nullable = false),
+    StructField("cnt", LongType, nullable = false),
+    StructField("lower_bound", LongType, nullable = false))), containsNull = false)
+  override def checkArgument(dt: DataType): TypeCheckResult = exact(prettyName, dt, IntegerType)
+  def query(bytes: Array[Byte], k: Any): GenericArrayData =
+    new GenericArrayData(sketch(bytes).topK(k.asInstanceOf[Int]).map {
+      case (item, cnt, lower) => InternalRow(UTF8String.fromString(item), cnt, lower)
+    }.toArray[Any])
+  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
+}
+
+/** `hh_estimate(sketchBytes, item)` — upper-bound frequency of an item
+  * (the sketch's minimum counter when untracked). */
+case class HhEstimate(left: Expression, right: Expression)
+    extends SketchQuery[HeavyHittersSketch] {
+  override protected def format: SketchFormat[HeavyHittersSketch] = HeavyHittersSketch
+  override def prettyName: String = "hh_estimate"
+  override def dataType: DataType = LongType
+  override def checkArgument(dt: DataType): TypeCheckResult = exact(prettyName, dt, StringType)
+  def query(bytes: Array[Byte], item: Any): Long = sketch(bytes).estimate(item.toString)
+  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
 /** `hll_estimate(sketchBytes)` — rounded distinct-count estimate. */
@@ -159,166 +271,6 @@ case class HllUnion(left: Expression, right: Expression)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): HllUnion =
-    copy(left = l, right = r)
-}
-
-/** `cms_estimate(sketchBytes, key)` — upper-bounded frequency estimate. */
-case class CmsEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
-    if (f.isFailure) f else SketchTypeChecks.hashable(prettyName, right.dataType)
-  }
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cms_estimate"
-
-  @transient private lazy val cache = new SketchCache(CmsSketch.deserialize)
-
-  def estimate(sketchBytes: Array[Byte], value: Any): Long =
-    cache.get(sketchBytes).estimate(ValueBytes.toBytes(value, right.dataType))
-
-  override protected def nullSafeEval(sketch: Any, value: Any): Any =
-    estimate(sketch.asInstanceOf[Array[Byte]], value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cmsExpr", this, classOf[CmsEstimate].getName)
-    nullSafeCodeGen(ctx, ev, (s, v) => s"${ev.value} = $ref.estimate($s, $v);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsEstimate =
-    copy(left = l, right = r)
-}
-
-/** `kll_quantile(sketchBytes, q)` — value at quantile q in [0,1]. */
-case class KllQuantile(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
-    if (f.isFailure) f else SketchTypeChecks.numeric(prettyName, right.dataType)
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "kll_quantile"
-
-  @transient private lazy val cache = new SketchCache(KllSketch.deserialize)
-
-  def quantile(sketchBytes: Array[Byte], q: Double): Double =
-    cache.get(sketchBytes).quantile(q)
-
-  override protected def nullSafeEval(sketch: Any, q: Any): Any =
-    quantile(sketch.asInstanceOf[Array[Byte]], SketchTypeChecks.asDouble(q))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("kllExpr", this, classOf[KllQuantile].getName)
-    nullSafeCodeGen(ctx, ev, (s, q) =>
-      s"${ev.value} = $ref.quantile($s, graft.spark.expr.SketchTypeChecks.asDouble($q));")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllQuantile =
-    copy(left = l, right = r)
-}
-
-/** `kll_rank(sketchBytes, v)` — approximate count of items <= v. */
-case class KllRank(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
-    if (f.isFailure) f else SketchTypeChecks.numeric(prettyName, right.dataType)
-  }
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "kll_rank"
-
-  @transient private lazy val cache = new SketchCache(KllSketch.deserialize)
-
-  def rank(sketchBytes: Array[Byte], v: Double): Long = cache.get(sketchBytes).rank(v)
-
-  override protected def nullSafeEval(sketch: Any, v: Any): Any =
-    rank(sketch.asInstanceOf[Array[Byte]], SketchTypeChecks.asDouble(v))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("kllRankExpr", this, classOf[KllRank].getName)
-    nullSafeCodeGen(ctx, ev, (s, v) =>
-      s"${ev.value} = $ref.rank($s, graft.spark.expr.SketchTypeChecks.asDouble($v));")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllRank =
-    copy(left = l, right = r)
-}
-
-/** `hh_topk(sketchBytes, k)` — tracked items best-first as
-  * array<struct<item, cnt, lower_bound>>: SpaceSaving guarantees
-  * trueCount in [lower_bound, cnt], and counts are EXACT whenever the
-  * sketch's capacity covered the distinct-key count (no evictions). */
-case class HhTopK(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
-    if (f.isFailure) f else SketchTypeChecks.exact(prettyName, right.dataType, IntegerType)
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("item", StringType, nullable = false),
-    StructField("cnt", LongType, nullable = false),
-    StructField("lower_bound", LongType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hh_topk"
-
-  @transient private lazy val cache = new SketchCache(HeavyHittersSketch.deserialize)
-
-  override protected def nullSafeEval(sketch: Any, k: Any): Any = {
-    val rows = cache.get(sketch.asInstanceOf[Array[Byte]])
-      .topK(k.asInstanceOf[Int])
-      .map { case (item, cnt, lower) =>
-        InternalRow(UTF8String.fromString(item), cnt, lower)
-      }
-    new GenericArrayData(rows.toArray[Any])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hhTopKExpr", this, classOf[HhTopK].getName)
-    nullSafeCodeGen(ctx, ev, (s, k) =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.GenericArrayData) $ref.topKRows($s, $k);")
-  }
-
-  def topKRows(sketchBytes: Array[Byte], k: Int): GenericArrayData =
-    nullSafeEval(sketchBytes, k).asInstanceOf[GenericArrayData]
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): HhTopK =
-    copy(left = l, right = r)
-}
-
-/** `hh_estimate(sketchBytes, item)` — upper-bound frequency of an item
-  * (the sketch's minimum counter when untracked). */
-case class HhEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
-    if (f.isFailure) f else SketchTypeChecks.exact(prettyName, right.dataType, StringType)
-  }
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hh_estimate"
-
-  @transient private lazy val cache = new SketchCache(HeavyHittersSketch.deserialize)
-
-  def estimate(sketchBytes: Array[Byte], item: UTF8String): Long =
-    cache.get(sketchBytes).estimate(item.toString)
-
-  override protected def nullSafeEval(sketch: Any, item: Any): Any =
-    estimate(sketch.asInstanceOf[Array[Byte]], item.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hhEstExpr", this, classOf[HhEstimate].getName)
-    nullSafeCodeGen(ctx, ev, (s, v) => s"${ev.value} = $ref.estimate($s, $v);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): HhEstimate =
     copy(left = l, right = r)
 }
 
@@ -464,76 +416,4 @@ case class BloomBankContains(first: Expression, second: Expression, third: Expre
 object BloomBankContains {
   /** Sentinel for a routed part with no built filter yet. */
   case object Missing
-}
-
-/** `kll_histogram(sketchBytes, nBins)` — equal-width histogram over the
-  * sketch's [min, max] value range as array<struct<lo, hi, cnt>>; bin
-  * counts come from rank differences, so each carries the sketch's eps*n
-  * rank-error bound. The profiling primitive: one pass builds the
-  * sketch, the histogram materializes from the O(k) summary. */
-case class KllHistogram(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
-    if (f.isFailure) f else SketchTypeChecks.exact(prettyName, right.dataType, IntegerType)
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("lo", DoubleType, nullable = false),
-    StructField("hi", DoubleType, nullable = false),
-    StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "kll_histogram"
-
-  @transient private lazy val cache = new SketchCache(KllSketch.deserialize)
-
-  def histogram(sketchBytes: Array[Byte], nBins: Int): GenericArrayData = {
-    // binning lives on KllSketch.histogram — one implementation shared
-    // with ProfileJob; this wrapper only adapts to InternalRow
-    val bins = cache.get(sketchBytes).histogram(nBins)
-    new GenericArrayData(bins.map { case (lo, hi, cnt) =>
-      InternalRow(lo, hi, cnt)
-    }.toArray[Any])
-  }
-
-  override protected def nullSafeEval(sketch: Any, nBins: Any): Any =
-    histogram(sketch.asInstanceOf[Array[Byte]], nBins.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("kllHistExpr", this, classOf[KllHistogram].getName)
-    nullSafeCodeGen(ctx, ev, (s, b) => s"${ev.value} = $ref.histogram($s, $b);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllHistogram =
-    copy(left = l, right = r)
-}
-
-/** `tdigest_quantile(sketchBytes, q)` — value at quantile q in [0,1]. */
-case class TDigestQuantile(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
-    if (f.isFailure) f else SketchTypeChecks.numeric(prettyName, right.dataType)
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "tdigest_quantile"
-
-  @transient private lazy val cache = new SketchCache(TDigestSketch.deserialize)
-
-  def quantile(sketchBytes: Array[Byte], q: Double): Double =
-    cache.get(sketchBytes).quantile(q)
-
-  override protected def nullSafeEval(sketch: Any, q: Any): Any =
-    quantile(sketch.asInstanceOf[Array[Byte]], SketchTypeChecks.asDouble(q))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tdExpr", this, classOf[TDigestQuantile].getName)
-    nullSafeCodeGen(ctx, ev, (s, q) =>
-      s"${ev.value} = $ref.quantile($s, graft.spark.expr.SketchTypeChecks.asDouble($q));")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TDigestQuantile =
-    copy(left = l, right = r)
 }
