@@ -191,15 +191,6 @@ object SketchBuildJob {
       }
   }
 
-  def completedParts(out: String, conf: Configuration = new Configuration()): Set[Int] =
-    replay(out, conf).parts.keySet
-
-  /** The routing modulus recorded at build time — probeBank must route
-    * with the TABLE part count, never with however many parts happen to
-    * be completed so far. */
-  def recordedNParts(out: String, conf: Configuration = new Configuration()): Option[Int] =
-    replay(out, conf).nParts
-
   /** Writes log entry `version` of the bank at `out`; fails if it exists (`create`
     * without overwrite, atomic on HDFS: one writer per `out`). */
   private[jobs] def commit(out: String, version: Long, entry: JsonNode,
@@ -413,7 +404,8 @@ object SketchBuildJob {
     * across `saltBuckets` reducers — level 2 unions the partial sketches
     * per conv_id. Associative merge makes this byte-identical to the
     * unsalted single-level aggregation; the test asserts exactly that. */
-  def perConvQuantiles(df: DataFrame, saltBuckets: Int, kllK: Int = 200): DataFrame = {
+  def perConvQuantiles(df: DataFrame, saltBuckets: Int,
+      kllK: Int = SketchDefaults.KllK): DataFrame = {
     val salt = F.pmod(murmur64(F.concat_ws(":", F.col("conv_id"),
       F.col("turn_idx").cast("string"))), F.lit(saltBuckets.toLong))
     df.withColumn("salt", salt)

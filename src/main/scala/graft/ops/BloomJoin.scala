@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 
 import graft.sketch.HllSketch
+import graft.spark.SketchDefaults.HllP
 import graft.spark.functions.{bloom_might_contain, bloom_sketch, hll_distinct}
 
 /** Bloom-accelerated exact semi/anti joins — the reference's `ckblm`
@@ -72,8 +73,6 @@ object BloomJoin {
     keys.agg(bloom_sketch(F.col(smallKey), n, bitsPerItem, kernel))
       .head().getAs[Array[Byte]](0)
   }
-
-  private final val HllP = 14
 
   /** `large` joined to the build keys, `distinct` or as they are: the
     * exact tail of both operators. A using-column join puts the key

@@ -76,11 +76,14 @@ object Similarity {
     math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
   }
 
+  /** The default SRP hyperplane seed; LSH table `t` uses `SrpSeed + t`. */
+  val SrpSeed = 42L
+
   /** SRP signature as a long column (bits <= 63) — a native Catalyst
     * expression (SrpSignatureExpr), codegen'd, reading the columnar
     * vector in place; the hyperplane matrix is regenerated
     * deterministically and cached per executor, never shipped. */
-  def srpSignature(vec: Column, bits: Int = 16, seed: Long = 42L): Column = {
+  def srpSignature(vec: Column, bits: Int = 16, seed: Long = SrpSeed): Column = {
     // bits = 0: constant signature — the exhaustive (single-bucket)
     // regime in which SRP-bucketed pipelines provably equal brute force
     require(bits >= 0 && bits <= 63, s"bits must be in [0,63], got $bits")
@@ -199,7 +202,7 @@ object Similarity {
       k: Int, bits: Int = 12, tables: Int = 4, nflip: Int = 0): DataFrame = {
     val c = corpus
       .withColumn("__sigs", F.array((0 until tables).map(t =>
-        srpSignature(F.col(corpusVec), bits, 42L + t)): _*))
+        srpSignature(F.col(corpusVec), bits, SrpSeed + t)): _*))
       .withColumn("__table", F.explode(F.sequence(F.lit(0), F.lit(tables - 1))))
       .withColumn("__bucket", F.element_at(F.col("__sigs"), F.col("__table") + 1))
       .select(F.col("__table"), F.col("__bucket"), F.col(corpusId), F.col(corpusVec))
@@ -208,8 +211,7 @@ object Similarity {
     // bucket first, then the nflip perturbations)
     val q = F.broadcast(queries)
       .withColumn("__probes", F.array((0 until tables).map(t =>
-        (if (nflip == 0) F.array(srpSignature(F.col(queryVec), bits, 42L + t))
-         else srpMultiprobe(F.col(queryVec), bits, 42L + t, nflip))): _*))
+        srpMultiprobe(F.col(queryVec), bits, SrpSeed + t, nflip)): _*))
       .withColumn("__table", F.explode(F.sequence(F.lit(0), F.lit(tables - 1))))
       .withColumn("__bucket",
         F.explode(F.element_at(F.col("__probes"), F.col("__table") + 1)))

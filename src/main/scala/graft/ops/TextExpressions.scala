@@ -1,15 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.ByteOps
 import graft.core.hash.Murmur2Kernel
+import graft.ops.KernelChecks.{argument, first, string}
 import graft.sketch.HllSketch
+import graft.spark.expr.{KernelBinary, KernelUnary}
 
 /** Text-analysis primitives for training-data pipelines, built on the
   * engine's hash kernels. All are deterministic pure functions of the
@@ -263,69 +264,40 @@ object TextOps {
   }
 }
 
-private[ops] trait StringInOps { self: Expression =>
-  protected final def checkStringIn(dt: DataType, pretty: String): TypeCheckResult = dt match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$pretty requires a string argument, got ${other.catalogString}")
-  }
-}
-
 /** `simhash64(text)` */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = checkStringIn(child.dataType, prettyName)
+case class SimHash64(child: Expression) extends KernelUnary[UTF8String] {
+  override def checkInputDataTypes(): TypeCheckResult = string(prettyName, child)
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash64"
   def compute(s: UTF8String): Long = TextOps.simhash64(s.toString)
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashExpr", this, classOf[SimHash64].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  override protected def boxed(s: UTF8String): Any = compute(s)
   override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
 }
 
 /** `simhash_ngram64(text, width)` — order-sensitive n-gram SimHash (the
   * production near-dup signature; see TextOps.simhashNgram64). */
-case class SimHashNgram64(child: Expression, width: Int)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (width < 1) TypeCheckResult.TypeCheckFailure(s"$prettyName width must be >= 1")
-    else checkStringIn(child.dataType, prettyName)
-  }
+case class SimHashNgram64(child: Expression, width: Int) extends KernelUnary[UTF8String] {
+  override def checkInputDataTypes(): TypeCheckResult =
+    first(KernelChecks.width(prettyName, width), string(prettyName, child))
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash_ngram64"
   def compute(s: UTF8String): Long = TextOps.simhashNgram64(s.toString, width)
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashNgramExpr", this, classOf[SimHashNgram64].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  override protected def boxed(s: UTF8String): Any = compute(s)
   override protected def withNewChildInternal(c: Expression): SimHashNgram64 = copy(child = c)
 }
 
 /** `minhash_sig(text, numHashes, shingleSize)` -> array<long>; the two
   * size arguments must be foldable ints. */
 case class MinHashSig(child: Expression, numHashes: Int, shingleSize: Int)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (numHashes < 1 || shingleSize < 1)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName sizes must be >= 1")
-    else checkStringIn(child.dataType, prettyName)
-  }
+    extends KernelUnary[UTF8String] {
+  override def checkInputDataTypes(): TypeCheckResult = first(
+    argument(numHashes >= 1 && shingleSize >= 1, s"$prettyName sizes must be >= 1"),
+    string(prettyName, child))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_sig"
   def compute(s: UTF8String): GenericArrayData =
     new GenericArrayData(TextOps.minhashSignature(s.toString, numHashes, shingleSize))
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashExpr", this, classOf[MinHashSig].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  override protected def boxed(s: UTF8String): Any = compute(s)
   override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
 }
 
@@ -333,97 +305,59 @@ case class MinHashSig(child: Expression, numHashes: Int, shingleSize: Int)
   * n-gram identity hashes (see TextOps.shingleHashes; `tokenFallback`
   * mirrors the jaccardShingles short-document token-set rule). */
 case class ShingleHashes(child: Expression, width: Int,
-    tokenFallback: Boolean = false)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (width < 1) TypeCheckResult.TypeCheckFailure(s"$prettyName width must be >= 1")
-    else checkStringIn(child.dataType, prettyName)
-  }
+    tokenFallback: Boolean = false) extends KernelUnary[UTF8String] {
+  override def checkInputDataTypes(): TypeCheckResult =
+    first(KernelChecks.width(prettyName, width), string(prettyName, child))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "shingle_hashes"
   def compute(s: UTF8String): GenericArrayData =
     new GenericArrayData(TextOps.shingleHashes(s.toString, width, tokenFallback))
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingleHashExpr", this, classOf[ShingleHashes].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  override protected def boxed(s: UTF8String): Any = compute(s)
   override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
 }
 
 /** `gram_hashes(text, width)` -> array<long>: positional n-gram identity
   * hashes, one per token position, duplicates kept (TextOps.gramHashes). */
-case class GramHashes(child: Expression, width: Int)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (width < 1) TypeCheckResult.TypeCheckFailure(s"$prettyName width must be >= 1")
-    else checkStringIn(child.dataType, prettyName)
-  }
+case class GramHashes(child: Expression, width: Int) extends KernelUnary[UTF8String] {
+  override def checkInputDataTypes(): TypeCheckResult =
+    first(KernelChecks.width(prettyName, width), string(prettyName, child))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "gram_hashes"
   def compute(s: UTF8String): GenericArrayData =
     new GenericArrayData(TextOps.gramHashes(s.toString, width))
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gramHashExpr", this, classOf[GramHashes].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  override protected def boxed(s: UTF8String): Any = compute(s)
   override protected def withNewChildInternal(c: Expression): GramHashes = copy(child = c)
 }
 
 /** `fingerprint64(text)` — rolling Karp-Rabin token fingerprint. */
-case class Fingerprint64(child: Expression)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = checkStringIn(child.dataType, prettyName)
+case class Fingerprint64(child: Expression) extends KernelUnary[UTF8String] {
+  override def checkInputDataTypes(): TypeCheckResult = string(prettyName, child)
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "fingerprint64"
   def compute(s: UTF8String): Long = TextOps.fingerprint(s.toString)
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("fpExpr", this, classOf[Fingerprint64].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  override protected def boxed(s: UTF8String): Any = compute(s)
   override protected def withNewChildInternal(c: Expression): Fingerprint64 = copy(child = c)
 }
 
 /** `lang_id(text)` — heuristic language code. */
-case class LangId(child: Expression)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = checkStringIn(child.dataType, prettyName)
+case class LangId(child: Expression) extends KernelUnary[UTF8String] {
+  override def checkInputDataTypes(): TypeCheckResult = string(prettyName, child)
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "lang_id"
-  def compute(s: UTF8String): UTF8String =
-    UTF8String.fromString(TextOps.langId(s.toString))
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("langExpr", this, classOf[LangId].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  def compute(s: UTF8String): UTF8String = UTF8String.fromString(TextOps.langId(s.toString))
+  override protected def boxed(s: UTF8String): Any = compute(s)
   override protected def withNewChildInternal(c: Expression): LangId = copy(child = c)
 }
 
 /** `jaccard_shingles(a, b, size)` — exact token-shingle Jaccard. */
 case class JaccardShingles(left: Expression, right: Expression, shingleSize: Int)
-    extends BinaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = checkStringIn(left.dataType, prettyName)
-    if (f.isFailure) f else checkStringIn(right.dataType, prettyName)
-  }
+    extends KernelBinary[UTF8String, UTF8String] {
+  override def checkInputDataTypes(): TypeCheckResult = string(prettyName, left, right)
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "jaccard_shingles"
   def compute(a: UTF8String, b: UTF8String): Double =
     TextOps.jaccardShingles(a.toString, b.toString, shingleSize)
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jaccardExpr", this, classOf[JaccardShingles].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
-  }
+  override protected def boxed(a: UTF8String, b: UTF8String): Any = compute(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardShingles =
     copy(left = l, right = r)
 }

@@ -1,10 +1,89 @@
 package graft.ops
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+
+import graft.ops.KernelChecks.{argument, first}
+import graft.spark.expr.{KernelBinary, KernelUnary}
+
+/** What the vector kernels share: the input check, the element read,
+  * the dot product and the best-n selection. */
+private[ops] object Vectors {
+
+  /** Every vector column's check; `what` names the column in the message. */
+  def check(pretty: String, column: Expression, what: String = ""): TypeCheckResult =
+    column.dataType match {
+      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$pretty requires array<float> or array<double>$what, got ${other.catalogString}")
+    }
+
+  /** Element `d` as a double, read without a null check. */
+  @inline def raw(arr: ArrayData, d: Int, isFloat: Boolean): Double =
+    if (isFloat) arr.getFloat(d) else arr.getDouble(d)
+
+  /** Element `d` as a double; a null element reads as 0.0. */
+  @inline def elem(arr: ArrayData, d: Int, isFloat: Boolean): Double =
+    if (arr.isNullAt(d)) 0.0 else raw(arr, d, isFloat)
+
+  /** The sum of squares of `arr`'s elements as doubles. */
+  def sumSq(arr: ArrayData, isFloat: Boolean): Double = {
+    val n = arr.numElements()
+    var sum = 0.0
+    var d = 0
+    while (d < n) {
+      val x = elem(arr, d, isFloat)
+      sum += x * x
+      d += 1
+    }
+    sum
+  }
+
+  /** `row . arr` over the elements of `arr`, null elements skipped. */
+  def dot(row: Array[Double], arr: ArrayData, isFloat: Boolean): Double = {
+    val n = arr.numElements()
+    var sum = 0.0
+    var d = 0
+    while (d < n) {
+      if (!arr.isNullAt(d)) sum += row(d) * raw(arr, d, isFloat)
+      d += 1
+    }
+    sum
+  }
+
+  /** The indices of the `n` highest scores, best first, by an O(size * n)
+    * partial selection (n is small). Ties go to the lower index. A NaN or
+    * -Infinity score beats nothing, so when no untaken score beats
+    * -Infinity (an all-NaN input) the first untaken index is taken. */
+  def best(scores: Array[Double], n: Int): Array[Int] = {
+    val out = new Array[Int](n)
+    val taken = new Array[Boolean](scores.length)
+    var s = 0
+    while (s < n) {
+      var best = -1
+      var bestScore = Double.NegativeInfinity
+      var i = 0
+      while (i < scores.length) {
+        if (!taken(i) && scores(i) > bestScore) { best = i; bestScore = scores(i) }
+        i += 1
+      }
+      if (best == -1) { best = 0; while (taken(best)) best += 1 }
+      taken(best) = true
+      out(s) = best
+      s += 1
+    }
+    out
+  }
+}
+
+/** Mixed into every vector kernel: per child, whether its elements are
+  * floats (else doubles), read once from the analyzed type. */
+private[ops] trait VectorInputs { self: Expression =>
+  @transient protected lazy val floats: Array[Boolean] =
+    children.map(_.dataType.asInstanceOf[ArrayType].elementType == FloatType).toArray
+}
 
 /** `srp_signature(vec, bits, seed)` — signed-random-projection LSH
   * signature (Charikar 2002) as a native Catalyst expression: the signs
@@ -12,66 +91,38 @@ import org.apache.spark.sql.types._
   * probability of two vectors at angle theta is (1 - theta/pi)^bits.
   *
   * This is the hot projection of every embedding-dedup / ANN-LSH
-  * pipeline, so it must stay inside whole-stage codegen: `doGenCode`
-  * emits a direct call against a codegen reference object reading the
-  * columnar ArrayData in place — no UDF SerDe, no Seq materialization.
-  * Hyperplanes are counter-mode murmur Gaussians (Similarity.gaussian),
-  * regenerated deterministically per executor and cached per
-  * (seed, bits, dims) — nothing is shipped with the plan.
+  * pipeline, so it must stay inside whole-stage codegen: generated code
+  * calls `compute` through a reference object ([[KernelUnary]]) reading
+  * the columnar ArrayData in place — no UDF SerDe, no Seq
+  * materialization. Hyperplanes are counter-mode murmur Gaussians
+  * (Similarity.gaussian), regenerated deterministically per executor and
+  * cached per (seed, bits, dims) — nothing is shipped with the plan.
   */
 case class SrpSignatureExpr(child: Expression, bits: Int, seed: Long)
-    extends UnaryExpression {
+    extends KernelUnary[ArrayData] with VectorInputs {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    // bits = 0 is the EXHAUSTIVE regime: the signature is constantly 0,
-    // every vector lands in one bucket, and an LSH pipeline provably
-    // degenerates to all-pairs / brute force — the oracle-checkable
-    // configuration (see embedding_dups_exact / lsh_topk_exact)
-    if (bits < 0 || bits > 63)
-      return TypeCheckResult.TypeCheckFailure(s"$prettyName bits must be in [0,63], got $bits")
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> or array<double>, got ${other.catalogString}")
-    }
-  }
-
+  // bits = 0 is the EXHAUSTIVE regime: the signature is constantly 0,
+  // every vector lands in one bucket, and an LSH pipeline provably
+  // degenerates to all-pairs / brute force — the oracle-checkable
+  // configuration (see embedding_dups_exact / lsh_topk_exact)
+  override def checkInputDataTypes(): TypeCheckResult = first(
+    argument(bits >= 0 && bits <= 63, s"$prettyName bits must be in [0,63], got $bits"),
+    Vectors.check(prettyName, child))
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "srp_signature"
 
-  @transient private lazy val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  def signature(arr: ArrayData): Long = {
-    val dims = arr.numElements()
-    val planes = SrpPlanes.get(seed, bits, dims)
+  def compute(arr: ArrayData): Long = {
+    val planes = SrpPlanes.get(seed, bits, arr.numElements())
+    val isFloat = floats(0)
     var sig = 0L
     var b = 0
     while (b < bits) {
-      val row = planes(b)
-      var dot = 0.0
-      var d = 0
-      while (d < dims) {
-        if (!arr.isNullAt(d)) {
-          dot += row(d) * (if (isFloat) arr.getFloat(d) else arr.getDouble(d))
-        }
-        d += 1
-      }
-      if (dot >= 0) sig |= (1L << b)
+      if (Vectors.dot(planes(b), arr, isFloat) >= 0) sig |= (1L << b)
       b += 1
     }
     sig
   }
-
-  override protected def nullSafeEval(v: Any): Any = signature(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("srpExpr", this, classOf[SrpSignatureExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.signature($c)")
-  }
-
+  override protected def boxed(arr: ArrayData): Any = compute(arr)
   override protected def withNewChildInternal(c: Expression): SrpSignatureExpr =
     copy(child = c)
 }
@@ -85,36 +136,22 @@ case class SrpSignatureExpr(child: Expression, bits: Int, seed: Long)
   * The centroid matrix is a plan constant (IVF "training" happens before
   * plan construction, see Similarity.ivfTopK) shipped once per task via
   * the serialized expression — nlist x dims doubles, kilobytes at any
-  * sane nlist. Codegen'd through a reference object like
-  * [[SrpSignatureExpr]], so assignment stays inside whole-stage codegen.
+  * sane nlist. Codegen'd through a reference object ([[KernelUnary]]),
+  * so assignment stays inside whole-stage codegen.
   */
 case class IvfCellsExpr(child: Expression, centroids: Array[Array[Double]],
-    nprobe: Int) extends UnaryExpression {
+    nprobe: Int) extends KernelUnary[ArrayData] with VectorInputs {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (centroids.isEmpty)
-      return TypeCheckResult.TypeCheckFailure(s"$prettyName needs at least one centroid")
-    if (nprobe < 1 || nprobe > centroids.length)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName nprobe must be in [1, ${centroids.length}], got $nprobe")
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> or array<double>, got ${other.catalogString}")
-    }
-  }
-
+  override def checkInputDataTypes(): TypeCheckResult = first(
+    argument(centroids.nonEmpty, s"$prettyName needs at least one centroid"),
+    argument(nprobe >= 1 && nprobe <= centroids.length,
+      s"$prettyName nprobe must be in [1, ${centroids.length}], got $nprobe"),
+    Vectors.check(prettyName, child))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "ivf_cells"
 
-  @transient private lazy val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  def cells(arr: ArrayData): ArrayData = {
+  def compute(arr: ArrayData): ArrayData = {
     val dims = arr.numElements()
-    val n = centroids.length
     // a quantizer must not silently truncate: a mis-assigned cell
     // poisons every downstream recall/rerank with no visible error
     // (the PqEncodeExpr rule), and an over-long vector would later
@@ -123,57 +160,12 @@ case class IvfCellsExpr(child: Expression, centroids: Array[Array[Double]],
       throw new IllegalArgumentException(
         s"ivf_cells: vector has $dims dims, centroids expect ${centroids(0).length}")
     }
-    val dots = new Array[Double](n)
-    var c = 0
-    while (c < n) {
-      val row = centroids(c)
-      var dot = 0.0
-      var d = 0
-      while (d < dims) {
-        if (!arr.isNullAt(d)) {
-          dot += row(d) * (if (isFloat) arr.getFloat(d) else arr.getDouble(d))
-        }
-        d += 1
-      }
-      // a single NaN element poisons every dot; map to -Inf so the vector
-      // deterministically loses the ranking instead of crashing selection
-      dots(c) = if (dot != dot) Double.NegativeInfinity else dot
-      c += 1
-    }
-    // selection of the top nprobe by (dot desc, index asc): nprobe is
-    // small, so an O(n * nprobe) partial selection beats a full sort
-    val out = new Array[Int](nprobe)
-    val taken = new Array[Boolean](n)
-    var s = 0
-    while (s < nprobe) {
-      var best = -1
-      var bestDot = Double.NegativeInfinity
-      var i = 0
-      while (i < n) {
-        if (!taken(i) && dots(i) > bestDot) { best = i; bestDot = dots(i) }
-        i += 1
-      }
-      if (best == -1) {
-        // every remaining dot is -Infinity (all-NaN input): degrade to
-        // the first untaken cell rather than crash the query
-        var j = 0
-        while (taken(j)) j += 1
-        best = j
-      }
-      taken(best) = true
-      out(s) = best
-      s += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    // a NaN element poisons every dot, and a NaN dot beats nothing: the
+    // vector deterministically takes the first cells instead of crashing
+    val isFloat = floats(0)
+    ArrayData.toArrayData(Vectors.best(centroids.map(Vectors.dot(_, arr, isFloat)), nprobe))
   }
-
-  override protected def nullSafeEval(v: Any): Any = cells(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfExpr", this, classOf[IvfCellsExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.cells($c)")
-  }
-
+  override protected def boxed(arr: ArrayData): Any = compute(arr)
   override protected def withNewChildInternal(c: Expression): IvfCellsExpr =
     copy(child = c)
 }
@@ -200,74 +192,42 @@ case class IvfCellsExpr(child: Expression, centroids: Array[Array[Double]],
   * trace.
   */
 case class CosineSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends KernelBinary[ArrayData, ArrayData] with VectorInputs {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    Seq(left.dataType, right.dataType).foreach {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => ()
-      case other => return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> or array<double>, got ${other.catalogString}")
-    }
-    TypeCheckResult.TypeCheckSuccess
-  }
-
+  override def checkInputDataTypes(): TypeCheckResult =
+    first(Vectors.check(prettyName, left), Vectors.check(prettyName, right))
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "cosine_similarity"
 
-  @transient private lazy val leftFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  @transient private lazy val rightFloat: Boolean =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  /** x * y: a float multiply when both were floats, like zip_with (a
+    * float read as a double narrows back exactly) */
+  @inline private def mul(x: Double, xf: Boolean, y: Double, yf: Boolean): Double =
+    if (xf && yf) x.toFloat * y.toFloat else x * y
 
-  def cosine(a: ArrayData, b: ArrayData): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    if (na != nb) return 0.0 // incomparable dimensions
-    val n = na
+  def compute(a: ArrayData, b: ArrayData): Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return 0.0 // incomparable dimensions
+    val af = floats(0)
+    val bf = floats(1)
+    // one pass; each sum keeps its element order and its multiply
     var dot = 0.0
+    var sa = 0.0
+    var sb = 0.0
     var d = 0
     while (d < n) {
-      if (!a.isNullAt(d) && !b.isNullAt(d)) {
-        if (leftFloat && rightFloat) {
-          dot += a.getFloat(d) * b.getFloat(d) // float multiply, like zip_with
-        } else {
-          dot += (if (leftFloat) a.getFloat(d).toDouble else a.getDouble(d)) *
-            (if (rightFloat) b.getFloat(d).toDouble else b.getDouble(d))
-        }
-      }
-      d += 1
-    }
-    var sa = 0.0
-    d = 0
-    while (d < na) {
-      if (!a.isNullAt(d)) {
-        if (leftFloat) { val x = a.getFloat(d); sa += x * x }
-        else { val x = a.getDouble(d); sa += x * x }
-      }
-      d += 1
-    }
-    var sb = 0.0
-    d = 0
-    while (d < nb) {
-      if (!b.isNullAt(d)) {
-        if (rightFloat) { val x = b.getFloat(d); sb += x * x }
-        else { val x = b.getDouble(d); sb += x * x }
-      }
+      val aOk = !a.isNullAt(d)
+      val bOk = !b.isNullAt(d)
+      val x = if (aOk) Vectors.raw(a, d, af) else 0.0
+      val y = if (bOk) Vectors.raw(b, d, bf) else 0.0
+      if (aOk) sa += mul(x, af, x, af)
+      if (bOk) sb += mul(y, bf, y, bf)
+      if (aOk && bOk) dot += mul(x, af, y, bf)
       d += 1
     }
     val norm = math.sqrt(sa) * math.sqrt(sb)
     if (norm == 0.0) 0.0 else dot / norm
   }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cosExpr", this, classOf[CosineSimExpr].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.cosine($a, $b)")
-  }
-
+  override protected def boxed(a: ArrayData, b: ArrayData): Any = compute(a, b)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): CosineSimExpr = copy(left = l, right = r)
 }
@@ -279,81 +239,36 @@ case class CosineSimExpr(left: Expression, right: Expression)
   * true near neighbor most likely differs in). Probing these buckets
   * buys the recall of extra hash tables without building them: the
   * corpus is bucketed ONCE per table, only the (small, broadcast) query
-  * side fans out.
+  * side fans out. At `nflip = 0` a vector's list is
+  * `array(srp_signature(vec, bits, seed))`, bits 0 included, so
+  * `Similarity.lshTopK` probes through this expression alone.
   */
 case class SrpMultiprobeExpr(child: Expression, bits: Int, seed: Long, nflip: Int)
-    extends UnaryExpression {
+    extends KernelUnary[ArrayData] with VectorInputs {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (bits < 1 || bits > 63)
-      return TypeCheckResult.TypeCheckFailure(s"$prettyName bits must be in [1,63], got $bits")
-    if (nflip < 0 || nflip > bits)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName nflip must be in [0,$bits], got $nflip")
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> or array<double>, got ${other.catalogString}")
-    }
-  }
-
+  override def checkInputDataTypes(): TypeCheckResult = first(
+    argument(bits >= 0 && bits <= 63, s"$prettyName bits must be in [0,63], got $bits"),
+    argument(nflip >= 0 && nflip <= bits, s"$prettyName nflip must be in [0,$bits], got $nflip"),
+    Vectors.check(prettyName, child))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "srp_multiprobe"
 
-  @transient private lazy val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  def probes(arr: ArrayData): ArrayData = {
-    val dims = arr.numElements()
-    val planes = SrpPlanes.get(seed, bits, dims)
-    val dots = new Array[Double](bits)
+  def compute(arr: ArrayData): ArrayData = {
+    val planes = SrpPlanes.get(seed, bits, arr.numElements())
+    val isFloat = floats(0)
+    // the least-confident sides (smallest |dot|) score highest
+    val confidence = new Array[Double](bits)
     var sig = 0L
     var b = 0
     while (b < bits) {
-      val row = planes(b)
-      var dot = 0.0
-      var d = 0
-      while (d < dims) {
-        if (!arr.isNullAt(d)) {
-          dot += row(d) * (if (isFloat) arr.getFloat(d) else arr.getDouble(d))
-        }
-        d += 1
-      }
-      dots(b) = math.abs(dot)
+      val dot = Vectors.dot(planes(b), arr, isFloat)
+      confidence(b) = -math.abs(dot)
       if (dot >= 0) sig |= (1L << b)
       b += 1
     }
-    val out = new Array[Long](1 + nflip)
-    out(0) = sig
-    // partial selection of the nflip smallest |dot| bits (ties by bit
-    // index): nflip is small, O(bits * nflip) beats a sort
-    val taken = new Array[Boolean](bits)
-    var s = 0
-    while (s < nflip) {
-      var best = -1
-      var bestAbs = Double.PositiveInfinity
-      var i = 0
-      while (i < bits) {
-        if (!taken(i) && dots(i) < bestAbs) { best = i; bestAbs = dots(i) }
-        i += 1
-      }
-      if (best == -1) { var j = 0; while (taken(j)) j += 1; best = j }
-      taken(best) = true
-      out(s + 1) = sig ^ (1L << best)
-      s += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    ArrayData.toArrayData(sig +: Vectors.best(confidence, nflip).map(f => sig ^ (1L << f)))
   }
-
-  override protected def nullSafeEval(v: Any): Any = probes(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mpExpr", this, classOf[SrpMultiprobeExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.probes($c)")
-  }
-
+  override protected def boxed(arr: ArrayData): Any = compute(arr)
   override protected def withNewChildInternal(c: Expression): SrpMultiprobeExpr =
     copy(child = c)
 }
@@ -371,32 +286,20 @@ case class SrpMultiprobeExpr(child: Expression, bits: Int, seed: Long, nflip: In
   * The codebook tensor is a plan constant (training happens before plan
   * construction, [[graft.ops.Similarity.trainPq]]) of m x kc x dsub
   * doubles — kilobytes at sane settings. Codegen'd through a reference
-  * object like [[SrpSignatureExpr]]. A dimension mismatch fails loudly:
-  * an encoder silently mis-slicing blocks would poison every downstream
+  * object ([[KernelUnary]]). A dimension mismatch fails loudly: an
+  * encoder silently mis-slicing blocks would poison every downstream
   * score. */
 case class PqEncodeExpr(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends KernelUnary[ArrayData] with VectorInputs {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (codebooks.isEmpty || codebooks.exists(_.isEmpty))
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs at least one centroid per block")
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> or array<double>, got ${other.catalogString}")
-    }
-  }
-
+  override def checkInputDataTypes(): TypeCheckResult = first(
+    argument(codebooks.nonEmpty && !codebooks.exists(_.isEmpty),
+      s"$prettyName needs at least one centroid per block"),
+    Vectors.check(prettyName, child))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "pq_encode"
 
-  @transient private lazy val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  def encode(arr: ArrayData): ArrayData = {
+  def compute(arr: ArrayData): ArrayData = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
     val dims = arr.numElements()
@@ -404,14 +307,11 @@ case class PqEncodeExpr(child: Expression, codebooks: Array[Array[Array[Double]]
       throw new IllegalArgumentException(
         s"pq_encode: vector has $dims dims, codebooks expect ${m * dsub} ($m blocks x $dsub)")
     }
-    var normSq = 0.0
-    var d = 0
-    while (d < dims) {
-      val x = if (isFloat) arr.getFloat(d).toDouble else arr.getDouble(d)
-      normSq += x * x
-      d += 1
-    }
+    val isFloat = floats(0)
+    val normSq = Vectors.sumSq(arr, isFloat)
     val inv = if (normSq > 0.0) 1.0 / math.sqrt(normSq) else 0.0
+    // the normalized vector, read once: the centroid loop reads it kc times
+    val x = Array.tabulate(dims)(Vectors.elem(arr, _, isFloat) * inv)
     val out = new Array[Int](m)
     var b = 0
     while (b < m) {
@@ -424,9 +324,7 @@ case class PqEncodeExpr(child: Expression, codebooks: Array[Array[Array[Double]]
         var dist = 0.0
         var j = 0
         while (j < dsub) {
-          val x = (if (isFloat) arr.getFloat(b * dsub + j).toDouble
-                   else arr.getDouble(b * dsub + j)) * inv
-          val diff = x - cent(j)
+          val diff = x(b * dsub + j) - cent(j)
           dist += diff * diff
           j += 1
         }
@@ -436,16 +334,9 @@ case class PqEncodeExpr(child: Expression, codebooks: Array[Array[Array[Double]]
       out(b) = best
       b += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    ArrayData.toArrayData(out)
   }
-
-  override protected def nullSafeEval(v: Any): Any = encode(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqEncExpr", this, classOf[PqEncodeExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.encode($c)")
-  }
-
+  override protected def boxed(arr: ArrayData): Any = compute(arr)
   override protected def withNewChildInternal(c: Expression): PqEncodeExpr =
     copy(child = c)
 }
@@ -463,30 +354,17 @@ case class PqEncodeExpr(child: Expression, codebooks: Array[Array[Array[Double]]
   * dimension-mismatched query scores 0.0 rather than vanishing; a
   * corrupt code (out of codebook range) fails loudly. */
 case class PqAdcScoreExpr(left: Expression, right: Expression,
-    codebooks: Array[Array[Array[Double]]]) extends BinaryExpression {
+    codebooks: Array[Array[Array[Double]]])
+    extends KernelBinary[ArrayData, ArrayData] with VectorInputs {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    left.dataType match {
-      case ArrayType(IntegerType, _) => ()
-      case other => return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<int> codes, got ${other.catalogString}")
-    }
-    right.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> or array<double> query, got ${other.catalogString}")
-    }
-  }
-
+  override def checkInputDataTypes(): TypeCheckResult = first(
+    argument(left.dataType match { case ArrayType(IntegerType, _) => true; case _ => false },
+      s"$prettyName requires array<int> codes, got ${left.dataType.catalogString}"),
+    Vectors.check(prettyName, right, " query"))
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "pq_adc_score"
 
-  @transient private lazy val queryFloat: Boolean =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  def score(codes: ArrayData, q: ArrayData): Double = {
+  def compute(codes: ArrayData, q: ArrayData): Double = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
     // A codes column whose width disagrees with the codebook tensor means
@@ -499,14 +377,8 @@ case class PqAdcScoreExpr(left: Expression, right: Expression,
         s"pq_adc_score: codes length ${codes.numElements()} != codebook blocks $m")
     }
     if (q.numElements() != m * dsub) return 0.0
-    var normSq = 0.0
-    var d = 0
-    val dims = m * dsub
-    while (d < dims) {
-      val x = if (queryFloat) q.getFloat(d).toDouble else q.getDouble(d)
-      normSq += x * x
-      d += 1
-    }
+    val isFloat = floats(1)
+    val normSq = Vectors.sumSq(q, isFloat)
     if (normSq == 0.0) return 0.0
     val inv = 1.0 / math.sqrt(normSq)
     var acc = 0.0
@@ -526,24 +398,14 @@ case class PqAdcScoreExpr(left: Expression, right: Expression,
       val cent = codebooks(b)(code)
       var j = 0
       while (j < dsub) {
-        val x = (if (queryFloat) q.getFloat(b * dsub + j).toDouble
-                 else q.getDouble(b * dsub + j)) * inv
-        acc += cent(j) * x
+        acc += cent(j) * (Vectors.elem(q, b * dsub + j, isFloat) * inv)
         j += 1
       }
       b += 1
     }
     acc
   }
-
-  override protected def nullSafeEval(c: Any, q: Any): Any =
-    score(c.asInstanceOf[ArrayData], q.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqAdcExpr", this, classOf[PqAdcScoreExpr].getName)
-    defineCodeGen(ctx, ev, (c, q) => s"$ref.score($c, $q)")
-  }
-
+  override protected def boxed(codes: ArrayData, q: ArrayData): Any = compute(codes, q)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcScoreExpr =
     copy(left = l, right = r)
 }

@@ -106,7 +106,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register("cosine_similarity",
       { case Seq(a, b) => graft.ops.CosineSimExpr(a, b) })
     register("srp_signature", {
-      case Seq(v, bits) => graft.ops.SrpSignatureExpr(v, litInt(bits), 42L)
+      case Seq(v, bits) =>
+        graft.ops.SrpSignatureExpr(v, litInt(bits), graft.ops.Similarity.SrpSeed)
       case Seq(v, bits, seed) => graft.ops.SrpSignatureExpr(v, litInt(bits), litLong(seed))
     })
     register("srp_multiprobe", {

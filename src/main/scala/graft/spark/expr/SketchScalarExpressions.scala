@@ -66,33 +66,21 @@ private[expr] final class SketchCache[S <: AnyRef](deser: Array[Byte] => S) exte
 }
 
 /** The two-argument queries over a serialized sketch (`left`, BINARY):
-  * the base checks the sketch type, caches the deserialized sketch on the
-  * bytes' identity and generates a call to the subclass's `query`, typed
-  * to its answer so a `Boolean`, `Long` or `Double` comes back unboxed;
-  * `boxed` forwards the interpreted path (an override of an `Any` result
-  * would add a boxing bridge that Janino rejects as ambiguous). `format`
-  * is an abstract member, as in `SketchAgg`, for Java serialization. */
-abstract class SketchQuery[S <: Mergeable[S]] extends BinaryExpression {
+  * a [[KernelBinary]] that checks the sketch type and caches the
+  * deserialized sketch on the bytes' identity; each query states a
+  * `compute` typed to its answer. `format` is an abstract member, as in
+  * `SketchAgg`, for Java serialization. */
+abstract class SketchQuery[S <: Mergeable[S]] extends KernelBinary[Array[Byte], Any] {
   protected def format: SketchFormat[S]
   def checkArgument(dt: DataType): TypeCheckResult
-  protected def boxed(bytes: Array[Byte], arg: Any): Any
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val f = binaryFirst(prettyName, left.dataType)
     if (f.isFailure) f else checkArgument(right.dataType)
   }
-  override def nullIntolerant: Boolean = true
 
   @transient private lazy val cache = new SketchCache(format.deserialize)
   protected def sketch(bytes: Array[Byte]): S = cache.get(bytes)
-
-  override protected def nullSafeEval(bytes: Any, arg: Any): Any =
-    boxed(bytes.asInstanceOf[Array[Byte]], arg)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sketchQuery", this, getClass.getName)
-    nullSafeCodeGen(ctx, ev, (s, a) => s"${ev.value} = $ref.query($s, $a);")
-  }
 }
 
 /** `bloom_might_contain(sketchBytes, value)` — true iff all k bits set;
@@ -103,9 +91,9 @@ case class BloomMightContain(left: Expression, right: Expression)
   override def prettyName: String = "bloom_might_contain"
   override def dataType: DataType = BooleanType
   override def checkArgument(dt: DataType): TypeCheckResult = hashable(prettyName, dt)
-  def query(bytes: Array[Byte], value: Any): Boolean =
+  def compute(bytes: Array[Byte], value: Any): Boolean =
     sketch(bytes).contains(ValueBytes.toBytes(value, right.dataType))
-  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def boxed(b: Array[Byte], a: Any): Any = compute(b, a)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
@@ -115,9 +103,9 @@ case class CmsEstimate(left: Expression, right: Expression) extends SketchQuery[
   override def prettyName: String = "cms_estimate"
   override def dataType: DataType = LongType
   override def checkArgument(dt: DataType): TypeCheckResult = hashable(prettyName, dt)
-  def query(bytes: Array[Byte], key: Any): Long =
+  def compute(bytes: Array[Byte], key: Any): Long =
     sketch(bytes).estimate(ValueBytes.toBytes(key, right.dataType))
-  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def boxed(b: Array[Byte], a: Any): Any = compute(b, a)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
@@ -127,8 +115,8 @@ case class KllQuantile(left: Expression, right: Expression) extends SketchQuery[
   override def prettyName: String = "kll_quantile"
   override def dataType: DataType = DoubleType
   override def checkArgument(dt: DataType): TypeCheckResult = numeric(prettyName, dt)
-  def query(bytes: Array[Byte], q: Any): Double = sketch(bytes).quantile(asDouble(q))
-  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  def compute(bytes: Array[Byte], q: Any): Double = sketch(bytes).quantile(asDouble(q))
+  override protected def boxed(b: Array[Byte], a: Any): Any = compute(b, a)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
@@ -138,8 +126,8 @@ case class KllRank(left: Expression, right: Expression) extends SketchQuery[KllS
   override def prettyName: String = "kll_rank"
   override def dataType: DataType = LongType
   override def checkArgument(dt: DataType): TypeCheckResult = numeric(prettyName, dt)
-  def query(bytes: Array[Byte], v: Any): Long = sketch(bytes).rank(asDouble(v))
-  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  def compute(bytes: Array[Byte], v: Any): Long = sketch(bytes).rank(asDouble(v))
+  override protected def boxed(b: Array[Byte], a: Any): Any = compute(b, a)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
@@ -154,10 +142,10 @@ case class KllHistogram(left: Expression, right: Expression) extends SketchQuery
     StructField("hi", DoubleType, nullable = false),
     StructField("cnt", LongType, nullable = false))), containsNull = false)
   override def checkArgument(dt: DataType): TypeCheckResult = exact(prettyName, dt, IntegerType)
-  def query(bytes: Array[Byte], nBins: Any): GenericArrayData =
+  def compute(bytes: Array[Byte], nBins: Any): GenericArrayData =
     new GenericArrayData(sketch(bytes).histogram(nBins.asInstanceOf[Int])
       .map { case (lo, hi, cnt) => InternalRow(lo, hi, cnt) }.toArray[Any])
-  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def boxed(b: Array[Byte], a: Any): Any = compute(b, a)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
@@ -168,8 +156,8 @@ case class TDigestQuantile(left: Expression, right: Expression)
   override def prettyName: String = "tdigest_quantile"
   override def dataType: DataType = DoubleType
   override def checkArgument(dt: DataType): TypeCheckResult = numeric(prettyName, dt)
-  def query(bytes: Array[Byte], q: Any): Double = sketch(bytes).quantile(asDouble(q))
-  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  def compute(bytes: Array[Byte], q: Any): Double = sketch(bytes).quantile(asDouble(q))
+  override protected def boxed(b: Array[Byte], a: Any): Any = compute(b, a)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
@@ -184,11 +172,11 @@ case class HhTopK(left: Expression, right: Expression) extends SketchQuery[Heavy
     StructField("cnt", LongType, nullable = false),
     StructField("lower_bound", LongType, nullable = false))), containsNull = false)
   override def checkArgument(dt: DataType): TypeCheckResult = exact(prettyName, dt, IntegerType)
-  def query(bytes: Array[Byte], k: Any): GenericArrayData =
+  def compute(bytes: Array[Byte], k: Any): GenericArrayData =
     new GenericArrayData(sketch(bytes).topK(k.asInstanceOf[Int]).map {
       case (item, cnt, lower) => InternalRow(UTF8String.fromString(item), cnt, lower)
     }.toArray[Any])
-  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  override protected def boxed(b: Array[Byte], a: Any): Any = compute(b, a)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
@@ -200,8 +188,8 @@ case class HhEstimate(left: Expression, right: Expression)
   override def prettyName: String = "hh_estimate"
   override def dataType: DataType = LongType
   override def checkArgument(dt: DataType): TypeCheckResult = exact(prettyName, dt, StringType)
-  def query(bytes: Array[Byte], item: Any): Long = sketch(bytes).estimate(item.toString)
-  override protected def boxed(b: Array[Byte], a: Any): Any = query(b, a)
+  def compute(bytes: Array[Byte], item: Any): Long = sketch(bytes).estimate(item.toString)
+  override protected def boxed(b: Array[Byte], a: Any): Any = compute(b, a)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 

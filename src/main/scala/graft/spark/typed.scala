@@ -28,7 +28,7 @@ object typed {
   }
 
   /** HLL distinct-count estimate of a (nullable) string key. */
-  def hllDistinct[T](key: T => String, p: Int = 14): TypedColumn[T, Long] =
+  def hllDistinct[T](key: T => String, p: Int = SketchDefaults.HllP): TypedColumn[T, Long] =
     new SketchAgg[T, HllSketch, Long](Encoders.scalaLong) {
       def zero: HllSketch = HllSketch(p)
       def reduce(b: HllSketch, t: T): HllSketch = {
@@ -41,7 +41,7 @@ object typed {
     }.toColumn
 
   /** Serialized HLL sketch of a string key (for later `hll_merge`). */
-  def hllSketch[T](key: T => String, p: Int = 14): TypedColumn[T, Array[Byte]] =
+  def hllSketch[T](key: T => String, p: Int = SketchDefaults.HllP): TypedColumn[T, Array[Byte]] =
     new SketchAgg[T, HllSketch, Array[Byte]](Encoders.BINARY) {
       def zero: HllSketch = HllSketch(p)
       def reduce(b: HllSketch, t: T): HllSketch = {
@@ -54,7 +54,8 @@ object typed {
     }.toColumn
 
   /** KLL quantile of a numeric feature. */
-  def kllQuantile[T](value: T => Double, q: Double, k: Int = 200): TypedColumn[T, Double] =
+  def kllQuantile[T](value: T => Double, q: Double,
+      k: Int = SketchDefaults.KllK): TypedColumn[T, Double] =
     new SketchAgg[T, KllSketch, Double](Encoders.scalaDouble) {
       def zero: KllSketch = KllSketch(k)
       def reduce(b: KllSketch, t: T): KllSketch = {
@@ -68,7 +69,7 @@ object typed {
 
   /** t-digest quantile of a numeric feature (strong tails). */
   def tdigestQuantile[T](value: T => Double, q: Double,
-      compression: Double = 100.0): TypedColumn[T, Double] =
+      compression: Double = SketchDefaults.TDigestCompression): TypedColumn[T, Double] =
     new SketchAgg[T, TDigestSketch, Double](Encoders.scalaDouble) {
       def zero: TDigestSketch = TDigestSketch(compression)
       def reduce(b: TDigestSketch, t: T): TDigestSketch = {
@@ -95,8 +96,8 @@ object typed {
     }.toColumn
 
   /** Count-min frequency estimate of one probe key over a keyed stream. */
-  def cmsSketch[T](key: T => String, depth: Int = 5,
-      width: Int = 1 << 14): TypedColumn[T, Array[Byte]] =
+  def cmsSketch[T](key: T => String, depth: Int = SketchDefaults.CmsDepth,
+      width: Int = SketchDefaults.CmsWidth): TypedColumn[T, Array[Byte]] =
     new SketchAgg[T, CmsSketch, Array[Byte]](Encoders.BINARY) {
       def zero: CmsSketch = CmsSketch(depth, width)
       def reduce(b: CmsSketch, t: T): CmsSketch = {

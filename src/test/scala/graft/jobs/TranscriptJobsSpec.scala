@@ -80,7 +80,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     assert(math.abs(r.textLenP50 - exactP50) / exactP50 <= 0.1,
       s"kll p50 ${r.textLenP50} vs exact $exactP50")
     assert(r.processedParts.map(_.rows).sum === exactRows)
-    assert(SketchBuildJob.completedParts(out).size === nParts)
+    assert(SketchBuildJob.replay(out).parts.keySet.size === nParts)
     // SpaceSaving top tools: exact vs groupBy counts (capacity >= vocab)
     val exactToolCounts = df.filter(F.col("tool").isNotNull)
       .groupBy("tool").count().collect()
@@ -97,13 +97,13 @@ class TranscriptJobsSpec extends SparkTestBase {
     val r1 = SketchBuildJob.run(spark,
       SketchBuildJob.Config(tablePath, outResume, maxPartsPerRun = Some(3)))
     assert(r1.processedParts.size === 3)
-    assert(SketchBuildJob.completedParts(outResume).size === 3)
+    assert(SketchBuildJob.replay(outResume).parts.keySet.size === 3)
     // resume: processes exactly the remaining parts
     val r2 = SketchBuildJob.run(spark,
       SketchBuildJob.Config(tablePath, outResume))
     assert(r2.processedParts.size === nParts - 3)
     assert(r2.skippedParts.toSet === r1.processedParts.map(_.partId).toSet)
-    assert(SketchBuildJob.completedParts(outResume).size === nParts)
+    assert(SketchBuildJob.replay(outResume).parts.keySet.size === nParts)
     // final merged sketches byte-identical to the uninterrupted run
     for (f <- Seq("hll_conv.bin", "hll_tool.bin", "cms_roletool.bin",
         "kll_textlen.bin", "hh_tool.bin")) {
@@ -170,7 +170,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     // build only 3 of 8 parts, then probe
     SketchBuildJob.run(spark,
       SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(3)))
-    assert(SketchBuildJob.recordedNParts(out) === Some(nParts))
+    assert(SketchBuildJob.replay(out).nParts === Some(nParts))
     val df = TranscriptTable.read(spark, tablePath)
     // members must all pass even though most filters are missing
     val members = ProbeJob.probeBank(spark, df.select("conv_id").distinct(),
@@ -205,7 +205,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     val p = s"$workDir/sparse_probe_${seed.get}"
     val out = s"$workDir/build_sparse"
     SketchBuildJob.run(spark, SketchBuildJob.Config(p, out))
-    assert(SketchBuildJob.recordedNParts(out) === Some(64),
+    assert(SketchBuildJob.replay(out).nParts === Some(64),
       "bank must record the writer's modulus, not max(part)+1")
     val members = ProbeJob.probeBank(spark,
       TranscriptTable.read(spark, p).select("conv_id").distinct(),
@@ -273,7 +273,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     assert(entry.get("input").asText() === odd)
     val parts = entry.get("parts").elements().asScala.toSeq
     assert(parts.nonEmpty)
-    assert(parts.map(_.get("part_id").asInt()).toSet === SketchBuildJob.completedParts(out))
+    assert(parts.map(_.get("part_id").asInt()).toSet === SketchBuildJob.replay(out).parts.keySet)
     val written = new java.io.File(s"$out/parts").listFiles().filter(_.isDirectory)
       .map(_.getPath).toSet
     assert(parts.map(_.get("dir").asText()).toSet === written)
@@ -285,7 +285,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     assert(TranscriptTable.readNParts(spark, escapedInput) === Some(4))
     val out = s"$workDir/build_escaped"
     SketchBuildJob.run(spark, SketchBuildJob.Config(escapedInput, out))
-    assert(SketchBuildJob.recordedNParts(out) === Some(4))
+    assert(SketchBuildJob.replay(out).nParts === Some(4))
   }
 
   private def jobGroup(e: SparkListenerJobStart): String =
@@ -416,7 +416,7 @@ class TranscriptJobsSpec extends SparkTestBase {
       .map(e => String.valueOf(e.getMessage)).mkString("\n")
     assert(messages.contains(s"$out/parts"), messages)
     assert(!new java.io.File(s"$out/_log").exists())
-    assert(SketchBuildJob.completedParts(out).isEmpty)
+    assert(SketchBuildJob.replay(out).parts.keySet.isEmpty)
   }
 
   private lazy val probeKeys =
@@ -606,7 +606,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     val out = s"$workDir/build_no_bloom"
     SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
     // a part other than part 0, the footer schema inference samples
-    val victim = SketchBuildJob.completedParts(out).filter(_ != 0).max
+    val victim = SketchBuildJob.replay(out).parts.keySet.filter(_ != 0).max
     rewritePartWithout(out, victim, "bloom_conv")
     val foreign = (0 until 500).map(i => s"other-$i").toDF("conv_id")
     for (reverse <- Seq(false, true)) {
@@ -631,7 +631,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     val b = SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, outDirs))
     assert(a.processedParts.map(p => (p.partId, p.rows, p.estConvs)) ===
       b.processedParts.map(p => (p.partId, p.rows, p.estConvs)))
-    assert(SketchBuildJob.recordedNParts(outFlat) === Some(nParts))
+    assert(SketchBuildJob.replay(outFlat).nParts === Some(nParts))
     assert((a.totalRows, a.estDistinctConvs, a.estDistinctTools, a.topTools) ===
       (b.totalRows, b.estDistinctConvs, b.estDistinctTools, b.topTools))
     // order-independent sketches are byte-identical; KLL compaction
@@ -666,7 +666,7 @@ class TranscriptJobsSpec extends SparkTestBase {
       SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(3)))
     // simulate a part written by an older library version: rewrite one
     // COMPLETED part's file without the hh_tool column
-    rewritePartWithout(out, SketchBuildJob.completedParts(out).min, "hh_tool")
+    rewritePartWithout(out, SketchBuildJob.replay(out).parts.keySet.min, "hh_tool")
     // the resumed rollup must refuse to aggregate a silently-partial bank
     val ex = intercept[IllegalArgumentException] {
       SketchBuildJob.run(spark, SketchBuildJob.Config(tablePath, out))
@@ -688,7 +688,7 @@ class TranscriptJobsSpec extends SparkTestBase {
     // run directory stays behind
     val entry1 = new HPath(s"$out/_log/0000000001.json")
     assert(entry1.getFileSystem(conf).delete(entry1, false))
-    assert(SketchBuildJob.completedParts(out) === r1.processedParts.map(_.partId).toSet)
+    assert(SketchBuildJob.replay(out).parts.keySet === r1.processedParts.map(_.partId).toSet)
     val r3 = SketchBuildJob.run(spark,
       SketchBuildJob.Config(tablePath, out, maxPartsPerRun = Some(3)))
     assert(r3.processedParts.map(_.partId) === crashed.processedParts.map(_.partId))

@@ -762,6 +762,33 @@ class OpsSpec extends SparkTestBase {
     assert(recall(multi) >= 0.85, s"multiprobe recall = ${recall(multi)}")
   }
 
+  test("srp_multiprobe with nflip 0 is array(srp_signature), bits 0 included") {
+    val vecs = embs.select($"vec_id",
+      F.when($"vec_id" % 5 === 0, F.lit(null)).otherwise($"embedding").as("v"))
+    val seed = Similarity.SrpSeed + 1
+    Seq(0, 12).foreach { bits =>
+      val probes = Similarity.srpMultiprobe($"v", bits, seed, 0)
+      val sig = Similarity.srpSignature($"v", bits, seed)
+      val rows = vecs.select($"vec_id", probes, sig).collect()
+      assert(rows.count(_.isNullAt(2)) > 0 && rows.count(!_.isNullAt(2)) > 0)
+      rows.foreach { r =>
+        // a null vector has no probe list, where array(srp_signature) is [null]
+        if (r.isNullAt(2)) assert(r.isNullAt(1), s"bits $bits: $r")
+        else assert(r.getSeq[Long](1) === Seq(r.getLong(2)), s"bits $bits: $r")
+      }
+      // lshTopK explodes the probes and joins on the bucket, where a null
+      // bucket joins nothing: both give the same (id, bucket) pairs
+      def buckets(c: org.apache.spark.sql.Column): Set[(Long, Long)] =
+        vecs.select($"vec_id", F.explode(c).as("b")).where($"b".isNotNull).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(buckets(probes) === buckets(F.array(sig)), s"bits $bits")
+      assert(buckets(probes).size === rows.count(!_.isNullAt(2)), s"bits $bits")
+    }
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      vecs.select(Similarity.srpMultiprobe($"v", 0, seed, 1)).collect())
+    assert(e.getMessage.contains("srp_multiprobe nflip must be in [0,0], got 1"), e.getMessage)
+  }
+
   test("bloom semi/anti joins are exact vs plain joins; prefilter is in the plan") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val parts = spark.read.parquet(s"$sf/part.parquet").filter($"p_size" <= 5)
