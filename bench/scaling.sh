@@ -32,4 +32,4 @@ run --mode level --cores "$BASE" --corpus "$CORPUS" --json "$JSON" 2>/dev/null
 run --mode level --cores "$BIG" --corpus "$CORPUS" --json "$JSON" 2>/dev/null
 run --mode summarize --json "$JSON" --report BENCH.md 2>/dev/null
 # profiler one-pass timing over the same corpus (full machine width)
-run --mode profile --cores 32 --corpus "$CORPUS" --report BENCH.md 2>/dev/null
+run --mode profile --corpus "$CORPUS" --report BENCH.md 2>/dev/null

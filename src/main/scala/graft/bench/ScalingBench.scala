@@ -1,77 +1,44 @@
 package graft.bench
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
+import java.util.UUID
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.data.{TranscriptGen, TranscriptTable}
-import graft.jobs.JobSession
-import graft.spark.functions._
+import graft.jobs.{JobSession, SketchBuildJob}
 
-/** The north rule's scaling-efficiency evidence: the same sketch-build
-  * workload over the same pre-generated transcript corpus at two
-  * parallelism levels — local[N] and local[4N] — as this sandbox's proxy
-  * for N vs 4N executors.
+/** The north rule's scaling-efficiency evidence: `SketchBuildJob.run`
+  * over the same pre-generated transcript corpus at two parallelism
+  * levels — local[N] and local[4N] — as this sandbox's proxy for N vs 4N
+  * executors.
   *
   * Methodology (each step matters for an honest number):
-  *  - the corpus is generated once (`--gen`) and shared by both levels;
-  *  - each level runs in its OWN JVM (`--level N`), so heap/GC/JIT state
-  *    from one level cannot pollute the other;
-  *  - per level: one warmup round, then the median of three timed rounds
-  *    of the full pipeline (scan -> per-part partial sketches -> global
-  *    merge), forced by collecting the single result row;
-  *  - `--summarize` combines the level JSONs into BENCH.md with
+  *  - the corpus is generated once (`--mode gen`) and shared by both levels;
+  *  - each level runs in its OWN JVM (`--mode level --cores N`), so
+  *    heap/GC/JIT state from one level cannot pollute the other;
+  *  - per level: three warmup rounds, then the median of five timed
+  *    rounds (`GRAFT_BENCH_ROUNDS`), each a fresh build (scan, per-part
+  *    sketches, rollup, log commit, `final/` writes) into a new output
+  *    directory, deleted after the clock stops;
+  *  - `--mode summarize` combines the level JSONs into BENCH.md with
   *    efficiency = (throughput_4N / throughput_N) / 4.
   *
   * Orchestrated by bench/scaling.sh.
   */
 object ScalingBench {
 
-  /** Locale-independent numeric formatting for JSON/report output —
-    * comma-decimal default locales would emit invalid JSON. */
-  private def jfmt(v: Double, p: String): String =
-    String.format(java.util.Locale.ROOT, p, Double.box(v))
-
-  private def session(cores: Int): SparkSession =
-    JobSession.local(s"graft-scaling-$cores", cores, extras = Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      // finer input splits: part-aligned files alone give only
-      // cores/128 waves and the Zipf-skewed tail leaves ~35% of threads
-      // idle at the end of the scan stage (measured by stack sampling)
-      "spark.sql.files.maxPartitionBytes" -> sys.env.getOrElse("GRAFT_SPLIT_BYTES", "16m")))
-
-  /** The timed workload: the SketchBuildJob aggregation shape — per-part
-    * partial sketches then a global merge. Bloom is per-part (bank
-    * design); only the O(parts)-sized sketches are globally merged. */
-  private def sketchPipeline(spark: SparkSession, input: String): Long = {
-    val df = TranscriptTable.read(spark, input)
-    val roleTool = F.concat_ws("|", F.col("role"), F.coalesce(F.col("tool"), F.lit("-")))
-    val parts = df.groupBy(F.col(TranscriptTable.PartCol))
-      .agg(
-        F.count(F.lit(1)).as("rows"),
-        hll_sketch(F.col("conv_id"), 14).as("hll_conv"),
-        hll_sketch(F.col("tool"), 14).as("hll_tool"),
-        cms_sketch(roleTool, 5, 1 << 14).as("cms_roletool"),
-        kll_sketch(F.length(F.col("text")), 200).as("kll_textlen"),
-        bloom_sketch(F.col("conv_id"), 1 << 16, 16).as("bloom_conv"))
-    val row = parts.agg(
-      F.sum("rows").as("rows"),
-      hll_merge(F.col("hll_conv")).as("hc"),
-      hll_merge(F.col("hll_tool")).as("ht"),
-      cms_merge(F.col("cms_roletool")).as("cm"),
-      kll_merge(F.col("kll_textlen")).as("km")).head()
-    row.getLong(0)
-  }
-
   def main(args: Array[String]): Unit = {
-    val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val argMap = JobSession.flags(args,
+      "--mode", "--corpus", "--convs", "--cores", "--json", "--report")
     val corpus = argMap.getOrElse("--corpus", "/tmp/graft_bench/transcripts")
+    val cores = argMap.get("--cores").map(_.toInt)
 
     argMap.get("--mode") match {
       case Some("gen") =>
         val nConvs = argMap.getOrElse("--convs", "1200000").toLong
         if (!Files.exists(Paths.get(corpus))) {
-          val gen = session(Runtime.getRuntime.availableProcessors())
+          val gen = session("graft-scaling", cores)
           try TranscriptTable.write(
             TranscriptGen.generate(gen, 42L, nConvs, hotTurns = 20000, minTurns = 4),
             corpus, nParts = 128)
@@ -85,43 +52,44 @@ object ScalingBench {
         }
 
       case Some("level") =>
-        val cores = argMap("--cores").toInt
-        val outJson = argMap("--json")
-        val spark = session(cores)
+        val spark = session("graft-scaling", cores)
+        val banks =
+          new Path(System.getProperty("java.io.tmpdir"), s"graft-scaling-${UUID.randomUUID()}")
+        val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+        def build(): (Long, Double) = {
+          val out = new Path(banks, UUID.randomUUID().toString)
+          val t0 = System.nanoTime()
+          val rows =
+            SketchBuildJob.run(spark, SketchBuildJob.Config(corpus, out.toString)).totalRows
+          val sec = (System.nanoTime() - t0) / 1e9
+          fs.delete(out, true)
+          (rows, sec)
+        }
         try {
           // whole-stage-codegen + sketch hot paths need several rounds to
-          // reach steady-state JIT; 3 discarded warmup rounds, then the
-          // median of 5 timed rounds
-          (1 to 3).foreach(_ => sketchPipeline(spark, corpus))
-          val nRounds = sys.env.getOrElse("GRAFT_BENCH_ROUNDS", "5").toInt
-          // every round returns the row count — capture it from the
-          // timed rounds instead of paying a whole extra pipeline run
-          var rows = 0L
-          val rawTimes = (1 to nRounds).map { _ =>
-            val t0 = System.nanoTime()
-            rows = sketchPipeline(spark, corpus)
-            (System.nanoTime() - t0) / 1e9
-          }
+          // reach steady-state JIT
+          (1 to 3).foreach(_ => build())
+          val rounds = (1 to sys.env.getOrElse("GRAFT_BENCH_ROUNDS", "5").toInt).map(_ => build())
           System.err.println(
-            "round order: " + rawTimes.map(t => jfmt(t, "%.2f")).mkString(", "))
-          val times = rawTimes.sorted
+            "round order: " + rounds.map(r => jfmt(r._2, "%.2f")).mkString(", "))
+          val rows = rounds.head._1
+          val times = rounds.map(_._2).sorted
           val median = times(times.length / 2)
-          val line =
-            s"""{"cores":$cores,"rows":$rows,"sec":${jfmt(median, "%.3f")},"rows_per_sec":${jfmt(rows / median, "%.0f")},"rounds":[${times.map(t => jfmt(t, "%.2f")).mkString(",")}]}"""
-          Files.write(Paths.get(outJson), (line + "\n").getBytes("UTF-8"),
-            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-          // scalastyle:off println
-          println(line)
-          // scalastyle:on println
-        } finally spark.stop()
+          emit(s"""{"cores":${spark.sparkContext.defaultParallelism},"rows":$rows,""" +
+            s""""sec":${jfmt(median, "%.3f")},"rows_per_sec":${jfmt(rows / median, "%.0f")},""" +
+            s""""rounds":[${times.map(t => jfmt(t, "%.2f")).mkString(",")}]}""",
+            Some(argMap("--json")))
+        } finally {
+          fs.delete(banks, true)
+          spark.stop()
+        }
 
       // ProfileJob at bench scale: the profiler is single-pass BY DESIGN
       // (one aggregation job, the exchange carries one row of sketch
       // buffers) — timing it over the scaling corpus catches regressions
       // in that claim (e.g. an accidental per-column job).
       case Some("profile") =>
-        val cores = argMap.getOrElse("--cores", "32").toInt
-        val spark = session(cores)
+        val spark = session("graft-scaling", cores)
         try {
           val df = TranscriptTable.read(spark, corpus)
           val rows = df.count()
@@ -132,23 +100,20 @@ object ScalingBench {
             (System.nanoTime() - t0) / 1e9
           }.sorted
           val median = times(times.length / 2)
-          val line =
-            s"""{"metric":"profile_wall","cores":$cores,"rows":$rows,"sec":${jfmt(median, "%.3f")},"rows_per_sec":${jfmt(rows / median, "%.0f")}}"""
-          // scalastyle:off println
-          println(line)
-          // scalastyle:on println
+          val n = spark.sparkContext.defaultParallelism
+          emit(s"""{"metric":"profile_wall","cores":$n,"rows":$rows,""" +
+            s""""sec":${jfmt(median, "%.3f")},"rows_per_sec":${jfmt(rows / median, "%.0f")}}""",
+            None)
           val md =
             s"""
                |## Table profiler at bench scale (${java.time.LocalDate.now()})
                |
                |`ProfileJob.profile` (per-column null counts + HLL/KLL/SpaceSaving
                |sketches for all 7 transcript columns) over the same corpus, one
-               |single-pass aggregation job at local[$cores]: **${jfmt(median, "%.2f")} s**
+               |single-pass aggregation job at local[$n]: **${jfmt(median, "%.2f")} s**
                |(median of 3, ${jfmt(rows / median, "%.0f")} turns/s over $rows rows).
                |""".stripMargin
-          Files.write(Paths.get(argMap.getOrElse("--report", "BENCH.md")),
-            md.getBytes("UTF-8"),
-            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+          append(argMap.getOrElse("--report", "BENCH.md"), md)
         } finally spark.stop()
 
       case Some("summarize") =>
@@ -166,17 +131,16 @@ object ScalingBench {
         val efficiency = (big._4 / small._4) / (big._1.toDouble / small._1)
         val json =
           s"""{"metric":"scaling_efficiency","value":${jfmt(efficiency, "%.3f")},"unit":"ratio","n_rows":${big._2},"levels":[{"cores":${small._1},"sec":${small._3},"rows_per_sec":${small._4}},{"cores":${big._1},"sec":${big._3},"rows_per_sec":${big._4}}]}"""
-        // scalastyle:off println
-        println(json)
-        // scalastyle:on println
+        emit(json, None)
         val md =
           s"""
              |## Scaling evidence (${java.time.LocalDate.now()})
              |
-             |Same sketch-build workload (5 sketch aggregates incl. per-part Bloom bank +
-             |global merge of the mergeable sketches) on the same pre-generated transcript
-             |corpus (${big._2} turns, Zipf-skewed conv sizes, 128 hash-range parts).
-             |Per level: best of 2 independent JVM instances, each 3 warmup rounds then\n             |the median of 5 timed rounds:
+             |`SketchBuildJob.run` (six per-part sketches incl. the Bloom bank, rollup,
+             |log commit and `final/` writes, a fresh output directory per round) on the
+             |same pre-generated transcript corpus (${big._2} turns, Zipf-skewed conv
+             |sizes, 128 hash-range parts). Per level: best of 2 independent JVM
+             |instances, each 3 warmup rounds then the median of 5 timed rounds:
              |
              || parallelism | wall (s) | throughput (turns/s) |
              ||---|---|---|
@@ -187,9 +151,7 @@ object ScalingBench {
              |target: >= 0.8; measured as the sandbox proxy for N vs 4N executors per
              |BASELINE.md).
              |""".stripMargin
-        Files.write(Paths.get(argMap.getOrElse("--report", "BENCH.md")),
-          md.getBytes("UTF-8"),
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        append(argMap.getOrElse("--report", "BENCH.md"), md)
 
       case other =>
         sys.error(s"--mode must be gen|level|profile|summarize, got $other")

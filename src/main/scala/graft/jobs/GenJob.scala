@@ -10,7 +10,7 @@ import graft.data.{TranscriptGen, TranscriptTable}
   * bench runs at different parallelism levels share one input. */
 object GenJob {
   def main(args: Array[String]): Unit = {
-    val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val argMap = JobSession.flags(args, "--out", "--convs", "--parts", "--seed", "--hot", "--min")
     val spark = JobSession.get("graft-gen")
     val turns = TranscriptGen.generate(
       spark,

@@ -102,7 +102,8 @@ object ProbeJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val argMap = JobSession.flags(args,
+      "--input", "--bank", "--sketch", "--key", "--reverse", "--out")
     val spark = JobSession.get("graft-probe")
     val df = spark.read.parquet(argMap("--input"))
     val reverse = argMap.get("--reverse").exists(_.toBoolean)
@@ -132,7 +133,7 @@ object DumpJob {
       .csv(out)
 
   def main(args: Array[String]): Unit = {
-    val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val argMap = JobSession.flags(args, "--input", "--out")
     val spark = JobSession.get("graft-dump")
     dump(spark.read.parquet(argMap("--input")), argMap("--out"))
     spark.stop()

@@ -138,7 +138,7 @@ object ProfileJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val argMap = JobSession.flags(args, "--input", "--out")
     val spark = JobSession.get("graft-profile")
     val df = spark.read.parquet(argMap("--input"))
     val json = toJson(profile(df))

@@ -419,7 +419,7 @@ object SketchBuildJob {
   }
 
   def main(args: Array[String]): Unit = {
-    val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val argMap = JobSession.flags(args, "--input", "--out", "--max-parts")
     val c = Config(
       input = argMap("--input"),
       out = argMap("--out"),

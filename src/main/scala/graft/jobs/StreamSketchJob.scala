@@ -17,7 +17,8 @@ import graft.spark.functions._
   */
 object StreamSketchJob {
   def main(args: Array[String]): Unit = {
-    val argMap = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val argMap = JobSession.flags(args,
+      "--input", "--out", "--checkpoint", "--window", "--watermark", "--once")
     val spark = JobSession.get("graft-stream-sketch")
     val input = argMap("--input")
     val out = argMap("--out")
@@ -33,8 +34,8 @@ object StreamSketchJob {
       .groupBy(F.window(F.col("ts"), window), F.col("role"))
       .agg(
         F.count(F.lit(1)).as("turns"),
-        hll_sketch(F.col("conv_id"), 14).as("hll_conv"),
-        kll_sketch(F.length(F.col("text")), 200).as("kll_textlen"))
+        hll_sketch(F.col("conv_id")).as("hll_conv"),
+        kll_sketch(F.length(F.col("text"))).as("kll_textlen"))
       .select(F.col("window.start").as("w_start"), F.col("role"),
         F.col("turns"), F.col("hll_conv"), F.col("kll_textlen"))
 

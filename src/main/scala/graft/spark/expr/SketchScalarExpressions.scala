@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -194,30 +194,16 @@ case class HhEstimate(left: Expression, right: Expression)
 }
 
 /** `hll_estimate(sketchBytes)` — rounded distinct-count estimate. */
-case class HllEstimate(child: Expression)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    SketchTypeChecks.binaryFirst(prettyName, child.dataType)
+case class HllEstimate(child: Expression) extends KernelUnary[Array[Byte]] {
+  override def checkInputDataTypes(): TypeCheckResult = binaryFirst(prettyName, child.dataType)
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "hll_estimate"
 
   @transient private lazy val cache = new SketchCache(HllSketch.deserialize)
 
-  def estimate(sketchBytes: Array[Byte]): Long =
-    math.round(cache.get(sketchBytes).estimate())
-
-  override protected def nullSafeEval(sketch: Any): Any =
-    estimate(sketch.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hllExpr", this, classOf[HllEstimate].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.estimate($s);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HllEstimate =
-    copy(child = newChild)
+  def compute(bytes: Array[Byte]): Long = math.round(cache.get(bytes).estimate())
+  override protected def boxed(bytes: Array[Byte]): Any = compute(bytes)
+  override protected def withNewChildInternal(c: Expression): HllEstimate = copy(child = c)
 }
 
 /** `hll_union(a, b)` — row-wise union of two serialized HLL sketches
@@ -230,10 +216,10 @@ case class HllEstimate(child: Expression)
   * [[SketchCache]] must not be used here); union rows are
   * post-aggregation — few and wide, not corpus-scale. */
 case class HllUnion(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends KernelBinary[Array[Byte], Array[Byte]] {
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val f = SketchTypeChecks.binaryFirst(prettyName, left.dataType)
+    val f = binaryFirst(prettyName, left.dataType)
     if (f.isFailure) f
     else right.dataType match {
       case BinaryType => TypeCheckResult.TypeCheckSuccess
@@ -242,22 +228,13 @@ case class HllUnion(left: Expression, right: Expression)
     }
   }
   override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
   // SQL name is graft_hll_union (Spark 4.1's builtin hll_union owns
   // this prettyName's natural spelling in the registry)
   override def prettyName: String = "hll_union"
 
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] =
     HllSketch.deserialize(a).merge(HllSketch.deserialize(b)).serialize()
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    union(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hllUnionExpr", this, classOf[HllUnion].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.union($a, $b);")
-  }
-
+  override protected def boxed(a: Array[Byte], b: Array[Byte]): Any = compute(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): HllUnion =
     copy(left = l, right = r)
 }

@@ -5,7 +5,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
 
-import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch, TDigestSketch}
+import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch, Mergeable, TDigestSketch}
 
 /** Typed `Dataset[T]` facades over the sketch buffers (SURVEY.md §7 step
   * 5): `Aggregator[T, Sketch, Out]` for users who want compile-time row
@@ -20,92 +20,55 @@ import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch, TDigestSketch
   */
 object typed {
 
-  private def kryo[S <: AnyRef: ClassTag]: Encoder[S] = Encoders.kryo[S]
+  /** One aggregator over a mergeable buffer: `add` folds a row into the
+    * live buffer, partials meet by `merge`, and `result` reads the answer. */
+  private def aggregate[T, S <: Mergeable[S]: ClassTag, O](out: Encoder[O], empty: => S)(
+      add: (S, T) => Unit)(result: S => O): TypedColumn[T, O] =
+    new Aggregator[T, S, O] {
+      def zero: S = empty
+      def reduce(b: S, t: T): S = { add(b, t); b }
+      def merge(a: S, b: S): S = a.merge(b)
+      def finish(b: S): O = result(b)
+      def bufferEncoder: Encoder[S] = Encoders.kryo[S]
+      def outputEncoder: Encoder[O] = out
+    }.toColumn
 
-  private abstract class SketchAgg[T, S <: AnyRef: ClassTag, O](
-      val outputEncoder: Encoder[O]) extends Aggregator[T, S, O] {
-    final def bufferEncoder: Encoder[S] = kryo[S]
-  }
+  /** The per-row add of a string key: a null key is skipped. */
+  private def byKey[T, S](key: T => String)(put: (S, String) => Unit): (S, T) => Unit =
+    (b, t) => { val k = key(t); if (k != null) put(b, k) }
+
+  /** The per-row add of a numeric value: NaN is skipped. */
+  private def byValue[T, S](value: T => Double)(put: (S, Double) => Unit): (S, T) => Unit =
+    (b, t) => { val v = value(t); if (!java.lang.Double.isNaN(v)) put(b, v) }
 
   /** HLL distinct-count estimate of a (nullable) string key. */
   def hllDistinct[T](key: T => String, p: Int = SketchDefaults.HllP): TypedColumn[T, Long] =
-    new SketchAgg[T, HllSketch, Long](Encoders.scalaLong) {
-      def zero: HllSketch = HllSketch(p)
-      def reduce(b: HllSketch, t: T): HllSketch = {
-        val k = key(t)
-        if (k != null) b.update(k)
-        b
-      }
-      def merge(a: HllSketch, b: HllSketch): HllSketch = a.merge(b)
-      def finish(b: HllSketch): Long = math.round(b.estimate())
-    }.toColumn
+    aggregate(Encoders.scalaLong, HllSketch(p))(byKey(key)(_.update(_)))(
+      b => math.round(b.estimate()))
 
   /** Serialized HLL sketch of a string key (for later `hll_merge`). */
   def hllSketch[T](key: T => String, p: Int = SketchDefaults.HllP): TypedColumn[T, Array[Byte]] =
-    new SketchAgg[T, HllSketch, Array[Byte]](Encoders.BINARY) {
-      def zero: HllSketch = HllSketch(p)
-      def reduce(b: HllSketch, t: T): HllSketch = {
-        val k = key(t)
-        if (k != null) b.update(k)
-        b
-      }
-      def merge(a: HllSketch, b: HllSketch): HllSketch = a.merge(b)
-      def finish(b: HllSketch): Array[Byte] = b.serialize()
-    }.toColumn
+    aggregate(Encoders.BINARY, HllSketch(p))(byKey(key)(_.update(_)))(_.serialize())
 
   /** KLL quantile of a numeric feature. */
   def kllQuantile[T](value: T => Double, q: Double,
       k: Int = SketchDefaults.KllK): TypedColumn[T, Double] =
-    new SketchAgg[T, KllSketch, Double](Encoders.scalaDouble) {
-      def zero: KllSketch = KllSketch(k)
-      def reduce(b: KllSketch, t: T): KllSketch = {
-        val v = value(t)
-        if (!java.lang.Double.isNaN(v)) b.update(v)
-        b
-      }
-      def merge(a: KllSketch, b: KllSketch): KllSketch = a.merge(b)
-      def finish(b: KllSketch): Double = b.quantile(q)
-    }.toColumn
+    aggregate(Encoders.scalaDouble, KllSketch(k))(byValue(value)(_.update(_)))(_.quantile(q))
 
   /** t-digest quantile of a numeric feature (strong tails). */
   def tdigestQuantile[T](value: T => Double, q: Double,
       compression: Double = SketchDefaults.TDigestCompression): TypedColumn[T, Double] =
-    new SketchAgg[T, TDigestSketch, Double](Encoders.scalaDouble) {
-      def zero: TDigestSketch = TDigestSketch(compression)
-      def reduce(b: TDigestSketch, t: T): TDigestSketch = {
-        val v = value(t)
-        if (!java.lang.Double.isNaN(v)) b.update(v)
-        b
-      }
-      def merge(a: TDigestSketch, b: TDigestSketch): TDigestSketch = a.merge(b)
-      def finish(b: TDigestSketch): Double = b.quantile(q)
-    }.toColumn
+    aggregate(Encoders.scalaDouble, TDigestSketch(compression))(
+      byValue(value)(_.update(_)))(_.quantile(q))
 
   /** Serialized reference-semantics Bloom filter of a string key. */
   def bloomSketch[T](key: T => String, maxSize: Long,
       bitsPerItem: Int): TypedColumn[T, Array[Byte]] =
-    new SketchAgg[T, BloomSketch, Array[Byte]](Encoders.BINARY) {
-      def zero: BloomSketch = BloomSketch(maxSize, bitsPerItem)
-      def reduce(b: BloomSketch, t: T): BloomSketch = {
-        val k = key(t)
-        if (k != null) b.put(k)
-        b
-      }
-      def merge(a: BloomSketch, b: BloomSketch): BloomSketch = a.merge(b)
-      def finish(b: BloomSketch): Array[Byte] = b.serialize()
-    }.toColumn
+    aggregate(Encoders.BINARY, BloomSketch(maxSize, bitsPerItem))(byKey(key)(_.put(_)))(
+      _.serialize())
 
   /** Count-min frequency estimate of one probe key over a keyed stream. */
   def cmsSketch[T](key: T => String, depth: Int = SketchDefaults.CmsDepth,
       width: Int = SketchDefaults.CmsWidth): TypedColumn[T, Array[Byte]] =
-    new SketchAgg[T, CmsSketch, Array[Byte]](Encoders.BINARY) {
-      def zero: CmsSketch = CmsSketch(depth, width)
-      def reduce(b: CmsSketch, t: T): CmsSketch = {
-        val k = key(t)
-        if (k != null) b.update(k)
-        b
-      }
-      def merge(a: CmsSketch, b: CmsSketch): CmsSketch = a.merge(b)
-      def finish(b: CmsSketch): Array[Byte] = b.serialize()
-    }.toColumn
+    aggregate(Encoders.BINARY, CmsSketch(depth, width))(byKey(key)(_.update(_)))(_.serialize())
 }

@@ -4,14 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 
-import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, KllSketch, TDigestSketch}
+import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch,
+  TDigestSketch}
 import graft.spark.functions._
 
 /** Pins the eight two-argument queries over a serialized sketch
   * (`bloom_might_contain`, `cms_estimate`, `kll_quantile`, `kll_rank`,
-  * `kll_histogram`, `tdigest_quantile`, `hh_topk`, `hh_estimate`): the
-  * rows they give through whole-stage codegen and through the interpreted
-  * path, against the sketches called directly; their SQL names and plan
+  * `kll_histogram`, `tdigest_quantile`, `hh_topk`, `hh_estimate`) and the
+  * HLL scalars (`hll_estimate`, `hll_union`): the rows they give through
+  * whole-stage codegen and through the interpreted path, against the
+  * sketches called directly; the eight queries' SQL names and plan
   * strings; and that generated code takes a `Boolean`, `Long` or `Double`
   * answer from a method that returns the primitive. */
 class SketchQuerySpec extends SparkTestBase {
@@ -20,13 +22,14 @@ class SketchQuerySpec extends SparkTestBase {
   private val id = F.col("id")
   private def key(c: Column): Column = F.concat(F.lit("k"), c.cast("string"))
 
-  /** bloom, cms, kll, tdigest and hh sketches over 200 rows */
+  /** bloom, cms, kll, tdigest and hh sketches and two hll sketches over 200 rows */
   private lazy val sketches: Seq[Array[Byte]] = {
     val r = spark.range(200).select(
       bloom_sketch(key(id % 50), 100, 8), cms_sketch(key(id % 50)),
       kll_sketch(id.cast("double")), tdigest_sketch(id.cast("double")),
-      hh_sketch(key(id % 10 * (id % 3)))).head()
-    (0 until 5).map(r.getAs[Array[Byte]])
+      hh_sketch(key(id % 10 * (id % 3))), hll_sketch(key(id % 50)), hll_sketch(key(id + 30)))
+      .head()
+    (0 until 7).map(r.getAs[Array[Byte]])
   }
 
   /** (SQL name, sketch index, argument, Column form); every 7th argument
@@ -44,9 +47,14 @@ class SketchQuerySpec extends SparkTestBase {
   private def sketch(i: Int): Column = F.lit(sketches(i))
   private def arg(c: Column): Column = F.when(id % 7 === 6, F.lit(null)).otherwise(c)
 
+  /** the HLL scalars, with a null input every 7th row */
+  private lazy val hll: Seq[Column] = Seq(
+    hll_estimate(arg(sketch(5))).as("hll_estimate"),
+    hll_union(sketch(5), arg(sketch(6))).as("hll_union"))
+
   private def frame: DataFrame = spark.range(n).select(id +: queries.map {
     case (name, i, a, q) => q(sketch(i), arg(a)).as(name)
-  }: _*)
+  } ++: hll: _*)
 
   private def rows(codegen: Boolean): Seq[Row] = {
     val df = frame
@@ -68,10 +76,11 @@ class SketchQuerySpec extends SparkTestBase {
     val kll = KllSketch.deserialize(sketches(2))
     val td = TDigestSketch.deserialize(sketches(3))
     val hh = HeavyHittersSketch.deserialize(sketches(4))
+    def hll(i: Int) = HllSketch.deserialize(sketches(i))
     assert(compiled.map(_.getLong(0)) === (0L until n))
     compiled.foreach { r =>
       val i = r.getLong(0)
-      if (i % 7 == 6) assert((1 to queries.size).forall(r.isNullAt), s"row $i: $r")
+      if (i % 7 == 6) assert((1 until r.length).forall(r.isNullAt), s"row $i: $r")
       else {
         assert(r.getBoolean(1) === bloom.contains(s"k${i + 25}"), s"bloom $i")
         assert(r.getLong(2) === cms.estimate(s"k${i + 25}"), s"cms $i")
@@ -83,6 +92,8 @@ class SketchQuerySpec extends SparkTestBase {
         assert(r.getSeq[Row](7).map(e => (e.getString(0), e.getLong(1), e.getLong(2))) ===
           hh.topK((i % 4).toInt), s"hh_topk $i")
         assert(r.getLong(8) === hh.estimate(s"k$i"), s"hh_estimate $i")
+        assert(r.getLong(9) === math.round(hll(5).estimate()), s"hll_estimate $i")
+        assert(r.getAs[Array[Byte]](10) === hll(5).merge(hll(6)).serialize(), s"hll_union $i")
       }
     }
     // keys k25..k64 against a filter of k0..k49: both answers occur
@@ -125,7 +136,8 @@ class SketchQuerySpec extends SparkTestBase {
     val answers = Map[String, Class[_]](
       "BloomMightContain" -> java.lang.Boolean.TYPE, "CmsEstimate" -> java.lang.Long.TYPE,
       "KllQuantile" -> java.lang.Double.TYPE, "KllRank" -> java.lang.Long.TYPE,
-      "TDigestQuantile" -> java.lang.Double.TYPE, "HhEstimate" -> java.lang.Long.TYPE)
+      "TDigestQuantile" -> java.lang.Double.TYPE, "HhEstimate" -> java.lang.Long.TYPE,
+      "HllEstimate" -> java.lang.Long.TYPE)
     answers.foreach { case (cls, answer) =>
       val method = called.getOrElse(cls, fail(s"no call on $cls in the generated source"))
       val returns = Class.forName(s"graft.spark.expr.$cls").getMethods
