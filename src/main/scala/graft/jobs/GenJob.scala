@@ -1,7 +1,5 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
-
 import graft.data.{TranscriptGen, TranscriptTable}
 
 /** Transcript corpus synthesis CLI: deterministic, distributed, written

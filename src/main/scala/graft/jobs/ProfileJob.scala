@@ -1,7 +1,7 @@
 package graft.jobs
 
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 
 import graft.sketch.{HeavyHittersSketch, HllSketch, KllSketch}
 import graft.spark.functions._

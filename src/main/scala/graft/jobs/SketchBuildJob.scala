@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 
 import graft.data.TranscriptTable
-import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch}
+import graft.sketch.{BloomSketch, HllSketch, KllSketch}
 import graft.spark.SketchDefaults
 import graft.spark.functions._
 
@@ -214,7 +214,7 @@ object SketchBuildJob {
         // vocabulary (the common case), bounded-error otherwise
         hh_sketch(F.col("tool"), HhToolCapacity).as("hh_tool"),
         bloom_sketch(F.col("conv_id"), c.bloomPerPartCapacity, c.bloomBpi).as("bloom_conv"))
-      .select(PartSchema.fieldNames.map(F.col): _*)
+      .select(PartSchema.fieldNames.toIndexedSeq.map(F.col): _*)
   }
 
   /** Part ids that hold data, read from the file index that

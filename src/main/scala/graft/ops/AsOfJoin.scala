@@ -46,7 +46,7 @@ object AsOfJoin {
     val buildTagged = build.select(
       Seq(F.col(keyCol), F.col(tsCol).as("__t"), F.lit(0).as("__tag")) ++
         pPay.map(c => F.lit(null).cast(probe.schema(c).dataType).as(c)) :+
-        F.struct(bPay.map(F.col): _*).as("__bp"): _*)
+        F.struct(bPay.toIndexedSeq.map(F.col): _*).as("__bp"): _*)
     val probeTagged = probe.select(
       Seq(F.col(keyCol), F.col(tsCol).as("__t"), F.lit(1).as("__tag")) ++
         pPay.map(F.col) :+

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Benchmark decontamination: remove (or flag) training documents that
   * share word n-grams with an evaluation set — the train/test overlap
@@ -20,23 +20,6 @@ import org.apache.spark.sql.{Column, DataFrame, functions => F}
   */
 object Decontaminate {
 
-  /** Distinct word n-grams of `text` as space-joined strings; empty
-    * array when the document has fewer than n tokens. (The `when`
-    * guard matters: Spark's `sequence(1, stop)` DESCENDS for stop < 1
-    * instead of returning empty.) */
-  def wordNgrams(text: Column, n: Int): Column = {
-    require(n >= 1, "n must be >= 1")
-    // tokens bound to a lambda variable via the one-element outer
-    // transform: a free tokens expression inside the n-gram lambda is
-    // re-inlined and re-tokenizes the document once per position
-    F.flatten(F.transform(F.array(Tokenizer.space(text)), w =>
-      F.when(F.size(w) >= n,
-        F.array_distinct(F.transform(
-          F.sequence(F.lit(1), F.size(w) - (n - 1)),
-          i => F.array_join(F.slice(w, i, F.lit(n)), " "))))
-        .otherwise(F.array().cast("array<string>"))))
-  }
-
   /** Per-document contamination evidence: (idCol, n_hits) for every
     * corpus document sharing at least one distinct word n-gram with
     * the benchmark text column, n_hits = how many distinct n-grams
@@ -45,10 +28,10 @@ object Decontaminate {
   def overlapHits(corpus: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, n: Int = 13,
       bitsPerItem: Int = 16): DataFrame = {
-    // n-gram IDENTITY is the 64-bit chain hash (TextOps.shingleHashes —
-    // same per-document distinct set as wordNgrams, no gram string ever
-    // built), so the Bloom prefilter and the exact semi join both move
-    // 8-byte longs instead of ~50-byte n-gram strings for the corpus
+    // n-gram IDENTITY is the 64-bit chain hash (shingle_hashes — the
+    // document's distinct word n-grams, no gram string ever built), so
+    // the Bloom prefilter and the exact semi join both move 8-byte longs
+    // instead of ~50-byte n-gram strings for the corpus
     // side — the side that is 100 TB in production. A 2^-64 identity
     // collision could count one extra phantom overlap — the library's
     // standard hash-identity tradeoff (exactDedup), and the oracle
@@ -60,7 +43,7 @@ object Decontaminate {
     val cGrams = corpus.select(F.col(idCol),
       F.explode(
         graft.ops.TextAnalysis.shingle_hashes(F.col(textCol), n)).as("__g"))
-    // cGrams is distinct per (doc, gram) already: wordNgrams dedups
+    // cGrams is distinct per (doc, gram) already: shingle_hashes dedups
     // within the document, so count(*) counts distinct colliding grams
     BloomJoin.semi(cGrams, "__g", bGrams, "__g", bitsPerItem)
       .groupBy(F.col(idCol))

@@ -76,7 +76,7 @@ object Dedup {
         F.filter(df(linesCol), (_, i) => F.array_contains(F.col("__keep"), i)))
       .otherwise(F.array().cast("array<string>"))
     df.join(keepPerDoc, df(idCol) === keepPerDoc("__id"), "left")
-      .select(df.columns.map(c =>
+      .select(df.columns.toIndexedSeq.map(c =>
         if (c == linesCol) survivors.as(linesCol) else df(c)): _*)
   }
 
@@ -191,7 +191,7 @@ object Dedup {
         F.count(F.lit(1)).as("__n_kept"))
     val nTok = F.size(Tokenizer.space(df(textCol))).cast("long")
     df.join(kept, df(idCol) === kept("__id"), "left")
-      .select(df.columns.map(c =>
+      .select(df.columns.toIndexedSeq.map(c =>
         if (c == textCol) F.coalesce(F.col("__scrubbed"), F.lit("")).as(textCol)
         else df(c)) :+
         (nTok - F.coalesce(F.col("__n_kept"), F.lit(0L))).as("n_removed"): _*)

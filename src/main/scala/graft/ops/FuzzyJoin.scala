@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Fuzzy string self-join: all pairs within edit (Levenshtein) distance
   * `maxEd` — the typo-clustering primitive of vocabulary cleaning and

@@ -1,25 +1,23 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.hash.Murmur2Kernel
 
 /** Multimodal (image/audio/video) columns for training-data pipelines:
-  * opaque binary content + typed metadata. IMAGE decode is REAL for the
-  * JDK-native codecs (png/jpeg/gif/bmp via `javax.imageio`), AUDIO
-  * decode is REAL for the JDK-native containers (WAV/AIFF/AU PCM via
-  * `javax.sound.sampled`), and FRAME SAMPLING is REAL for the JDK-native
+  * opaque binary content + typed metadata. IMAGE decode and resize use
+  * the JDK-native codecs (png/jpeg/gif/bmp via `javax.imageio`), AUDIO
+  * decode the JDK-native containers (WAV/AIFF/AU PCM via
+  * `javax.sound.sampled`), and FRAME SAMPLING the JDK-native
   * multi-frame container (animated GIF: frames + per-frame delay
   * metadata via the `ImageIO` frame reader) — all present on every
-  * executor with no extra jars. The formats the JDK lacks (webp, mp3,
-  * flac, ogg, mp4, webm) remain deterministic fakes behind documented
-  * `STUB:` fallbacks, while the Spark-side plumbing — schema, size-aware
-  * partitioning, batch iteration, frame explosion — is real and tested.
+  * executor with no extra jars.
   *
-  * Remaining swap-in points are marked `STUB:`; a real deployment
-  * replaces the fake with a codec call (JVM) or a
-  * Pandas-UDF/`mapInPandas` stage (Python), keeping every signature and
-  * partitioning decision unchanged.
+  * One rule for every decoder: an asset that no installed codec reads
+  * (webp, mp3, flac, ogg, mp4, webm, corrupt bytes) yields no row, never
+  * a made-up answer. A deployment that needs those formats adds the
+  * codec to the classpath (`ImageIO`/`AudioSystem` find it through
+  * their service loaders) and keeps every signature unchanged.
   */
 object Multimodal {
 
@@ -39,50 +37,6 @@ object Multimodal {
       height: Int,
       channels: Int,
       pixels_fingerprint: Long)
-
-  case class Frame(
-      asset_id: Long,
-      frame_idx: Int,
-      ts_ms: Int,
-      frame_fingerprint: Long)
-
-  val Kinds: Array[String] = Array("image", "audio", "video")
-  val Formats: Map[String, Array[String]] = Map(
-    "image" -> Array("jpeg", "png", "webp"),
-    "audio" -> Array("mp3", "flac", "ogg"),
-    "video" -> Array("mp4", "webm"))
-
-  /** Deterministic synthetic asset corpus: content bytes are counter-mode
-    * murmur output, so regenerating is byte-identical (same invariant as
-    * TranscriptGen) and sizes vary over ~1KB..~64KB. */
-  def generateAssets(spark: SparkSession, n: Long, seed: Long = 42L): Dataset[Asset] = {
-    import spark.implicits._
-    spark.range(n).map { i =>
-      def draw(key: String): Long =
-        Murmur2Kernel.hash64Seeded(graft.core.ByteOps.utf8(s"asset:$i:$key"), seed)
-      val kind = Kinds(Math.floorMod(draw("kind"), 3L).toInt)
-      val formats = Formats(kind)
-      val format = formats(Math.floorMod(draw("fmt"), formats.length.toLong).toInt)
-      val size = 1024 + Math.floorMod(draw("size"), 64L * 1024).toInt
-      val content = new Array[Byte](size)
-      var off = 0
-      var ctr = 0L
-      while (off < size) {
-        val h = Murmur2Kernel.hash64Seeded(graft.core.ByteOps.utf8(s"asset:$i:b$ctr"), seed)
-        var b = 0
-        while (b < 8 && off < size) {
-          content(off) = (h >>> (b * 8)).toByte
-          off += 1
-          b += 1
-        }
-        ctr += 1
-      }
-      val width = if (kind == "audio") 0 else 64 + Math.floorMod(draw("w"), 1920L).toInt
-      val height = if (kind == "audio") 0 else 64 + Math.floorMod(draw("h"), 1080L).toInt
-      val durationMs = if (kind == "image") 0 else 500 + Math.floorMod(draw("d"), 60000L).toInt
-      Asset(i, kind, content, width, height, durationMs, format)
-    }
-  }
 
   /** Deterministic REAL-PNG corpus: seeded murmur pixels -> BufferedImage
     * -> `ImageIO.write(png)` on the executors — genuine encoded image
@@ -155,7 +109,7 @@ object Multimodal {
     * a hand-built RIFF/WAVE header — genuine encoded audio bytes with
     * zero external data, so [[decodeAudio]] runs the real
     * `javax.sound.sampled` codec end to end (WAV/AIFF/AU PCM ship with
-    * the JDK; mp3/flac/ogg do not and stay on the documented fake path).
+    * the JDK; mp3/flac/ogg do not, and [[decodeAudioAssets]] drops them).
     * Parameters are arithmetic in the asset id — sampleRate 8000<<(i%3),
     * channels 1+(i%2), frames 400+100·(i%5) — so a SQL oracle can check
     * the decoded metadata exactly. */
@@ -286,39 +240,18 @@ object Multimodal {
     }
   }
 
-  /** Decode audio: REAL for JDK-native containers, the documented
-    * deterministic fake otherwise (same contract as [[decodeImages]]).
-    * Iterator-shaped mapPartitions — the scale contract for binary
-    * columns. */
+  /** Decode the audio assets with [[decodeAudio]]; an asset no
+    * installed codec reads (mp3/flac/ogg) yields no row. Iterator-shaped
+    * mapPartitions — the scale contract for binary columns. */
   def decodeAudioAssets(assets: Dataset[Asset]): Dataset[DecodedAudio] = {
     import assets.sparkSession.implicits._
     assets.filter(_.kind == "audio").mapPartitions { it =>
-      it.map { a =>
-        decodeAudio(a.content) match {
-          case Some((rate, ch, frames, fp)) =>
-            DecodedAudio(a.asset_id, rate, ch, frames, fp)
-          case None =>
-            // STUB fallback: no installed codec (mp3/flac/ogg)
-            DecodedAudio(a.asset_id, 0, 0, 0L, Murmur2Kernel.hash64(a.content))
+      it.flatMap { a =>
+        decodeAudio(a.content).map { case (rate, ch, frames, fp) =>
+          DecodedAudio(a.asset_id, rate, ch, frames, fp)
         }
       }
     }
-  }
-
-  /** Size-aware repartitioning: binary workloads must balance BYTES per
-    * task, not rows — a 4KB-thumbnail partition and a 64KB-video
-    * partition with equal row counts differ 16x in work. One lightweight
-    * agg computes total bytes; partition count = ceil(total/target). */
-  def repartitionBySize(df: DataFrame, contentCol: String,
-      targetBytesPerPartition: Long = 128L << 20): DataFrame = {
-    val totalRow = df.agg(F.sum(F.length(F.col(contentCol)))).head()
-    if (totalRow.isNullAt(0)) return df // empty input
-    val total = totalRow.getLong(0)
-    val parts = math.max(1, math.ceil(total.toDouble / targetBytesPerPartition).toInt)
-    // distribute on the FULL content hash: real media share fixed
-    // magic-byte prefixes, so any prefix key would collapse same-format
-    // assets into one partition
-    df.repartition(parts, graft.spark.functions.murmur64(F.col(contentCol)))
   }
 
   /** Decode one encoded image with the JDK-native codecs (`javax.imageio`:
@@ -365,24 +298,16 @@ object Multimodal {
     fp
   }
 
-  /** Decode images: REAL for the JDK-native codecs (png/jpeg/gif/bmp via
-    * `javax.imageio`, available on every executor without extra jars);
-    * formats the JDK cannot parse (webp, synthetic test bytes) fall back
-    * to the documented deterministic fake — recorded dimensions plus a
-    * murmur fingerprint of the ENCODED bytes — so downstream joins/dedup
-    * logic stays fully exercised either way. Batch shape (mapPartitions
-    * over an iterator, never materializing a partition in memory) is the
-    * scale contract. */
+  /** Decode the image assets with [[decodeImage]]; an asset no
+    * installed codec reads (webp, corrupt bytes) yields no row. Batch
+    * shape (mapPartitions over an iterator, never materializing a
+    * partition in memory) is the scale contract. */
   def decodeImages(assets: Dataset[Asset]): Dataset[DecodedImage] = {
     import assets.sparkSession.implicits._
     assets.filter(_.kind == "image").mapPartitions { it =>
-      it.map { a =>
-        decodeImage(a.content) match {
-          case Some((w, h, ch, fp)) => DecodedImage(a.asset_id, w, h, ch, fp)
-          case None =>
-            // STUB fallback: no installed codec for these bytes
-            DecodedImage(a.asset_id, a.width, a.height, 3,
-              Murmur2Kernel.hash64(a.content))
+      it.flatMap { a =>
+        decodeImage(a.content).map { case (w, h, ch, fp) =>
+          DecodedImage(a.asset_id, w, h, ch, fp)
         }
       }
     }
@@ -401,42 +326,33 @@ object Multimodal {
       argb00: Long,
       pixels_fingerprint: Long)
 
-  /** Resize: REAL for ImageIO-decodable bytes (png/jpeg/gif/bmp ship
-    * with the JRE) — decode, scale to (w, h) with `Graphics2D.drawImage`
+  /** Resize the image assets: decode with `javax.imageio` (png/jpeg/gif/
+    * bmp ship with the JRE), scale to (w, h) with `Graphics2D.drawImage`
     * under the NEAREST_NEIGHBOR interpolation hint into an INT_RGB
-    * raster, and fingerprint the SCALED pixels. Bytes no installed codec
-    * recognizes keep the documented deterministic fake (recorded source
-    * dims, target dims, fingerprint of (encoded-bytes hash, target
-    * dims)) so downstream logic stays exercised either way. Same
-    * mapPartitions iterator shape as [[decodeImages]] — one raster in
-    * flight per task, never a materialized partition. */
+    * raster, and fingerprint the SCALED pixels. An asset no installed
+    * codec reads yields no row. Same mapPartitions iterator shape as
+    * [[decodeImages]] — one raster in flight per task, never a
+    * materialized partition. */
   def resizeImageAssets(assets: Dataset[Asset], w: Int, h: Int): Dataset[ResizedImage] = {
     require(w > 0 && h > 0, s"target dims must be positive: ${w}x$h")
     import assets.sparkSession.implicits._
     assets.filter(_.kind == "image").mapPartitions { it =>
-      it.map { a =>
+      it.flatMap { a =>
         val dec =
           try Option(javax.imageio.ImageIO.read(
             new java.io.ByteArrayInputStream(a.content)))
           catch { case scala.util.control.NonFatal(_) => None }
-        dec match {
-          case Some(img) =>
-            val out = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g2 = out.createGraphics()
-            g2.setRenderingHint(
-              java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_NEAREST_NEIGHBOR)
-            g2.drawImage(img, 0, 0, w, h, null)
-            g2.dispose()
-            ResizedImage(a.asset_id, img.getWidth, img.getHeight, w, h,
-              out.getRGB(0, 0).toLong & 0xffffffffL, pixelFingerprint(out))
-          case None =>
-            // STUB fallback: no installed codec for these bytes
-            val fp = Murmur2Kernel.hash64Seeded(
-              graft.core.ByteOps.utf8(s"${Murmur2Kernel.hash64(a.content)}:$w:$h"), 0L)
-            ResizedImage(a.asset_id, a.width, a.height, w, h,
-              fp & 0xffffffffL, fp)
+        dec.map { img =>
+          val out = new java.awt.image.BufferedImage(
+            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+          val g2 = out.createGraphics()
+          g2.setRenderingHint(
+            java.awt.RenderingHints.KEY_INTERPOLATION,
+            java.awt.RenderingHints.VALUE_INTERPOLATION_NEAREST_NEIGHBOR)
+          g2.drawImage(img, 0, 0, w, h, null)
+          g2.dispose()
+          ResizedImage(a.asset_id, img.getWidth, img.getHeight, w, h,
+            out.getRGB(0, 0).toLong & 0xffffffffL, pixelFingerprint(out))
         }
       }
     }
@@ -526,44 +442,14 @@ object Multimodal {
     out.toSeq
   }
 
-  /** Sample frames from video assets every `everyMs` — REAL frame decode
-    * for the JDK-native multi-frame container (animated GIF: frames,
-    * per-frame delay metadata, and pixel fingerprints all come from the
-    * actual `ImageIO` codec). Containers the JDK cannot parse (mp4,
-    * webm, synthetic test bytes) keep the documented deterministic fake
-    * — fingerprint a function of (content fingerprint, ts) — so the
-    * frame-explosion plumbing stays exercised either way. */
-  def sampleFrames(assets: Dataset[Asset], everyMs: Int): Dataset[Frame] = {
-    import assets.sparkSession.implicits._
-    assets.filter(_.kind == "video").flatMap { a =>
-      decodeFrames(a.content) match {
-        case Some(frames) =>
-          sampleSchedule(frames.map(_.delay_ms), everyMs).iterator.map {
-            case (k, f) => Frame(a.asset_id, f, k * everyMs, frames(f).pixels_fingerprint)
-          }
-        case None =>
-          // STUB fallback: no installed codec for these bytes. Sample
-          // count mirrors the real path's schedule semantics (one sample
-          // per k*everyMs instant STRICTLY inside the duration — ceil,
-          // not floor), so stub and decoded assets are counted uniformly
-          val contentFp = Murmur2Kernel.hash64(a.content)
-          val n = math.max(1L,
-            (a.duration_ms.toLong + everyMs - 1) / everyMs).toInt
-          (0 until n).iterator.map { f =>
-            val ts = f * everyMs
-            Frame(a.asset_id, f, ts,
-              Murmur2Kernel.hash64Seeded(graft.core.ByteOps.utf8(s"$contentFp:$ts"), 0L))
-          }
-      }
-    }
-  }
-
-  /** A sampled frame with its decode witnesses — the oracle-facing shape
-    * of [[sampleFrames]] (real decode path only; assets no codec reads
-    * are dropped). */
+  /** One sampled frame of a video asset with its decode witnesses. */
   final case class SampledFrame(asset_id: Long, sample_idx: Int, frame_idx: Int,
       ts_ms: Int, width: Int, height: Int, argb00: Long)
 
+  /** Sample the video assets every `everyMs`: decode every frame with
+    * [[decodeFrames]] and emit, at each instant k·everyMs inside the
+    * duration, the frame on display ([[sampleSchedule]]). An asset no
+    * installed codec reads (mp4, webm) yields no row. */
   def sampleFramesDetailed(assets: Dataset[Asset], everyMs: Int): Dataset[SampledFrame] = {
     import assets.sparkSession.implicits._
     assets.filter(_.kind == "video").flatMap { a =>
@@ -578,14 +464,4 @@ object Multimodal {
     }
   }
 
-  /** Exact media dedup via content fingerprint — binary twin of
-    * Dedup.exactDedup; shuffles 16 bytes/row, never the media bytes. */
-  def dedupAssets(assets: Dataset[Asset]): DataFrame = {
-    val df = assets.toDF()
-    df.select(F.col("asset_id"),
-      graft.spark.functions.murmur64(F.col("content")).as("__fp"))
-      .groupBy("__fp")
-      .agg(F.min("asset_id").as("asset_id"))
-      .select("asset_id")
-  }
 }

@@ -77,7 +77,7 @@ object SkewJoin {
     val keys: Seq[Column] = keyCols.map(F.col)
     val others = df.columns.filterNot(keyCols.contains)
     require(others.nonEmpty, "df needs at least one non-key column")
-    val packed = df.select(keys :+ F.struct(others.map(F.col): _*).as("__e"): _*)
+    val packed = df.select(keys :+ F.struct(others.toIndexedSeq.map(F.col): _*).as("__e"): _*)
 
     // one cheap counting pass (map-side combined; carries keys + a long)
     val counted = packed.groupBy(keys: _*)

@@ -83,12 +83,6 @@ object BloomInterop {
     fromState(ois.readObject().asInstanceOf[RefFilterState])
   }
 
-  /** Read a `.blm` file written by the reference's `mkblm`. */
-  def readFilterStateFile(path: String): BloomSketch = {
-    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(path))
-    try readFilterState(in) finally in.close()
-  }
-
   /** Write `sk` as a `.blm` the reference's `ckblm` loads directly
     * (`cmd/ckblm.java:38-45`) — the reverse migration. The stream is
     * produced by serializing the stand-in and splicing the reference's
@@ -125,11 +119,6 @@ object BloomInterop {
     oos.close()
     out.write(renameClass(bos.toByteArray,
       classOf[RefFilterState].getName, RefClassName))
-  }
-
-  def writeFilterStateFile(sk: BloomSketch, path: String): Unit = {
-    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
-    try writeFilterState(sk, out) finally out.close()
   }
 
   /** Splice `to` over the single length-prefixed modified-UTF

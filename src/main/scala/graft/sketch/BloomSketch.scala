@@ -164,8 +164,6 @@ final class BloomSketch private (
     val wps = wordsPerSet
     java.util.Arrays.copyOfRange(words, radix * wps, (radix + 1) * wps)
   }
-
-  def approxBitCount: Long = words.map(java.lang.Long.bitCount(_).toLong).sum
 }
 
 object BloomSketch extends SketchFormat[BloomSketch] {

@@ -77,7 +77,6 @@ final class HeavyHittersSketch private (
   }
 
   def n: Long = totalN
-  def trackedCount: Int = counters.size
 
   def update(item: String, weight: Long = 1L): Unit = {
     totalN += weight

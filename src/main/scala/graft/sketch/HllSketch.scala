@@ -47,14 +47,6 @@ final class HllSketch private (
 
   def update(data: Array[Byte]): Unit = updateHash(kernel.hash64(data))
   def update(s: String): Unit = update(ByteOps.utf8(s))
-  def updateLong(v: Long): Unit = {
-    scratch(0) = (v >>> 56).toByte; scratch(1) = (v >>> 48).toByte
-    scratch(2) = (v >>> 40).toByte; scratch(3) = (v >>> 32).toByte
-    scratch(4) = (v >>> 24).toByte; scratch(5) = (v >>> 16).toByte
-    scratch(6) = (v >>> 8).toByte; scratch(7) = v.toByte
-    update(scratch)
-  }
-  @transient private lazy val scratch = new Array[Byte](8)
 
   /** Register update from an already-computed 64-bit code.
     *

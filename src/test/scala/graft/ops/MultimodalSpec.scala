@@ -1,70 +1,42 @@
 package graft.ops
 
-import org.apache.spark.sql.{functions => F}
-
 import graft.spark.SparkTestBase
 
-/** Multimodal tests: deterministic generation, size-aware partitioning,
-  * REAL JDK-codec image decode (png via javax.imageio) with the
-  * deterministic-fake fallback, resize/frame-sample pipelines, and
-  * binary dedup. */
+/** Multimodal tests: the JDK-codec image/audio decode, resize and GIF
+  * frame sampling over the in-repo generated corpora, and the one rule
+  * every decoder keeps: an asset no installed codec reads yields no row. */
 class MultimodalSpec extends SparkTestBase {
   import spark.implicits._
 
-  private lazy val assets = Multimodal.generateAssets(spark, 300).cache()
-
-  test("asset generation is deterministic and well-formed") {
-    val a = Multimodal.generateAssets(spark, 50).collect().sortBy(_.asset_id)
-    val b = Multimodal.generateAssets(spark, 50).collect().sortBy(_.asset_id)
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.asset_id === y.asset_id)
-      assert(java.util.Arrays.equals(x.content, y.content))
-    }
-    assert(a.map(_.kind).toSet === Set("image", "audio", "video"))
-    a.foreach { x =>
-      assert(x.content.length >= 1024)
-      if (x.kind == "audio") assert(x.width === 0 && x.duration_ms > 0)
-      if (x.kind == "image") assert(x.width > 0 && x.duration_ms === 0)
-    }
-  }
-
-  test("size-aware repartitioning balances bytes, not rows") {
-    val target = 64L << 10 // small target so the corpus spreads over many parts
-    val df = Multimodal.repartitionBySize(assets.toDF(), "content", target)
-    val total = assets.toDF().agg(F.sum(F.length($"content"))).head().getLong(0)
-    val expectParts = math.max(1, math.ceil(total / target.toDouble).toInt)
-    assert(df.rdd.getNumPartitions === expectParts)
-    // MEASURE the byte distribution — the partition count alone would
-    // still pass if the hash key collapsed (e.g. a magic-byte prefix
-    // routed every PNG to one partition). Full-content hashing must
-    // keep the max partition within a few times the even share.
-    val perPart = df.select(F.length($"content").cast("long").as("b"))
-      .rdd.mapPartitions(it => Iterator(it.map(_.getLong(0)).sum))
-      .collect()
-    assert(perPart.length === expectParts)
-    assert(perPart.sum === total)
-    val maxPart = perPart.max
-    assert(maxPart <= math.max(target * 3, total / 2),
-      s"byte skew: max partition $maxPart of $total across $expectParts parts " +
-        s"(${perPart.mkString(",")})")
-    // and it genuinely spread: more than one partition carries bytes
-    assert(perPart.count(_ > 0) > 1, s"all bytes on one partition: ${perPart.mkString(",")}")
-  }
-
   test("decode/resize pipeline: deterministic fingerprints, schema, partition-count independent") {
-    val decoded = Multimodal.decodeImages(assets)
-    val nImages = assets.filter(_.kind == "image").count()
-    assert(decoded.count() === nImages)
-    // the synthetic corpus is murmur noise — no codec recognizes it, so
-    // this exercises the documented stub fallback of the resize path
+    // ids 0..3 decode (real png); ids 100.. are bytes no installed
+    // codec reads, one per kind plus a truncated png
+    val png = Multimodal.generatePngAssets(spark, 4, distinctPixels = 4)
+      .collect().sortBy(_.asset_id)
+    val junk = Array.tabulate[Byte](2048)(i => (i * 37 + 11).toByte)
+    val undecodable = Seq(
+      Multimodal.Asset(100L, "image", junk, 64, 32, 0, "webp"),
+      Multimodal.Asset(101L, "image", png(0).content.take(40), 16, 16, 0, "png"),
+      Multimodal.Asset(102L, "audio", junk, 0, 0, 1500, "mp3"),
+      Multimodal.Asset(103L, "video", junk, 64, 32, 1500, "mp4"))
+    val assets = spark.createDataset(png.toSeq ++ undecodable)
+    val decodedIds = Seq(0L, 1L, 2L, 3L)
+
+    val decoded = Multimodal.decodeImages(assets).collect()
+    assert(decoded.map(_.asset_id).sorted.toSeq === decodedIds)
     val resized = Multimodal.resizeImageAssets(assets, 224, 224)
-    assert(resized.count() === nImages)
-    assert(resized.filter(d => d.width != 224 || d.height != 224).count() === 0)
+    assert(resized.schema.fieldNames.toSeq === Seq("asset_id", "src_width",
+      "src_height", "width", "height", "argb00", "pixels_fingerprint"))
+    val r1 = resized.collect().sortBy(_.asset_id)
+    assert(r1.map(_.asset_id).toSeq === decodedIds)
+    assert(r1.forall(d => d.width == 224 && d.height == 224))
     // determinism across partitionings
-    val r1 = resized.collect().sortBy(_.asset_id).map(_.pixels_fingerprint).toSeq
     val r2 = Multimodal.resizeImageAssets(assets.repartition(13), 224, 224)
-      .collect().sortBy(_.asset_id).map(_.pixels_fingerprint).toSeq
-    assert(r1 === r2)
+      .collect().sortBy(_.asset_id)
+    assert(r1.map(_.pixels_fingerprint).toSeq === r2.map(_.pixels_fingerprint).toSeq)
+    // no decoder makes up a row for bytes no codec reads
+    assert(Multimodal.decodeAudioAssets(assets).count() === 0)
+    assert(Multimodal.sampleFramesDetailed(assets, everyMs = 200).count() === 0)
   }
 
   test("real JDK-native resize: scaled dims, exact solid color, up- and down-scale") {
@@ -116,45 +88,15 @@ class MultimodalSpec extends SparkTestBase {
     assert(Multimodal.decodeImage(makePng(40, 26)).get._4 !== fp)
 
     // through the Spark pipeline: a real png asset decodes with REAL
-    // dimensions (ignoring the recorded metadata), fake bytes fall back
+    // dimensions (ignoring the recorded metadata); bytes no codec reads
+    // yield no row
     val rows = Seq(
       Multimodal.Asset(1L, "image", png, 999, 999, 0, "png"),
       Multimodal.Asset(2L, "image", Array.fill[Byte](2048)(7), 64, 32, 0, "webp"))
     val ds = spark.createDataset(rows)(
       org.apache.spark.sql.Encoders.product[Multimodal.Asset])
     val out = Multimodal.decodeImages(ds).collect().sortBy(_.asset_id)
-    assert(out(0) === Multimodal.DecodedImage(1L, 40, 25, 3, fp))
-    assert(out(1).width === 64 && out(1).height === 32) // STUB fallback path
-    assert(out(1).pixels_fingerprint ===
-      graft.core.hash.Murmur2Kernel.hash64(rows(1).content))
-  }
-
-  test("frame sampling explodes one row per sampled frame, bounded by duration") {
-    val frames = Multimodal.sampleFrames(assets, everyMs = 1000).cache()
-    val videos = assets.filter(_.kind == "video").collect()
-    // ceil semantics, matching the real decode path's schedule (one
-    // sample per k*everyMs strictly inside the duration)
-    val expected = videos.map(v => math.max(1L, (v.duration_ms + 999L) / 1000)).sum
-    assert(frames.count() === expected)
-    // per-asset frame indices are dense from 0
-    val bad = frames.groupByKey(_.asset_id).mapGroups { (_, it) =>
-      val idx = it.map(_.frame_idx).toSeq.sorted
-      if (idx == idx.indices.toSeq) 0 else 1
-    }.filter(_ == 1).count()
-    assert(bad === 0)
-  }
-
-  test("binary dedup: planted content duplicates collapse") {
-    val doubled = assets.toDF().select($"asset_id", $"content")
-      .unionAll(assets.toDF().select(($"asset_id" + 10000).as("asset_id"), $"content"))
-    import org.apache.spark.sql.Encoders
-    val kept = Multimodal.dedupAssets(
-      doubled.withColumn("kind", F.lit("image"))
-        .withColumn("width", F.lit(1)).withColumn("height", F.lit(1))
-        .withColumn("duration_ms", F.lit(0)).withColumn("format", F.lit("png"))
-        .as[Multimodal.Asset](Encoders.product[Multimodal.Asset]))
-    assert(kept.count() === assets.count())
-    assert(kept.agg(F.max("asset_id")).head().getLong(0) < 10000)
+    assert(out.toSeq === Seq(Multimodal.DecodedImage(1L, 40, 25, 3, fp)))
   }
 
   test("synthesized real-PNG corpus: codec round-trip; pixel dedup finds cross-container twins") {
@@ -185,12 +127,12 @@ class MultimodalSpec extends SparkTestBase {
     }
     // distinct pixel grids -> distinct fingerprints
     assert(dec.map(_.pixels_fingerprint).toSet.size === dp)
-    // byte-level dedup provably cannot merge the twins; pixel-level does
-    assert(Multimodal.dedupAssets(ds).count() === n)
+    // a dedup keyed on the encoded bytes cannot merge the twins; one
+    // keyed on the decoded pixels does
+    assert(ds.select(graft.spark.functions.murmur64($"content")).distinct().count() === n)
   }
 
   test("synthesized real-WAV corpus: javax.sound codec round-trip is exact") {
-    import spark.implicits._
     val assets = Multimodal.generateWavAssets(spark, 24)
     val dec = Multimodal.decodeAudioAssets(assets).collect().sortBy(_.asset_id)
     assert(dec.length === 24)
@@ -210,7 +152,7 @@ class MultimodalSpec extends SparkTestBase {
     val again = Multimodal.generateWavAssets(spark, 24).collect().sortBy(_.asset_id)
     assert(again.zip(assets.collect().sortBy(_.asset_id))
       .forall { case (x, y) => java.util.Arrays.equals(x.content, y.content) })
-    // unsupported container falls back to the documented fake path
+    // a container no installed codec reads decodes to nothing
     assert(Multimodal.decodeAudio(Array[Byte](1, 2, 3, 4)).isEmpty)
   }
 
@@ -237,21 +179,24 @@ class MultimodalSpec extends SparkTestBase {
       java.util.Arrays.equals(x.content, y.content) })
   }
 
-  test("sampleFrames: REAL path for GIF (decoded fingerprints), fake path preserved elsewhere") {
-    import spark.implicits._
+  test("sampleFramesDetailed: GIF frame schedule, decoded dims and pixel") {
     val gifs = Multimodal.generateGifAssets(spark, 6)
-    val sampled = Multimodal.sampleFrames(gifs, everyMs = 200)
+    val sampled = Multimodal.sampleFramesDetailed(gifs, everyMs = 200)
       .collect().sortBy(f => (f.asset_id, f.ts_ms))
     // asset i has nf = 2 + i%4 frames of 100ms: samples at 0,200,.. < nf*100
     val expectCount = (0 until 6).map(i => (2 + i % 4) * 100)
       .map(d => (d + 199) / 200).sum
     assert(sampled.length === expectCount)
-    // the fingerprint is of DECODED pixels: recompute via decodeFrames
+    // dims and top-left pixel are the DECODED frame's: recompute via
+    // decodeFrames
     val byId = gifs.collect().map(a => a.asset_id ->
       Multimodal.decodeFrames(a.content).get).toMap
     sampled.foreach { fr =>
+      assert(fr.ts_ms === fr.sample_idx * 200)
       assert(fr.frame_idx === math.min(byId(fr.asset_id).length - 1, fr.ts_ms / 100))
-      assert(fr.frame_fingerprint === byId(fr.asset_id)(fr.frame_idx).pixels_fingerprint)
+      val dec = byId(fr.asset_id)(fr.frame_idx)
+      assert(fr.width === dec.width && fr.height === dec.height)
+      assert(fr.argb00 === dec.argb00)
     }
   }
 

@@ -61,11 +61,11 @@ class NgramLmSpec extends SparkTestBase {
     val (uni, total) = NgramLm.unigramModel(refDocs, "text")
     assert(uni.schema.fieldNames.toSeq === Seq("__h", "__c_uni"))
     assert(uni.count() === 3L)
-    assert(uni.agg(org.apache.spark.sql.functions.sum("__c_uni")).head.getLong(0) === 7L)
-    assert(total.head.getLong(0) === 7L)
+    assert(uni.agg(org.apache.spark.sql.functions.sum("__c_uni")).head().getLong(0) === 7L)
+    assert(total.head().getLong(0) === 7L)
     val big = NgramLm.bigramModel(refDocs, "text")
     assert(big.schema.fieldNames.toSeq === Seq("__h", "__c_big"))
     assert(big.count() === 3L)
-    assert(big.agg(org.apache.spark.sql.functions.sum("__c_big")).head.getLong(0) === 5L)
+    assert(big.agg(org.apache.spark.sql.functions.sum("__c_big")).head().getLong(0) === 5L)
   }
 }
