@@ -622,26 +622,19 @@ object Dedup {
     * on any of 4 x 16-bit bands, verified by Hamming distance <=
     * `maxHamming` via the codegen'd bit_count built-in.
     *
-    * `shingleSize` > 1 (the default) signs order-sensitive token n-grams
-    * — REQUIRED at corpus scale: unigram SimHash collapses on Zipf text
-    * (any two documents share the high-frequency word types, so an
+    * The signature votes over order-sensitive token 3-grams — REQUIRED at
+    * corpus scale: unigram SimHash collapses on Zipf text (any two
+    * documents share the high-frequency word types, so an
     * order-insensitive vote puts ~15% of ALL pairs within hamming 3 —
-    * quadratic output; measured in the r5 scale run, BENCH.md).
-    * `shingleSize = 1` keeps the legacy unigram signature
-    * (TextOps.simhash64, golden-pinned). */
+    * quadratic output; measured in the r5 scale run, BENCH.md). */
   def simhashPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      maxHamming: Int = 3,
-      shingleSize: Int = 3): DataFrame = {
-    val sig =
-      if (shingleSize <= 1) TextAnalysis.simhash64(F.col(textCol))
-      else TextAnalysis.simhash_ngram64(F.col(textCol), shingleSize)
+      maxHamming: Int = 3): DataFrame =
     simhashPairsFromSig(
-      df.select(F.col(idCol), sig.as("__sim")),
+      df.select(F.col(idCol), TextAnalysis.simhash_ngram64(F.col(textCol), 3).as("__sim")),
       idCol, "__sim", maxHamming)
-  }
 
   /** SimHash pair generation over a PRECOMPUTED signature column.
     * `probeAll = true` collapses the banding to one shared bucket so the

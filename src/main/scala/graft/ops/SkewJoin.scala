@@ -54,23 +54,20 @@ object SkewJoin {
     * real, non-foldable equi-join keys and Catalyst cannot collapse the
     * join into the cartesian the plan audit bans.
     *
-    * `broadcastCensus` (default true) hints the hot-group census into a
-    * broadcast join for the tag-attach. The census is keys + an int per
-    * HOT group — at most |rows|/hotThreshold rows and tiny in every
-    * measured regime — and the hint matters because callers persist the
-    * pair DAG: under an InMemoryRelation AQE either cannot re-plan the
-    * join (default config — measured 78 s cold / stage-skew 42 on the
-    * r5 hotspot corpus vs 20 s hinted) or re-plans at the cost of cache
-    * partitioning churn (canChangeCachedPlanOutputPartitioning=true —
-    * measured 61 s cold / 67 s warm). A corpus whose census itself
-    * approaches the 8 GB broadcast wall (~10^8+ hot groups) should pass
-    * false and take the shuffled tag-attach join instead. */
+    * The hot-group census joins the rows for the tag-attach under a
+    * broadcast hint. The census is keys + an int per HOT group — at most
+    * |rows|/hotThreshold rows and tiny in every measured regime — and the
+    * hint matters because callers persist the pair DAG: under an
+    * InMemoryRelation AQE either cannot re-plan the join (default config
+    * — measured 78 s cold / stage-skew 42 on the r5 hotspot corpus vs
+    * 20 s hinted) or re-plans at the cost of cache partitioning churn
+    * (canChangeCachedPlanOutputPartitioning=true — measured 61 s cold /
+    * 67 s warm). */
   def selfPairsWithinGroups(
       df: DataFrame,
       keyCols: Seq[String],
       hotThreshold: Int = 256,
-      maxBuckets: Int = 64,
-      broadcastCensus: Boolean = true): DataFrame = {
+      maxBuckets: Int = 64): DataFrame = {
     require(keyCols.nonEmpty, "at least one group key column")
     require(hotThreshold > 1, "hotThreshold must be > 1")
     require(maxBuckets >= 2, "maxBuckets must be >= 2")
@@ -87,15 +84,11 @@ object SkewJoin {
         F.ceil(F.col("__n").cast("double") / hotThreshold).cast("int"),
         F.lit(maxBuckets))).as("__b"): _*)
 
-    // The broadcast hint is NOT optional in the common case: callers
-    // persist the pair DAG, and a join under an InMemoryRelation is
-    // frozen before AQE's runtime stats could pick a broadcast (see the
-    // class doc's measured A/B). The census is bounded at
-    // |rows|/hotThreshold rows of keys+int; `broadcastCensus = false`
-    // is the escape hatch for a corpus where even that approaches the
-    // broadcast wall — the shuffled tag-attach join it degrades to is
-    // correct and bounded (n rows per group, not n^2 pairs).
-    val census = if (broadcastCensus) F.broadcast(hot) else hot
+    // The broadcast hint is NOT optional: callers persist the pair DAG,
+    // and a join under an InMemoryRelation is frozen before AQE's runtime
+    // stats could pick a broadcast (see the method doc's measured A/B).
+    // The census is bounded at |rows|/hotThreshold rows of keys+int.
+    val census = F.broadcast(hot)
     // cold groups (absent from the census) take B = 1: their grid is a
     // single cell, i.e. the plain join's matching
     val tagged = packed.join(census, keyCols, "left")

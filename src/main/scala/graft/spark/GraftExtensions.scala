@@ -37,30 +37,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name),
         builder))
 
-    register("graft_hash64", {
-      case Seq(c) => GraftHash64(c, "murmur2")
-      case Seq(c, k) => GraftHash64(c, lit(k))
-    })
-    register("graft_hash32", {
-      case Seq(c) => GraftHash32(c, "murmur2")
-      case Seq(c, k) => GraftHash32(c, lit(k))
-    })
-    register("graft_hash64_seeded", {
-      case Seq(c, seed) => GraftHash64Seeded(c, seed, "murmur2")
-      case Seq(c, seed, k) => GraftHash64Seeded(c, seed, lit(k))
-    })
-    register("graft_hash64_k", {
-      case Seq(c, k) => GraftHash64K(c, k, "murmur2")
-      case Seq(c, k, kern) => GraftHash64K(c, k, lit(kern))
-    })
-    register("graft_hash32_seeded", {
-      case Seq(c, seed) => GraftHash32Seeded(c, seed, "murmur2")
-      case Seq(c, seed, k) => GraftHash32Seeded(c, seed, lit(k))
-    })
-    register("graft_hash32_k", {
-      case Seq(c, k) => GraftHash32K(c, k, "murmur2")
-      case Seq(c, k, kern) => GraftHash32K(c, k, lit(kern))
-    })
+    for (w <- Seq(64, 32)) {
+      register(s"graft_hash$w", {
+        case Seq(c) => GraftHash(c, "murmur2", w)
+        case Seq(c, k) => GraftHash(c, lit(k), w)
+      })
+      register(s"graft_hash${w}_seeded", {
+        case Seq(c, seed) => GraftHashSeeded(c, seed, "murmur2", w)
+        case Seq(c, seed, k) => GraftHashSeeded(c, seed, lit(k), w)
+      })
+      register(s"graft_hash${w}_k", {
+        case Seq(c, k) => GraftHashK(c, k, "murmur2", w)
+        case Seq(c, k, kern) => GraftHashK(c, k, lit(kern), w)
+      })
+    }
     register("bloom_sketch", {
       case Seq(c, maxSize, bpi) =>
         BloomAgg(c, litLong(maxSize), litInt(bpi)).toAggregateExpression()
@@ -89,16 +79,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
     register("hh_topk", { case Seq(s, k) => HhTopK(s, k) })
     register("hh_estimate", { case Seq(s, i) => HhEstimate(s, i) })
-    // SQL-caller contract: within a task, all rows with a given part id
-    // must carry the same sketch value (the one-row-per-part join shape;
-    // see BloomBankContains scaladoc) — the per-task cache is keyed by
-    // part id alone so hits never deserialize the binary column again.
-    register("bloom_bank_contains", { case Seq(p, s, v) => BloomBankContains(p, s, v) })
-    // misuse-proof variant: cache keyed on (part, sketch-bytes content),
-    // sketch evaluated per row — mixed sketches under one part id each
-    // get their own filter (correct-but-slower instead of silently stale)
-    register("bloom_bank_contains_strict",
-      { case Seq(p, s, v) => BloomBankContains(p, s, v, strict = true) })
     register("top_k_by", {
       case Seq(v, score, k) => TopKByAgg(v, score, litInt(k)).toAggregateExpression()
     })

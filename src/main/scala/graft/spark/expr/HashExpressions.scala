@@ -25,6 +25,24 @@ import graft.spark.agg.ValueBytes
 trait GraftHashExpression extends Expression {
   def kernelName: String
 
+  /** 64 or 32: the code's width, which also fixes the seed's type. */
+  def width: Int
+
+  /** The SQL name's shape between the width and the kernel: "", "_seeded" or "_k". */
+  protected def shape: String
+
+  final override def prettyName: String = s"graft_hash$width${shape}_$kernelName"
+  final override def nullIntolerant: Boolean = true
+
+  // plan strings name the operands and the kernel; the width is in the name
+  final override protected def stringArgs: Iterator[Any] = children.iterator ++ Iterator(kernelName)
+
+  /** The code type: bigint at width 64, int at width 32. */
+  protected final def codeType: DataType = if (width == 64) LongType else IntegerType
+
+  protected final def requireWidth(): Unit =
+    require(width == 64 || width == 32, s"hash width must be 64 or 32, got $width")
+
   /** The operand type checks, run once the kernel name has resolved. */
   protected def checkOperands(): TypeCheckResult
 
@@ -36,19 +54,24 @@ trait GraftHashExpression extends Expression {
     if (k.isFailure) k else checkOperands()
   }
 
-  /** sketchable types accepted for hashed operands (see ValueBytes). */
-  protected final def checkHashable(dt: DataType, pos: String): TypeCheckResult =
+  /** sketchable types accepted for the hashed (first) operand (see ValueBytes). */
+  protected final def checkHashable(dt: DataType): TypeCheckResult =
     ValueBytes.checkSketchable(prettyName, dt) match {
       case TypeCheckResult.TypeCheckSuccess => TypeCheckResult.TypeCheckSuccess
       case _ => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires a string, binary, integral, date or boolean " +
-          s"$pos argument, got ${dt.catalogString}")
+          s"first argument, got ${dt.catalogString}")
     }
 
-  protected final def checkExact(dt: DataType, want: DataType, pos: String): TypeCheckResult =
-    if (dt == want) TypeCheckResult.TypeCheckSuccess
+  /** A hashable first argument and a second argument of exactly `want`. */
+  protected final def checkHashableAnd(first: DataType, second: DataType, want: DataType)
+      : TypeCheckResult = {
+    val h = checkHashable(first)
+    if (h.isFailure) h
+    else if (second == want) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ${want.catalogString} for $pos argument, got ${dt.catalogString}")
+      s"$prettyName requires ${want.catalogString} for second argument, got ${second.catalogString}")
+  }
 
   @transient protected final lazy val kernel: HashKernel64 = HashKernels(kernelName)
 
@@ -74,162 +97,88 @@ trait GraftHashExpression extends Expression {
   private final val LongBytes = "graft.spark.agg.ValueBytes.longBytes"
 }
 
-/** `graft_hash64(input)` — the kernel's default-seed 64-bit code. */
-case class GraftHash64(child: Expression, kernelName: String)
+/** `graft_hash<w>(input)` — the kernel's default-seed code, bigint at
+  * width 64 and int at width 32. */
+case class GraftHash(child: Expression, kernelName: String, width: Int)
     extends UnaryExpression with GraftHashExpression {
+  requireWidth()
 
-  override protected def checkOperands(): TypeCheckResult = checkHashable(child.dataType, "first")
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = s"graft_hash64_$kernelName"
+  override protected def shape: String = ""
+  override protected def checkOperands(): TypeCheckResult = checkHashable(child.dataType)
+  override def dataType: DataType = codeType
 
-  override protected def nullSafeEval(input: Any): Any =
-    kernel.hash64(childBytes(input, child.dataType))
+  override protected def nullSafeEval(input: Any): Any = {
+    val bytes = childBytes(input, child.dataType)
+    if (width == 64) kernel.hash64(bytes) else kernel.hash32(bytes)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val kernelRef = ctx.addReferenceObj("kernel", kernel, classOf[HashKernel64].getName)
-    defineCodeGen(ctx, ev, c => s"$kernelRef.hash64(${bytesCode(c, child.dataType)})")
+    defineCodeGen(ctx, ev, c => s"$kernelRef.hash$width(${bytesCode(c, child.dataType)})")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): GraftHash64 =
+  override protected def withNewChildInternal(newChild: Expression): GraftHash =
     copy(child = newChild)
 }
 
-/** `graft_hash32(input)` — the kernel's default-seed 32-bit code. */
-case class GraftHash32(child: Expression, kernelName: String)
-    extends UnaryExpression with GraftHashExpression {
-
-  override protected def checkOperands(): TypeCheckResult = checkHashable(child.dataType, "first")
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = s"graft_hash32_$kernelName"
-
-  override protected def nullSafeEval(input: Any): Any =
-    kernel.hash32(childBytes(input, child.dataType))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernelRef = ctx.addReferenceObj("kernel", kernel, classOf[HashKernel64].getName)
-    defineCodeGen(ctx, ev, c => s"$kernelRef.hash32(${bytesCode(c, child.dataType)})")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): GraftHash32 =
-    copy(child = newChild)
-}
-
-/** `graft_hash64_seeded(input, seed)` — explicit-seed Murmur-style hash;
-  * only a [[SeededHashKernel]] supports this (murmur2, jenkins, cwow
-  * use seed-by-index; fnv/hsieh chain, where `seed` is the chain state),
-  * and any other kernel name fails analysis. */
-case class GraftHash64Seeded(left: Expression, right: Expression, kernelName: String)
+/** `graft_hash<w>_seeded(input, seed)` — the explicit-seed code; the seed
+  * is bigint at width 64 and int at width 32 (`LongHash.java:44-48`
+  * exposes the int family alongside the long one). Only a
+  * [[SeededHashKernel]] supports this (murmur2, jenkins, cwow use
+  * seed-by-index; fnv/hsieh chain, where `seed` is the chain state), and
+  * any other kernel name fails analysis. */
+case class GraftHashSeeded(left: Expression, right: Expression, kernelName: String, width: Int)
     extends BinaryExpression with GraftHashExpression {
+  requireWidth()
 
-  override protected def checkOperands(): TypeCheckResult = {
-    val first = checkHashable(left.dataType, "first")
-    if (first.isFailure) first else checkExact(right.dataType, LongType, "second")
-  }
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = s"graft_hash64_seeded_$kernelName"
-
+  override protected def shape: String = "_seeded"
   override protected def seeded: Boolean = true
+  override protected def checkOperands(): TypeCheckResult =
+    checkHashableAnd(left.dataType, right.dataType, codeType)
+  override def dataType: DataType = codeType
 
-  override protected def nullSafeEval(input: Any, seed: Any): Any =
-    seededKernel.hash64Seeded(childBytes(input, left.dataType), seed.asInstanceOf[Long])
+  override protected def nullSafeEval(input: Any, seed: Any): Any = {
+    val bytes = childBytes(input, left.dataType)
+    if (width == 64) seededKernel.hash64Seeded(bytes, seed.asInstanceOf[Long])
+    else seededKernel.hash32Seeded(bytes, seed.asInstanceOf[Int])
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val kernelRef = ctx.addReferenceObj("kernel", seededKernel, classOf[SeededHashKernel].getName)
     defineCodeGen(ctx, ev,
-      (a, b) => s"$kernelRef.hash64Seeded(${bytesCode(a, left.dataType)}, $b)")
+      (a, b) => s"$kernelRef.hash${width}Seeded(${bytesCode(a, left.dataType)}, $b)")
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftHash64Seeded =
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftHashSeeded =
     copy(left = l, right = r)
 }
 
-/** `graft_hash32_seeded(input, seed)` — explicit-seed 32-bit hash; the
-  * int-family counterpart of `graft_hash64_seeded` (`LongHash.java:44-48`
-  * exposes the full int family alongside the long one). */
-case class GraftHash32Seeded(left: Expression, right: Expression, kernelName: String)
+/** `graft_hash<w>_k(input, k)` — the kernel's k-vector multi-hash
+  * (`LongHash.getLongHashCodes`/`getIntHashCodes`), preserving each
+  * kernel's scheme (seed-by-index, chained, or PRNG-stream); k is int at
+  * both widths. Prefer looping inside sketch aggregates; this exists for
+  * SQL users and tests. */
+case class GraftHashK(left: Expression, right: Expression, kernelName: String, width: Int)
     extends BinaryExpression with GraftHashExpression {
+  requireWidth()
 
-  override protected def checkOperands(): TypeCheckResult = {
-    val first = checkHashable(left.dataType, "first")
-    if (first.isFailure) first else checkExact(right.dataType, IntegerType, "second")
-  }
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = s"graft_hash32_seeded_$kernelName"
-
-  override protected def seeded: Boolean = true
-
-  override protected def nullSafeEval(input: Any, seed: Any): Any =
-    seededKernel.hash32Seeded(childBytes(input, left.dataType), seed.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernelRef = ctx.addReferenceObj("kernel", seededKernel, classOf[SeededHashKernel].getName)
-    defineCodeGen(ctx, ev,
-      (a, b) => s"$kernelRef.hash32Seeded(${bytesCode(a, left.dataType)}, $b)")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftHash32Seeded =
-    copy(left = l, right = r)
-}
-
-/** `graft_hash32_k(input, k)` — 32-bit k-vector multi-hash, the Spark
-  * face of `LongHash.getIntHashCodes` (`LongHash.java:44-48`); preserves
-  * each kernel's scheme (seed-by-index, chained, or PRNG-stream). */
-case class GraftHash32K(left: Expression, right: Expression, kernelName: String)
-    extends BinaryExpression with GraftHashExpression {
-
-  override protected def checkOperands(): TypeCheckResult = {
-    val first = checkHashable(left.dataType, "first")
-    if (first.isFailure) first else checkExact(right.dataType, IntegerType, "second")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = s"graft_hash32_k_$kernelName"
+  override protected def shape: String = "_k"
+  override protected def checkOperands(): TypeCheckResult =
+    checkHashableAnd(left.dataType, right.dataType, IntegerType)
+  override def dataType: DataType = ArrayType(codeType, containsNull = false)
 
   def compute(data: Array[Byte], k: Int): GenericArrayData =
-    new GenericArrayData(kernel.hash32K(data, k))
+    if (width == 64) new GenericArrayData(kernel.hash64K(data, k))
+    else new GenericArrayData(kernel.hash32K(data, k))
 
   override protected def nullSafeEval(input: Any, k: Any): Any =
     compute(childBytes(input, left.dataType), k.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("h32kExpr", this, classOf[GraftHash32K].getName)
+    val ref = ctx.addReferenceObj(s"h${width}kExpr", this, classOf[GraftHashK].getName)
     defineCodeGen(ctx, ev, (a, b) => s"$ref.compute(${bytesCode(a, left.dataType)}, $b)")
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftHash32K =
-    copy(left = l, right = r)
-}
-
-/** `graft_hash64_k(input, k)` — the kernel's k-vector multi-hash
-  * (`LongHash.getLongHashCodes`), preserving the per-algorithm scheme.
-  * Prefer looping inside sketch aggregates; this exists for SQL users and
-  * tests. k must be foldable. */
-case class GraftHash64K(left: Expression, right: Expression, kernelName: String)
-    extends BinaryExpression with GraftHashExpression {
-
-  override protected def checkOperands(): TypeCheckResult = {
-    val first = checkHashable(left.dataType, "first")
-    if (first.isFailure) first else checkExact(right.dataType, IntegerType, "second")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = s"graft_hash64_k_$kernelName"
-
-  def compute(data: Array[Byte], k: Int): GenericArrayData =
-    new GenericArrayData(kernel.hash64K(data, k))
-
-  override protected def nullSafeEval(input: Any, k: Any): Any =
-    compute(childBytes(input, left.dataType), k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("h64kExpr", this, classOf[GraftHash64K].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.compute(${bytesCode(a, left.dataType)}, $b)")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftHash64K =
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftHashK =
     copy(left = l, right = r)
 }

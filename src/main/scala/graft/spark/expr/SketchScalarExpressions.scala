@@ -259,25 +259,16 @@ case class HllUnion(left: Expression, right: Expression)
   * Bloom can never prove absence, so an unbuilt part must not produce
   * false negatives (and the reverse/anti filter stays exact).
   *
-  * CONTRACT (holds by construction for `ProbeJob.probeBank`, and is the
-  * caller's obligation for the public SQL form): within a task, every row
-  * carrying a given part id must carry the SAME sketch value — the
-  * one-row-per-part join shape. The per-task cache is keyed by part id
-  * alone (the deferred-eval codegen exists precisely so cache hits never
-  * touch the binary column), so rows pairing one part id with different
-  * sketch bytes — or a null row before a built row — would silently get
-  * whichever filter the task saw first.
-  *
-  * `strict = true` (SQL: `bloom_bank_contains_strict`) removes that
-  * foot-gun: the sketch column is evaluated on EVERY row and the cache
-  * keys on (part, murmur64 of the bytes), so rows pairing one part id
-  * with different sketches each get their own filter — misuse degrades
-  * to correct-but-slower (a per-row binary copy + hash) instead of
-  * silently stale. Use it for ad-hoc SQL over hand-built bank tables;
-  * the join-shape fast path remains the default.
+  * CONTRACT (holds by construction for its two callers,
+  * `ProbeJob.probeBank` and `StreamingDedup.firstSeenCompacted`, which
+  * join one bank row per part; the expression has no SQL name): within a
+  * task, every row carrying a given part id must carry the SAME sketch
+  * value. The per-task cache is keyed by part id alone (the deferred-eval
+  * codegen exists precisely so cache hits never touch the binary column),
+  * so rows pairing one part id with different sketch bytes — or a null
+  * row before a built row — would get whichever filter the task saw first.
   */
-case class BloomBankContains(first: Expression, second: Expression, third: Expression,
-    strict: Boolean = false)
+case class BloomBankContains(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -291,11 +282,10 @@ case class BloomBankContains(first: Expression, second: Expression, third: Expre
   override def nullable: Boolean = false
   override def prettyName: String = "bloom_bank_contains"
 
-  /** fast: part id -> BloomSketch | Missing, rebuilt per deserialized
-    * instance (per task): the parts whose rows the task sees.
-    * strict: (part, murmur64(bytes)) -> BloomSketch. */
+  /** part id -> BloomSketch | Missing, rebuilt per deserialized instance
+    * (per task): the parts whose rows the task sees. */
   @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[Any, AnyRef]()
+    new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
 
   def cached(part: Int): AnyRef = cache.get(part)
 
@@ -311,33 +301,15 @@ case class BloomBankContains(first: Expression, second: Expression, third: Expre
     case _ => true // unbuilt part: cannot prove absence
   }
 
-  /** Strict path: content-keyed, evaluated per row — immune to mixed
-    * sketches under one part id, at the cost of a per-row binary copy
-    * + hash. */
-  def testStrict(part: Int, bytes: Array[Byte], value: Any): Boolean = {
-    if (bytes == null) return true // unbuilt part: cannot prove absence
-    val key = (part, graft.core.hash.Murmur2Kernel.hash64(bytes))
-    var sk = cache.get(key)
-    if (sk == null) {
-      val loaded: AnyRef = BloomSketch.deserialize(bytes)
-      val prev = cache.putIfAbsent(key, loaded)
-      sk = if (prev != null) prev else loaded
-    }
-    test(sk, value)
-  }
-
   override def eval(input: InternalRow): Any = {
     val p = first.eval(input)
     val v = third.eval(input)
     if (p == null || v == null) false
     else {
       val pid = p.asInstanceOf[Int]
-      if (strict) testStrict(pid, second.eval(input).asInstanceOf[Array[Byte]], v)
-      else {
-        var sk = cached(pid)
-        if (sk == null) sk = load(pid, second.eval(input).asInstanceOf[Array[Byte]])
-        test(sk, v)
-      }
+      var sk = cached(pid)
+      if (sk == null) sk = load(pid, second.eval(input).asInstanceOf[Array[Byte]])
+      test(sk, v)
     }
   }
 
@@ -347,30 +319,18 @@ case class BloomBankContains(first: Expression, second: Expression, third: Expre
     val s = second.genCode(ctx)
     val v = third.genCode(ctx)
     val skVar = ctx.freshName("bankSketch")
-    if (strict) {
-      ev.copy(code = code"""
-        ${p.code}
-        ${v.code}
-        boolean ${ev.value} = false;
-        if (!${p.isNull} && !${v.isNull}) {
+    ev.copy(code = code"""
+      ${p.code}
+      ${v.code}
+      boolean ${ev.value} = false;
+      if (!${p.isNull} && !${v.isNull}) {
+        Object $skVar = $ref.cached(${p.value});
+        if ($skVar == null) {
           ${s.code}
-          ${ev.value} = $ref.testStrict(${p.value},
-            ${s.isNull} ? null : ${s.value}, ${v.value});
-        }""", isNull = FalseLiteral)
-    } else {
-      ev.copy(code = code"""
-        ${p.code}
-        ${v.code}
-        boolean ${ev.value} = false;
-        if (!${p.isNull} && !${v.isNull}) {
-          Object $skVar = $ref.cached(${p.value});
-          if ($skVar == null) {
-            ${s.code}
-            $skVar = $ref.load(${p.value}, ${s.isNull} ? null : ${s.value});
-          }
-          ${ev.value} = $ref.test($skVar, ${v.value});
-        }""", isNull = FalseLiteral)
-    }
+          $skVar = $ref.load(${p.value}, ${s.isNull} ? null : ${s.value});
+        }
+        ${ev.value} = $ref.test($skVar, ${v.value});
+      }""", isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(

@@ -31,11 +31,11 @@ object functions {
     * boolean values as canonical 8-byte big-endian (the same ValueBytes
     * rule the sketch aggregates and probes use). */
   def graft_hash64(c: Column, kernel: String = "murmur2"): Column =
-    column(GraftHash64(expression(c), kernel))
+    column(GraftHash(expression(c), kernel, 64))
 
   /** 32-bit kernel hash. */
   def graft_hash32(c: Column, kernel: String = "murmur2"): Column =
-    column(GraftHash32(expression(c), kernel))
+    column(GraftHash(expression(c), kernel, 32))
 
   /** Murmur2-64 with the file-format default seed 0 — the engine's
     * canonical hash (reference `Calculations.computeLongHash:44-47`). */
@@ -44,19 +44,19 @@ object functions {
   /** Explicit-seed 64-bit hash (murmur2/jenkins/cwow: seed; fnv/hsieh:
     * chain state). */
   def graft_hash64_seeded(c: Column, seed: Column, kernel: String = "murmur2"): Column =
-    column(GraftHash64Seeded(expression(c), expression(seed), kernel))
+    column(GraftHashSeeded(expression(c), expression(seed), kernel, 64))
 
   /** k-vector multi-hash preserving the kernel's seeding scheme. */
   def graft_hash64_k(c: Column, k: Column, kernel: String = "murmur2"): Column =
-    column(GraftHash64K(expression(c), expression(k), kernel))
+    column(GraftHashK(expression(c), expression(k), kernel, 64))
 
   /** Explicit-seed 32-bit hash (int family, `LongHash.java:44-48`). */
   def graft_hash32_seeded(c: Column, seed: Column, kernel: String = "murmur2"): Column =
-    column(GraftHash32Seeded(expression(c), expression(seed), kernel))
+    column(GraftHashSeeded(expression(c), expression(seed), kernel, 32))
 
   /** 32-bit k-vector multi-hash (`LongHash.getIntHashCodes`). */
   def graft_hash32_k(c: Column, k: Column, kernel: String = "murmur2"): Column =
-    column(GraftHash32K(expression(c), expression(k), kernel))
+    column(GraftHashK(expression(c), expression(k), kernel, 32))
 
   // ---- sketch aggregates (binary buffers; mergeable) ----
 
@@ -156,19 +156,11 @@ object functions {
 
   /** Partitioned-bank Bloom probe: test `value` against its routed
     * part's filter after a part-routed join (see ProbeJob.probeBank).
-    * A null filter (unbuilt part) yields true — no false negatives. */
-  def bloom_bank_contains(partId: Column, sketch: Column, value: Column): Column =
+    * A null filter (unbuilt part) yields true — no false negatives.
+    * Internal: its per-task cache keys on the part id alone, which is
+    * right only for the one-row-per-part join its callers build. */
+  private[graft] def bloom_bank_contains(partId: Column, sketch: Column, value: Column): Column =
     column(BloomBankContains(expression(partId), expression(sketch), expression(value)))
-
-  /** Misuse-proof [[bloom_bank_contains]]: the filter cache keys on
-    * (part, sketch-bytes content), so rows pairing one part id with
-    * DIFFERENT sketches each get their own filter — for ad-hoc SQL over
-    * hand-built bank tables where the one-row-per-part join contract
-    * isn't guaranteed. Costs a per-row binary copy + hash; the join-
-    * shaped fast path should stay on the default. */
-  def bloom_bank_contains_strict(partId: Column, sketch: Column, value: Column): Column =
-    column(BloomBankContains(expression(partId), expression(sketch), expression(value),
-      strict = true))
 
   // ---- bounded top-k (scale-safe ORDER BY score DESC LIMIT k per group) ----
 

@@ -247,7 +247,7 @@ class OpsSpec extends SparkTestBase {
     // bound is data-dependent
     assert(planted >= docs.count() * 0.45, s"found $planted planted simhash dups")
     // completeness at the radius: recompute hamming locally (with the
-    // production n-gram signature simhashPairs now defaults to) and compare
+    // production n-gram signature simhashPairs signs with) and compare
     val sims = corpus.select($"doc_id",
         TextAnalysis.simhash_ngram64($"text", 3).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -1,6 +1,8 @@
 package graft.spark
 
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.execution.{FilterExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import graft.core.hash.{HashKernels, Murmur2Kernel, SeededHashKernel}
 import graft.sketch.{BloomSketch, CmsSketch, HllSketch, KllSketch}
@@ -107,6 +109,11 @@ class GraftFunctionsSpec extends SparkTestBase {
     failsAnalysis("nope", known)(sql("cms_sketch(s, 3, 64, 'nope')"))
     // sha1prng keeps its unseeded forms
     assert(df.select(graft_hash64_k(F.col("s"), F.lit(3), "sha1prng")).collect().length === 2)
+    // the three hash shapes take width 64 or 32 only
+    val c = org.apache.spark.sql.catalyst.expressions.Literal(1)
+    intercept[IllegalArgumentException](graft.spark.expr.GraftHash(c, "murmur2", 48))
+    intercept[IllegalArgumentException](graft.spark.expr.GraftHashSeeded(c, c, "murmur2", 48))
+    intercept[IllegalArgumentException](graft.spark.expr.GraftHashK(c, c, "murmur2", 48))
     assert(spark.sql("SELECT bloom_sketch(s, 100, 8, 'sha1prng') FROM kernel_names")
       .head().getAs[Array[Byte]](0).nonEmpty)
   }
@@ -400,43 +407,34 @@ class GraftFunctionsSpec extends SparkTestBase {
     val probes = Seq((0, "alpha"), (0, "gamma"), (1, "gamma"), (2, "anything"))
       .toDF("part", "key")
     val joined = probes.join(bank.hint("SHUFFLE_HASH"), Seq("part"), "left")
-    val filtered = joined.filter(bloom_bank_contains(F.col("part"), F.col("sk"), F.col("key")))
+    // a def: each call plans afresh, under the session conf of the moment
+    def filtered = joined.filter(bloom_bank_contains(F.col("part"), F.col("sk"), F.col("key")))
     // plan shape: the hint pins a co-partitioned shuffle-hash join, the
     // shape ProbeJob.probeBank takes for a bank above the broadcast threshold
     val plan = filtered.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin") && !plan.contains("BroadcastHashJoin"),
       s"bank join lost its routed shape:\n$plan")
-    val kept = filtered
-      .select("part", "key").collect().map(r => (r.getInt(0), r.getString(1))).toSet
-    // (0,gamma) is not in part 0's filter; part 2 unbuilt => kept
-    assert(kept === Set((0, "alpha"), (1, "gamma"), (2, "anything")))
-  }
-
-  test("bloom_bank_contains_strict: mixed sketches under ONE part id both honored") {
-    def filterFor(keys: Seq[String]): Array[Byte] = {
-      val sk = BloomSketch(1000L, 16)
-      keys.foreach(sk.put)
-      sk.serialize()
+    // the rows, after checking that the probe ran inside whole-stage codegen
+    // or outside it (the final adaptive plan, read once the query has run)
+    def kept(codegen: Boolean): Set[(Int, String)] = {
+      val df = filtered.select("part", "key")
+      val rows = df.collect().map(r => (r.getInt(0), r.getString(1))).toSet
+      val plan = df.queryExecution.executedPlan
+      val fused = new AdaptiveSparkPlanHelper {}.find(plan) {
+        case w: WholeStageCodegenExec => w.child.exists(_.isInstanceOf[FilterExec])
+        case _ => false
+      }
+      assert(fused.isDefined === codegen, plan.toString)
+      rows
     }
-    // deliberate CONTRACT VIOLATION for the fast path: one part id, two
-    // different filters in the same (single) partition
-    val rows = Seq(
-      (7, filterFor(Seq("alpha")), "alpha"), // in filter A
-      (7, filterFor(Seq("beta")), "beta"), // in filter B
-      (7, filterFor(Seq("alpha")), "beta"), // NOT in filter A
-      (7, filterFor(Seq("beta")), "alpha")) // NOT in filter B
-      .toDF("part", "sk", "key").coalesce(1)
-    val strict = rows.filter(
-      bloom_bank_contains_strict(F.col("part"), F.col("sk"), F.col("key")))
-      .select("key").collect().map(_.getString(0)).toSeq
-    // content-keyed cache: each row tests against ITS OWN sketch
-    assert(strict === Seq("alpha", "beta"))
-    // SQL registration of the strict form
-    rows.createOrReplaceTempView("mixed_bank")
-    val viaSql = spark.sql(
-      "SELECT count(*) FROM mixed_bank WHERE bloom_bank_contains_strict(part, sk, key)")
-      .head().getLong(0)
-    assert(viaSql === 2L)
+    // (0,gamma) is not in part 0's filter; part 2 unbuilt => kept
+    val expected = Set((0, "alpha"), (1, "gamma"), (2, "anything"))
+    assert(kept(codegen = true) === expected)
+    withConf("spark.sql.codegen.wholeStage", "false") {
+      withConf("spark.sql.codegen.factoryMode", "NO_CODEGEN") {
+        assert(kept(codegen = false) === expected)
+      }
+    }
   }
 
   test("SQL end-to-end: sketch build + probe via registered functions") {

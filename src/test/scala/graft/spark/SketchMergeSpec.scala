@@ -1,7 +1,5 @@
 package graft.spark
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 
 import graft.sketch.{BloomSketch, CmsSketch, HeavyHittersSketch, HllSketch, KllSketch, TDigestSketch}
@@ -9,8 +7,8 @@ import graft.spark.functions._
 
 /** The sketch aggregate contract through Spark: every `<name>_merge` in
   * both its Column and SQL form, the one integral-weight rule of the two
-  * weighted sketches, the SQL default sizes against their Column twins,
-  * and the strict bank probe under codegen and interpretation. */
+  * weighted sketches, and the SQL default sizes against their Column
+  * twins. */
 class SketchMergeSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -141,48 +139,5 @@ class SketchMergeSpec extends SparkTestBase {
       assert(viaSql sameElements bytesOf(df.agg(col)), sql)
     }
     assert(HllSketch.deserialize(bytesOf(df.agg(hll_sketch(F.col("s"))))).p === 14)
-  }
-
-  test("bloom_bank_contains_strict: each row against its own filter, codegen and interpreted") {
-    def filterFor(keys: String*): Array[Byte] = {
-      val sk = BloomSketch(1000L, 16)
-      keys.foreach(sk.put)
-      sk.serialize()
-    }
-    val a = filterFor("alpha")
-    val b = filterFor("beta")
-    // one part id, two filters; part 9 has no filter (unbuilt)
-    val rows = Seq[(Int, Array[Byte], String)](
-      (7, a, "alpha"), (7, b, "beta"), (7, a, "beta"), (7, b, "alpha"), (9, null, "zeta"))
-    // a Parquet table, not a local Seq: the optimizer would evaluate a
-    // projection over a local relation at planning time, never in the plan
-    val dir = Files.createTempDirectory("strict-bank").resolve("t").toString
-    rows.toDF("part", "sk", "key").coalesce(1).write.parquet(dir)
-    val bank = spark.read.parquet(dir)
-    bank.createOrReplaceTempView("strict_bank")
-
-    def answers(): Seq[Boolean] = {
-      val viaColumn = bank.select(
-        bloom_bank_contains_strict(F.col("part"), F.col("sk"), F.col("key")))
-      val viaSql = spark.sql(
-        "SELECT bloom_bank_contains_strict(part, sk, key) FROM strict_bank")
-      val out = viaColumn.collect().map(_.getBoolean(0)).toSeq
-      assert(viaSql.collect().map(_.getBoolean(0)).toSeq === out)
-      out
-    }
-    val expected = Seq(true, true, false, false, true)
-
-    val codegenPlan = bank.select(
-      bloom_bank_contains_strict(F.col("part"), F.col("sk"), F.col("key")))
-      .queryExecution.executedPlan
-    assert(codegenPlan.collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
-      .nonEmpty, s"expected whole-stage codegen:\n$codegenPlan")
-    assert(answers() === expected)
-
-    withConf("spark.sql.codegen.wholeStage", "false") {
-      withConf("spark.sql.codegen.factoryMode", "NO_CODEGEN") {
-        assert(answers() === expected)
-      }
-    }
   }
 }
